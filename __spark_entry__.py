@@ -8724,10 +8724,25 @@ def q_drift_report(spark: SparkSession, sf: str) -> DataFrame:
     ).orderBy("column")
 
 
-#: The round whose planned window ``queries()`` currently serves.
-#: Bumped once per build round (in the same commit that adds any new
-#: query) so the rotation below keeps advancing.
-CURRENT_ROUND = 14
+def _next_artifact_round() -> int:
+    """One past the highest round N with a committed
+    ``CORRECTNESS_r{N}.json``."""
+    import os
+    import re
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    rounds = [
+        int(m.group(1))
+        for name in os.listdir(here)
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", name))
+    ]
+    return max(rounds, default=0) + 1
+
+
+#: The round whose planned window ``queries()`` currently serves:
+#: derived from the committed artifacts, so the rotation below advances
+#: with them and never needs a hand bump.
+CURRENT_ROUND = _next_artifact_round()
 
 #: Permanent 5-query gbif canary (VERDICT r4 item 2): the reference's
 #: actual semantics (apply_gbif_filter.py:114-192). Pinned — these

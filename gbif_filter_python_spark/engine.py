@@ -10,9 +10,14 @@ one scalar taxid (SURVEY.md §1.4).
 ``run_filter`` is the full CLI pipeline
 (/root/reference/apply_gbif_filter.py:96-192) as one declarative plan:
 
-    scan → resolve (distinct + dim join) → zone-filter fact →
-    existence tag (broadcast semi-probe) → conditional expansion
-    (self-join + semi-join + collect) → tag/filter mode → sink
+    scan → resolve (distinct names + dim join) → zone-filter fact →
+    existence tag (broadcast zone keys) → conditional expansion
+    (left-join chain + semi-join + collect) → tag/filter mode → sink
+
+The tag probe and the expansion's child semi-join broadcast the same
+``occurrence_keys`` plan, so at runtime AQE builds that exchange once
+(the second use reads it as ``ReusedExchange``) and the fact is
+scanned once per request.
 """
 
 from __future__ import annotations
@@ -128,36 +133,7 @@ class OccurrenceEngine:
 
         resolved = resolve_names(taxa, self.taxonomy, cfg)
         occ_zone = self.occurrences_in_zone(cfg.zone)
-        if cfg.resolve_to_rank:
-            # Expansion consumes the zone key set a SECOND time (the
-            # child semi-join below) — materialize the bounded
-            # distinct-key table once so the 100 TB-side fact is
-            # scanned and distinct-aggregated exactly once. Without
-            # this the two broadcast builds canonicalize differently
-            # (tag_existence renames the key column below its
-            # exchange), so runtime exchange reuse never fires and
-            # the fact pays the zone scan + distinct twice (measured
-            # on the flagship bench: tag_expand ≈ tag_country + one
-            # extra fact pass). The key table is ≤ |taxonomy| rows —
-            # the broadcast build side — so the checkpoint pins
-            # bounded dimension state, never fact bytes. Plain tag
-            # scenarios keep the single lazy pass (a checkpoint there
-            # would only add a barrier).
-            # Durability trade (ADVICE r14): localCheckpoint stores
-            # UNREPLICATED executor-local blocks — on a long-running
-            # cluster an executor lost between checkpoint and
-            # consumption fails the query with no lineage recovery
-            # (rerun, or swap in persist(MEMORY_AND_DISK_2)/a reliable
-            # checkpoint dir when running under executor churn); the
-            # eager flag is correct HERE because a job always follows
-            # immediately in run_filter, but explain-only callers of
-            # this path pay the materialization job.
-            zone_probe = occurrence_keys(occ_zone).localCheckpoint(
-                eager=True
-            )
-        else:
-            zone_probe = occ_zone
-        tagged = tag_existence(resolved, zone_probe)
+        tagged = tag_existence(resolved, occ_zone)
         if observation is not None:
             tagged = tagged.observe(
                 observation,
@@ -194,7 +170,8 @@ class OccurrenceEngine:
                 self.taxonomy,
                 parents,
                 target,
-                zone_occurrence_keys=zone_probe,
+                # The plan tag_existence broadcasts: one fact scan.
+                zone_occurrence_keys=occurrence_keys(occ_zone),
                 habitat=cfg.habitat,
             )
             # No broadcast hint on the arrays join: |arrays| grows with

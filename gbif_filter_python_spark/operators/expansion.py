@@ -9,10 +9,11 @@ child with one probe each (gbif_helper.py:53-58), and projects
 name/key arrays (apply_gbif_filter.py:167-168).
 
 Here the hierarchy lives in the taxonomy dimension's ``parent_key``
-edge, so expansion is a (possibly iterated) self-join: one hop for
-GENUS→SPECIES / FAMILY→GENUS, two for FAMILY→SPECIES. The spatial
-filter is a single semi-join of ALL candidate children against the
-zone-filtered occurrence keys — the per-child probe loop disappears.
+edge, so expansion is one chain of left self-joins, one per hop (one
+hop for GENUS→SPECIES / FAMILY→GENUS, two for FAMILY→SPECIES, up to the
+rank-lattice depth for ranks outside it). The spatial filter is a
+single semi-join of ALL candidate children against the zone-filtered
+occurrence keys — the per-child probe loop disappears.
 
 Deliberate fixes (documented differences):
 
@@ -51,61 +52,68 @@ def descend_to_rank(
     ``parents`` must have a single long column ``parent``. Returns
     ``(parent, child_key, child_name)``.
 
-    The frontier is iterated driver-side for a *bounded* number of hops
-    (rank-lattice depth, ≤ len(RANKS)); each hop is one hash join with
-    the broadcast frontier. For unbounded hierarchies this would need
-    checkpointing or Spark 4 recursive CTEs (SURVEY.md §7.4) — the
-    reference only ever needs ≤ 2 hops (§2-D).
+    One linear chain of ``max_hops`` left joins against the taxonomy
+    (rank-lattice depth, ≤ len(RANKS)). Each row is a path (root, c1 …
+    ck); a path extends only from a node whose rank is not the target,
+    so it ends at its first target-rank node and holds at most one hit.
+    Every level joins the same taxonomy projection, so the levels share
+    one broadcast of it at runtime instead of each hop re-deriving the
+    joins before it. For unbounded hierarchies
+    this would need checkpointing or Spark 4 recursive CTEs (SURVEY.md
+    §7.4) — the reference only ever needs ≤ 2 hops (§2-D).
     """
     target = target_rank.upper()
     if max_hops is None:
         # Deepest possible start is the top of the rank lattice.
         max_hops = _RANK_INDEX.get(target, len(RANKS) - 1) or 1
 
-    tax = taxonomy.select(
-        F.col("key").alias("_child_key"),
-        F.col("parent_key").alias("_parent_key"),
-        F.col("canonical_name").alias("_child_name"),
-        F.upper(F.col("rank")).alias("_child_rank"),
-        F.col("taxonomic_status").alias("_status"),
-        F.upper(F.col("habitat")).alias("_habitat"),
-        F.col("dataset_key").alias("_dataset_key"),
-    )
-
+    rank = F.upper(F.col("rank"))
     # Leaf-level filters the reference pushes into name_lookup
     # (rank/habitat/datasetKey, gbif_helper.py:38-41) or applies
     # client-side (ACCEPTED, gbif_helper.py:48-50).
-    leaf_cond = (F.col("_child_rank") == target) & (
-        F.col("_status") == STATUS_ACCEPTED
-    )
+    leaf_cond = (rank == target) & (F.col("taxonomic_status") == STATUS_ACCEPTED)
     if habitat:
-        leaf_cond = leaf_cond & (F.col("_habitat") == habitat.upper())
+        leaf_cond = leaf_cond & (F.upper(F.col("habitat")) == habitat.upper())
     if backbone_only:
-        leaf_cond = leaf_cond & (F.col("_dataset_key") == BACKBONE_DATASET_KEY)
+        leaf_cond = leaf_cond & (F.col("dataset_key") == BACKBONE_DATASET_KEY)
 
-    frontier = parents.select(
-        F.col("parent").alias("_root"), F.col("parent").alias("_cur")
-    ).distinct()
-    reached: DataFrame | None = None
-    for _ in range(max_hops):
-        # No broadcast hint: the frontier grows multiplicatively with
-        # fan-out per hop (a family-level frontier over the full
-        # backbone could blow the broadcast cap); AQE broadcasts small
-        # frontiers at runtime.
-        step = tax.join(
-            frontier, tax["_parent_key"] == frontier["_cur"], "inner"
+    # Per node: its parent edge, its key if a path may continue through
+    # it (rank known and not the target), and its hit struct if it is a
+    # leaf. Nodes that are neither can only end a path, which the left
+    # join does anyway, so they are dropped.
+    tax = taxonomy.select(
+        F.col("parent_key").alias("_up"),
+        F.when(rank != target, F.col("key")).alias("_next"),
+        F.when(
+            leaf_cond,
+            F.struct(
+                F.col("key").alias("child_key"),
+                F.col("canonical_name").alias("child_name"),
+            ),
+        ).alias("_hit"),
+    ).filter(
+        F.col("_up").isNotNull()
+        & (F.col("_next").isNotNull() | F.col("_hit").isNotNull())
+    )
+
+    paths = parents.select(F.col("parent").alias("_root")).distinct()
+    tip = "_root"
+    for k in range(max_hops):
+        # No broadcast hint: the level is the side a left join can
+        # broadcast, and a full ~7M-row backbone could blow the
+        # broadcast cap; AQE broadcasts it whenever it fits.
+        level = tax.select(
+            F.col("_up").alias(f"_up{k}"),
+            F.col("_next").alias(f"_next{k}"),
+            F.col("_hit").alias(f"_hit{k}"),
         )
-        hit = step.filter(leaf_cond).select("_root", "_child_key", "_child_name")
-        reached = hit if reached is None else reached.unionByName(hit)
-        # Keep descending through nodes above the target rank only.
-        frontier = step.filter(F.col("_child_rank") != target).select(
-            "_root", F.col("_child_key").alias("_cur")
-        )
-    assert reached is not None
-    return reached.select(
-        F.col("_root").alias("parent"),
-        F.col("_child_key").alias("child_key"),
-        F.col("_child_name").alias("child_name"),
+        paths = paths.join(level, F.col(tip) == F.col(f"_up{k}"), "left")
+        tip = f"_next{k}"
+    hit = F.coalesce(*[F.col(f"_hit{k}") for k in range(max_hops)])
+    return (
+        paths.select(F.col("_root").alias("parent"), hit.alias("_hit"))
+        .filter(F.col("_hit").isNotNull())
+        .select("parent", "_hit.child_key", "_hit.child_name")
     )
 
 

@@ -7,9 +7,10 @@ The reference resolves one name per HTTPS GET
 (``species.name_backbone(name, rank, kingdom, strict=True)``,
 /root/reference/gbif_helper.py:17-19) behind a per-run memo dict
 (apply_gbif_filter.py:108,127-133). Here the memo is *structural*:
-``distinct()`` on the role tuple, resolve once per distinct tuple via a
-join against the materialized taxonomy dimension, then join back to all
-input rows. Catalyst broadcasts the (small) resolved tuple set.
+``distinct()`` on the (name, rank) pairs that need a lookup, resolve
+each pair once via a join against the materialized taxonomy dimension,
+then join back to all input rows. Catalyst broadcasts the (small)
+resolved pair set.
 
 Semantics preserved from the reference (SURVEY.md §2-A):
 
@@ -86,14 +87,20 @@ def resolve_names(
 ) -> DataFrame:
     """Append ``gbif_key`` (nullable long) and ``gbif_rank`` to ``taxa``.
 
-    Plan shape: distinct role tuples → left join taxonomy (broadcast:
-    the name-scoped dimension slice is small relative to the fact) →
-    ambiguity collapse → join back on the role tuple (null-safe).
+    Plan shape: distinct (name, rank) pairs of the rows that need a
+    lookup → left join taxonomy → ambiguity collapse (grouped on the
+    distinct's own partitioning, so no second shuffle) → join back on
+    the pair. Trusted-taxid and null-role rows never reach the lookup:
+    their key and rank are per-row expressions.
     """
     taxa_r = _role_columns(taxa, cfg)
 
-    # op 23: structural memoization — resolve each distinct tuple once.
-    distinct = taxa_r.select("_name", "_taxid", "_rank").distinct()
+    # op 23: structural memoization — resolve each distinct pair once.
+    by_name = (
+        taxa_r.filter(F.col("_name").isNotNull() & F.col("_taxid").isNull())
+        .select("_name", "_rank")
+        .distinct()
+    )
 
     # op 10: exact-match resolution join, kingdom- and rank-scoped.
     dim = taxonomy.select(
@@ -107,113 +114,69 @@ def resolve_names(
     if cfg.taxa_kingdom:
         dim = dim.filter(F.col("_dim_kingdom") == cfg.taxa_kingdom.upper())
 
-    needs_name = distinct.filter(
-        F.col("_name").isNotNull() & F.col("_taxid").isNull()
-    )
-    cond = F.lower(needs_name["_name"]) == dim["_dim_name"]
+    cond = F.lower(by_name["_name"]) == dim["_dim_name"]
     # Rank scoping only applies when the input row carries a rank.
     cond = cond & (
-        needs_name["_rank"].isNull() | (needs_name["_rank"] == dim["_dim_rank"])
+        by_name["_rank"].isNull() | (by_name["_rank"] == dim["_dim_rank"])
     )
     # No broadcast hint: the kingdom-scoped dimension slice is usually
     # broadcastable and AQE will pick that at runtime; forcing it would
     # break on a full 7M-row backbone over the 8 GB broadcast limit.
-    matched = needs_name.join(dim, on=cond, how="left")
+    matched = by_name.join(dim, on=cond, how="left")
 
-    # Exact-match-or-nothing: >1 candidate rows per tuple → null key
+    # Exact-match-or-nothing: >1 candidate rows per pair → null key
     # (mirrors matchType != "EXACT" → (None, rank), gbif_helper.py:30-32).
     # _n counts NON-NULL keys, so the picked (key, rank) must also come
     # from a non-null-key row — first() without ignorenulls could
     # nondeterministically return a synonym row whose accepted_key is
     # null even when _n == 1. Key and rank are pulled from the SAME row
-    # via a struct so they can't mix across candidate rows.
+    # via a struct so they can't mix across candidate rows. The lookup
+    # columns are renamed to break lineage ambiguity with taxa_r (the
+    # lookup derives from it).
     kr = F.when(
         F.col("_dim_key").isNotNull(), F.struct("_dim_key", "_dim_rank")
     )
-    resolved_by_name = (
-        matched.groupBy("_name", "_taxid", "_rank")
+    lookup = (
+        matched.groupBy("_name", "_rank")
         .agg(
             F.count("_dim_key").alias("_n"),
             F.first(kr, ignorenulls=True).alias("_kr"),
         )
         .select(
-            "_name",
-            "_taxid",
-            "_rank",
+            F.col("_name").alias("_k_name"),
+            F.col("_rank").alias("_k_rank"),
             F.when(F.col("_n") == 1, F.col("_kr")["_dim_key"]).alias(
                 "_resolved_key"
             ),
-            # Resolved rank replaces input rank (gbif_helper.py:25).
-            F.when(F.col("_n") == 1, F.col("_kr")["_dim_rank"])
-            .otherwise(F.col("_rank"))
-            .alias("_resolved_rank"),
+            F.when(F.col("_n") == 1, F.col("_kr")["_dim_rank"]).alias(
+                "_resolved_rank"
+            ),
         )
     )
 
-    # op 11: trusted-ID short-circuit for tuples that carry a taxid.
-    with_id = distinct.filter(F.col("_taxid").isNotNull()).withColumns(
-        {
-            "_resolved_key": _parse_taxid(F.col("_taxid")),
-            "_resolved_rank": F.col("_rank"),
-        }
-    )
-    if validate_taxids:
-        # The TODO at gbif_helper.py:13: check the ID exists in the
-        # backbone. Left join against keys; unknown IDs → null.
-        keys = taxonomy.select(F.col("key").alias("_valid_key")).distinct()
-        with_id = (
-            with_id.join(
-                F.broadcast(keys),
-                with_id["_resolved_key"] == keys["_valid_key"],
-                "left",
-            )
-            .withColumn(
-                "_resolved_key",
-                F.when(F.col("_valid_key").isNotNull(), F.col("_resolved_key")),
-            )
-            .drop("_valid_key")
-        )
-
-    # Null-role tuples (op 18 guard): no name and no taxid → null key.
-    nulls = (
-        distinct.filter(F.col("_name").isNull() & F.col("_taxid").isNull())
-        .withColumns(
-            {
-                "_resolved_key": F.lit(None).cast("long"),
-                "_resolved_rank": F.col("_rank"),
-            }
-        )
-    )
-
-    # Rename lookup keys to break lineage ambiguity with taxa_r (the
-    # lookup derives from taxa_r, so same-name join keys would be
-    # ambiguous to the analyzer).
-    lookup = (
-        resolved_by_name.unionByName(with_id)
-        .unionByName(nulls)
-        .select(
-            F.col("_name").alias("_k_name"),
-            F.col("_taxid").alias("_k_taxid"),
-            F.col("_rank").alias("_k_rank"),
-            "_resolved_key",
-            "_resolved_rank",
-        )
-    )
-
-    # Join resolution back to every input row (null-safe on the tuple).
-    # No broadcast hint: the lookup is |distinct role tuples| — tiny
-    # for typical inputs (AQE broadcasts it at runtime), but it scales
-    # with the input's name cardinality, so forcing a broadcast would
-    # cap the engine at ~8 GB of distinct names.
+    # Join resolution back to every by-name row (null-safe on rank).
+    # No broadcast hint: the lookup is |distinct names| — tiny for
+    # typical inputs (AQE broadcasts it at runtime), but it scales with
+    # the input's name cardinality, so forcing a broadcast would cap
+    # the engine at ~8 GB of distinct names.
     out = taxa_r.join(
         lookup,
         on=[
-            F.col("_name").eqNullSafe(F.col("_k_name")),
-            F.col("_taxid").eqNullSafe(F.col("_k_taxid")),
+            F.col("_taxid").isNull(),
+            F.col("_name") == F.col("_k_name"),
             F.col("_rank").eqNullSafe(F.col("_k_rank")),
         ],
         how="left",
     )
+
+    # op 11: trusted-ID short-circuit for rows that carry a taxid.
+    taxid_key = _parse_taxid(F.col("_taxid"))
+    if validate_taxids:
+        # The TODO at gbif_helper.py:13: check the ID exists in the
+        # backbone. Left join against keys; unknown IDs → null.
+        keys = taxonomy.select(F.col("key").alias("_valid_key")).distinct()
+        out = out.join(F.broadcast(keys), taxid_key == keys["_valid_key"], "left")
+        taxid_key = F.col("_valid_key")
     from gbif_filter_python_spark.operators.tagging import quoted
 
     # passthrough columns quoted literally: the reference's own input
@@ -222,8 +185,13 @@ def resolve_names(
     # field paths
     return out.select(
         *[quoted(c) for c in taxa.columns],
-        F.col("_resolved_key").alias(KEY_COL),
-        F.col("_resolved_rank").alias(RANK_COL),
+        F.when(F.col("_taxid").isNotNull(), taxid_key)
+        .otherwise(F.col("_resolved_key"))
+        .alias(KEY_COL),
+        # Resolved rank replaces input rank (gbif_helper.py:25); rows
+        # without a unique match (taxid, null-role, ambiguous,
+        # unmatched) keep the input rank.
+        F.coalesce(F.col("_resolved_rank"), F.col("_rank")).alias(RANK_COL),
     )
 
 

@@ -55,16 +55,18 @@ def tag_existence(
     because ``False`` and ``None`` rows must survive with their tag —
     the semi-join variant is :func:`filter_occurring`.
     """
-    occ_keys = occurrence_keys(occurrences_in_zone).withColumnRenamed(
-        "taxon_key", "_occ_key"
+    # No rename below the broadcast: run_filter's expansion broadcasts
+    # the identical occurrence_keys plan, and only identical subtrees
+    # share one exchange (one fact scan) at runtime. The key is
+    # addressed through ``occ_keys`` so a ``taxon_key`` column of the
+    # taxa input passes through untouched.
+    occ_keys = occurrence_keys(occurrences_in_zone)
+    occ_key = occ_keys["taxon_key"]
+    out = taxa.join(F.broadcast(occ_keys), taxa[key_col] == occ_key, "left")
+    tag = F.when(taxa[key_col].isNull(), F.lit(None).cast("boolean")).otherwise(
+        occ_key.isNotNull()
     )
-    out = taxa.join(
-        F.broadcast(occ_keys), taxa[key_col] == occ_keys["_occ_key"], "left"
-    )
-    tag = F.when(F.col(key_col).isNull(), F.lit(None).cast("boolean")).otherwise(
-        F.col("_occ_key").isNotNull()
-    )
-    return out.withColumn(tag_col, tag).drop("_occ_key")
+    return out.withColumn(tag_col, tag).drop(occ_key)
 
 
 def filter_occurring(

@@ -59,3 +59,41 @@ def assert_no_cartesian(df: DataFrame) -> None:
     text = explain_str(df, "simple")
     if "CartesianProduct" in text:
         raise AssertionError("plan contains CartesianProduct:\n" + text)
+
+
+def final_plan(df: DataFrame) -> str:
+    """The final adaptive plan of an executed ``df`` ('simple' mode),
+    without the ``== Initial Plan ==`` section that repeats every node.
+    Exchange reuse (``ReusedExchange``) only shows here."""
+    return explain_str(df, "simple").split("== Initial Plan ==")[0]
+
+
+def _column(line: str) -> int:
+    """Where the operator starts on a 'simple' plan line."""
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def node_count(plan: str, operator: str) -> int:
+    """Number of plan nodes whose operator name starts with
+    ``operator`` ('Exchange' counts no BroadcastExchange or
+    ReusedExchange)."""
+    return sum(
+        line[_column(line):].removeprefix("*").lstrip("(0123456789) ")
+        .startswith(operator)
+        for line in plan.splitlines()
+    )
+
+
+def build_side(plan: str, join: str) -> str:
+    """The last child subtree (a BuildRight join's build side) of the
+    first plan node whose line contains ``join``."""
+    lines = plan.splitlines()
+    at = next(i for i, line in enumerate(lines) if join in line)
+    col = _column(lines[at])
+    sub: list[str] = []
+    for line in lines[at + 1:]:
+        if _column(line) <= col:
+            break
+        sub.append(line)
+    last = max(i for i, line in enumerate(sub) if _column(line) == col + 3)
+    return "\n".join(sub[last:])

@@ -11,6 +11,7 @@ taxon with zero occurrences (tag False vs None).
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import SparkSession
@@ -21,6 +22,20 @@ from gbif_filter_python_spark.schemas import (
     TAXONOMY_SCHEMA,
 )
 from gbif_filter_python_spark.session import get_spark
+
+
+#: The reference project's own test directory, from a checkout of the
+#: reference next to this repository. The parity tests that read its
+#: golden files skip when it is absent.
+REFERENCE_TEST_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    os.pardir, "reference", "test",
+)
+requires_reference = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_TEST_DIR),
+    reason="needs the reference project checked out next to this "
+    "repository (reference/test/ holds the golden files)",
+)
 
 
 @pytest.fixture(scope="session")

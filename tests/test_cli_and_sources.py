@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import csv
 import glob
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +14,7 @@ from pyspark.sql import functions as F
 from gbif_filter_python_spark.cli import main as cli_main
 from gbif_filter_python_spark.sources.io import read_taxa_csv, write_csv
 from gbif_filter_python_spark.sources.providers import RestBatchProvider
-from tests.conftest import NORWAY_ISH_WKT
+from tests.conftest import NORWAY_ISH_WKT, REFERENCE_TEST_DIR, requires_reference
 
 
 def _read_csv_rows(out_dir: str, sep: str = ";") -> list[dict]:
@@ -165,6 +166,7 @@ class TestCli:
         monkeypatch.setenv("LOG_CFG", str(tmp_path / "absent.json"))
         setup_logging(None)  # falls back to basicConfig, no raise
 
+    @requires_reference
     def test_reference_golden_file_byte_parity(self, spark, tmp_path):
         """VERDICT r6 item 6 — drive the CLI over the reference's OWN
         103-column test input (/root/reference/test/motu_table_sample.
@@ -231,16 +233,15 @@ class TestCli:
         out = str(tmp_path / "filtered.csv")
         assert cli_main([
             "--tag", str(cfg_path),
-            "/root/reference/test/motu_table_sample.csv", out,
+            os.path.join(REFERENCE_TEST_DIR, "motu_table_sample.csv"), out,
             "--pandas-parity-output", "--na-rep", "",
         ]) == 0
         import csv as _csv
         import math
         import struct
 
-        with open(out) as got_f, open(
-            "/root/reference/test/filtered.csv"
-        ) as want_f:
+        golden = os.path.join(REFERENCE_TEST_DIR, "filtered.csv")
+        with open(out) as got_f, open(golden) as want_f:
             got_rows = list(_csv.reader(got_f, delimiter="\t"))
             want_rows = list(_csv.reader(want_f, delimiter="\t"))
         assert len(got_rows) == len(want_rows) == 11
@@ -274,9 +275,7 @@ class TestCli:
         assert legacy_float_cells == 2
         # raw-bytes check (csv.reader would mask quoting/line-ending
         # drift): every line identical except the two artifact rows
-        with open(out, "rb") as gf_raw, open(
-            "/root/reference/test/filtered.csv", "rb"
-        ) as wf_raw:
+        with open(out, "rb") as gf_raw, open(golden, "rb") as wf_raw:
             got_raw = gf_raw.read().split(b"\n")
             want_raw = wf_raw.read().split(b"\n")
         assert len(got_raw) == len(want_raw)

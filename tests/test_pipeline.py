@@ -6,12 +6,14 @@ notes A, D, E, G) over hermetic fixtures.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import Row
 
 from gbif_filter_python_spark import Country, FilterConfig, OccurrenceEngine, Polygon
 from gbif_filter_python_spark.config import ConfigError, resolve_zone
-from tests.conftest import NORWAY_ISH_WKT
+from tests.conftest import NORWAY_ISH_WKT, REFERENCE_TEST_DIR, requires_reference
 
 
 def _taxa(spark, rows):
@@ -275,6 +277,7 @@ class TestConfig:
                 {"taxa_column": "x", "taxa_field": "wat"}
             )
 
+    @requires_reference
     def test_reference_legacy_config_file_loads(self):
         """The reference's own shipped config
         (/root/reference/test/config.yml) must parse end-to-end:
@@ -283,7 +286,9 @@ class TestConfig:
         from gbif_filter_python_spark.config import Country
 
         with pytest.warns(DeprecationWarning):
-            cfg = FilterConfig.from_yaml("/root/reference/test/config.yml")
+            cfg = FilterConfig.from_yaml(
+                os.path.join(REFERENCE_TEST_DIR, "config.yml")
+            )
         assert cfg.name_column == "genus_silva"
         assert cfg.sep == "\t"
         assert isinstance(cfg.zone, Country) and cfg.zone.code == "NO"

@@ -72,6 +72,58 @@ def test_run_filter_pipeline_broadcasts(spark, sf001_dir):
     assert has_broadcast_join(out)
 
 
+def test_run_filter_expansion_shares_one_zone_key_exchange(
+    spark, taxonomy, occurrence, tmp_path
+):
+    """run_filter with expansion: building the DataFrame runs no Spark
+    job, and at runtime the tag probe and the expansion's child
+    semi-join share one zone-key exchange, so the occurrence fact is
+    scanned and distinct-aggregated once."""
+    from gbif_filter_python_spark import Country, FilterConfig, OccurrenceEngine
+    from gbif_filter_python_spark.plans.inspect import (
+        build_side,
+        final_plan,
+        node_count,
+    )
+
+    occurrence.write.parquet(str(tmp_path / "occurrence"))
+    occ = spark.read.parquet(str(tmp_path / "occurrence"))
+    taxa = spark.createDataFrame(
+        [(1, "Lumbricus", "GENUS"), (2, "Lumbricidae", "FAMILY"),
+         (3, "Eisenia fetida", None)],
+        "id int, name string, rank string",
+    )
+    cfg = FilterConfig(name_column="name", rank_column="rank",
+                       taxa_kingdom="Animalia", zone=Country("NO"),
+                       resolve_to_rank="SPECIES")
+    sc = spark.sparkContext
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    sc.setJobGroup("run-filter-build", "run_filter construction")
+    try:
+        out = OccurrenceEngine(taxonomy, occ).run_filter(taxa, cfg)
+        assert sc.statusTracker().getJobIdsForGroup("run-filter-build") == []
+        # collect() finalizes THIS DataFrame's adaptive plan
+        assert len(out.collect()) == 3
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    plan = final_plan(out)
+    fact_scans = [
+        line for line in plan.splitlines()
+        if "FileScan parquet" in line and "taxon_key" in line
+    ]
+    assert len(fact_scans) == 1, plan
+    assert node_count(plan, "Exchange hashpartitioning(taxon_key") == 1, plan
+    semi = build_side(plan, "LeftSemi")
+    assert node_count(semi, "ReusedExchange [taxon_key") == 1, semi
+    assert "FileScan" not in semi, semi
+
+
 def test_no_forced_broadcast_on_cardinality_scaling_sides(taxonomy, occurrence):
     """Sides that scale with the caller's input (expansion frontier,
     expansion arrays, get_occurrences key set) must carry NO forced

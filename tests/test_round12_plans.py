@@ -28,7 +28,7 @@ import re
 
 import pytest
 
-from gbif_filter_python_spark.plans.inspect import explain_str
+from gbif_filter_python_spark.plans.inspect import explain_str, final_plan
 
 
 @pytest.fixture()
@@ -54,13 +54,6 @@ def orders(wide, sf001_dir):
 @pytest.fixture()
 def lineitem(wide, sf001_dir):
     return wide.read.parquet(f"{sf001_dir}/lineitem.parquet")
-
-
-def _final_section(plan: str) -> str:
-    """The final adaptive plan only — the formatted/simple output of
-    an executed AdaptiveSparkPlan appends an ``== Initial Plan ==``
-    section that double-counts every node."""
-    return plan.split("== Initial Plan ==")[0]
 
 
 def _assert_distributed_cdf_shape(df) -> None:
@@ -155,7 +148,7 @@ def test_wasserstein_runtime_reuses_range_exchange(orders):
     df = wasserstein_1d(orders, "o_orderstatus", "o_totalprice", "O", "F")
     rows = df.collect()
     assert len(rows) == 1
-    final = _final_section(explain_str(df, "simple"))
+    final = final_plan(df)
     assert "ReusedExchange" in final, final
     assert final.count("FileScan parquet") == 1, final
 
@@ -177,7 +170,7 @@ def test_drift_report_runtime_single_scan(lineitem):
     # (categorical chi2/psi must ride the SAME single scan: both
     # reduce to per-level sums in the one final aggregation)
     assert len(df.collect()) == 3
-    final = _final_section(explain_str(df, "simple"))
+    final = final_plan(df)
     assert "ReusedExchange" in final, final
     assert final.count("FileScan parquet") == 1, final
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from gbif_filter_python_spark.plans.inspect import explain_str
+from gbif_filter_python_spark.plans.inspect import explain_str, final_plan
 
 
 @pytest.fixture()
@@ -46,13 +46,6 @@ def wide(spark):
 @pytest.fixture()
 def orders(wide, sf001_dir):
     return wide.read.parquet(f"{sf001_dir}/orders.parquet")
-
-
-def _final_section(plan: str) -> str:
-    """The final adaptive plan only — the formatted/simple output of
-    an executed AdaptiveSparkPlan appends an ``== Initial Plan ==``
-    section that double-counts every node."""
-    return plan.split("== Initial Plan ==")[0]
 
 
 def _values_frame(spark):
@@ -144,7 +137,7 @@ def test_robust_outliers_runtime_exchange_reuse(orders):
     # collect() (not count()) so THIS DataFrame's adaptive plan
     # executes and finalizes (the r12 test precedent)
     assert len(out.collect()) > 0
-    final = _final_section(explain_str(out, "simple"))
+    final = final_plan(out)
     assert "ReusedExchange" in final, final
     assert final.count("FileScan parquet") == 2, final
 
@@ -348,7 +341,7 @@ def test_event_latency_matches_retired_form_and_reuses(wide):
     out = event_latency(clicks, buys, on="user_id")
     _assert_no_percentile(out)
     row = out.collect()[0].asDict()
-    final = _final_section(explain_str(out, "simple"))
+    final = final_plan(out)
     # the totals and percentile branches must read the SAME
     # per-distinct-latency aggregate — one asof-join execution
     assert "ReusedExchange" in final, final
@@ -389,7 +382,7 @@ def test_spearman_runtime_single_fact_scan(orders):
 
     out = spearman_corr(orders, "o_totalprice", "o_custkey")
     assert len(out.collect()) == 1
-    final = _final_section(explain_str(out, "simple"))
+    final = final_plan(out)
     assert "ReusedExchange" in final, final
     assert final.count("FileScan parquet") == 1, final
 
@@ -401,7 +394,7 @@ def test_winsorized_runtime_single_fact_scan(orders):
 
     out = winsorized_stats(orders, ["o_orderstatus"], "o_totalprice")
     assert len(out.collect()) > 0
-    final = _final_section(explain_str(out, "simple"))
+    final = final_plan(out)
     assert "ReusedExchange" in final, final
     assert final.count("FileScan parquet") == 1, final
 
@@ -420,8 +413,8 @@ def test_lm_train_bigram_one_corpus_scan_per_branch(wide, sf001_dir):
     docs = wide.read.parquet(f"{sf001_dir}/documents.parquet")
     unigram, bigram = lm_train_bigram(docs, num_buckets=16)
     assert len(unigram.collect()) == 16
-    final_u = _final_section(explain_str(unigram, "simple"))
+    final_u = final_plan(unigram)
     assert final_u.count("FileScan parquet") == 1, final_u
     assert len(bigram.collect()) > 0
-    final_b = _final_section(explain_str(bigram, "simple"))
+    final_b = final_plan(bigram)
     assert final_b.count("FileScan parquet") == 1, final_b
