@@ -3451,12 +3451,9 @@ def q_bpe_learn(spark: SparkSession, sf: str) -> DataFrame:
         ref_learn_bpe,
     )
 
-    docs = _t(spark, sf, "documents")
+    sampled = bpe_training_sample(_t(spark, sf, "documents"), 5000)
     n_merges = 16
-    got = learn_bpe_merges(
-        docs, n_merges=n_merges, sample_target_docs=5000
-    )
-    sampled = bpe_training_sample(docs, 5000)
+    got = learn_bpe_merges(sampled, n_merges=n_merges)
     texts = [r["text"] for r in sampled.select("text").collect()]
     want = ref_learn_bpe(texts, n_merges=n_merges)
     ok_len = len(got) == len(want) == n_merges

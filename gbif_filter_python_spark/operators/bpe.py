@@ -11,11 +11,16 @@ the way BPE actually scales on a cluster:
   than the token stream, and it is the ONLY thing the iterations touch.
   At 100 TB of text the distinct-word table is ~10⁷-10⁸ rows — an
   executor-trivial frame.
-* **The trainer's per-iteration work is one small aggregation job**
-  over that table (pair counts, weighted by word count) plus a
-  map-only re-segmentation fold; lineage is truncated per iteration
-  with ``localCheckpoint`` (the graph.py pattern) so the plan does not
-  grow with merges.
+* **The trainer's per-merge work is one small aggregation** over
+  that table (pair counts, weighted by word count, and the argmax
+  ``collect`` — two Spark jobs under adaptive execution: the
+  pair-count shuffle and the result) plus a map-only re-segmentation
+  fold, which runs no job of its own. Lineage is truncated with
+  ``localCheckpoint`` (the graph.py pattern) once every
+  ``checkpoint_every`` merges, one job each, and only when another
+  merge will read it — so the plan does not grow with merges. Before
+  the loop: the distinct-word checkpoint, plus the corpus count when
+  ``sample_target_docs`` is set.
 * **The merge list is driver-side model state** (like k-means
   centroids): n_merges × a few bytes, the only materialization.
 * **Encoding memoizes by distinct word** — encode each distinct word
@@ -226,6 +231,11 @@ def learn_bpe_merges(
     merges: list[tuple[str, str, int]] = []
     since_ckpt = 0
     for _ in range(n_merges):
+        # checkpoint only when a merge is about to read the folds: a
+        # checkpoint after the last merge would be read by nothing
+        if since_ckpt >= checkpoint_every:
+            segs = segs.localCheckpoint(eager=True)
+            since_ckpt = 0
         top = (
             segs.select(
                 "_n",
@@ -251,9 +261,6 @@ def learn_bpe_merges(
             "_n", _merge_pair_in_syms(F.col("_syms"), a, b).alias("_syms")
         )
         since_ckpt += 1
-        if since_ckpt >= checkpoint_every:
-            segs = segs.localCheckpoint(eager=True)
-            since_ckpt = 0
     return merges
 
 

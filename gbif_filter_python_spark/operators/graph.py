@@ -11,17 +11,23 @@ pipelines use; it backs ``minhash_dedup``'s default
 
 Scale design: each iteration is ONE equi-join (labels against the
 symmetric edge list) + a map-side-combined min-aggregate — no driver
-data movement; the only driver-side values are the per-iteration
-changed-count (a scalar) used for convergence. Lineage is truncated
-every iteration with ``localCheckpoint`` so the plan doesn't grow
-unboundedly (the documented hard part of iterative Spark,
-SURVEY.md §7.4). Convergence is O(component diameter) iterations;
-dedup clusters are shallow (near-clique), so this converges in 2-3
-rounds in practice. For adversarially long chains at extreme scale the
-large-star/small-star contraction variant (O(log n) rounds) is the
-drop-in upgrade — implemented below as
-``connected_components_star`` (same output contract, gated against
-the same oracle by ``dup_components_star``).
+data movement. Lineage is truncated every iteration with
+``localCheckpoint`` so the plan doesn't grow unboundedly (the
+documented hard part of iterative Spark, SURVEY.md §7.4). Convergence
+is O(component diameter) iterations; dedup clusters are shallow
+(near-clique), so this converges in 2-3 rounds in practice. For
+adversarially long chains at extreme scale the large-star/small-star
+contraction variant (O(log n) rounds) is the drop-in upgrade —
+implemented below as ``connected_components_star`` (same output
+contract, gated against the same oracle by ``dup_components_star``).
+
+Convergence probes: every iterative operator here gets its per-round
+scalars — the changed-label count, the frontier or surviving-edge
+count, PageRank's node count and dangling mass — from an
+``Observation`` on the round's own checkpoint job
+(:func:`~gbif_filter_python_spark.operators.iterate.observed_checkpoint`),
+never from a separate ``count()``/``isEmpty()``/``collect()`` job on
+the checkpointed frame.
 """
 
 from __future__ import annotations
@@ -30,6 +36,8 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gbif_filter_python_spark.operators.iterate import observed_checkpoint
 
 
 def connected_components(
@@ -71,17 +79,11 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("comp").alias("_ncomp"))
         )
-        # The convergence flag rides the SAME checkpointed round
-        # instead of a separate labels⋈updated count job: a row
-        # changed iff its neighborhood min undercuts its label
-        # (non-null ``_ncomp < comp`` ⇔ old ``new != old``), so the
-        # post-round test is a shuffle-free scan of the materialized
-        # RDD rather than one more join per iteration (optimization
-        # r14; guide §2.4 — don't re-shuffle what one pass already
-        # knows).
-        updated = (
-            labels.join(neigh, labels["id"] == neigh["src"], "left")
-            .select(
+        # A row changed iff its neighborhood min undercuts its label
+        # (non-null ``_ncomp < comp`` ⇔ ``new != old``); the changed
+        # count is observed on the round's own checkpoint job.
+        labels, probe = observed_checkpoint(
+            labels.join(neigh, labels["id"] == neigh["src"], "left").select(
                 "id",
                 F.least(
                     F.col("comp"), F.coalesce(F.col("_ncomp"), F.col("comp"))
@@ -90,12 +92,11 @@ def connected_components(
                     F.col("_ncomp").isNotNull()
                     & (F.col("_ncomp") < F.col("comp"))
                 ).alias("_chg"),
-            )
-            .localCheckpoint(eager=True)  # truncate lineage per round
+            ),
+            F.count_if(F.col("_chg")).alias("changed"),
         )
-        changed = not updated.filter(F.col("_chg")).isEmpty()
-        labels = updated.drop("_chg")
-        if not changed:
+        labels = labels.drop("_chg")
+        if probe["changed"] == 0:
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} "
@@ -117,7 +118,8 @@ def transitive_closure(
     charts, category trees, full taxonomic lineages) needs the
     fixpoint. Each round extends every frontier path by one parent
     edge: one equi-join, lineage truncated with ``localCheckpoint``,
-    convergence detected by an empty frontier. Rounds = hierarchy
+    convergence detected by an empty frontier (its row count observed
+    on the frontier's checkpoint job). Rounds = hierarchy
     depth, not data size; the per-round shuffle carries (ancestor,
     descendant, depth) triples only.
 
@@ -143,16 +145,15 @@ def transitive_closure(
         F.col("descendant").alias("_c"), F.col("ancestor").alias("_p")
     )
     for _ in range(max_iterations):
-        nxt = (
-            frontier.join(up, frontier["ancestor"] == up["_c"])
-            .select(
+        nxt, probe = observed_checkpoint(
+            frontier.join(up, frontier["ancestor"] == up["_c"]).select(
                 "descendant",
                 F.col("_p").alias("ancestor"),
                 (F.col("depth") + 1).alias("depth"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            F.count(F.lit(1)).alias("n"),
         )
-        if nxt.isEmpty():
+        if probe["n"] == 0:
             return result
         result = result.unionByName(nxt)
         frontier = nxt
@@ -253,83 +254,71 @@ def pagerank(
     precision — the sums are small per node, so cross-engine float
     drift stays ~1e-13, far below the rounding quantum).
 
-    Scale shape per iteration: one equi-join of the rank vector
-    against the out-degree-annotated edge list + one map-side-combined
-    sum aggregate — identical to the connected_components round; the
-    dangling-mass term is a one-scalar driver reduction.
-    ``localCheckpoint`` truncates lineage each round. At 1000
-    executors the join key is the graph's natural partitioning: edges
-    pre-partitioned by ``dst`` re-use the same exchange every
-    iteration.
+    Plan shape. The edge list is checkpointed once, and the node table
+    ``(id, deg)`` — every endpoint with its out-degree, NULL for a
+    dangling node — is built once from it; that table's checkpoint
+    observes ``N`` and the dangling-node count. A round is ONE
+    ``unionByName`` + ``groupBy("id")``: node rows carry ``deg`` and a
+    0.0 contribution (so every node, fed or not, keeps its row and its
+    degree), edge rows carry ``rank/deg`` of their source to ``dst``
+    (one equi-join of the edge list against the rank vector). The
+    aggregate both sums a node's in-flow and carries its degree to the
+    next round, so no second join against the node table is needed;
+    the round's checkpoint observes the next dangling mass,
+    ``sum(rank) where deg is null``, so no round runs a job of its own
+    for it. ``localCheckpoint`` truncates lineage each round.
     """
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    ).localCheckpoint(eager=True)
+    # ^ the edges are re-joined EVERY round; left lazy, each round
+    # would re-evaluate the caller's upstream plan (static loop inputs
+    # must be materialized; the connected_components lesson)
+    deg = e.groupBy(F.col("src").alias("id")).agg(
+        F.count(F.lit(1)).alias("deg")
     )
-    nodes = (
+    ids = (
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    n = nodes.count()
+    nodes, probe = observed_checkpoint(
+        ids.join(deg, "id", "left"),
+        F.count(F.lit(1)).alias("n"),
+        F.count_if(F.col("deg").isNull()).alias("dangling"),
+    )
+    n = probe["n"]
     if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    # checkpointed: the dangling-mass anti-join touches deg EVERY
-    # round — left lazy it would re-scan the edge upstream per
-    # iteration (static loop inputs must be materialized; the r9
-    # connected_components lesson). Node-sized, so the cost is nil.
-    # The degree key is RE-ALIASED before the checkpoint: the
-    # checkpointed LogicalRDD keeps ``e``'s attribute ids, and the
-    # self-referencing ``e ⋈ deg`` join then carries the same ``src``
-    # attribute on both sides — Spark 4.1's analyzer fails that with
-    # INTERNAL_ERROR "Conflicting attributes" when the left side is a
-    # same-name alias projection (surfaced by the round-14 test run;
-    # a fresh alias gives the checkpoint disjoint attribute ids and
-    # the identical join result).
-    deg = (
-        e.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .select(F.col("src").alias("_degsrc"), "deg")
-        .localCheckpoint(eager=True)
-    )
-    # out-degree-annotated edges: contribution factor per edge
-    ed = (
-        e.join(deg, e["src"] == deg["_degsrc"])
-        .drop("_degsrc")
-        .localCheckpoint(eager=True)
-    )
-
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(
-        eager=True
-    )
+        return nodes.select("id", F.lit(0.0).alias("rank"))
+    # an edge into a NULL id feeds no node: drop it here so the NULL
+    # key of the round's aggregate stays the NULL node's own row
+    out_edges = e.filter(F.col("dst").isNotNull())
+    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+    dangling = probe["dangling"] / n
     for _ in range(n_iter):
-        # dangling mass: rank sitting on nodes with no out-edges
-        dangling = (
-            ranks.join(deg, ranks["id"] == deg["_degsrc"], "left_anti")
-            .agg(F.sum("rank"))
-            .collect()[0][0]
-            or 0.0
+        fed = out_edges.join(ranks, out_edges["src"] == ranks["id"]).select(
+            F.col("dst").alias("id"),
+            F.lit(None).cast("long").alias("deg"),
+            (F.col("rank") / F.col("deg")).alias("_c"),
         )
-        contrib = (
-            ed.join(ranks, ed["src"] == ranks["id"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("_in"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes["id"] == contrib["dst"], "left")
+        ranks, probe = observed_checkpoint(
+            ranks.select("id", "deg", F.lit(0.0).alias("_c"))
+            .unionByName(fed)
+            .groupBy("id")
+            .agg(F.max("deg").alias("deg"), F.sum("_c").alias("_in"))
             .select(
                 "id",
+                "deg",
                 (
                     F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("_in"), F.lit(0.0))
-                        + F.lit(dangling / n)
-                    )
+                    + F.lit(damping) * (F.col("_in") + F.lit(dangling / n))
                 ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            F.sum(F.when(F.col("deg").isNull(), F.col("rank"))).alias(
+                "dangling"
+            ),
         )
+        dangling = probe["dangling"] or 0.0
     return ranks.select("id", F.round("rank", round_dp).alias("rank"))
 
 
@@ -497,12 +486,14 @@ def k_core(
     edge list + two semi-joins pruning edges whose either endpoint
     fell under k. No driver data movement — the only driver value is
     the per-round surviving-edge count (a scalar, which doubles as the
-    convergence test); ``localCheckpoint`` truncates lineage per round
+    convergence test, observed on the round's checkpoint job);
+    ``localCheckpoint`` truncates lineage per round
     (the connected_components contract). Round count is bounded by
     the degeneracy ordering depth — small for similarity graphs; the
     cap raises rather than silently returning a non-core.
     """
-    sym = (
+    n_rows = F.count(F.lit(1)).alias("n")
+    sym, probe = observed_checkpoint(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .unionByName(
             edges.select(
@@ -510,10 +501,10 @@ def k_core(
             )
         )
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        n_rows,
     )
-    n_edges = sym.count()
+    n_edges = probe["n"]
     for _ in range(max_iterations):
         if n_edges == 0:
             break
@@ -523,16 +514,15 @@ def k_core(
             .filter(F.col("_deg") >= k)
             .select("src")
         )
-        pruned = (
+        sym, probe = observed_checkpoint(
             sym.join(keep, "src", "left_semi")
             .join(
                 keep.select(F.col("src").alias("dst")), "dst", "left_semi"
             )
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
+            .select("src", "dst"),
+            n_rows,
         )
-        n_next = pruned.count()
-        sym = pruned
+        n_next = probe["n"]
         if n_next == n_edges:
             return sym.groupBy(F.col("src").alias("id")).agg(
                 F.count(F.lit(1)).alias("core_degree")
@@ -569,24 +559,26 @@ def k_truss(
     count per-edge support in one hash aggregation, and drop edges
     under k-2. Shuffles carry (node, node) integer pairs only;
     ``localCheckpoint`` truncates lineage per round and the only
-    driver value is the surviving-edge count (the convergence
-    scalar). Round count is bounded by the truss peeling depth —
-    shallow on similarity graphs (measured 7 at k=8 on the item
-    graph). For hot nodes the oriented join bounds wedge fan-out by
-    the a<b orientation; at extreme skew, degree-order the
-    orientation first (triangle_count's trick) before the loop.
+    driver value is the surviving-edge count (the convergence scalar,
+    observed on the round's checkpoint job). Round count is bounded
+    by the truss peeling depth — shallow on similarity graphs
+    (measured 7 at k=8 on the item graph). For hot nodes the oriented
+    join bounds wedge fan-out by the a<b orientation; at extreme skew,
+    degree-order the orientation first (triangle_count's trick) before
+    the loop.
     """
-    cur = (
+    n_rows = F.count(F.lit(1)).alias("n")
+    cur, probe = observed_checkpoint(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("a"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        n_rows,
     )
     min_sup = k - 2
-    n_edges = cur.count()
+    n_edges = probe["n"]
     for _ in range(max_iterations):
         if n_edges == 0:
             return cur.select(
@@ -605,7 +597,7 @@ def k_truss(
             .groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("support"))
         )
-        kept = (
+        kept, probe = observed_checkpoint(
             cur.join(support, ["a", "b"], "left")
             .filter(F.coalesce(F.col("support"), F.lit(0)) >= min_sup)
             # coalesce in the PROJECTION too: with k<=2 (min_sup<=0)
@@ -617,10 +609,10 @@ def k_truss(
                 F.coalesce(F.col("support"), F.lit(0).cast("long")).alias(
                     "support"
                 ),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            n_rows,
         )
-        n_next = kept.count()
+        n_next = probe["n"]
         if n_next == n_edges:
             return kept.select(
                 F.col("a").alias("id_a"), F.col("b").alias("id_b"), "support"
@@ -653,10 +645,12 @@ def connected_components_star(
     to its min (connectivity is then preserved edge-by-edge:
     u—v becomes u—m—v). Edges only ever move toward smaller ids, so
     the edge multiset converges to component-minimum stars; the
-    convergence check is a distributed anti-join count (no edge data
-    reaches the driver), and ``localCheckpoint`` truncates lineage
-    per round. Same output contract as ``connected_components``
-    (component = min reachable id; every node of ``edges`` labeled).
+    convergence check compares the round's edge count (observed on its
+    checkpoint job) with the previous one and, only when they agree,
+    runs a distributed ``exceptAll`` count (no edge data reaches the
+    driver); ``localCheckpoint`` truncates lineage per round. Same
+    output contract as ``connected_components`` (component = min
+    reachable id; every node of ``edges`` labeled).
     """
 
     def _sym(e: DataFrame) -> DataFrame:
@@ -683,11 +677,11 @@ def connected_components_star(
         )
 
     raw = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    cur = (
-        raw.filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    n_rows = F.count(F.lit(1)).alias("n")
+    cur, probe = observed_checkpoint(
+        raw.filter(F.col("a") != F.col("b")).distinct(), n_rows
     )
+    n_cur = probe["n"]
     # Node universe from the RAW endpoints — BEFORE the self-loop
     # filter — so a node whose only edge is a self-loop still gets its
     # (id, comp=id) row, exactly as connected_components labels it
@@ -698,16 +692,13 @@ def connected_components_star(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    n_cur = cur.count()
     for _ in range(max_iterations):
-        nxt = _phase(_phase(cur, large=True), large=False).localCheckpoint(
-            eager=True
+        nxt, probe = observed_checkpoint(
+            _phase(_phase(cur, large=True), large=False), n_rows
         )
-        # carry the previous round's cardinality instead of re-counting
-        # the checkpointed ``cur`` every round (one fewer job per
-        # round; the exceptAll anti-count still short-circuits on a
-        # cardinality change, so it only runs on the terminal rounds)
-        n_nxt = nxt.count()
+        # the exceptAll anti-count short-circuits on a cardinality
+        # change, so it only runs on the terminal rounds
+        n_nxt = probe["n"]
         same = n_nxt == n_cur and nxt.exceptAll(cur).count() == 0
         cur = nxt
         n_cur = n_nxt

@@ -1283,6 +1283,9 @@ def _cdf_percentiles(
     the non-NULL value count. NULL values are excluded (percentile()
     semantics); a key whose values are ALL NULL produces NO row —
     callers that must keep such groups join back with ``how="left"``.
+    Unkeyed, an empty or all-NULL input likewise produces NO row (not
+    one row of NULLs), so a caller's ``lit(True)`` left join leaves
+    the NULL the percentile is, not a fold over NULL thresholds.
     ``weight_col`` treats ``df`` as pre-aggregated (value, weight)
     rows — exact for integer weights, identical to expansion.
     """
@@ -1310,6 +1313,9 @@ def _cdf_percentiles(
             ).alias(f"_vc_{tag}")
         )
     stats = cdf.groupBy(*key_cols).agg(*aggs)
+    if not key_cols:
+        # a global aggregate over no rows still yields one row
+        stats = stats.filter(F.col("_n").isNotNull())
     cols: list = list(key_cols) + [F.col("_n")]
     for prob, tag in zip(probs, aliases):
         pos = F.lit(prob) * (F.col("_n") - 1).cast("double")

@@ -5,14 +5,18 @@ about *plans*, not results: filters must reach the parquet scan
 (PushedFilters), small dims must broadcast, hot expressions must stay
 inside WholeStageCodegen, and nothing should go cartesian. These
 helpers expose those properties so tests/benchmarks can enforce them
-instead of eyeballing ``df.explain()``.
+instead of eyeballing ``df.explain()``. :func:`jobs_run` does the same
+for the number of Spark jobs a piece of driver code launches — at
+small scale the cost of a query.
 """
 
 from __future__ import annotations
 
 import re
+import uuid
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
@@ -97,3 +101,24 @@ def build_side(plan: str, join: str) -> str:
         sub.append(line)
     last = max(i for i, line in enumerate(sub) if _column(line) == col + 3)
     return "\n".join(sub[last:])
+
+
+def jobs_run(spark: SparkSession, fn: Callable[[], object]) -> int:
+    """Number of Spark jobs ``fn()`` launches from this thread.
+
+    ``fn`` runs under a fresh job group, counted with
+    ``statusTracker()``; the caller's job group, if any, is restored
+    afterwards.
+    """
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    group = f"jobs-run-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs_run")
+    try:
+        fn()
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

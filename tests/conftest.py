@@ -57,6 +57,22 @@ def spark() -> SparkSession:
     s.stop()
 
 
+@pytest.fixture
+def adaptive_spark(spark) -> SparkSession:
+    """The session with adaptive execution on and 4 shuffle partitions
+    (the engine's runtime settings, see ``session.get_spark``) for the
+    length of one test: plan-reuse and job-count pins hold there, not
+    under the suite's static single-partition defaults."""
+    conf = {"spark.sql.adaptive.enabled": "true",
+            "spark.sql.shuffle.partitions": "4"}
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    yield spark
+    for k, v in old.items():
+        spark.conf.set(k, v)
+
+
 # key, parent_key, canonical_name, rank, kingdom, status, is_synonym,
 # accepted_key, habitat, dataset_key
 TAXONOMY_ROWS = [

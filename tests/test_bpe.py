@@ -57,6 +57,23 @@ class TestLearnBpeMerges:
         assert got[0][:2] == ("a", "a")
         assert got[1][:2] == ("aa", "a")
 
+    def test_no_checkpoint_after_the_last_merge(self, spark, docs):
+        """With 4 merges and a checkpoint every 4, a checkpoint after
+        the 4th merge would be read by nothing: the run launches as
+        many jobs as one whose cadence never comes round, and learns
+        the same merges."""
+        from gbif_filter_python_spark.plans.inspect import jobs_run
+
+        def run(every):
+            got = []
+            jobs = jobs_run(spark, lambda: got.extend(learn_bpe_merges(
+                docs, n_merges=4, checkpoint_every=every)))
+            return got, jobs
+
+        merges, jobs = run(4)
+        assert len(merges) == 4
+        assert (merges, jobs) == run(5)
+
     def test_deterministic_across_partitionings(self, spark, docs):
         a = learn_bpe_merges(docs, n_merges=8)
         b = learn_bpe_merges(docs.repartition(7), n_merges=8)

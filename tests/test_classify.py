@@ -218,17 +218,14 @@ class TestBigramLM:
         # the former eager ``toks.count()`` (a full tokenize+bucket pass
         # at construction time) is gone; the token total now rides the
         # unigram aggregate itself.
-        sc = spark.sparkContext
+        from gbif_filter_python_spark.plans.inspect import jobs_run
+
         train = self._corpus(spark)
-        sc.setJobGroup("lm-lazy-probe", "lm_train_bigram construction")
-        try:
-            uni, big = lm_train_bigram(train, num_buckets=B)
-            assert sc.statusTracker().getJobIdsForGroup("lm-lazy-probe") == []
-            uni.count()  # sanity: the probe group does see real actions
-            assert sc.statusTracker().getJobIdsForGroup("lm-lazy-probe") != []
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
+        built = []
+        assert jobs_run(spark, lambda: built.extend(
+            lm_train_bigram(train, num_buckets=B))) == 0
+        # sanity: the probe does see real actions
+        assert jobs_run(spark, built[0].count) > 0
 
 
 class TestMd5Bucket:

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -200,7 +202,10 @@ class TestPageRank:
     def test_matches_numpy_power_iteration(self, spark):
         import numpy as np
 
-        edges = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (2, 4)]
+        # 5 and 6 are dangling; (2, 3) is doubled and (3, 3) loops:
+        # both count in the out-degree and both carry rank
+        edges = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (2, 4),
+                 (1, 5), (4, 6), (2, 3), (3, 3)]
         nodes = sorted({u for e in edges for u in e})
         idx = {v: i for i, v in enumerate(nodes)}
         n = len(nodes)
@@ -214,8 +219,96 @@ class TestPageRank:
                 nr[idx[b]] += d * r[idx[a]] / deg[a]
             r = nr
         got = self._pr(spark, edges, n_iter=3)
+        assert set(got) == set(nodes)
         for v in nodes:
             assert got[v] == pytest.approx(r[idx[v]], abs=1e-4)
+
+    def test_empty_edge_list(self, spark):
+        from gbif_filter_python_spark.operators.graph import pagerank
+
+        out = pagerank(spark.createDataFrame([], "src long, dst long"))
+        assert out.columns == ["id", "rank"]
+        assert out.collect() == []
+
+
+class TestObservedCheckpoint:
+    """The observed aggregates equal the separate probes they replace."""
+
+    @staticmethod
+    def _probe(df):
+        from gbif_filter_python_spark.operators.iterate import (
+            observed_checkpoint,
+        )
+
+        aggs = (F.count(F.lit(1)).alias("n"), F.sum("x").alias("s"),
+                F.count_if(F.col("x") > 3).alias("big"))
+        # the call runs in a thread so a metric that never arrives
+        # fails the test instead of hanging the suite
+        done = []
+        t = threading.Thread(
+            target=lambda: done.append(observed_checkpoint(df, *aggs)),
+            daemon=True,
+        )
+        t.start()
+        t.join(120)
+        assert done, "observed_checkpoint did not return"
+        out, got = done[0]
+        want = df.agg(*aggs).collect()[0].asDict()
+        assert got == want
+        assert got["n"] == df.count() == out.count()
+        return out, got
+
+    def test_empty_input(self, spark):
+        _, got = self._probe(spark.createDataFrame([], "x long"))
+        assert got == {"n": 0, "s": None, "big": 0}
+
+    def test_all_rows_filtered_out(self, spark):
+        df = spark.range(50).select(F.col("id").alias("x"))
+        _, got = self._probe(df.filter(F.col("x") < 0))
+        assert got["n"] == 0
+
+    def test_multi_partition_input(self, spark):
+        df = spark.range(0, 1000, 1, 7).select(F.col("id").alias("x"))
+        out, got = self._probe(df)
+        assert got == {"n": 1000, "s": 499500, "big": 996}
+        assert out.rdd.getNumPartitions() == 7
+
+    def test_same_frame_twice(self, spark):
+        df = spark.range(10).select(F.col("id").alias("x"))
+        assert self._probe(df)[1] == self._probe(df)[1]
+
+
+class TestIterationJobs:
+    """Jobs per call, pinned on one 7-edge graph with the engine's
+    runtime settings (adaptive execution on)."""
+
+    EDGES = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (2, 4), (5, 6)]
+
+    def test_pagerank_round(self, adaptive_spark):
+        from gbif_filter_python_spark.operators.graph import pagerank
+        from gbif_filter_python_spark.plans.inspect import jobs_run
+
+        df = adaptive_spark.createDataFrame(self.EDGES, "src long, dst long")
+
+        def jobs(n_iter):
+            return jobs_run(adaptive_spark,
+                            lambda: pagerank(df, n_iter=n_iter).collect())
+
+        # one round: the edge-rank join's two exchanges, the
+        # aggregate's exchange and the checkpoint (12 with a separate
+        # dangling-mass probe and a second join against the nodes)
+        assert jobs(4) - jobs(3) <= 5
+
+    @pytest.mark.parametrize("op", ["connected_components", "k_core"])
+    def test_probes_ride_the_checkpoints(self, adaptive_spark, op):
+        from gbif_filter_python_spark.operators import graph
+        from gbif_filter_python_spark.plans.inspect import jobs_run
+
+        df = _edges(adaptive_spark, self.EDGES)
+        kw = {"k": 2} if op == "k_core" else {}
+        # 20 with a count()/isEmpty() job after each round's checkpoint
+        assert jobs_run(adaptive_spark,
+                        lambda: getattr(graph, op)(df, **kw).collect()) < 20
 
 
 class TestTriangleCount:

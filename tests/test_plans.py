@@ -73,7 +73,7 @@ def test_run_filter_pipeline_broadcasts(spark, sf001_dir):
 
 
 def test_run_filter_expansion_shares_one_zone_key_exchange(
-    spark, taxonomy, occurrence, tmp_path
+    adaptive_spark, taxonomy, occurrence, tmp_path
 ):
     """run_filter with expansion: building the DataFrame runs no Spark
     job, and at runtime the tag probe and the expansion's child
@@ -83,9 +83,11 @@ def test_run_filter_expansion_shares_one_zone_key_exchange(
     from gbif_filter_python_spark.plans.inspect import (
         build_side,
         final_plan,
+        jobs_run,
         node_count,
     )
 
+    spark = adaptive_spark
     occurrence.write.parquet(str(tmp_path / "occurrence"))
     occ = spark.read.parquet(str(tmp_path / "occurrence"))
     taxa = spark.createDataFrame(
@@ -96,22 +98,12 @@ def test_run_filter_expansion_shares_one_zone_key_exchange(
     cfg = FilterConfig(name_column="name", rank_column="rank",
                        taxa_kingdom="Animalia", zone=Country("NO"),
                        resolve_to_rank="SPECIES")
-    sc = spark.sparkContext
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    sc.setJobGroup("run-filter-build", "run_filter construction")
-    try:
-        out = OccurrenceEngine(taxonomy, occ).run_filter(taxa, cfg)
-        assert sc.statusTracker().getJobIdsForGroup("run-filter-build") == []
-        # collect() finalizes THIS DataFrame's adaptive plan
-        assert len(out.collect()) == 3
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    built = []
+    assert jobs_run(spark, lambda: built.append(
+        OccurrenceEngine(taxonomy, occ).run_filter(taxa, cfg))) == 0
+    out = built[0]
+    # collect() finalizes THIS DataFrame's adaptive plan
+    assert len(out.collect()) == 3
     plan = final_plan(out)
     fact_scans = [
         line for line in plan.splitlines()

@@ -147,10 +147,11 @@ def test_robust_outliers_runtime_exchange_reuse(orders):
 # ---------------------------------------------------------------------------
 
 
-def test_quantile_bins_matches_retired_percentile_array(wide):
+def _quantile_bins_both_ways(df):
+    """(rows binned by quantile_bins, rows binned by the retired
+    single ``percentile(array)`` threshold aggregate)."""
     from gbif_filter_python_spark.operators.profile import quantile_bins
 
-    df = _values_frame(wide)
     out = quantile_bins(df, "v", 4)
     _assert_no_percentile(out)
     got = sorted(
@@ -175,7 +176,38 @@ def test_quantile_bins_matches_retired_percentile_array(wide):
     want = sorted(
         ((r["g"], r["v"], r["bin"]) for r in old.collect()), key=repr
     )
+    return got, want
+
+
+def test_quantile_bins_matches_retired_percentile_array(wide):
+    got, want = _quantile_bins_both_ways(_values_frame(wide))
     assert got == want
+
+
+@pytest.mark.parametrize("rows", [[], [("x", None), ("y", None)]],
+                         ids=["empty", "all_null"])
+def test_quantile_bins_without_values_is_the_null_bin(wide, rows):
+    """No non-NULL value means no thresholds: percentile() is NULL and
+    every row lands in the NULL bin, not in bin 0."""
+    got, want = _quantile_bins_both_ways(
+        wide.createDataFrame(rows, "g string, v double")
+    )
+    assert got == want
+    assert [b for _, _, b in got] == [None] * len(rows)
+
+
+def test_population_stability_all_null_reference_fills_no_bin(wide):
+    """A reference with no values has no thresholds, so neither side's
+    rows land in a numbered bin (they used to pile into bin 0)."""
+    from gbif_filter_python_spark.operators.profile import (
+        population_stability,
+    )
+
+    ref = wide.createDataFrame([(None,)] * 3, "v double")
+    cur = wide.createDataFrame([(1.0,), (2.0,)], "v double")
+    rows = population_stability(ref, cur, "v", n_bins=4).collect()
+    assert sorted((r["bin"], r["ref_n"], r["cur_n"]) for r in rows) == [
+        (b, 0, 0) for b in range(4)]
 
 
 def test_population_stability_matches_retired_form(wide):
