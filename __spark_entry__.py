@@ -3783,15 +3783,14 @@ def q_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_global_index(spark: SparkSession, sf: str) -> DataFrame:
     """Contiguous global row index over documents ordered by doc_id —
-    the scalable zipWithIndex (range shuffle + bit-split
-    monotonically_increasing_id + tiny offsets broadcast; no
+    the scalable zipWithIndex (a distributed running count; no
     single-partition window)."""
     from gbif_filter_python_spark.operators.corpus import (
         assign_global_index,
     )
 
     docs = _t(spark, sf, "documents").select("doc_id", "source")
-    return assign_global_index(docs, ["doc_id"], num_partitions=8).select(
+    return assign_global_index(docs, ["doc_id"]).select(
         "doc_id", "source", "global_idx"
     )
 

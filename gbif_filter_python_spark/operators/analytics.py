@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gbif_filter_python_spark.operators.prefix import prefix_sums
+
 __all__ = ["funnel", "retention_cohorts", "rolling_active_users"]
 
 
@@ -665,7 +667,7 @@ def skyline_2d(
     fact is scanned twice and never windowed.
 
     The prefix max itself runs DISTRIBUTED (the psm_att /
-    ``profile._distributed_cdf`` carry pattern, round-14 fix): on a
+    :func:`~.prefix.prefix_sums` carry pattern, round-14 fix): on a
     continuous x, |distinct x| ≈ n and a bare ``Window.orderBy(_sx)``
     would sort the world on one task. ``repartitionByRange(_sx)``
     gives a cross-partition total order; a per-range-partition ROWS
@@ -881,7 +883,7 @@ def psm_att(
     passes (backward and forward) along the score order, then a
     scalar reduction; no pairwise blow-up anywhere. The running
     last is a PREFIX computation, so it distributes exactly like
-    :func:`profile._distributed_cdf`'s prefix sum — no
+    :func:`~.prefix.prefix_sums` — no
     single-partition global-order window anywhere:
     ``repartitionByRange(_s, _t, _id)`` gives a total order across
     partitions; per-partition windows (partitioned by
@@ -1040,20 +1042,14 @@ def conformal_intervals(
     Marginal coverage of ``pred ± qhat`` on the test half is then
     >= 1 - alpha in expectation.
 
-    Scale shape — the k-th order statistic per group is a distributed
-    prefix COUNT, the grouped sibling of weighted_quantiles'
-    prefix-sum (profile.py): ``repartitionByRange(grp, score)`` +
-    in-partition sort gives a total order per group across
-    partitions; per-(partition, group) counts (a tiny agg, bounded by
-    partitions x groups) become exclusive per-group offsets broadcast
-    back, so global rank = offset + local row_number. Never a
-    single-reducer per-group window, never percentile()'s one merge
-    buffer per group. Selection and coverage are broadcast joins of
-    the per-group model frame (pred, qhat, k — bounded by |groups|).
+    Scale shape: the k-th order statistic per group is the first
+    calibration score whose running count per group
+    (:func:`~.prefix.prefix_sums`) reaches k, never percentile()'s one
+    merge buffer per group; the per-group model frame (bounded by
+    |groups|) is broadcast. A NULL group is a group: every join on
+    the group key is NULL-safe.
     """
     from fractions import Fraction
-
-    from pyspark.sql import Window
 
     if not 0 < alpha < 1:
         raise ValueError(f"alpha must be in (0, 1), got {alpha}")
@@ -1070,74 +1066,40 @@ def conformal_intervals(
     cal = base.filter("_is_cal")
     test = base.filter(~F.col("_is_cal"))
 
+    def by_grp(left: DataFrame, right: DataFrame) -> DataFrame:
+        right = right.withColumnRenamed("grp", "_rg")
+        cond = left["grp"].eqNullSafe(right["_rg"])
+        return left.join(F.broadcast(right), cond).drop("_rg")
+
     model = cal.groupBy("grp").agg(
         F.round(F.avg("v"), 2).alias("pred"),
         F.count(F.lit(1)).alias("n_cal"),
     )
+    scores = by_grp(cal, model.select("grp", "pred")).select(
+        "grp",
+        F.abs(F.col("v") - F.col("pred")).alias("s"),
+        F.lit(1).alias("_one"),
+    )
+    ranked = prefix_sums(scores, ["s"], ["_one"], ["grp"])
     # k = min(ceil((n_cal + 1) * p / q), n_cal) via integer ceil-div:
     # ceil(a/q) = floor((a + q - 1) / q). The float division by q is
     # exact where it matters: the numerator is an exact integer double
     # (< 2^53 for any real n_cal), and IEEE division is correctly
     # rounded, so floor() can only disagree with the rational value if
     # the true quotient is an integer — where the division is exact.
-    model = model.withColumn(
-        "k",
-        F.least(
-            F.floor(
-                ((F.col("n_cal") + 1) * p + (q - 1)) / F.lit(float(q))
-            ).cast("long"),
-            F.col("n_cal"),
-        ),
-    )
-    scores = (
-        cal.join(F.broadcast(model.select("grp", "pred")), "grp")
-        .select("grp", F.abs(F.col("v") - F.col("pred")).alias("s"))
-    )
-    # distributed per-group rank: range shuffle on (grp, s), local
-    # row_number within (partition, grp), exclusive per-group offsets
-    ranged = scores.repartitionByRange("grp", "s").sortWithinPartitions(
-        "grp", "s"
-    )
-    # _pid: spark_partition_id(), NOT monotonically_increasing_id>>33
-    # (ADVICE r8) — both consumers below (local ranks and per-
-    # partition totals) must see identical partition ids, and
-    # spark_partition_id is partition-deterministic by definition
-    # (mono-id additionally encodes a per-row counter whose semantics
-    # this op must not depend on). The two plan branches share the one
-    # range exchange via Spark's ReusedExchange, and RangePartitioner
-    # samples boundaries with a fixed derived seed, so a retried or
-    # recomputed branch re-derives the SAME boundaries — the same
-    # exchange-reuse contract weighted_quantiles documents.
-    parts = ranged.withColumn("_pid", F.spark_partition_id().cast("long"))
-    wloc = Window.partitionBy("_pid", "grp").orderBy("s").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    local = parts.withColumn("_lr", F.count(F.lit(1)).over(wloc))
-    totals = parts.groupBy("_pid", "grp").agg(
-        F.count(F.lit(1)).alias("_pn")
-    )
-    woff = (
-        Window.partitionBy("grp")
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        "_pid",
-        "grp",
-        F.coalesce(F.sum("_pn").over(woff), F.lit(0)).alias("_off"),
-    )
-    ranked = local.join(F.broadcast(offsets), ["_pid", "grp"]).select(
-        "grp", "s", (F.col("_off") + F.col("_lr")).alias("_rank")
+    # The group's score count is n_cal.
+    n_cal = F.col("_tot_one")
+    k = F.least(
+        F.floor(((n_cal + 1) * p + (q - 1)) / F.lit(float(q))).cast("long"),
+        n_cal,
     )
     qhat = (
-        ranked.join(F.broadcast(model.select("grp", "k")), "grp")
-        .filter(F.col("_rank") >= F.col("k"))
+        ranked.filter(F.col("_cum_one") >= k)
         .groupBy("grp")
         .agg(F.min("s").alias("qhat"))
     )
-    band = F.broadcast(model.join(qhat, "grp"))
     return (
-        test.join(band, "grp")
+        by_grp(test, by_grp(model, qhat))
         .groupBy("grp")
         .agg(
             F.first("pred").alias("pred"),
@@ -1340,28 +1302,22 @@ def kruskal_wallis(
 
     Scale shape: ranks are NEVER assigned per row. One hash agg to
     (group, value) pair counts, a re-agg to per-value totals, and
-    average ranks come from the DISTINCT-VALUE table's prefix sum —
-    which runs DISTRIBUTED via :func:`profile._distributed_cdf`
-    (range-partitioned local cumulatives + broadcast per-partition
-    offsets), never a single-partition window: on a continuous metric
-    |values| ≈ n and a bare ``Window.orderBy(v)`` would sort the world
-    on one task (the round-13 review's last one-task sort, fixed).
-    Average ranks stay exact (exclusive prefix count + half-integer
-    within-tie midpoint, both exact in doubles), so the statistic is
-    reproducible across partitionings. The (group, value) pair-count
+    average ranks come from the DISTINCT-VALUE table's running count
+    (:func:`~.prefix.prefix_sums`). Average ranks stay exact
+    (exclusive prefix count + half-integer within-tie midpoint, both
+    exact in doubles), so the statistic is reproducible across
+    partitionings. The (group, value) pair-count
     aggregate is the only fact-sized shuffle; the value-keyed re-agg
     and rank join ride |distinct|-sized tables and AQE picks the join
     strategy (broadcast when the value table is small).
     """
-    from .profile import _distributed_cdf
-
     base = df.select(
         F.col(group_col).alias("grp"),
         F.col(value_col).cast("double").alias("v"),
     ).filter(F.col("grp").isNotNull() & F.col("v").isNotNull())
     gv = base.groupBy("grp", "v").agg(F.count(F.lit(1)).alias("c"))
     vals = gv.groupBy(F.col("v").alias("_v")).agg(F.sum("c").alias("_t"))
-    ranked = _distributed_cdf(vals, ("_t",)).select(
+    ranked = prefix_sums(vals, ["_v"], ["_t"]).select(
         F.col("_v").alias("v"),
         F.col("_t").cast("double").alias("t"),
         (

@@ -953,8 +953,8 @@ def lift_table(
     excluded.
 
     Scale shape: the exact global rank runs on the DISTRIBUTED
-    zipWithIndex path (corpus.assign_global_index: one range shuffle
-    + bit-split monotonic ids + a #partitions-row offset broadcast) —
+    zipWithIndex path (corpus.assign_global_index, a distributed
+    running count) —
     ranking by the NEGATED score keeps ascending range partitioning
     while scoring descending. No single-partition stage anywhere:
     the sf10 ladder measured the naive global-window form at 37× the

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from gbif_filter_python_spark.functions.text import normalized_text, token_count
+from gbif_filter_python_spark.operators.prefix import prefix_sums
 
 __all__ = [
     "deterministic_split",
@@ -896,7 +897,6 @@ def assign_global_index(
     df: DataFrame,
     order_cols: list[str],
     index_col: str = "global_idx",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Contiguous 0-based global row index in the total order of
     ``order_cols`` — the scalable DataFrame replacement for
@@ -904,51 +904,17 @@ def assign_global_index(
     resumable iteration order, and joining shuffled corpora back to
     their source row).
 
-    A single global ``row_number()`` window would funnel the whole
-    table through ONE partition — the canonical non-scalable plan.
-    Instead:
-
-    1. ``repartitionByRange(order_cols)`` + ``sortWithinPartitions`` —
-       one range shuffle puts partition *p*'s rows all before partition
-       *p+1*'s and sorts within; total order across the table.
-    2. ``monotonically_increasing_id()`` evaluated AFTER that sort
-       encodes ``partition_id << 33 | local_row_number`` — a map-only
-       JVM projection (the expression is nondeterministic, so Catalyst
-       will not reorder it below the sort). Splitting the bits yields
-       each row's partition and dense local index for free.
-    3. The per-partition row counts (one tiny agg; #partitions rows)
-       turn into exclusive prefix-sum offsets with a window over that
-       TINY frame, and broadcast-join back: ``global = offset + local``.
-
-    Total cost at 100 TB: one range shuffle of the data, one
-    counts-only agg, one broadcast hash join — no single-partition
-    stage anywhere. The emitted index is deterministic as long as
-    ``order_cols`` is a total order (include a unique tiebreaker);
-    range-boundary sampling may move rows between partitions across
-    runs, but offset+local always reconstructs the same global rank.
+    The index is the running row count minus one
+    (:func:`~.prefix.prefix_sums`), never a single global
+    ``row_number()`` window funnelling the table through one
+    partition. It is deterministic as long as ``order_cols`` is a
+    total order (include a unique tiebreaker), whatever the number of
+    range partitions.
     """
-    ranged = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        if num_partitions
-        else df.repartitionByRange(*order_cols)
-    ).sortWithinPartitions(*order_cols)
-    mid = ranged.withColumn("_mid", F.monotonically_increasing_id())
-    parts = mid.withColumn(
-        "_pid", F.shiftrightunsigned("_mid", 33).cast("long")
-    ).withColumn("_local", F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)))
-    counts = parts.groupBy("_pid").agg(F.count("*").alias("_n"))
-    w = (
-        Window.orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    ranked = prefix_sums(df.withColumn("_one", F.lit(1)), order_cols, ["_one"])
+    return ranked.select(
+        *df.columns, (F.col("_cum_one") - 1).cast("long").alias(index_col)
     )
-    offsets = counts.select(
-        "_pid", F.coalesce(F.sum("_n").over(w), F.lit(0)).alias("_offset")
-    )
-    # Bounded broadcast: |offsets| == #partitions, never data-sized.
-    out = parts.join(F.broadcast(offsets), "_pid").withColumn(
-        index_col, (F.col("_offset") + F.col("_local")).cast("long")
-    )
-    return out.drop("_mid", "_pid", "_local", "_offset")
 
 
 def repeated_spans(
@@ -2035,49 +2001,6 @@ def seqlen_histogram(
     )
 
 
-def _ordered_prefix_sums(
-    toks: DataFrame, order_col: str, value_col: str
-) -> DataFrame:
-    """Exclusive global running sum of ``value_col`` in ``order_col``
-    order, distributed: the :func:`assign_global_index` plan (range
-    shuffle → partition-local window → tiny per-partition offset
-    broadcast) generalized from row counts to value sums. No
-    single-partition stage anywhere — the one-task global window this
-    replaces is the canonical non-scalable cumsum (the q_corpus_prep
-    sf10 lesson). Adds ``start`` = sum of all preceding rows' values.
-    Deterministic whatever the range boundaries: offset + local sum
-    reconstructs the same global prefix.
-    """
-    ranged = toks.repartitionByRange(F.col(order_col)).sortWithinPartitions(
-        order_col
-    )
-    parts = ranged.withColumn(
-        "_pid",
-        F.shiftrightunsigned(F.monotonically_increasing_id(), 33).cast(
-            "long"
-        ),
-    )
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = parts.withColumn("_lsum", F.sum(value_col).over(w))
-    totals = local.groupBy("_pid").agg(F.sum(value_col).alias("_t"))
-    offw = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "_pid", F.coalesce(F.sum("_t").over(offw), F.lit(0)).alias("_off")
-    )
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(
-            "start",
-            (F.col("_off") + F.col("_lsum") - F.col(value_col)).cast("long"),
-        )
-        .drop("_pid", "_lsum", "_off")
-    )
-
-
 def packing_efficiency(
     docs: DataFrame,
     capacities: tuple = (256, 512, 1024, 2048),
@@ -2098,8 +2021,8 @@ def packing_efficiency(
     (docs longer than the capacity — cut necessarily).
 
     Scale shape: token counts are one projection; the global stream
-    offsets come from :func:`_ordered_prefix_sums` (distributed, no
-    one-task window); every capacity's stats are extra AGGREGATE
+    offsets are their running sums (:func:`~.prefix.prefix_sums`);
+    every capacity's stats are extra AGGREGATE
     EXPRESSIONS over that single frame — one scan, one tiny result
     row exploded to len(capacities) rows, never a per-capacity
     re-scan. Boundary arithmetic is pure integer floor division.
@@ -2111,7 +2034,9 @@ def packing_efficiency(
         F.col(doc_id_col).alias("_id"),
         token_count(F.col(text_col)).cast("long").alias("_n"),
     )
-    offs = _ordered_prefix_sums(toks, "_id", "_n")
+    offs = prefix_sums(toks, ["_id"], ["_n"]).withColumn(
+        "start", F.col("_cum_n") - F.col("_n")
+    )
     # SQL `div` (true integer division on longs), NOT floor(x / c):
     # the double division loses ulps once cumulative offsets pass
     # 2^53 — the same float hazard seqlen_histogram's bit-length

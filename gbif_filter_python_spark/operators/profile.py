@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gbif_filter_python_spark.operators.prefix import prefix_sums
+
 
 def profile_table(
     df: DataFrame,
@@ -404,7 +406,11 @@ def population_stability(
     ``(bin, ref_n, cur_n, ref_pct, cur_pct, psi_contrib)`` with
     ``psi = sum(psi_contrib)``; proportions are floored at ``floor``
     before the log so an empty current bin contributes finitely (the
-    standard PSI convention).
+    standard PSI convention). An EMPTY side still yields ``n_bins``
+    rows: its counts are 0 and its pct, like every ``psi_contrib``,
+    is NULL — a proportion of nothing, not an ANSI DIVIDE_BY_ZERO
+    (an empty reference also has no thresholds, so no current row
+    falls in a bin).
 
     Scale shape: the reference thresholds come from ONE
     :func:`_cdf_percentiles` pass (r15 — exact interpolated
@@ -447,19 +453,29 @@ def population_stability(
             "bin",
             F.coalesce("ref_n", F.lit(0)).alias("ref_n"),
             F.coalesce("cur_n", F.lit(0)).alias("cur_n"),
-            (F.coalesce("ref_n", F.lit(0)) / F.col("_rt")).alias("_rp"),
-            (F.coalesce("cur_n", F.lit(0)) / F.col("_ct")).alias("_cp"),
+            (
+                F.coalesce("ref_n", F.lit(0))
+                / F.when(F.col("_rt") > 0, F.col("_rt"))
+            ).alias("_rp"),
+            (
+                F.coalesce("cur_n", F.lit(0))
+                / F.when(F.col("_ct") > 0, F.col("_ct"))
+            ).alias("_cp"),
         )
     )
     rp = F.greatest(F.col("_rp"), F.lit(floor))
     cp = F.greatest(F.col("_cp"), F.lit(floor))
+    psi = F.when(
+        F.col("_rp").isNotNull() & F.col("_cp").isNotNull(),
+        (cp - rp) * F.log(cp / rp),
+    )
     return joined.select(
         "bin",
         "ref_n",
         "cur_n",
         F.round("_rp", round_dp).alias("ref_pct"),
         F.round("_cp", round_dp).alias("cur_pct"),
-        F.round((cp - rp) * F.log(cp / rp), round_dp).alias("psi_contrib"),
+        F.round(psi, round_dp).alias("psi_contrib"),
     )
 
 
@@ -964,16 +980,13 @@ def winsorized_stats(
     plain mean (the additive complement of robust_outliers' MAD
     flagging: measure robustly instead of flagging).
 
-    Both exact interior percentiles come out of the keyed
-    :func:`_distributed_cdf` machinery (r14 optimization round):
-    ``percentile()`` funnels EVERY group value through one
-    aggregation buffer per group — a single-task sort and an OOM on
-    a 100 TB mega-group (the kruskal_wallis/skyline_2d pattern), and
-    it was measured as ~100 % of this operator's wall locally. Here a
-    per-(group, value) count aggregate (map-side combined) feeds the
-    range-partitioned prefix sum; the two order statistics each
-    percentile needs are conditional ``min``s over the cumulative
-    counts, and the interpolation replicates ``Percentile``'s exact
+    Both exact interior percentiles come out of a per-(group, value)
+    count aggregate and its keyed running counts
+    (:func:`~.prefix.prefix_sums`), not ``percentile()``'s one
+    aggregation buffer per group (a single-task sort and an OOM on a
+    100 TB mega-group). The two order statistics each percentile
+    needs are conditional ``min``s over the cumulative counts, and
+    the interpolation replicates ``Percentile``'s exact
     arithmetic (``pos = p·(n−1)``; ``(ceil−pos)·v_floor +
     (pos−floor)·v_ceil``; the degenerate integral-position branch
     returns the value itself). Thresholds are 6dp-rounded BEFORE the
@@ -997,7 +1010,7 @@ def winsorized_stats(
     per = keep.groupBy(
         *group_cols, F.col(value_col).alias("_v")
     ).agg(F.count(F.lit(1)).alias("_t"))
-    cdf = _distributed_cdf(per, ("_t",), key_cols=tuple(group_cols))
+    cdf = prefix_sums(per, ["_v"], ["_t"], group_cols)
 
     def _order_stats(prob: float, tag: str) -> list:
         # per-row: the group total rides every row as _tot_t, so the
@@ -1088,14 +1101,11 @@ def rank_sum_test(
     z-line decision is what the report needs). NULL values excluded.
 
     Scale shape: ranks come from the DISTINCT-VALUE aggregate (cnt
-    per value + prefix cumsum over that |distinct|-row table) — and
-    since |distinct| ≈ n on a continuous metric, the cumsum runs
-    DISTRIBUTED via :func:`_distributed_cdf` (range-partitioned
-    prefix sums, broadcast offsets; exclusive "_before" is the
-    inclusive cum minus the row's own count — exact in longs), never
-    a single-partition window. ``_ta`` rides in cum_cols (its running
-    sum is unused) so both branch schemas stay identical and the
-    planner reuses one exchange. Average ranks are exact
+    per value + its running count, :func:`~.prefix.prefix_sums`;
+    exclusive "_before" is the inclusive cum minus the row's own
+    count — exact in longs). ``_ta`` is summed too (its running sum
+    is unused) so both branch schemas stay identical and the planner
+    reuses one exchange. Average ranks are exact
     half-integers and the rank sums exact in double far past any
     realistic N; only z itself rounds.
     """
@@ -1110,7 +1120,7 @@ def rank_sum_test(
         F.count(F.lit(1)).alias("_t"),
         F.sum((F.col("_g") == group_a).cast("long")).alias("_ta"),
     )
-    ranked = _distributed_cdf(per_val, ("_t", "_ta")).withColumn(
+    ranked = prefix_sums(per_val, ["_v"], ["_t", "_ta"]).withColumn(
         "_before", F.col("_cum_t") - F.col("_t")
     ).withColumn(
         "_avgrank", F.col("_before") + (F.col("_t") + 1) / 2.0
@@ -1139,120 +1149,6 @@ def rank_sum_test(
     )
 
 
-def _distributed_cdf(
-    per_val: DataFrame,
-    cum_cols: tuple,
-    key_cols: tuple = (),
-) -> DataFrame:
-    """Distributed CDF machinery over a per-distinct-value table: for
-    every ``c`` in ``cum_cols`` attach ``_cum{c}`` (the inclusive
-    prefix sum in (key…, _v) order) and ``_tot{c}`` (the per-key
-    grand total), plus ``_nextv`` (the next distinct value within the
-    key, NULL at the key's maximum) — everything :func:`ks_test` /
-    :func:`wasserstein_1d` / :func:`drift_report` need, with NO
-    single-partition window over the value table.
-
-    Why it exists (round-11 review): the per-distinct-value table is
-    |distinct| rows, and on a CONTINUOUS double at 100 TB |distinct|
-    ≈ n — a bare ``Window.orderBy(_v)`` would sort the world on one
-    executor. This is the :func:`weighted_quantiles` distributed
-    prefix-sum pattern instead: ``repartitionByRange(key…, _v)``
-    gives a total order across partitions; ``spark_partition_id()``
-    tags each row's range partition and a ROWS-frame per-(partition,
-    key) window computes the local cumulative; per-(partition,
-    key) totals — a TINY agg, ≤ shuffle.partitions × |keys| rows —
-    become exclusive prefix offsets and per-key grand totals,
-    broadcast back, so ``cum = offset + local_cum``. ``_nextv`` is
-    the in-partition lead patched at partition boundaries with the
-    next partition's first value from the same broadcast. The only
-    unordered-by-key window runs over the tiny totals table. Both
-    consumers of the range shuffle (local cums and totals) read the
-    SAME exchange — planner exchange reuse keeps the upstream fact
-    scan at one (plan-tested in tests/test_round12_plans.py).
-    """
-    from pyspark.sql import Window
-
-    keys = list(key_cols)
-    order = keys + ["_v"]
-    # (key…, _v) is UNIQUE in a per-distinct-value table, so _v is a
-    # total order within (partition, key) and no monotonic row id /
-    # pre-sort is needed (unlike weighted_quantiles, whose values
-    # repeat): the windows sort by _v themselves, and the totals
-    # branch aggregates the reused range shuffle without any sort.
-    parts = per_val.repartitionByRange(*order).withColumn(
-        "_pid", F.spark_partition_id().cast("long")
-    )
-    wloc = Window.partitionBy("_pid", *keys).orderBy("_v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    local = parts
-    for c in cum_cols:
-        local = local.withColumn(f"_lc{c}", F.sum(c).over(wloc))
-    local = local.withColumn(
-        "_leadv",
-        F.lead("_v").over(Window.partitionBy("_pid", *keys).orderBy("_v")),
-    )
-    # totals come from the WINDOW OUTPUT (the partition-local cum at
-    # the partition's max value IS the partition total via max_by),
-    # not from a separate agg over `parts`: aggregating `parts` would
-    # let column pruning give the totals branch a NARROWER schema
-    # under the range exchange (drift_report carries _sa/_sb for the
-    # means), which defeats exchange reuse and re-scans the fact
-    totals = local.groupBy("_pid", *keys).agg(
-        F.min("_v").alias("_firstv"),
-        *[
-            F.expr(f"max_by(_lc{c}, _v)").alias(f"_pt{c}")
-            for c in cum_cols
-        ],
-    )
-    wkey = Window.partitionBy(*keys)
-    woff = wkey.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offs = totals.select(
-        "_pid",
-        *keys,
-        *[
-            F.coalesce(F.sum(f"_pt{c}").over(woff), F.lit(0)).alias(
-                f"_off{c}"
-            )
-            for c in cum_cols
-        ],
-        *[
-            F.sum(f"_pt{c}").over(wkey).alias(f"_tot{c}")
-            for c in cum_cols
-        ],
-        F.lead("_firstv").over(wkey.orderBy("_pid")).alias("_nextfirst"),
-    )
-    # NULL-SAFE key equality: a NULL group key is a legitimate group
-    # (groupBy keeps it, percentile() emits it, callers like
-    # levene_test join it back eqNullSafe) — a plain equality join
-    # here silently dropped its rows (r15 fix; identical plan and
-    # result for non-null keys, BroadcastHashJoin handles
-    # EqualNullSafe as an equi-key)
-    offs_r = offs.withColumnRenamed("_pid", "_opid")
-    for c in keys:
-        offs_r = offs_r.withColumnRenamed(c, f"_ok{c}")
-    cond = local["_pid"] == F.col("_opid")
-    for c in keys:
-        cond = cond & local[c].eqNullSafe(F.col(f"_ok{c}"))
-    out = local.join(F.broadcast(offs_r), cond).drop(
-        "_opid", *[f"_ok{c}" for c in keys]
-    )
-    for c in cum_cols:
-        out = out.withColumn(f"_cum{c}", F.col(f"_off{c}") + F.col(f"_lc{c}"))
-    out = out.withColumn(
-        "_nextv", F.coalesce(F.col("_leadv"), F.col("_nextfirst"))
-    )
-    return out.drop(
-        "_pid",
-        "_leadv",
-        "_nextfirst",
-        *[f"_lc{c}" for c in cum_cols],
-        *[f"_off{c}" for c in cum_cols],
-    )
-
-
 def _cdf_percentiles(
     df: DataFrame,
     value_col: str,
@@ -1263,14 +1159,11 @@ def _cdf_percentiles(
     weight_col: str | None = None,
 ) -> DataFrame:
     """Exact interpolated percentiles — ``percentile()``'s arithmetic
-    bit-for-bit — computed through the keyed :func:`_distributed_cdf`
-    instead of one aggregation buffer per group (r15 optimization
-    round, generalizing the r14 ``winsorized_stats`` conversion):
-    ``percentile()`` funnels EVERY group value through a single
-    aggregation cell — a single-task sort and an OOM at a 100 TB
-    mega-group. Here a per-(key, value) count aggregate (map-side
-    combined) feeds the range-partitioned prefix sum; each requested
-    percentile's two order statistics are conditional ``min``s over
+    bit-for-bit — computed from a per-(key, value) count aggregate
+    and its keyed running counts (:func:`~.prefix.prefix_sums`)
+    instead of ``percentile()``'s one aggregation buffer per group (a
+    single-task sort and an OOM at a 100 TB mega-group). Each
+    requested percentile's two order statistics are conditional ``min``s over
     the cumulative counts (``cum > i`` ⇔ this distinct value covers
     sorted position ``i``), and the interpolation replicates
     ``Percentile``'s exact arithmetic: ``pos = p·(n−1)``;
@@ -1298,7 +1191,7 @@ def _cdf_percentiles(
             F.sum(weight_col) if weight_col else F.count(F.lit(1))
         ).alias("_t")
     )
-    cdf = _distributed_cdf(per, ("_t",), key_cols=tuple(key_cols))
+    cdf = prefix_sums(per, ["_v"], ["_t"], key_cols)
     aggs = [F.min("_tot_t").alias("_n")]
     for prob, tag in zip(probs, aliases):
         pos = F.lit(prob) * (F.col("_tot_t") - 1).cast("double")
@@ -1352,11 +1245,8 @@ def ks_test(
     CDF divergence with a binning-free statistic.
 
     Scale shape: per-DISTINCT-value counts via one map-side-combined
-    hash aggregation, then the CDF prefix sums run DISTRIBUTED via
-    :func:`_distributed_cdf` (the weighted_quantiles range-partition
-    + offset-broadcast pattern) — no single-partition window anywhere,
-    even when the value column is continuous and |distinct| ≈ n (the
-    round-11 review's 100×-scale caveat, fixed). Both CDFs step at
+    hash aggregation, then the CDFs are their running sums
+    (:func:`~.prefix.prefix_sums`). Both CDFs step at
     pooled values (ties included), so the sup is exact, not
     grid-sampled. NULL values excluded pairwise.
     """
@@ -1371,7 +1261,7 @@ def ks_test(
         F.sum((F.col("_g") == group_a).cast("long")).alias("_ca"),
         F.sum((F.col("_g") == group_b).cast("long")).alias("_cb"),
     )
-    cdfs = _distributed_cdf(per_val, ("_ca", "_cb"))
+    cdfs = prefix_sums(per_val, ["_v"], ["_ca", "_cb"])
     gap = F.abs(
         F.col("_cum_ca") / F.col("_tot_ca")
         - F.col("_cum_cb") / F.col("_tot_cb")
@@ -1548,8 +1438,8 @@ def spearman_corr(
     both marginal per-value count tables RE-AGGREGATE the pair table
     (the lm_train_bigram / cms_build identity — Σ of pair counts per
     value ≡ the per-value row count, exact in longs), both average-
-    rank maps come out of a SINGLE side-keyed
-    :func:`_distributed_cdf` pass (one range shuffle instead of two),
+    rank maps come out of a SINGLE side-keyed running count
+    (:func:`~.prefix.prefix_sums`, one range shuffle instead of two),
     and the sufficient statistics are count-weighted sums over the
     pair table. The fact is never globally sorted, never re-scanned,
     and never joined row-at-a-time: the r13 shape scanned it three
@@ -1579,7 +1469,7 @@ def spearman_corr(
     per = stacked.groupBy("_s", "_v").agg(F.sum("_c").alias("_t"))
     # exclusive before-count = inclusive cum minus the row's own
     # count, both exact in longs
-    ranked = _distributed_cdf(per, ("_t",), key_cols=("_s",)).select(
+    ranked = prefix_sums(per, ["_v"], ["_t"], ["_s"]).select(
         "_s",
         "_v",
         (
@@ -1634,11 +1524,8 @@ def auc_by_group(
 
     Scale shape: the :func:`rank_sum_test` discipline per group —
     ranks come from the DISTINCT-(group, score) aggregate (count +
-    positives per value), and the per-group prefix cumsum runs
-    DISTRIBUTED via :func:`_distributed_cdf` keyed by group: a single
-    group's continuous-score value table is still ~n/k rows at 100 TB,
-    so even the group-partitioned window would serialize — range
-    partitioning on (group, score) spreads it instead. Rank sums are
+    positives per value) and their per-group running counts
+    (:func:`~.prefix.prefix_sums`). Rank sums are
     exact half-integers; only auc rounds.
     """
     rows = df.filter(
@@ -1652,9 +1539,7 @@ def auc_by_group(
         F.count(F.lit(1)).alias("_t"),
         F.sum("_y").alias("_tp"),
     )
-    ranked = _distributed_cdf(
-        per_val, ("_t", "_tp"), key_cols=("_g",)
-    ).withColumn(
+    ranked = prefix_sums(per_val, ["_v"], ["_t", "_tp"], ["_g"]).withColumn(
         "_before", F.col("_cum_t") - F.col("_t")
     ).withColumn("_avgrank", F.col("_before") + (F.col("_t") + 1) / 2.0)
     agg = ranked.groupBy("_g").agg(
@@ -3074,18 +2959,15 @@ def weighted_quantiles(
     token-weighted doc-length cuts and importance-weighted score
     thresholds, none of which plain ``percentile`` answers.
 
-    Scale shape — a distributed prefix sum, never a single-partition
-    window: ``repartitionByRange(value)`` + in-partition sort gives a
-    total order across partitions; the bit-split monotonic id yields
-    each row's partition and ROWS-frame local cumulative weight; the
-    per-partition weight totals (one tiny agg) become exclusive
-    prefix offsets broadcast back, so ``cumw = offset + local_cum``.
-    Selection is a broadcast join of the k-row quantile frame and one
-    min() per q. Rows-frame vs the SQL twin's RANGE-frame peer
-    handling differ per-row on ties but provably agree on the min-v
-    selection (the last peer of any value carries the full
-    range-frame sum). Zero/negative weights and NULLs are excluded;
-    an all-excluded input yields an empty frame.
+    Scale shape: the cumulative weight is a running sum
+    (:func:`~.prefix.prefix_sums`), never a single-partition window,
+    and its total is the helper's, not a second pass. Selection is a
+    broadcast join of the k-row quantile frame and one min() per q.
+    Rows-frame vs the SQL twin's RANGE-frame peer handling differ
+    per-row on ties but provably agree on the min-v selection (the
+    last peer of any value carries the full range-frame sum).
+    Zero/negative weights and NULLs are excluded; an all-excluded
+    input yields an empty frame.
 
     Determinism caveat: with INTEGRAL weights (counts, quantities,
     token counts — the common case) every cumulative sum is exact in
@@ -3094,8 +2976,6 @@ def weighted_quantiles(
     noise at the boundary row; if that matters, scale to integers
     first.
     """
-    from pyspark.sql import Window
-
     if not qs:
         raise ValueError("qs must be non-empty")
     if any(not 0 < q <= 1 for q in qs):
@@ -3106,34 +2986,13 @@ def weighted_quantiles(
     ).filter(
         F.col("v").isNotNull() & F.col("w").isNotNull() & (F.col("w") > 0)
     )
-    ranged = base.repartitionByRange("v").sortWithinPartitions("v")
-    mid = ranged.withColumn("_mid", F.monotonically_increasing_id())
-    parts = mid.withColumn(
-        "_pid", F.shiftrightunsigned("_mid", 33).cast("long")
-    )
-    wloc = Window.partitionBy("_pid").orderBy("_mid").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    local = parts.withColumn("_lc", F.sum("w").over(wloc))
-    totals = parts.groupBy("_pid").agg(F.sum("w").alias("_pw"))
-    woff = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = totals.select(
-        "_pid",
-        F.coalesce(F.sum("_pw").over(woff), F.lit(0.0)).alias("_off"),
-    )
-    cum = local.join(F.broadcast(offsets), "_pid").select(
-        "v", (F.col("_off") + F.col("_lc")).alias("_cumw")
-    )
+    cum = prefix_sums(base, ["v"], ["w"])
     spark = df.sparkSession
     qf = F.broadcast(
         spark.createDataFrame([(float(q),) for q in qs], "q double")
     )
-    tot = base.agg(F.sum("w").alias("_W"))
     return (
-        cum.crossJoin(F.broadcast(tot))
-        .join(qf, F.col("_cumw") >= F.col("q") * F.col("_W"))
+        cum.join(qf, F.col("_cumw") >= F.col("q") * F.col("_totw"))
         .groupBy("q")
         .agg(F.round(F.min("v"), round_dp).alias("value"))
     )
@@ -3251,21 +3110,15 @@ def grouped_quantiles(
     Why not ``percentile().over(groupBy)``: Spark's exact percentile
     funnels EVERY group value through one aggregation buffer per
     group — a mega-group at 100 TB is a single-task OOM. Here the
-    per-group rank is a distributed prefix COUNT: one
-    ``repartitionByRange(grp, v)`` shuffle gives a per-group total
-    order across partitions; per-(partition, group) counts (a tiny
-    agg, |partitions| × |groups| rows) become exclusive offsets
-    broadcast back, so ``rank = offset + local row_number`` with an
-    incremental ROWS frame. Selection is a broadcast join of the
-    per-(group, q) rank thresholds and one ``min`` per cell. The k
+    per-group rank and group size are a running count and its total
+    (:func:`~.prefix.prefix_sums`), and selection is a broadcast join
+    of the k-row quantile frame and one ``min`` per cell. The k
     threshold is exact integer arithmetic (``Fraction(str(q))`` —
     float ``ceil(q*n)`` is boundary-fragile cross-engine; the float
     division by the denominator is exact where floor() consumes it,
-    same argument as conformal_intervals).
+    same argument as conformal_intervals). A NULL group is a group.
     """
     from fractions import Fraction
-
-    from pyspark.sql import Window
 
     if not qs:
         raise ValueError("qs must be non-empty")
@@ -3274,8 +3127,9 @@ def grouped_quantiles(
     base = df.select(
         F.col(group_col).alias("grp"),
         F.col(value_col).cast("double").alias("v"),
+        F.lit(1).alias("_one"),
     ).filter(F.col("v").isNotNull())
-    counts = base.groupBy("grp").agg(F.count(F.lit(1)).alias("_n"))
+    ranked = prefix_sums(base, ["v"], ["_one"], ["grp"])
 
     spark = df.sparkSession
     fracs = [(float(q), *Fraction(str(q)).as_integer_ratio()) for q in qs]
@@ -3283,50 +3137,16 @@ def grouped_quantiles(
         spark.createDataFrame(fracs, "q double, _p long, _d long")
     )
     # k = ceil(n * p / d) = floor((n*p + d - 1) / d), capped at n >= 1
-    ks = counts.crossJoin(qf).select(
-        "grp",
-        "q",
-        F.greatest(
-            F.floor(
-                (F.col("_n") * F.col("_p") + F.col("_d") - 1)
-                / F.col("_d").cast("double")
-            ).cast("long"),
-            F.lit(1),
-        ).alias("_k"),
-    )
-
-    ranged = base.repartitionByRange("grp", "v").sortWithinPartitions(
-        "grp", "v"
-    )
-    # spark_partition_id, not mono-id>>33 (ADVICE r8): partition-
-    # deterministic by definition; the local-rank and totals branches
-    # share one range exchange (ReusedExchange) whose boundary sample
-    # is seed-deterministic, so retries re-derive identical _pids —
-    # same exchange-reuse contract weighted_quantiles documents.
-    parts = ranged.withColumn("_pid", F.spark_partition_id().cast("long"))
-    wloc = Window.partitionBy("_pid", "grp").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    local = parts.withColumn("_lr", F.count(F.lit(1)).over(wloc))
-    totals = parts.groupBy("_pid", "grp").agg(
-        F.count(F.lit(1)).alias("_pn")
-    )
-    woff = (
-        Window.partitionBy("grp")
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        "_pid",
-        "grp",
-        F.coalesce(F.sum("_pn").over(woff), F.lit(0)).alias("_off"),
-    )
-    ranked = local.join(F.broadcast(offsets), ["_pid", "grp"]).select(
-        "grp", "v", (F.col("_off") + F.col("_lr")).alias("_rank")
+    k = F.greatest(
+        F.floor(
+            (F.col("_tot_one") * F.col("_p") + F.col("_d") - 1)
+            / F.col("_d").cast("double")
+        ).cast("long"),
+        F.lit(1),
     )
     return (
-        ranked.join(F.broadcast(ks), "grp")
-        .filter(F.col("_rank") >= F.col("_k"))
+        ranked.crossJoin(qf)
+        .filter(F.col("_cum_one") >= k)
         .groupBy("grp", "q")
         .agg(F.round(F.min("v"), round_dp).alias("value"))
     )
@@ -4027,11 +3847,8 @@ def wasserstein_1d(
 
     Scale shape: the ks_test contract exactly — per-DISTINCT-value
     conditional counts via one map-side-combined hash aggregation,
-    then the CDF prefix sums AND the lead-value gap run DISTRIBUTED
-    via :func:`_distributed_cdf` (range-partitioned prefix sums with
-    broadcast offsets; partition-boundary leads patched from the same
-    broadcast) — no single-partition window even on continuous
-    columns where |distinct| ≈ n (round-11 review fix).
+    then the CDFs and the next distinct value both come from
+    :func:`~.prefix.prefix_sums`.
     """
     two = df.filter(
         F.col(group_col).isin([group_a, group_b])
@@ -4044,14 +3861,14 @@ def wasserstein_1d(
         F.sum((F.col("_g") == group_a).cast("long")).alias("_ca"),
         F.sum((F.col("_g") == group_b).cast("long")).alias("_cb"),
     )
-    cdfs = _distributed_cdf(per_val, ("_ca", "_cb"))
+    cdfs = prefix_sums(per_val, ["_v"], ["_ca", "_cb"])
     gap = F.abs(
         F.col("_cum_ca") / F.col("_tot_ca")
         - F.col("_cum_cb") / F.col("_tot_cb")
     )
     seg = F.when(
-        F.col("_nextv").isNotNull(),
-        gap * (F.col("_nextv") - F.col("_v")),
+        F.col("_next_v").isNotNull(),
+        gap * (F.col("_next_v") - F.col("_v")),
     ).otherwise(F.lit(0.0))
     agg = (
         cdfs.filter((F.col("_tot_ca") > 0) & (F.col("_tot_cb") > 0))
@@ -4113,12 +3930,9 @@ def drift_report(
       pure per-level sums.
 
     Scale shape: scan -> stack (k rows per fact row, map-side) ->
-    ONE (column, value, level) hash-agg -> DISTRIBUTED per-column CDF
-    prefix sums via :func:`_distributed_cdf` keyed by column (range
-    partitioning on (column, value); a column whose |distinct| ~ n —
-    any continuous double at 100 TB — spreads over ALL partitions
-    instead of serializing into one ordered task, the round-11 review
-    fix) -> one row per column. Categorical rows ride the SAME
+    ONE (column, value, level) hash-agg -> per-column CDF running
+    sums (:func:`~.prefix.prefix_sums` keyed by column) -> one row
+    per column. Categorical rows ride the SAME
     pipeline (their CDF columns are unused garbage — both chi2 and
     psi reduce to plain aggregates, see above), so adding categorical
     coverage costs zero extra scans, branches or joins; the plan test
@@ -4162,12 +3976,12 @@ def drift_report(
     # reduce, and keeping extra sum columns out of per_val keeps BOTH
     # consumers' pruned schemas identical, which is what lets the
     # planner reuse one exchange (and therefore one fact scan) across
-    # the local-cumulative and totals branches of _distributed_cdf
+    # the local-cumulative and totals branches of prefix_sums
     per_val = stacked.groupBy("_c", "_k", "_v", "_lv").agg(
         F.sum(F.col("_ia").cast("long")).alias("_ca"),
         F.sum((~F.col("_ia")).cast("long")).alias("_cb"),
     )
-    cdfs = _distributed_cdf(per_val, ("_ca", "_cb"), key_cols=("_c",))
+    cdfs = prefix_sums(per_val, ["_v"], ["_ca", "_cb"], ["_c"])
     tna = F.col("_tot_ca").cast("double")
     tnb = F.col("_tot_cb").cast("double")
     gap = F.when(
@@ -4175,7 +3989,7 @@ def drift_report(
         F.abs(F.col("_cum_ca") / tna - F.col("_cum_cb") / tnb),
     )
     seg = F.when(
-        F.col("_nextv").isNotNull(), gap * (F.col("_nextv") - F.col("_v"))
+        F.col("_next_v").isNotNull(), gap * (F.col("_next_v") - F.col("_v"))
     ).otherwise(F.lit(0.0))
     # final per-column reduce: cohort sizes as plain sums (the _tot
     # columns are garbage for categorical rows, whose window order is

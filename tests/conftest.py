@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime
 import os
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import SparkSession
@@ -71,6 +72,22 @@ def adaptive_spark(spark) -> SparkSession:
     yield spark
     for k, v in old.items():
         spark.conf.set(k, v)
+
+
+@contextmanager
+def static_partitions(spark: SparkSession, n: int):
+    """``n`` shuffle partitions, and so ``n`` range partitions, for the
+    block, with adaptive execution (which would coalesce them) off."""
+    conf = {"spark.sql.shuffle.partitions": str(n),
+            "spark.sql.adaptive.enabled": "false"}
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 # key, parent_key, canonical_name, rank, kingdom, status, is_synonym,

@@ -23,6 +23,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 
 import bench
 import __spark_entry__ as entrymod
@@ -119,7 +120,7 @@ def test_superlinear_ladder_lines_carry_named_cause_notes():
     Applies from round 11 on so historical artifacts stay untouched."""
     for path in glob.glob(os.path.join(REPO, "BENCH_sf10*_r*.json")):
         base = os.path.basename(path)
-        round_no = int(base.rsplit("_r", 1)[1].split(".")[0])
+        round_no = int(re.search(r"_r(\d+)", base).group(1))
         if round_no < 11:
             continue
         with open(path) as fh:

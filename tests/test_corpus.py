@@ -18,6 +18,7 @@ from gbif_filter_python_spark.operators.corpus import (
     tfidf_top_terms,
     word_ngrams,
 )
+from tests.conftest import static_partitions
 
 
 @pytest.fixture(scope="module")
@@ -594,8 +595,9 @@ class TestAssignGlobalIndex:
             (F.col("id") * 7919 % 500).alias("k"),  # permuted unique keys
             (F.col("id") % 5).alias("grp"),
         )
-        out = assign_global_index(df, ["k"], num_partitions=7)
-        rows = {r["k"]: r["global_idx"] for r in out.collect()}
+        with static_partitions(spark, 7):
+            out = assign_global_index(df, ["k"])
+            rows = {r["k"]: r["global_idx"] for r in out.collect()}
         # rank of k in ascending order == k itself here (keys are 0..499)
         assert rows == {k: k for k in range(500)}
 
@@ -605,18 +607,18 @@ class TestAssignGlobalIndex:
         )
 
         df = spark.range(0, 300).select((F.col("id") * 31 % 300).alias("k"))
-        a = {
-            r["k"]: r["global_idx"]
-            for r in assign_global_index(
-                df.repartition(13), ["k"], num_partitions=3
-            ).collect()
-        }
-        b = {
-            r["k"]: r["global_idx"]
-            for r in assign_global_index(
-                df.coalesce(1), ["k"], num_partitions=11
-            ).collect()
-        }
+        with static_partitions(spark, 3):
+            a = {
+                r["k"]: r["global_idx"]
+                for r in assign_global_index(
+                    df.repartition(13), ["k"]
+                ).collect()
+            }
+        with static_partitions(spark, 11):
+            b = {
+                r["k"]: r["global_idx"]
+                for r in assign_global_index(df.coalesce(1), ["k"]).collect()
+            }
         assert a == b
         assert sorted(a.values()) == list(range(300))
 
@@ -631,12 +633,13 @@ class TestAssignGlobalIndex:
         )
 
         df = spark.range(0, 100).select(F.col("id").alias("k"))
-        plan = (
-            assign_global_index(df, ["k"], num_partitions=4)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
+        with static_partitions(spark, 4):
+            plan = (
+                assign_global_index(df, ["k"])
+                ._jdf.queryExecution()
+                .executedPlan()
+                .toString()
+            )
         assert "Exchange rangepartitioning" in plan
         # at most the tiny counts frame funnels (with 1 shuffle
         # partition in the test session it may be elided entirely)
@@ -871,6 +874,33 @@ class TestPopulationStability:
         assert all(abs(r.psi_contrib) < 100 for r in rows)
         top = [r for r in rows if r.cur_pct > 0.9]
         assert len(top) == 1
+
+    def test_empty_reference_is_null_not_a_division_error(self, spark):
+        from gbif_filter_python_spark.operators.profile import (
+            population_stability,
+        )
+
+        ref = spark.createDataFrame([], "value double")
+        cur = spark.createDataFrame([(1.0,), (2.0,)], "value double")
+        rows = population_stability(ref, cur, "value", n_bins=4).collect()
+        # no thresholds: no current row falls in a bin either
+        assert sorted(tuple(r) for r in rows) == [
+            (b, 0, 0, None, 0.0, None) for b in range(4)
+        ]
+
+    def test_empty_current_is_null_not_a_division_error(self, spark):
+        from gbif_filter_python_spark.operators.profile import (
+            population_stability,
+        )
+
+        ref = spark.createDataFrame(
+            [(float(i),) for i in range(8)], "value double"
+        )
+        cur = spark.createDataFrame([], "value double")
+        rows = population_stability(ref, cur, "value", n_bins=4).collect()
+        assert sorted(tuple(r) for r in rows) == [
+            (b, 2, 0, 0.25, None, None) for b in range(4)
+        ]
 
 
 class TestSchemaDiff:

@@ -85,6 +85,23 @@ def test_conformal_k_caps_at_n_cal(spark):
     assert (r["pred"], r["qhat"], r["n_cal"], r["n_test"], r["coverage"]) == py
 
 
+def test_conformal_null_group_is_a_group(spark):
+    # a NULL group keeps its rows through every join on the group key
+    rows = [
+        (g, float((i * 37) % 100) + 0.25, i)
+        for g in ("a", None) for i in range(10)
+    ]
+    df = spark.createDataFrame(rows, "g string, v double, id long")
+    got = {
+        r["grp"]: (
+            r["pred"], r["qhat"], r["n_cal"], r["n_test"], r["coverage"]
+        )
+        for r in conformal_intervals(df, "g", "v", "id", alpha=0.1).collect()
+    }
+    assert set(got) == {"a", None}
+    assert got == _py_conformal(rows, alpha=0.1)
+
+
 def test_conformal_rejects_bad_alpha(spark):
     df = spark.createDataFrame([("a", 1.0, 1)], ["g", "v", "id"])
     with pytest.raises(ValueError, match="alpha"):
@@ -361,6 +378,16 @@ def test_grouped_quantiles_edges(spark):
                    ("b", 0.5): 1.0, ("b", 1.0): 9.0}
     with pytest.raises(ValueError, match="quantiles"):
         grouped_quantiles(df, "g", "v", qs=(0.0,))
+    # a NULL group is a group (groupBy semantics), not dropped rows
+    nulls = spark.createDataFrame(
+        [(g, float(v)) for g in ("a", None) for v in range(1, 11)],
+        "g string, v double",
+    )
+    got = {
+        tuple(r) for r in grouped_quantiles(nulls, "g", "v", qs=(0.5,))
+        .collect()
+    }
+    assert got == {(None, 0.5, 5.0), ("a", 0.5, 5.0)}
 
 
 # ---------------------------------------------------------------------------
