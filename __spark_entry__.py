@@ -2257,7 +2257,7 @@ def q_gif_features(spark: SparkSession, sf: str) -> DataFrame:
     map-only mapInPandas; pixels die in the task, scalar rows
     shuffle. The codec itself is additionally cross-validated
     byte-exactly against javax.imageio in
-    tests/test_round14_archive.py."""
+    tests/test_jpeg_jvm_crossval.py."""
     import numpy as np
     import pandas as pd
 

@@ -198,15 +198,14 @@ MOVER_ADJUDICATE_RATIO = 2.0
 MOVER_MAX_ISOLATED = 12
 
 
-def _bench_cpus() -> int:
-    """The core count this bench run is using (driver contract:
-    master local[$SPARK_GRAFT_CPUS])."""
-    tok = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return int(tok) if tok.isdigit() else 32
+def _bench_cpus(spark) -> int:
+    """The core count this bench run uses: the session's default
+    parallelism (local[$SPARK_GRAFT_CPUS] under the driver contract)."""
+    return spark.sparkContext.defaultParallelism
 
 
 def _auto_adjudicate_movers(
-    timings: dict, calibration: dict, sf_dir: str
+    timings: dict, calibration: dict, sf_dir: str, cpus: int
 ) -> dict | None:
     import glob
     import math
@@ -222,7 +221,7 @@ def _auto_adjudicate_movers(
     # fallback only.
     prev = None
     for cand in (
-        f"BENCH_FULL_LATEST_c{_bench_cpus()}.json",
+        f"BENCH_FULL_LATEST_c{cpus}.json",
         "BENCH_FULL_LATEST.json",
     ):
         prev_path = os.path.join(repo, cand)
@@ -262,13 +261,14 @@ def _auto_adjudicate_movers(
             "skipped": f"prev sf {prev_sf} != current sf {cur_sf}",
         }
     # ... and so is cross-core-count comparison (a compute-bound query
-    # legitimately runs ~4x slower on 8 cores than 32)
+    # legitimately runs ~4x slower on 8 cores than 32), including
+    # against an artifact that does not say its core count
     prev_cpus = prev.get("cpus")
-    if prev_cpus is not None and prev_cpus != _bench_cpus():
+    if prev_cpus != cpus:
         return {
             "prev_artifact": os.path.basename(prev_path),
-            "skipped": (
-                f"prev cpus {prev_cpus} != current cpus {_bench_cpus()}"
+            "skipped": "prev cpus unknown" if prev_cpus is None else (
+                f"prev cpus {prev_cpus} != current cpus {cpus}"
             ),
         }
     prev_scale = prev.get("calibration", {}).get("scale", 1.0) or 1.0
@@ -820,6 +820,7 @@ def _child_main(kind: str, out_path: str) -> None:
             "errors": errors,
             "cold_wall_sec": cold_wall,
         }
+    result["cpus"] = _bench_cpus(spark)
     with open(out_path, "w") as fh:
         json.dump(result, fh)
     spark.stop()
@@ -883,6 +884,7 @@ def main() -> None:
         gbif_block = run_gbif(spark, rows=gbif_rows)
         _warmup(spark, sf_dir)
         timings, errors = _sweep(spark, sf_dir, bench_query_names())
+        cpus = _bench_cpus(spark)
         spark.stop()
     else:
         with tempfile.TemporaryDirectory() as workdir:
@@ -891,12 +893,14 @@ def main() -> None:
                 "gbif_pipeline", {"error": gbif_res.get("error")}
             )
             batch_meta["gbif"] = {"wall_sec": gbif_res.get("wall_sec")}
+            cpus = gbif_res.get("cpus")
             nb = n_batches()
             for b in range(nb):
                 names = batch_names(b, nb)
                 if not names:  # md5 skew can leave a bucket empty
                     continue
                 res = _run_child(str(b), workdir)
+                cpus = cpus or res.get("cpus")
                 batch_meta[str(b)] = {
                     "n": len(names),
                     "wall_sec": res.get("wall_sec"),
@@ -944,7 +948,7 @@ def main() -> None:
         "queries": shown,
         "non_headline": non_headline,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "cpus": _bench_cpus(),
+        "cpus": cpus,
         "gbif_pipeline": gbif_block,
         "batching": {
             "mode": "inprocess" if inprocess else "fresh-jvm",
@@ -962,7 +966,7 @@ def main() -> None:
     # for quick local iterations where the isolated re-times would
     # dominate the wall clock.
     if os.environ.get("SPARK_GRAFT_NO_ADJUDICATE") != "1":
-        movers = _auto_adjudicate_movers(timings, calibration, sf_dir)
+        movers = _auto_adjudicate_movers(timings, calibration, sf_dir, cpus)
         if movers is not None:
             payload["movers"] = movers
     # default artifact name carries the core count so the driver's
@@ -971,7 +975,7 @@ def main() -> None:
     out_path = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
         os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     f"BENCH_FULL_LATEST_c{_bench_cpus()}.json"),
+                     f"BENCH_FULL_LATEST_c{cpus}.json"),
     )
     try:
         with open(out_path, "w") as fh:

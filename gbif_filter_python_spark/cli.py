@@ -15,6 +15,8 @@ import argparse
 import logging
 import sys
 
+from pyspark.sql import SparkSession
+
 from gbif_filter_python_spark.config import ConfigError, FilterConfig
 from gbif_filter_python_spark.engine import OccurrenceEngine
 from gbif_filter_python_spark.session import get_spark
@@ -105,7 +107,9 @@ def main(argv: list[str] | None = None) -> int:
         )
         return 2
 
-    spark = get_spark(app_name="gbif-filter-cli")
+    # An in-process caller's session keeps its conf: getOrCreate()
+    # would re-apply the engine defaults to it.
+    spark = SparkSession.getActiveSession() or get_spark("gbif-filter-cli")
     provider = ParquetSnapshotProvider(
         spark, extra["taxonomy_path"], extra["occurrence_path"]
     )

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gbif_filter_python_spark.operators.iterate import observed_checkpoint
 from gbif_filter_python_spark.operators.prefix import prefix_sums
 
 __all__ = ["funnel", "retention_cohorts", "rolling_active_users"]
@@ -621,21 +622,22 @@ def skyline(
 
     if candidate_budget < 1:
         raise ValueError("candidate_budget must be >= 1")
-    local = work.mapInPandas(_phase, schema=out_schema).localCheckpoint(
-        eager=True
+    rows = F.count(F.lit(1)).alias("n")
+    local, probe = observed_checkpoint(
+        work.mapInPandas(_phase, schema=out_schema), rows
     )
-    n = local.count()
+    n = probe["n"]
     nparts = max(1, local.rdd.getNumPartitions())
     rounds = 0
     while n > candidate_budget and nparts > 1 and rounds < max_rounds:
         nparts = max(1, nparts // 8)
-        local = (
+        local, probe = observed_checkpoint(
             local.repartition(nparts)
             .select("*", *oriented)
-            .mapInPandas(_phase, schema=out_schema)
-            .localCheckpoint(eager=True)
+            .mapInPandas(_phase, schema=out_schema),
+            rows,
         )
-        n_next = local.count()
+        n_next = probe["n"]
         rounds += 1
         if n_next == n:
             break  # fixpoint: likely all-skyline; exact pass settles it

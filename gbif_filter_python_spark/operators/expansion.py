@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gbif_filter_python_spark.operators.iterate import observed_checkpoint
 from gbif_filter_python_spark.schemas import (
     BACKBONE_DATASET_KEY,
     RANKS,
@@ -150,15 +151,18 @@ def ascend_lineage(
     )
     out: DataFrame | None = None
     for depth in range(1, max_hops + 1):
-        node = frontier.join(tax, frontier["_cur"] == tax["_k"]).select(
-            F.col("_start").alias("key"),
-            F.col("_k").alias("ancestor_key"),
-            F.col("_name").alias("ancestor_name"),
-            F.col("_rank").alias("ancestor_rank"),
-            F.lit(depth).alias("depth"),
-            F.col("_p"),
-        ).localCheckpoint(eager=True)
-        if node.isEmpty():
+        node, probe = observed_checkpoint(
+            frontier.join(tax, frontier["_cur"] == tax["_k"]).select(
+                F.col("_start").alias("key"),
+                F.col("_k").alias("ancestor_key"),
+                F.col("_name").alias("ancestor_name"),
+                F.col("_rank").alias("ancestor_rank"),
+                F.lit(depth).alias("depth"),
+                F.col("_p"),
+            ),
+            F.count(F.lit(1)).alias("n"),
+        )
+        if probe["n"] == 0:
             return out if out is not None else node.drop("_p")
         emitted = node.drop("_p")
         out = emitted if out is None else out.unionByName(emitted)

@@ -1,17 +1,2 @@
-"""Plan-quality inspection helpers."""
-
-from gbif_filter_python_spark.plans.inspect import (
-    explain_str,
-    pushed_filters,
-    has_broadcast_join,
-    codegen_stage_count,
-    assert_no_cartesian,
-)
-
-__all__ = [
-    "explain_str",
-    "pushed_filters",
-    "has_broadcast_join",
-    "codegen_stage_count",
-    "assert_no_cartesian",
-]
+"""Plan-quality inspection helpers: see ``plans.inspect``, the one module
+tests and benchmarks read plans through."""

@@ -77,15 +77,49 @@ def _column(line: str) -> int:
     return len(line) - len(line.lstrip(" :+-"))
 
 
+def _node(line: str) -> str:
+    """A 'simple' plan line without its tree prefix and codegen id."""
+    return line[_column(line):].removeprefix("*").lstrip("(0123456789) ")
+
+
 def node_count(plan: str, operator: str) -> int:
     """Number of plan nodes whose operator name starts with
     ``operator`` ('Exchange' counts no BroadcastExchange or
     ReusedExchange)."""
-    return sum(
-        line[_column(line):].removeprefix("*").lstrip("(0123456789) ")
-        .startswith(operator)
-        for line in plan.splitlines()
-    )
+    return sum(_node(line).startswith(operator) for line in plan.splitlines())
+
+
+def node_args(plan: str, operator: str) -> list[list[str]]:
+    """The keys of each plan node whose operator name starts with
+    ``operator``, one list per node in plan order, each key without its
+    ``#id``; an order key keeps its direction (``'v ASC'``):
+
+    - an Exchange's partitioning keys (``hashpartitioning(k#1, 8)``
+      gives ``['k']``, ``SinglePartition`` gives ``[]``);
+    - a Window's partition keys, then its order keys, from its first
+      ``windowspecdefinition``;
+    - a Sort's order keys;
+    - a FileScan's columns.
+    """
+    out = []
+    for node in map(_node, plan.splitlines()):
+        if not node.startswith(operator):
+            continue
+        spec = node.partition("windowspecdefinition")[2] or node
+        at = re.search(r"[(\[]", spec.split(", ")[0])
+        keys, depth = [""], 0
+        for ch in spec[at.end():] if at else "":
+            depth += (ch in "([") - (ch in ")]")
+            if depth < 0:
+                break
+            if depth == 0 and ch == ",":
+                keys.append("")
+            else:
+                keys[-1] += ch
+        keys = [re.sub(r"#\d+L?| NULLS (FIRST|LAST)", "", k).strip() for k in keys]
+        out.append([k for k in keys if k and not k.isdigit()
+                    and not k.startswith("specifiedwindowframe")])
+    return out
 
 
 def build_side(plan: str, join: str) -> str:

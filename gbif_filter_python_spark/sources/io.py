@@ -15,7 +15,6 @@ Reference contracts:
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -97,7 +96,6 @@ def write_csv(
     path: str,
     sep: str = ",",
     single_file: bool = True,
-    legacy_array_format: bool = False,
 ) -> None:
     """op 3: CSV sink with NA fill and delimiter parity.
 
@@ -105,34 +103,17 @@ def write_csv(
     (parity with the reference's one-file contract); large outputs
     should keep it False and write partitioned.
 
-    ``legacy_array_format`` (SURVEY.md §2-H): the reference's pandas
-    ``to_csv`` serializes list cells as Python ``repr`` —
-    ``"['Euglypha rotunda']"`` (/root/reference/test/filtered.csv
-    species_list column) — while this engine's default is JSON arrays
-    (``'["Euglypha rotunda"]'``, parseable by every downstream
-    engine). Opting in applies byte-exact ``repr`` via a vectorized
-    UDF so golden diffs against reference outputs pass; it is the
-    slow path by design and exists for the single-file edge-export
-    contract, not 100 TB writes.
+    List cells are written as JSON arrays (``'["Euglypha rotunda"]'``,
+    parseable by every downstream engine). The reference's pandas
+    ``to_csv`` writes them as Python ``repr`` instead (SURVEY.md
+    §2-H); :func:`write_csv_pandas_parity` reproduces that for golden
+    diffs.
     """
     out = df
     # CSV cannot hold arrays — serialize them (SURVEY.md §2-H).
-    if legacy_array_format:
-
-        @F.pandas_udf("string")
-        def _pyrepr(s: pd.Series) -> pd.Series:
-            return s.map(
-                lambda v: None if v is None else repr(
-                    [x if x is None else str(x) for x in v]
-                )
-            )
-
     for field in df.schema.fields:
         if field.dataType.typeName() == "array":
-            serializer = (
-                _pyrepr if legacy_array_format else F.to_json
-            )
-            out = out.withColumn(field.name, serializer(F.col(field.name)))
+            out = out.withColumn(field.name, F.to_json(F.col(field.name)))
     if single_file:
         out = out.coalesce(1)
     (
@@ -170,8 +151,7 @@ def write_csv_pandas_parity(
     DRIVER-SIDE BY DESIGN — guarded by ``max_rows`` (checked with one
     distributed count, cheap next to the collect it prevents). The
     scale path is :func:`write_csv`; this is the single-file
-    edge-export/golden-test shim, same tier as
-    ``legacy_array_format``. Writes one FILE at ``path`` (pandas
+    edge-export/golden-test shim. Writes one FILE at ``path`` (pandas
     semantics), not a Spark output directory. List cells serialize as
     Python ``repr`` of a list of strings — what pandas does to list
     objects (SURVEY.md §2-H)."""

@@ -58,36 +58,30 @@ def spark() -> SparkSession:
     s.stop()
 
 
-@pytest.fixture
-def adaptive_spark(spark) -> SparkSession:
-    """The session with adaptive execution on and 4 shuffle partitions
-    (the engine's runtime settings, see ``session.get_spark``) for the
-    length of one test: plan-reuse and job-count pins hold there, not
-    under the suite's static single-partition defaults."""
-    conf = {"spark.sql.adaptive.enabled": "true",
-            "spark.sql.shuffle.partitions": "4"}
-    old = {k: spark.conf.get(k) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    yield spark
-    for k, v in old.items():
-        spark.conf.set(k, v)
-
-
 @contextmanager
-def static_partitions(spark: SparkSession, n: int):
-    """``n`` shuffle partitions, and so ``n`` range partitions, for the
-    block, with adaptive execution (which would coalesce them) off."""
-    conf = {"spark.sql.shuffle.partitions": str(n),
-            "spark.sql.adaptive.enabled": "false"}
-    old = {k: spark.conf.get(k) for k in conf}
+def session_conf(spark: SparkSession, partitions: int | None = None,
+                 adaptive: bool | None = None,
+                 extra: dict[str, str] | None = None):
+    """``partitions`` shuffle partitions and adaptive execution on or
+    off (each left alone when None), plus any ``extra`` keys, for the
+    block; every key gets its previous value back on exit. The one way
+    a test changes session conf (``tests/test_packaging.py`` checks)."""
+    conf = dict(extra or {})
+    if partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(partitions)
+    if adaptive is not None:
+        conf["spark.sql.adaptive.enabled"] = str(adaptive).lower()
+    old = {k: spark.conf.get(k, None) for k in conf}
     for k, v in conf.items():
         spark.conf.set(k, v)
     try:
-        yield
+        yield spark
     finally:
         for k, v in old.items():
-            spark.conf.set(k, v)
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 # key, parent_key, canonical_name, rank, kingdom, status, is_synonym,

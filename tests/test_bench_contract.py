@@ -242,11 +242,22 @@ def test_movers_to_isolate_covers_every_big_ratio():
     assert len(bench._movers_to_isolate(flood)) == bench.MOVER_MAX_ISOLATED
 
 
-def test_bench_out_default_is_cpu_suffixed(monkeypatch):
+def test_bench_out_default_is_cpu_suffixed(spark, monkeypatch):
     """VERDICT r14 item 1: the driver's 8-core rerun clobbered the
     32-core full artifact; the default output name now carries the
-    core count."""
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
-    assert bench._bench_cpus() == 8
-    monkeypatch.delenv("SPARK_GRAFT_CPUS")
-    assert bench._bench_cpus() == 32
+    core count. That count is the session's own default parallelism,
+    not an environment variable read with 32 as a guess."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert bench._bench_cpus(spark) == 4  # the suite's local[4]
+
+
+def test_movers_skip_a_prev_artifact_without_cpus(tmp_path, monkeypatch):
+    """A previous artifact that does not record its core count is not
+    compared against, and the skip says why."""
+    (tmp_path / "BENCH_FULL_LATEST.json").write_text(
+        json.dumps({"sf": 0.1, "queries": {"q": 1.0}}))
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    out = bench._auto_adjudicate_movers(
+        {"q": 9.0}, {"scale": 1.0}, "/data/sf0.1", 4)
+    assert out == {"prev_artifact": "BENCH_FULL_LATEST.json",
+                   "skipped": "prev cpus unknown"}

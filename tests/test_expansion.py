@@ -1,4 +1,5 @@
-"""``descend_to_rank`` against a pure-Python closure of the same rules.
+"""``descend_to_rank`` against a pure-Python closure of the same rules,
+and ``ascend_lineage``'s jobs and cycle guard.
 
 The rules: a path starts at a parent and extends only through nodes
 whose rank is known and is not the target; a node is a hit when its
@@ -12,11 +13,14 @@ from collections import defaultdict
 
 import pytest
 
-from gbif_filter_python_spark.operators.expansion import descend_to_rank
-from gbif_filter_python_spark.schemas import (
-    BACKBONE_DATASET_KEY as BB,
-    TAXONOMY_SCHEMA,
+from gbif_filter_python_spark.operators.expansion import (
+    ascend_lineage,
+    descend_to_rank,
 )
+from gbif_filter_python_spark.plans.inspect import jobs_run
+from gbif_filter_python_spark.schemas import TAXONOMY_SCHEMA
+from gbif_filter_python_spark.schemas import BACKBONE_DATASET_KEY as BB
+from tests.conftest import session_conf
 
 # key, parent_key, canonical_name, rank, status, habitat, dataset_key
 _NODES = [
@@ -119,3 +123,24 @@ def test_closure_covers_the_edge_cases(spark, tree):
     got = descend_to_rank(tree, parent_df, "SPECIES", habitat="TERRESTRIAL")
     pairs = {(r["parent"], r["child_key"]) for r in got.collect()}
     assert pairs == {(1, 7), (1, 8), (10, 13), (10, 22)}
+
+
+def test_ascend_lineage_probes_ride_the_checkpoints(spark, taxonomy):
+    """Keys 4000 and 3000 climb the fixture's 7-node KINGDOM → SPECIES
+    chain; each hop's emptiness probe is observed on its checkpoint's
+    job (25 jobs with a separate isEmpty() per hop)."""
+    keys = spark.createDataFrame([(4000,), (3000,)], "key long")
+    with session_conf(spark, 4, True):
+        assert jobs_run(
+            spark, lambda: ascend_lineage(taxonomy, keys).collect()) <= 19
+
+
+def test_ascend_lineage_cycle_raises_after_max_hops(spark):
+    tax = spark.createDataFrame(
+        [(k, p, f"n{k}", "GENUS", "Animalia", "ACCEPTED", False, None, None,
+          BB) for k, p in ((1, 2), (2, 1))],
+        TAXONOMY_SCHEMA,
+    )
+    keys = spark.createDataFrame([(1,)], "key long")
+    with pytest.raises(RuntimeError, match="exceeded 5 hops"):
+        ascend_lineage(tax, keys, max_hops=5)

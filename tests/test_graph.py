@@ -12,6 +12,7 @@ from gbif_filter_python_spark.operators.graph import (
     dedup_by_components,
     transitive_closure,
 )
+from tests.conftest import session_conf
 
 
 def _edges(spark, pairs):
@@ -284,31 +285,33 @@ class TestIterationJobs:
 
     EDGES = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (2, 4), (5, 6)]
 
-    def test_pagerank_round(self, adaptive_spark):
+    def test_pagerank_round(self, spark):
         from gbif_filter_python_spark.operators.graph import pagerank
         from gbif_filter_python_spark.plans.inspect import jobs_run
 
-        df = adaptive_spark.createDataFrame(self.EDGES, "src long, dst long")
+        df = spark.createDataFrame(self.EDGES, "src long, dst long")
 
         def jobs(n_iter):
-            return jobs_run(adaptive_spark,
+            return jobs_run(spark,
                             lambda: pagerank(df, n_iter=n_iter).collect())
 
         # one round: the edge-rank join's two exchanges, the
         # aggregate's exchange and the checkpoint (12 with a separate
         # dangling-mass probe and a second join against the nodes)
-        assert jobs(4) - jobs(3) <= 5
+        with session_conf(spark, 4, True):
+            assert jobs(4) - jobs(3) <= 5
 
     @pytest.mark.parametrize("op", ["connected_components", "k_core"])
-    def test_probes_ride_the_checkpoints(self, adaptive_spark, op):
+    def test_probes_ride_the_checkpoints(self, spark, op):
         from gbif_filter_python_spark.operators import graph
         from gbif_filter_python_spark.plans.inspect import jobs_run
 
-        df = _edges(adaptive_spark, self.EDGES)
+        df = _edges(spark, self.EDGES)
         kw = {"k": 2} if op == "k_core" else {}
         # 20 with a count()/isEmpty() job after each round's checkpoint
-        assert jobs_run(adaptive_spark,
-                        lambda: getattr(graph, op)(df, **kw).collect()) < 20
+        with session_conf(spark, 4, True):
+            assert jobs_run(
+                spark, lambda: getattr(graph, op)(df, **kw).collect()) < 20
 
 
 class TestTriangleCount:

@@ -7,6 +7,7 @@ target directly rather than shelling out to pip (no network in CI)."""
 
 from __future__ import annotations
 
+import re
 import subprocess
 import sys
 import tomllib
@@ -69,3 +70,17 @@ class TestPackaging:
             and not (d / "__init__.py").exists()
         ]
         assert missing == []
+
+
+def test_suite_is_filed_by_module_with_one_conf_helper():
+    """Tests live in the file of the module they test, not in a file
+    named after the round they were written in, and a test changes
+    session conf only through ``tests/conftest.py::session_conf``,
+    which gives every key its old value back."""
+    tests = ROOT / "tests"
+    assert [p.name for p in tests.glob("test_round*.py")] == []
+    setters = [
+        p.name for p in sorted(tests.glob("test_*.py"))
+        if re.search(r"\.conf\.(set|unset)\(", p.read_text())
+    ]
+    assert setters == []

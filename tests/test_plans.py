@@ -7,17 +7,19 @@ nothing goes cartesian by accident.
 
 from __future__ import annotations
 
-import re
-
 import pytest
 from pyspark.sql import functions as F
 
 from gbif_filter_python_spark.plans.inspect import (
+    build_side,
     codegen_stage_count,
     explain_str,
     has_broadcast_join,
+    node_args,
+    node_count,
     pushed_filters,
 )
+from tests.conftest import session_conf
 
 
 @pytest.fixture(scope="module")
@@ -57,7 +59,8 @@ def test_existence_probe_broadcasts(spark, orders, sf001_dir):
     plan = explain_str(df, "simple")
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
     # no exchange on the customer (streamed) side other than broadcast
-    assert plan.count("Exchange") <= 2
+    assert sum(node_count(plan, op) for op in (
+        "Exchange", "BroadcastExchange", "ReusedExchange")) <= 2
 
 
 def test_run_filter_pipeline_broadcasts(spark, sf001_dir):
@@ -73,7 +76,7 @@ def test_run_filter_pipeline_broadcasts(spark, sf001_dir):
 
 
 def test_run_filter_expansion_shares_one_zone_key_exchange(
-    adaptive_spark, taxonomy, occurrence, tmp_path
+    spark, taxonomy, occurrence, tmp_path
 ):
     """run_filter with expansion: building the DataFrame runs no Spark
     job, and at runtime the tag probe and the expansion's child
@@ -87,29 +90,25 @@ def test_run_filter_expansion_shares_one_zone_key_exchange(
         node_count,
     )
 
-    spark = adaptive_spark
-    occurrence.write.parquet(str(tmp_path / "occurrence"))
-    occ = spark.read.parquet(str(tmp_path / "occurrence"))
-    taxa = spark.createDataFrame(
-        [(1, "Lumbricus", "GENUS"), (2, "Lumbricidae", "FAMILY"),
-         (3, "Eisenia fetida", None)],
-        "id int, name string, rank string",
-    )
-    cfg = FilterConfig(name_column="name", rank_column="rank",
-                       taxa_kingdom="Animalia", zone=Country("NO"),
-                       resolve_to_rank="SPECIES")
-    built = []
-    assert jobs_run(spark, lambda: built.append(
-        OccurrenceEngine(taxonomy, occ).run_filter(taxa, cfg))) == 0
-    out = built[0]
-    # collect() finalizes THIS DataFrame's adaptive plan
-    assert len(out.collect()) == 3
+    with session_conf(spark, 4, True):
+        occurrence.write.parquet(str(tmp_path / "occurrence"))
+        occ = spark.read.parquet(str(tmp_path / "occurrence"))
+        taxa = spark.createDataFrame(
+            [(1, "Lumbricus", "GENUS"), (2, "Lumbricidae", "FAMILY"),
+             (3, "Eisenia fetida", None)],
+            "id int, name string, rank string",
+        )
+        cfg = FilterConfig(name_column="name", rank_column="rank",
+                           taxa_kingdom="Animalia", zone=Country("NO"),
+                           resolve_to_rank="SPECIES")
+        built = []
+        assert jobs_run(spark, lambda: built.append(
+            OccurrenceEngine(taxonomy, occ).run_filter(taxa, cfg))) == 0
+        out = built[0]
+        # collect() finalizes THIS DataFrame's adaptive plan
+        assert len(out.collect()) == 3
     plan = final_plan(out)
-    fact_scans = [
-        line for line in plan.splitlines()
-        if "FileScan parquet" in line and "taxon_key" in line
-    ]
-    assert len(fact_scans) == 1, plan
+    assert node_count(plan, "FileScan parquet") == 1, plan  # occurrence
     assert node_count(plan, "Exchange hashpartitioning(taxon_key") == 1, plan
     semi = build_side(plan, "LeftSemi")
     assert node_count(semi, "ReusedExchange [taxon_key") == 1, semi
@@ -151,9 +150,8 @@ def test_bucketed_join_is_shuffle_free(spark, sf001_dir):
         lineitem.select("l_orderkey", "l_quantity"),
         "b_lineitem", "l_orderkey", num_buckets=4, sort_cols=["l_orderkey"],
     )
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with session_conf(spark, extra={
+            "spark.sql.autoBroadcastJoinThreshold": "-1"}):
         a = spark.table("b_orders")
         b = spark.table("b_lineitem")
         df = a.join(b, a["o_orderkey"] == b["l_orderkey"])
@@ -161,8 +159,6 @@ def test_bucketed_join_is_shuffle_free(spark, sf001_dir):
         assert "SortMergeJoin" in plan, plan
         assert "Exchange" not in plan, plan
         assert df.count() == lineitem.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
 
 
 def test_agg_has_map_side_combine(lineitem):
@@ -313,7 +309,7 @@ def test_star_join_broadcasts_all_dims(spark, sf001_dir):
     df = entry_mod.q_star_join_revenue(spark, sf001_dir)
     plan = explain_str(df, "simple")
     assert "SortMergeJoin" not in plan, plan
-    assert plan.count("BroadcastHashJoin") >= 4
+    assert node_count(plan, "BroadcastHashJoin") >= 4
     assert "CartesianProduct" not in plan
     scans = [l for l in plan.splitlines() if "FileScan" in l and "orders" in l]
     assert scans and any("o_orderdate" in l and "PushedFilters" in l for l in scans)
@@ -413,14 +409,10 @@ def test_snapshot_diff_fingerprints_before_the_join(spark, sf001_dir):
     # physical operator appears once, unlike "formatted"'s tree+details)
     n_joins = sum(plan.count(j) for j in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"))
     assert n_joins == 1, plan
-    plan = explain_str(diff, "formatted")
     # the shuffle carries only key + fingerprint (+ presence flag):
     # no c_name / c_mktsegment above the scan projections
-    import re
-
-    exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    for ex in exchanges:
-        assert "c_name" not in ex and "c_mktsegment" not in ex
+    for keys in node_args(plan, "Exchange hashpartitioning"):
+        assert not {"c_name", "c_mktsegment"} & set(keys), plan
 
 
 def test_phash_near_dup_shuffle_excludes_pixels(spark):
@@ -441,11 +433,9 @@ def test_phash_near_dup_shuffle_excludes_pixels(spark):
         rows, "media_id long, pixels array<float>, width int, height int"
     )
     pairs = phash_near_dups(dhash_images(decoded))
-    plan = explain_str(pairs, "formatted")
-    import re
-
-    for ex in re.findall(r"Exchange [^\n]*", plan):
-        assert "pixels" not in ex, ex
+    plan = explain_str(pairs, "simple")
+    for keys in node_args(plan, "Exchange"):
+        assert not any("pixels" in k for k in keys), plan
 
 
 def test_pq_adc_scoring_is_single_scan_no_shuffle_before_topk(
@@ -470,7 +460,7 @@ def test_pq_adc_scoring_is_single_scan_no_shuffle_before_topk(
     res = pq_topk(enc, q, books, k=5)
     plan = explain_str(res, "simple")
     # exactly one hash-partitioning exchange: the window's query_id one
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert node_count(plan, "Exchange hashpartitioning") == 1, plan
     assert "SortMergeJoin" not in plan  # queries side is broadcast
 
 
@@ -491,7 +481,7 @@ def test_merge_intervals_single_exchange(spark, sf001_dir):
     plan = explain_str(
         merge_intervals(ev, "k", "start", "end"), mode="simple"
     )
-    assert plan.count("Exchange hashpartitioning") == 1
+    assert node_count(plan, "Exchange hashpartitioning") == 1
 
 
 def test_bm25_broadcasts_query_terms_not_corpus(spark, sf001_dir):
@@ -523,7 +513,7 @@ def test_cusum_windows_share_one_sort(spark, sf001_dir):
         ev, "user_id", "event_id", "value", slack=1.0, threshold=5.0
     )
     plan = explain_str(out, mode="simple")
-    assert plan.count("Exchange hashpartitioning") == 1
+    assert node_count(plan, "Exchange hashpartitioning") == 1
 
 
 def test_association_rules_apriori_prune_broadcasts(spark, sf001_dir):
@@ -576,7 +566,8 @@ def test_q21_shape_broadcasts_dim_and_reuses_fact_scan(spark, sf001_dir):
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
     n_li_scans = sum(
-        1 for l in plan.splitlines() if "FileScan" in l and "lineitem" in l
+        any(c.startswith("l_") for c in cols)
+        for cols in node_args(plan, "FileScan parquet")
     )
     assert 1 <= n_li_scans <= 3, plan
 
@@ -591,7 +582,9 @@ def test_weighted_median_single_exchange(spark, sf001_dir):
     li = spark.read.parquet(f"{sf001_dir}/lineitem.parquet")
     df = weighted_median(li, ["l_returnflag"], "l_extendedprice", "l_quantity")
     plan = explain_str(df, "simple")
-    assert plan.count("Exchange") <= 2, plan  # 1 hash + optional final
+    # 1 hash + optional final
+    assert sum(node_count(plan, op) for op in (
+        "Exchange", "BroadcastExchange", "ReusedExchange")) <= 2, plan
 
 
 def test_fd_candidates_one_shuffle_per_lhs(spark, sf001_dir):
@@ -604,11 +597,8 @@ def test_fd_candidates_one_shuffle_per_lhs(spark, sf001_dir):
     o = spark.read.parquet(f"{sf001_dir}/orders.parquet")
     df = fd_candidates(o, {"o_custkey": ["o_orderstatus", "o_orderpriority"]})
     plan = explain_str(df, "simple")
-    n_scans = sum(
-        1 for l in plan.splitlines() if "FileScan" in l and "orders" in l
-    )
-    assert n_scans == 1, plan
-    assert plan.count("Expand") == 1, plan
+    assert node_count(plan, "FileScan parquet") == 1, plan
+    assert node_count(plan, "Expand") == 1, plan
 
 
 def test_skyline_local_prune_runs_before_any_exchange(spark, sf001_dir):
@@ -627,7 +617,7 @@ def test_skyline_local_prune_runs_before_any_exchange(spark, sf001_dir):
     pts = li.select("l_orderkey", "l_quantity", "l_extendedprice")
     df = skyline(pts, {"l_quantity": "max", "l_extendedprice": "min"})
     plan = explain_str(df, "simple")
-    assert plan.count("MapInPandas") == 1, plan
+    assert node_count(plan, "MapInPandas") == 1, plan
     coal = plan.index("Coalesce")
     # top-down print: global MapInPandas first, then Coalesce, then
     # the checkpointed (already-pruned) candidate scan — never a
@@ -658,53 +648,19 @@ def test_rank_stats_never_globally_sort_the_fact(spark, sf001_dir):
         spearman_corr(ev.select(F.col("v").alias("x"),
                                 (F.col("v") % 97).alias("y")), "x", "y"),
     ):
-        plan = explain_str(df, "simple")
+        # with exchange reuse off every branch prints its own subtree,
+        # so no ReusedExchange hides which input a Sort reads
+        with session_conf(spark, extra={"spark.sql.exchange.reuse": "false"}):
+            plan = explain_str(df, "simple")
         lines = plan.splitlines()
-        # walk each Sort node: everything printed below it at deeper
-        # indentation until the indent pops back is its subtree — a
-        # HashAggregate must appear in there before any scan leaf,
-        # otherwise the Sort is consuming raw fact rows. A
-        # ReusedExchange in the subtree points at an exchange printed
-        # in a SIBLING branch (which branch gets the Reused node is
-        # planner-order dependent): resolve its plan_id back to the
-        # original Exchange and require the aggregate below THAT.
-        def indent(l):
-            return len(l) - len(l.lstrip(" +-:"))
-
-        def subtree_of(i):
-            base = indent(lines[i])
-            out = []
-            for nxt in lines[i + 1:]:
-                if nxt.strip() and indent(nxt) <= base:
-                    break
-                out.append(nxt)
-            return "\n".join(out)
-
-        def feeds_aggregate(i, seen=()):
-            sub = subtree_of(i)
-            if "HashAggregate" in sub:
-                return True
-            m = re.search(r"ReusedExchange \[[^\]]*\], Exchange .*?\[plan_id=(\d+)\]", sub)
-            if not m or m.group(1) in seen:
-                return False
-            pid = m.group(1)
-            for j, l2 in enumerate(lines):
-                if (
-                    f"[plan_id={pid}]" in l2
-                    and "Exchange" in l2
-                    and "ReusedExchange" not in l2
-                ):
-                    return "HashAggregate" in subtree_of(j) or feeds_aggregate(
-                        j, (*seen, pid)
-                    )
-            return False
-
-        for i, l in enumerate(lines):
-            if " Sort " not in f" {l.strip()} ":
-                continue
-            assert feeds_aggregate(i), (
-                "Sort consumes unaggregated input:\n" + plan
-            )
+        # a HashAggregate must sit below every Sort, otherwise the Sort
+        # is consuming raw fact rows
+        for i, line in enumerate(lines):
+            if node_count(line, "Sort ["):
+                below = build_side("\n".join(lines[i:]), line)
+                assert "HashAggregate" in below, (
+                    "Sort consumes unaggregated input:\n" + plan
+                )
 
 
 def test_mlm_mask_hashes_each_position_once(spark):
@@ -766,7 +722,7 @@ def test_calibration_bins_single_scan_single_agg(spark):
     out = calibration_bins(df, "score", "label", 10)
     plan = explain_str(out, "simple")
     assert "partial_count" in plan or "partial_sum" in plan
-    assert plan.count("Scan ExistingRDD") == 1
+    assert node_count(plan, "Scan ExistingRDD") == 1
     assert "Join" not in plan
 
 
@@ -791,8 +747,10 @@ def test_psm_att_is_windowed_never_nested_loop(spark):
     # 1-row x 1-row scalar crossJoin of the two aggregates (plans as
     # a broadcast nested loop over singleton rows — harmless); the
     # MATCH path itself must never join the unit table to itself
-    assert plan.count("Join") == 2
-    assert plan.count("BroadcastHashJoin") == 1
+    assert sum(node_count(plan, j) for j in (
+        "BroadcastHashJoin", "BroadcastNestedLoopJoin", "SortMergeJoin",
+        "ShuffledHashJoin", "CartesianProduct")) == 2
+    assert node_count(plan, "BroadcastHashJoin") == 1
 
 
 def test_referential_integrity_broadcasts_dims(spark, sf001_dir):
@@ -822,7 +780,7 @@ def test_anova_f_single_fact_scan_one_agg(spark, sf001_dir):
     plan = explain_str(
         anova_f(orders, "o_orderpriority", "o_totalprice"), "simple"
     )
-    assert plan.count("orders.parquet") == 1
+    assert node_count(plan, "FileScan parquet") == 1  # orders, once
     assert "partial_count" in plan or "partial_avg" in plan
 
 

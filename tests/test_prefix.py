@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from gbif_filter_python_spark.operators.prefix import prefix_sums
 from gbif_filter_python_spark.plans.inspect import final_plan, node_count
-from tests.conftest import static_partitions
+from tests.conftest import session_conf
 
 SCHEMA = "k string, o double, w long, _one int"
 
@@ -48,7 +48,7 @@ CASES = {
 
 @pytest.fixture(params=[1, 7], ids=["partitions1", "partitions7"])
 def partitions(request, spark):
-    with static_partitions(spark, request.param):
+    with session_conf(spark, request.param, False):
         yield request.param
 
 
@@ -117,15 +117,16 @@ def test_mega_key_spans_every_range_partition(spark, partitions):
 
 
 def test_weighted_quantiles_one_range_exchange_reused(
-    adaptive_spark, sf001_dir
+    spark, sf001_dir
 ):
     """A sum-only caller's runtime plan: one range exchange, whose
     consumer exchange the totals branch reuses, and one fact scan."""
     from gbif_filter_python_spark.operators.profile import weighted_quantiles
 
-    orders = adaptive_spark.read.parquet(f"{sf001_dir}/orders.parquet")
-    df = weighted_quantiles(orders, "o_totalprice", "o_custkey")
-    assert len(df.collect()) == 4
+    orders = spark.read.parquet(f"{sf001_dir}/orders.parquet")
+    with session_conf(spark, 4, True):
+        df = weighted_quantiles(orders, "o_totalprice", "o_custkey")
+        assert len(df.collect()) == 4
     final = final_plan(df)
     assert node_count(final, "Exchange rangepartitioning") == 1, final
     assert node_count(final, "ReusedExchange") == 1, final

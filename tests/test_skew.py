@@ -5,7 +5,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from gbif_filter_python_spark.operators.skew import salted_join, two_phase_agg
+from gbif_filter_python_spark.operators.skew import (
+    join_cardinality,
+    salted_join,
+    two_phase_agg,
+)
+from gbif_filter_python_spark.plans.inspect import final_plan, node_args
+from tests.conftest import session_conf
 
 
 @pytest.fixture(scope="module")
@@ -134,19 +140,13 @@ class TestPlantedSkewStress:
         """With broadcast off, the salted join must shuffle on
         (key, _salt) — the hot key's rows hash to `salt` different
         reducers instead of one."""
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        with session_conf(spark, extra={
+                "spark.sql.autoBroadcastJoinThreshold": "-1"}):
             out = salted_join(skewed, dim, "k", "k2", salt=4)
             plan = out._jdf.queryExecution().executedPlan().toString()
-            assert "hashpartitioning" in plan
-            # the partitioning expression carries the salt column
-            import re
-
-            parts = re.findall(r"hashpartitioning\([^)]*\)", plan)
-            assert any("_salt" in p for p in parts), plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        # the partitioning expression carries the salt column
+        parts = node_args(plan, "Exchange hashpartitioning")
+        assert any("_salt" in p for p in parts), plan
 
     def test_salt_spreads_hot_key_across_buckets(self, spark):
         """The routing rand: 3 000 hot-key rows over salt=8 land in
@@ -167,8 +167,6 @@ class TestPlantedSkewStress:
         thresholds must be marked skew=true in the final sort-merge
         join plan — the runtime counterpart of explicit salting."""
         confs = {
-            "spark.sql.adaptive.enabled": "true",
-            "spark.sql.shuffle.partitions": "8",
             "spark.sql.adaptive.coalescePartitions.enabled": "false",
             "spark.sql.autoBroadcastJoinThreshold": "-1",
             "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
@@ -178,15 +176,7 @@ class TestPlantedSkewStress:
             "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8KB",
             "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         }
-        old = {}
-        for k in confs:
-            try:
-                old[k] = spark.conf.get(k)
-            except Exception:
-                old[k] = None
-        try:
-            for k, v in confs.items():
-                spark.conf.set(k, v)
+        with session_conf(spark, 8, True, extra=confs):
             n_hot, n_rest = 20_000, 10_000
             fact = spark.range(n_hot + n_rest).select(
                 F.when(F.col("id") < n_hot, F.lit(7))
@@ -202,12 +192,8 @@ class TestPlantedSkewStress:
             joined = fact.join(dim, fact["k"] == dim["k2"])
             assert joined.count() == n_hot + n_rest
             joined.collect()
-            plan = joined._jdf.queryExecution().executedPlan().toString()
+            plan = final_plan(joined)
             assert "skew=true" in plan, plan[:4000]
-        finally:
-            for k, v in old.items():
-                if v is not None:
-                    spark.conf.set(k, v)
 
 
 class TestSkewedFactFlagship:
@@ -282,3 +268,33 @@ class TestSkewedFactFlagship:
         assert agree / len(tags["plain"]) > 0.9
         for df in (tax, plain, skewed, taxa):
             df.unpersist()
+
+
+# ---------------------------------------------------------------------------
+# join_cardinality
+# ---------------------------------------------------------------------------
+
+
+def test_join_cardinality_exact_counts_and_shares(spark):
+    left = spark.createDataFrame(
+        [("k1",)] * 3 + [("k2",)] * 2 + [("k3",)], ["k"]
+    )
+    right = spark.createDataFrame(
+        [("k1",)] * 4 + [("k2",)] * 5 + [("k9",)], ["k"]
+    )
+    rows = join_cardinality(left, right, "k", "k", top_n=10).collect()
+    got = [(r["key"], r["n_left"], r["n_right"], r["pairs"], r["share"])
+           for r in rows]
+    # total = 3*4 + 2*5 = 22; k1 first (12 > 10); k3/k9 excluded
+    assert got == [
+        ("k1", 3, 4, 12, round(12 / 22, 6)),
+        ("k2", 2, 5, 10, round(10 / 22, 6)),
+    ]
+    # the probe's total equals the real join's cardinality
+    assert left.join(right, "k").count() == 22
+
+
+def test_join_cardinality_disjoint_keys_empty(spark):
+    left = spark.createDataFrame([("a",)], ["k"])
+    right = spark.createDataFrame([("b",)], ["k"])
+    assert join_cardinality(left, right, "k", "k").count() == 0

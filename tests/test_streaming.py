@@ -9,6 +9,7 @@ from gbif_filter_python_spark.streaming.windows import (
     stream_events,
     windowed_event_counts,
 )
+from tests.conftest import session_conf
 
 
 @pytest.fixture(scope="module")
@@ -631,15 +632,10 @@ def test_transform_with_state_running_totals(spark, events_dir, tmp_path):
         .collect()
     }
 
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with session_conf(spark, extra={
+            "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"}):
         stream = (
             spark.readStream.schema(events.schema)
             .option("maxFilesPerTrigger", 1)
@@ -660,13 +656,6 @@ def test_transform_with_state_running_totals(spark, events_dir, tmp_path):
             ).collect()
         finally:
             q.stop()
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
 
     # Update mode appends one row per (user, micro-batch); the final
     # cumulative row per user is the one with the max n_events.
