@@ -429,7 +429,7 @@ def lm_train_bigram(
     # exchange reuse to keep the corpus at one scan, and the reuse
     # does NOT fire across the two broadcast-stage boundaries — the
     # corpus was tokenized twice (caught by
-    # tests/test_classify.py). The window runs on ≤ num_buckets
+    # tests/test_round15_plans.py). The window runs on ≤ num_buckets
     # rows, so the single-partition frame is bounded model state, and
     # Σ coalesce(cnt, 0) over the dense table is the identical exact
     # long total. ``cast("double") + a*b`` performs the same IEEE add
@@ -465,7 +465,7 @@ def lm_train_bigram(
     # join-back form depended on runtime exchange reuse that does not
     # fire across the broadcast boundary — the corpus paid a second
     # tokenize+pair pass). One corpus scan per branch by plan
-    # construction, pinned in tests/test_classify.py.
+    # construction, pinned in tests/test_round15_plans.py.
     c12_cnt = pairs.groupBy("b1", "b2").agg(
         F.count(F.lit(1)).alias("c12")
     )

@@ -4,43 +4,14 @@ retention cohorts, rolling active users."""
 from __future__ import annotations
 
 import datetime
-import math
 
-import numpy as np
-import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from gbif_filter_python_spark.operators.analytics import (
-    bowker_test,
-    cmh_test,
-    cochran_q,
-    conformal_intervals,
-    durbin_watson,
-    eb_shrinkage,
     funnel,
-    funnel_ab_test,
-    granger_causality,
-    hac_mean_ci,
-    ipf_raking,
-    ips_offpolicy,
-    iv_2sls,
-    kruskal_wallis,
-    mcnemar_test,
-    msprt_test,
-    power_mde,
     retention_cohorts,
     rolling_active_users,
-    runs_test,
-    simpsons_slopes,
-    tost_equivalence,
 )
-from gbif_filter_python_spark.plans.inspect import (
-    explain_str,
-    node_args,
-    node_count,
-)
-from tests.conftest import session_conf
 
 T0 = datetime.datetime(2024, 1, 1)
 
@@ -773,1329 +744,3 @@ class TestKendallTau:
         (r,) = did_estimate(df, "g", "p", "v").collect()
         assert r["did"] is not None  # means are all defined
         assert r["se"] is None and r["t_stat"] is None  # loud, not wrong
-
-
-# ---------------------------------------------------------------------------
-# kruskal_wallis
-# ---------------------------------------------------------------------------
-
-
-def test_kruskal_wallis_hand_computed_with_ties(spark):
-    # a: 1,2,3  b: 2,3,4 — ranks 1, 2.5, 2.5, 4.5, 4.5, 6
-    # R_a = 8, R_b = 13; H = 12/42·(64/3 + 169/3) − 21 = 1.190476
-    # ties: two pairs → C = 1 − 12/210; H/C = 1.262626
-    df = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0), ("a", 3.0), ("b", 2.0), ("b", 3.0), ("b", 4.0)],
-        ["g", "v"],
-    )
-    row = kruskal_wallis(df, "g", "v").collect()[0]
-    assert (row["n"], row["k_groups"], row["dof"]) == (6, 2, 1)
-    assert row["h_stat"] == round(12 / 42 * (64 / 3 + 169 / 3) - 21, 6)
-    assert row["h_corrected"] == pytest.approx(
-        row["h_stat"] / (1 - 12 / 210), abs=1e-6
-    )
-
-
-def test_kruskal_wallis_all_tied_yields_null_correction(spark):
-    # every observation shares one value → correction factor 0 →
-    # h_corrected NULL, h_stat exactly 0
-    df = spark.createDataFrame(
-        [("a", 5.0), ("a", 5.0), ("b", 5.0), ("b", 5.0)], ["g", "v"]
-    )
-    row = kruskal_wallis(df, "g", "v").collect()[0]
-    assert row["h_stat"] == 0.0
-    assert row["h_corrected"] is None
-
-
-def test_kruskal_wallis_epsilon_null_when_n_equals_k(spark):
-    df = spark.createDataFrame([("a", 1.0), ("b", 2.0)], ["g", "v"])
-    row = kruskal_wallis(df, "g", "v").collect()[0]
-    assert row["epsilon_sq"] is None
-
-
-# ---------------------------------------------------------------------------
-# iv_2sls
-# ---------------------------------------------------------------------------
-
-
-def test_iv_2sls_recovers_exact_slope_when_z_is_x(spark):
-    df = spark.createDataFrame(
-        [(2.0 * x, float(x), float(x)) for x in range(1, 8)],
-        ["y", "x", "z"],
-    )
-    row = iv_2sls(df, "y", "x", "z").collect()[0]
-    assert row["beta_ols"] == 2.0
-    assert row["first_stage_slope"] == 1.0
-    assert row["beta_iv"] == 2.0
-
-
-def test_iv_2sls_matches_numpy_covariances(spark):
-    import numpy as np
-
-    z = np.arange(1.0, 9.0)
-    # confounder chosen EXACTLY orthogonal to z (Σzu = 0, Σu = 0),
-    # so cov(z,y) = 3·cov(z,x) and the IV estimate is exactly 3
-    u = np.array([1.0, 1.0, -1.0, -1.0, -1.0, -1.0, 1.0, 1.0])
-    x = z + u
-    y = 3.0 * x + 5.0 * u
-    df = spark.createDataFrame(
-        [(float(a), float(b), float(c)) for a, b, c in zip(y, x, z)],
-        ["y", "x", "z"],
-    )
-    row = iv_2sls(df, "y", "x", "z").collect()[0]
-    n = len(z)
-    beta_iv = (n * (z * y).sum() - z.sum() * y.sum()) / (
-        n * (z * x).sum() - z.sum() * x.sum()
-    )
-    beta_ols = (n * (x * y).sum() - x.sum() * y.sum()) / (
-        n * (x * x).sum() - x.sum() ** 2
-    )
-    assert row["beta_iv"] == pytest.approx(beta_iv, abs=1e-6)
-    assert row["beta_ols"] == pytest.approx(beta_ols, abs=1e-6)
-    # the instrument strips the confounder: IV lands on 3, OLS doesn't
-    assert row["beta_iv"] == 3.0
-    assert abs(row["beta_ols"] - 3.0) > 0.5
-
-
-def test_iv_2sls_null_on_zero_variance_instrument(spark):
-    df = spark.createDataFrame(
-        [(1.0, 1.0, 7.0), (2.0, 2.0, 7.0), (3.0, 4.0, 7.0)],
-        ["y", "x", "z"],
-    )
-    row = iv_2sls(df, "y", "x", "z").collect()[0]
-    assert row["first_stage_slope"] is None
-    assert row["beta_iv"] is None
-    assert row["beta_ols"] is not None
-
-
-# ---------------------------------------------------------------------------
-# eb_shrinkage
-# ---------------------------------------------------------------------------
-
-
-def _mom_shrink(groups):
-    """Independent NumPy replay of the method-of-moments formulas."""
-    import numpy as np
-
-    ns = np.array([len(g) for g in groups], dtype=float)
-    means = np.array([np.mean(g) for g in groups])
-    big_n, k = ns.sum(), float(len(groups))
-    grand = sum(np.sum(g) for g in groups) / big_n
-    ssw = sum(((np.array(g) - m) ** 2).sum() for g, m in zip(groups, means))
-    s2 = ssw / (big_n - k) if big_n > k else 0.0
-    ssb = (ns * (means - grand) ** 2).sum()
-    den = big_n - (ns**2).sum() / big_n
-    tau2 = max(0.0, (ssb - (k - 1) * s2) / den) if den > 0 else 0.0
-    lam = [
-        tau2 / (tau2 + s2 / n) if tau2 + s2 / n > 0 else 0.0 for n in ns
-    ]
-    return grand, [
-        grand + lm * (m - grand) for lm, m in zip(lam, means)
-    ], lam
-
-
-def test_eb_shrinkage_matches_numpy_mom(spark):
-    groups = {
-        "a": [10.0, 12.0, 11.0, 13.0],
-        "b": [30.0, 31.0],
-        "c": [20.0, 18.0, 22.0, 20.0, 20.0],
-    }
-    df = spark.createDataFrame(
-        [(g, v) for g, vs in groups.items() for v in vs], ["g", "v"]
-    )
-    rows = {r["g"]: r for r in eb_shrinkage(df, "g", "v").collect()}
-    grand, shrunk, lam = _mom_shrink(list(groups.values()))
-    for (name, _), s, lm in zip(groups.items(), shrunk, lam):
-        assert rows[name]["shrunk_mean"] == pytest.approx(s, abs=1e-6)
-        assert rows[name]["shrink_weight"] == pytest.approx(lm, abs=1e-6)
-    # shrinkage pulls small groups harder toward the grand mean
-    assert rows["b"]["shrink_weight"] <= rows["c"]["shrink_weight"]
-    for name, vs in groups.items():
-        raw = sum(vs) / len(vs)
-        assert (
-            abs(rows[name]["shrunk_mean"] - grand)
-            <= abs(raw - grand) + 1e-9
-        )
-
-
-def test_eb_shrinkage_degenerate_constant_data_full_shrink(spark):
-    df = spark.createDataFrame(
-        [("a", 5.0), ("a", 5.0), ("b", 5.0)], ["g", "v"]
-    )
-    rows = eb_shrinkage(df, "g", "v").collect()
-    for r in rows:
-        assert r["shrink_weight"] == 0.0
-        assert r["shrunk_mean"] == 5.0
-
-
-# ---------------------------------------------------------------------------
-# ips_offpolicy
-# ---------------------------------------------------------------------------
-
-
-def test_ips_offpolicy_hand_computed(spark):
-    # two actions; k = 2; weights (1/2)/p
-    rows = [
-        ("a", 10.0, 0.5),
-        ("a", 20.0, 0.5),
-        ("b", 30.0, 0.25),
-    ]
-    df = spark.createDataFrame(rows, ["act", "r", "p"])
-    out = ips_offpolicy(df, "act", "r", "p").collect()[0]
-    w = [0.5 / 0.5, 0.5 / 0.5, 0.5 / 0.25]
-    r = [10.0, 20.0, 30.0]
-    n = 3
-    ips = sum(wi * ri for wi, ri in zip(w, r)) / n
-    snips = sum(wi * ri for wi, ri in zip(w, r)) / sum(w)
-    ess = sum(w) ** 2 / sum(wi * wi for wi in w)
-    assert (out["n"], out["k_actions"]) == (3, 2)
-    assert out["ips"] == pytest.approx(ips, abs=1e-6)
-    assert out["snips"] == pytest.approx(snips, abs=1e-6)
-    assert out["ess"] == pytest.approx(ess, abs=1e-6)
-    assert out["mean_logged_reward"] == 20.0
-
-
-def test_ips_offpolicy_snips_equals_ips_under_true_propensities(spark):
-    # with EXACT empirical propensities Σw = n, so SNIPS ≡ IPS — the
-    # self-normalization only bites when the logger is miscalibrated
-    rows = [("a", 1.0), ("a", 3.0), ("a", 5.0), ("b", 7.0)]
-    df = spark.createDataFrame(rows, ["act", "r"])
-    from pyspark.sql import functions as F
-
-    df = df.withColumn(
-        "p", F.when(F.col("act") == "a", 0.75).otherwise(0.25)
-    )
-    out = ips_offpolicy(df, "act", "r", "p").collect()[0]
-    assert out["snips"] == out["ips"]
-    assert out["ess"] <= out["n"]
-
-
-def test_ips_offpolicy_drops_nonpositive_propensity(spark):
-    rows = [("a", 1.0, 0.5), ("b", 2.0, 0.0), ("b", 3.0, None)]
-    df = spark.createDataFrame(rows, ["act", "r", "p"])
-    out = ips_offpolicy(df, "act", "r", "p").collect()[0]
-    assert out["n"] == 1
-    assert out["k_actions"] == 1
-
-
-# ---------------------------------------------------------------------------
-# power_mde
-# ---------------------------------------------------------------------------
-
-
-def test_power_mde_hand_computed(spark):
-    df = spark.createDataFrame(
-        [("g", 10.0), ("g", 12.0), ("one", 4.0)], ["g", "v"]
-    )
-    rows = {r["g"]: r for r in power_mde(df, "g", "v").collect()}
-    sd = math.sqrt(2.0)
-    mde = (1.9599639845400545 + 0.8416212335729143) * sd * math.sqrt(1.0)
-    assert rows["g"]["sd"] == pytest.approx(sd, abs=1e-6)
-    assert rows["g"]["mde_abs"] == pytest.approx(mde, abs=1e-6)
-    assert rows["g"]["mde_rel"] == pytest.approx(mde / 11.0, abs=1e-6)
-    # n = 1: no variance estimate, no MDE — NULL, never an error
-    assert rows["one"]["sd"] is None
-    assert rows["one"]["mde_abs"] is None
-
-
-def test_power_mde_rel_null_for_nonpositive_mean(spark):
-    df = spark.createDataFrame([("g", -1.0), ("g", 1.0)], ["g", "v"])
-    row = power_mde(df, "g", "v").collect()[0]
-    assert row["mean"] == 0.0
-    assert row["mde_abs"] is not None
-    assert row["mde_rel"] is None
-
-
-# ---------------------------------------------------------------------------
-# msprt_test
-# ---------------------------------------------------------------------------
-
-
-def _msprt_hand(a_vals, b_vals, tau2):
-    na, nb = len(a_vals), len(b_vals)
-    ma = sum(a_vals) / na
-    mb = sum(b_vals) / nb
-    va = sum((x - ma) ** 2 for x in a_vals) / (na - 1)
-    vb = sum((x - mb) ** 2 for x in b_vals) / (nb - 1)
-    se2 = va / na + vb / nb
-    delta = mb - ma
-    lam = math.sqrt(se2 / (se2 + tau2)) * math.exp(
-        delta * delta * tau2 / (2.0 * se2 * (se2 + tau2))
-    )
-    return delta, math.sqrt(se2), lam, min(1.0, 1.0 / lam)
-
-
-def test_msprt_hand_computed(spark):
-    a = [10.0, 12.0, 11.0, 13.0]
-    b = [14.0, 16.0, 15.0, 17.0]
-    df = spark.createDataFrame(
-        [("c", v) for v in a] + [("t", v) for v in b], ["arm", "v"]
-    )
-    row = msprt_test(df, "arm", "v", "c", "t", tau2=4.0).collect()[0]
-    delta, se, lam, p = _msprt_hand(a, b, 4.0)
-    assert (row["n_control"], row["n_treatment"]) == (4, 4)
-    assert row["delta"] == pytest.approx(delta, abs=1e-6)
-    assert row["se"] == pytest.approx(se, abs=1e-6)
-    assert row["lam"] == pytest.approx(lam, abs=1e-4)
-    assert row["p_always_valid"] == pytest.approx(p, abs=1e-6)
-    # a 4-sd shift on tight arms should reject
-    assert row["reject_h0"] is True
-
-
-def test_msprt_null_effect_does_not_reject(spark):
-    rows = [("c", float(v)) for v in range(20)] + [
-        ("t", float(v)) for v in range(20)
-    ]
-    df = spark.createDataFrame(rows, ["arm", "v"])
-    row = msprt_test(df, "arm", "v", "c", "t", tau2=10.0).collect()[0]
-    assert row["delta"] == 0.0
-    assert row["p_always_valid"] == 1.0
-    assert row["reject_h0"] is False
-
-
-def test_msprt_degenerate_single_row_arm_yields_nulls(spark):
-    df = spark.createDataFrame(
-        [("c", 1.0), ("t", 2.0), ("t", 3.0)], ["arm", "v"]
-    )
-    row = msprt_test(df, "arm", "v", "c", "t").collect()[0]
-    assert row["n_control"] == 1
-    assert row["lam"] is None
-    assert row["p_always_valid"] is None
-    assert row["reject_h0"] is None
-
-
-def test_msprt_rejects_bad_tau(spark):
-    df = spark.createDataFrame([("c", 1.0)], ["arm", "v"])
-    with pytest.raises(ValueError):
-        msprt_test(df, "arm", "v", "c", "t", tau2=0.0)
-
-
-# ---------------------------------------------------------------------------
-# funnel_ab_test
-# ---------------------------------------------------------------------------
-
-
-def test_funnel_ab_hand_computed(spark):
-    # arm 0: 4 users view, 2 click; arm 1: 4 users view, 1 clicks.
-    rows = []
-    for u in range(4):
-        rows.append((u * 2, 0, "view"))
-        rows.append((u * 2 + 1, 1, "view"))
-    rows += [(0, 0, "click"), (2, 0, "click"), (1, 1, "click")]
-    # duplicate events must not double-count reach
-    rows += [(0, 0, "view"), (0, 0, "click")]
-    df = spark.createDataFrame(rows, ["user_id", "arm", "event_type"])
-    out = {
-        r["stage_idx"]: r
-        for r in funnel_ab_test(
-            df, ["view", "click"], "arm"
-        ).collect()
-    }
-    top = out[0]
-    assert (top["users_a"], top["users_b"]) == (4, 4)
-    assert top["conv_a"] is None and top["z"] is None
-    step = out[1]
-    assert (step["users_a"], step["users_b"]) == (2, 1)
-    assert step["conv_a"] == 0.5 and step["conv_b"] == 0.25
-    pooled = 3 / 8
-    zden = math.sqrt(pooled * (1 - pooled) * (1 / 4 + 1 / 4))
-    assert step["z"] == pytest.approx((0.5 - 0.25) / zden, abs=1e-6)
-    assert step["significant_05"] is False
-
-
-def test_funnel_ab_missing_arm_stage_densifies_to_zero(spark):
-    # arm 1 never reaches click: the densified reach grid counts it
-    # as 0 of 1 (conv_b = 0.0 against the immediately preceding
-    # stage's reach), not NULL — and z stays computable, no crash
-    rows = [(0, 0, "view"), (1, 1, "view"), (0, 0, "click")]
-    df = spark.createDataFrame(rows, ["user_id", "arm", "event_type"])
-    out = {
-        r["stage_idx"]: r
-        for r in funnel_ab_test(df, ["view", "click"], "arm").collect()
-    }
-    assert out[1]["users_b"] == 0
-    assert out[1]["conv_a"] == 1.0
-    assert out[1]["conv_b"] == 0.0
-    pooled = 1 / 2
-    zden = math.sqrt(pooled * (1 - pooled) * (1 / 1 + 1 / 1))
-    assert out[1]["z"] == pytest.approx((1.0 - 0.0) / zden, abs=1e-6)
-
-
-def test_funnel_ab_stage_absent_in_both_arms_still_emits_row(spark):
-    # nobody clicks at all: the click row exists with zero reach and
-    # zero conversions; the downstream signup row converts against
-    # click's (zero) reach -> NULL conversions, never a crash
-    rows = [(0, 0, "view"), (1, 1, "view"), (0, 0, "signup")]
-    df = spark.createDataFrame(rows, ["user_id", "arm", "event_type"])
-    out = {
-        r["stage_idx"]: r
-        for r in funnel_ab_test(
-            df, ["view", "click", "signup"], "arm"
-        ).collect()
-    }
-    assert set(out) == {0, 1, 2}
-    assert (out[1]["users_a"], out[1]["users_b"]) == (0, 0)
-    assert out[1]["conv_a"] == 0.0 and out[1]["conv_b"] == 0.0
-    assert out[2]["conv_a"] is None and out[2]["z"] is None
-
-
-def test_funnel_ab_requires_two_stages(spark):
-    df = spark.createDataFrame([(0, 0, "view")], ["user_id", "arm", "event_type"])
-    with pytest.raises(ValueError):
-        funnel_ab_test(df, ["view"], "arm")
-
-
-@pytest.fixture(scope="module")
-def events(spark, sf001_dir):
-    from gbif_filter_python_spark.sources.io import read_table
-
-    return read_table(spark, sf001_dir, "events")
-
-
-def test_cmh_single_fact_scan_with_partial_agg(events):
-    from gbif_filter_python_spark.operators.analytics import cmh_test
-
-    ev = events.withColumn("e", F.col("user_id") % 2 == 0).withColumn(
-        "o", F.col("event_id") % 3 == 0
-    )
-    plan = explain_str(cmh_test(ev, "event_type", "e", "o"), "simple")
-    assert node_count(plan, "FileScan parquet") == 1, plan
-    assert "partial" in plan.lower(), plan
-
-
-def test_tost_single_scan_single_row(events):
-    from gbif_filter_python_spark.operators.analytics import (
-        tost_equivalence,
-    )
-
-    ev = events.withColumn("arm", (F.col("user_id") % 2).cast("int"))
-    plan = explain_str(
-        tost_equivalence(ev, "arm", "value", 0, 1, 2.0), "simple")
-    assert node_count(plan, "FileScan parquet") == 1, plan
-
-
-# ---------------------------------------------------------------------------
-# cmh_test
-# ---------------------------------------------------------------------------
-
-
-def _cmh_rows(spark, rows):
-    return spark.createDataFrame(rows, ["s", "e", "o"])
-
-
-def test_cmh_hand_computed_single_stratum(spark):
-    # one stratum: a=2, n1=3, m1=3, n=6
-    rows = (
-        [("s1", True, True)] * 2
-        + [("s1", True, False)]
-        + [("s1", False, True)]
-        + [("s1", False, False)] * 2
-    )
-    r = cmh_test(_cmh_rows(spark, rows), "s", "e", "o").collect()[0]
-    e_k = 3 * 3 / 6.0
-    v_k = 3 * 3 * 3 * 3 / (36.0 * 5)
-    assert r["n_strata"] == 1 and r["n_rows"] == 6 and r["sum_a"] == 2
-    assert r["sum_e"] == pytest.approx(e_k, abs=1e-6)
-    assert r["chi2_cmh"] == pytest.approx(
-        (2 - e_k) ** 2 / v_k, abs=1e-5
-    )
-    # OR_MH = (a*d/n) / (b*c/n) = (2*2/6)/(1*1/6) = 4
-    assert r["or_mh"] == pytest.approx(4.0, abs=1e-6)
-
-
-def test_cmh_excludes_singleton_strata_and_nulls_when_degenerate(spark):
-    rows = [("only", True, True)]  # n=1 -> V undefined -> excluded
-    r = cmh_test(_cmh_rows(spark, rows), "s", "e", "o").collect()[0]
-    assert r["n_strata"] == 0
-    assert r["chi2_cmh"] is None and r["or_mh"] is None
-
-
-def test_cmh_aggregates_across_strata(spark):
-    rows = (
-        [("s1", True, True)] * 2
-        + [("s1", False, False)] * 2
-        + [("s2", True, False)] * 2
-        + [("s2", False, True)] * 2
-    )
-    r = cmh_test(_cmh_rows(spark, rows), "s", "e", "o").collect()[0]
-    assert r["n_strata"] == 2 and r["n_rows"] == 8
-    # s1: a=2, E=1, s2: a=0, E=1 -> dev = (2+0) - 2 = 0 ... chi2 = 0
-    assert r["chi2_cmh"] == pytest.approx(0.0, abs=1e-6)
-
-
-# ---------------------------------------------------------------------------
-# mcnemar_test
-# ---------------------------------------------------------------------------
-
-
-def test_mcnemar_hand_computed(spark):
-    rows = (
-        [(True, True)] * 4
-        + [(False, False)] * 3
-        + [(True, False)] * 3
-        + [(False, True)]
-    )
-    df = spark.createDataFrame(rows, ["a", "b"])
-    r = mcnemar_test(df, "a", "b").collect()[0]
-    assert (r["n_pairs"], r["n_both"], r["n_neither"]) == (11, 4, 3)
-    assert (r["n_a_only"], r["n_b_only"]) == (3, 1)
-    assert r["chi2_mcnemar"] == pytest.approx((3 - 1) ** 2 / 4.0, abs=1e-6)
-
-
-def test_mcnemar_identical_classifiers_null(spark):
-    df = spark.createDataFrame([(True, True), (False, False)], ["a", "b"])
-    r = mcnemar_test(df, "a", "b").collect()[0]
-    assert r["chi2_mcnemar"] is None
-
-
-# ---------------------------------------------------------------------------
-# granger_causality
-# ---------------------------------------------------------------------------
-
-
-def _series_df(spark, xs, ys):
-    import datetime
-
-    rows = [
-        (datetime.datetime(2024, 1, 1 + i), float(x), float(y))
-        for i, (x, y) in enumerate(zip(xs, ys))
-    ]
-    return spark.createDataFrame(rows, ["ts", "x", "y"])
-
-
-def test_granger_matches_numpy_ols(spark):
-    rng = [3, 7, 2, 9, 5, 8, 1, 6, 4, 10, 2, 7]
-    xs = rng
-    # y depends on lagged x plus a bit of lagged y
-    ys = [5]
-    for i in range(1, len(xs)):
-        ys.append(2 * xs[i - 1] + (ys[i - 1] % 3) + 1)
-    r = granger_causality(
-        _series_df(spark, xs, ys), "ts", "x", "y"
-    ).collect()[0]
-    y = np.array(ys[1:], dtype=float)
-    y1 = np.array(ys[:-1], dtype=float)
-    x1 = np.array(xs[:-1], dtype=float)
-    n = len(y)
-    Xf = np.column_stack([np.ones(n), y1, x1])
-    Xr = np.column_stack([np.ones(n), y1])
-    bf, *_ = np.linalg.lstsq(Xf, y, rcond=None)
-    br, *_ = np.linalg.lstsq(Xr, y, rcond=None)
-    rss_f = float(((y - Xf @ bf) ** 2).sum())
-    rss_r = float(((y - Xr @ br) ** 2).sum())
-    f_exp = (rss_r - rss_f) * (n - 3) / rss_f
-    assert r["n_obs"] == n
-    assert r["beta_y_lag"] == pytest.approx(bf[1], abs=1e-4)
-    assert r["beta_x_lag"] == pytest.approx(bf[2], abs=1e-4)
-    assert r["f_stat"] == pytest.approx(f_exp, rel=1e-3)
-
-
-def test_granger_too_short_yields_nulls(spark):
-    r = granger_causality(
-        _series_df(spark, [1, 2, 3], [4, 5, 6]), "ts", "x", "y"
-    ).collect()[0]
-    assert r["n_obs"] == 2  # 3 days -> 2 lagged obs
-    assert r["beta_x_lag"] is None and r["f_stat"] is None
-
-
-def test_granger_constant_lag_is_singular_null(spark):
-    # constant x -> c22 = 0 and det = 0 -> NULL betas/F
-    r = granger_causality(
-        _series_df(spark, [5] * 8, [1, 4, 2, 6, 3, 8, 5, 7]),
-        "ts",
-        "x",
-        "y",
-    ).collect()[0]
-    assert r["beta_x_lag"] is None and r["f_stat"] is None
-
-
-# ---------------------------------------------------------------------------
-# tost_equivalence
-# ---------------------------------------------------------------------------
-
-
-def _arms(spark, a_vals, b_vals):
-    rows = [(0, float(v)) for v in a_vals] + [(1, float(v)) for v in b_vals]
-    return spark.createDataFrame(rows, ["arm", "v"])
-
-
-def test_tost_equivalent_when_identical_means(spark):
-    df = _arms(spark, [10, 11, 9, 10], [10, 9, 11, 10])
-    r = tost_equivalence(df, "arm", "v", 0, 1, margin=5.0).collect()[0]
-    assert r["delta"] == pytest.approx(0.0, abs=1e-6)
-    assert r["equivalent_05"] is True
-    # hand: se = sqrt(va/4 + vb/4); z_lower = 5/se
-    va = np.var([10, 11, 9, 10], ddof=1)
-    se = math.sqrt(va / 4 * 2)
-    assert r["z_lower"] == pytest.approx(5.0 / se, abs=1e-4)
-
-
-def test_tost_not_equivalent_when_far_apart(spark):
-    df = _arms(spark, [0, 1, 0, 1], [10, 11, 10, 11])
-    r = tost_equivalence(df, "arm", "v", 0, 1, margin=2.0).collect()[0]
-    assert r["equivalent_05"] is False  # delta ~ 10 >> margin
-
-
-def test_tost_degenerate_arm_nulls(spark):
-    df = _arms(spark, [1, 2, 3], [7])  # treatment n=1
-    r = tost_equivalence(df, "arm", "v", 0, 1, margin=1.0).collect()[0]
-    assert r["se"] is None and r["equivalent_05"] is None
-
-
-def test_tost_rejects_nonpositive_margin(spark):
-    df = _arms(spark, [1], [2])
-    with pytest.raises(ValueError):
-        tost_equivalence(df, "arm", "v", 0, 1, margin=0.0)
-
-
-# ---------------------------------------------------------------------------
-# durbin_watson / runs_test
-# ---------------------------------------------------------------------------
-
-
-def _daily(spark, ys):
-    rows = [
-        (datetime.datetime(2024, 1, 1) + datetime.timedelta(days=i), float(y))
-        for i, y in enumerate(ys)
-    ]
-    return spark.createDataFrame(rows, ["ts", "y"])
-
-
-def _dw_expected(ys):
-    y = np.array(ys, dtype=float)
-    t = np.arange(1, len(y) + 1, dtype=float)
-    b, a = np.polyfit(t, y, 1)
-    e = y - (a + b * t)
-    return float(((e[1:] - e[:-1]) ** 2).sum() / (e**2).sum())
-
-
-def test_dw_matches_numpy_replay(spark):
-    ys = [3, 8, 2, 9, 4, 10, 1, 7, 5, 12]
-    r = durbin_watson(_daily(spark, ys), "ts", "y").collect()[0]
-    assert r["n_days"] == 10
-    assert r["dw_stat"] == pytest.approx(_dw_expected(ys), abs=1e-4)
-
-
-def test_dw_alternating_residuals_near_four(spark):
-    ys = [1, 9, 1, 9, 1, 9, 1, 9]  # strong negative lag-1 correlation
-    r = durbin_watson(_daily(spark, ys), "ts", "y").collect()[0]
-    assert r["dw_stat"] > 3.0
-
-
-def test_dw_perfect_trend_null(spark):
-    r = durbin_watson(
-        _daily(spark, [1, 2, 3, 4, 5]), "ts", "y"
-    ).collect()[0]
-    assert r["dw_stat"] is None  # zero residuals -> see = 0
-
-
-def test_runs_alternating_series_many_runs(spark):
-    ys = [1, 9, 1, 9, 1, 9, 1, 9, 1, 9]
-    r = runs_test(_daily(spark, ys), "ts", "y").collect()[0]
-    # median 5, 5 above / 5 below, alternating -> 10 runs
-    assert (r["n_above"], r["n_below"], r["n_runs"]) == (5, 5, 10)
-    mu = 2 * 5 * 5 / 10.0 + 1
-    var = 2 * 5 * 5 * (2 * 5 * 5 - 10) / (10.0**2 * 9)
-    assert r["z_stat"] == pytest.approx((10 - mu) / math.sqrt(var), abs=1e-4)
-
-
-def test_runs_trending_series_few_runs(spark):
-    ys = [1, 2, 3, 4, 10, 11, 12, 13]
-    r = runs_test(_daily(spark, ys), "ts", "y").collect()[0]
-    assert r["n_runs"] == 2 and r["z_stat"] < 0
-
-
-def test_runs_all_same_side_null(spark):
-    # every value equals the median -> all excluded -> NULL
-    r = runs_test(_daily(spark, [5, 5, 5, 5]), "ts", "y").collect()[0]
-    assert r["z_stat"] is None
-
-
-# ---------------------------------------------------------------------------
-# cochran_q
-# ---------------------------------------------------------------------------
-
-
-def test_cochran_q_hand_computed(spark):
-    data = [
-        (1, 1, 0), (1, 1, 0), (1, 1, 1), (1, 1, 0), (1, 0, 0),
-        (1, 1, 1), (1, 1, 0), (1, 1, 0), (0, 0, 1), (1, 1, 0),
-        (1, 1, 1), (1, 1, 1),
-    ]
-    df = spark.createDataFrame(data, ["a", "b", "c"])
-    r = cochran_q(df, ["a", "b", "c"]).collect()[0]
-    assert (r["successes_0"], r["successes_1"], r["successes_2"]) == (
-        11, 10, 5,
-    )
-    assert r["q_stat"] == pytest.approx(7.75, abs=1e-6)
-
-
-def test_cochran_q_unanimous_rows_null(spark):
-    df = spark.createDataFrame(
-        [(1, 1, 1), (0, 0, 0)], ["a", "b", "c"]
-    )
-    r = cochran_q(df, ["a", "b", "c"]).collect()[0]
-    assert r["q_stat"] is None  # denominator 0
-
-
-def test_cochran_q_requires_two_columns(spark):
-    df = spark.createDataFrame([(1,)], ["a"])
-    with pytest.raises(ValueError):
-        cochran_q(df, ["a"])
-
-
-def _pairs(spark, rows):
-    return spark.createDataFrame(rows, ["x", "y"])
-
-
-# ---------------------------------------------------------------------------
-# bowker_test
-# ---------------------------------------------------------------------------
-
-
-def test_bowker_hand_computed(spark):
-    rows = (
-        [("a", "a")] * 5 + [("a", "b")] * 3 + [("b", "a")]
-        + [("b", "b")] * 4 + [("b", "c")] * 2 + [("c", "b")]
-        + [("c", "c")] * 3
-    )
-    r = bowker_test(_pairs(spark, rows), "x", "y").collect()[0]
-    # (a,b): (3-1)^2/4 = 1 ; (b,c): (2-1)^2/3 = 1/3 ; (a,c): absent
-    assert r["df_cells"] == 2 and r["n_discordant"] == 7
-    assert r["bowker_stat"] == pytest.approx(1 + 1 / 3.0, abs=1e-6)
-
-
-def test_bowker_symmetric_matrix_zero(spark):
-    rows = [("a", "b")] * 2 + [("b", "a")] * 2 + [("a", "a")] * 3
-    r = bowker_test(_pairs(spark, rows), "x", "y").collect()[0]
-    assert r["bowker_stat"] == pytest.approx(0.0, abs=1e-6)
-
-
-def test_bowker_no_discordance_null(spark):
-    rows = [("a", "a"), ("b", "b")]
-    r = bowker_test(_pairs(spark, rows), "x", "y").collect()[0]
-    assert r["bowker_stat"] is None and r["df_cells"] == 0
-
-
-def _hac_replay(ys, L):
-    x = np.array(ys, dtype=float)
-    n = len(x)
-    e = x - x.mean()
-    var = e @ e / n
-    for lag in range(1, L + 1):
-        g = float((e[lag:] * e[:-lag]).sum()) / n
-        var += 2.0 * (1.0 - lag / (L + 1.0)) * g
-    return x.mean(), max(var, 0.0), n
-
-
-def test_hac_matches_numpy_kernel(spark):
-    ys = [5, 9, 4, 11, 6, 13, 3, 10, 7, 12, 5, 9, 8, 14, 6]
-    r = hac_mean_ci(_daily(spark, ys), "ts", "y", max_lag=3).collect()[0]
-    mu, var, n = _hac_replay(ys, 3)
-    assert r["n_days"] == n
-    assert r["mean"] == pytest.approx(mu, abs=1e-5)
-    assert r["se_hac"] == pytest.approx((var / n) ** 0.5, abs=1e-5)
-    assert r["ci95_lo"] == pytest.approx(
-        mu - 1.9599639845400545 * (var / n) ** 0.5, abs=1e-4
-    )
-
-
-def test_hac_positive_autocorrelation_widens(spark):
-    # strongly positively autocorrelated series: HAC se > naive se
-    ys, v = [], 0.0
-    vals = [1, 2, 1, 3, 2, 1, 2, 3]
-    for i in range(40):
-        v = 0.9 * v + vals[i % 8]
-        ys.append(v)
-    r = hac_mean_ci(_daily(spark, ys), "ts", "y", max_lag=7).collect()[0]
-    assert r["ratio"] > 1.0
-
-
-def test_hac_too_short_yields_nulls(spark):
-    r = hac_mean_ci(
-        _daily(spark, [1, 2, 3]), "ts", "y", max_lag=7
-    ).collect()[0]
-    assert r["se_hac"] is None and r["ci95_lo"] is None
-
-
-def test_hac_rejects_bad_lag(spark):
-    with pytest.raises(ValueError):
-        hac_mean_ci(_daily(spark, [1, 2]), "ts", "y", max_lag=0)
-
-
-# ---------------------------------------------------------------------------
-# psm_att
-# ---------------------------------------------------------------------------
-
-
-def _units(spark, n=400, tie_every=7):
-    """Deterministic unit frame with score ties, exact-score
-    treated/control collisions, and both-sided boundary cases."""
-    rows = []
-    for i in range(n):
-        t = 1 if (i * 2654435761 % 97) < 40 else 0
-        s = float((i * 37) % (n // tie_every))  # heavy score ties
-        y = float((i * 13) % 29) + t * 3.0
-        rows.append((t, s, y, i))
-    return spark.createDataFrame(rows, "t int, s double, y double, id long")
-
-
-def _psm_att_single_window(df, caliper=None, round_dp=6):
-    """The retired r12 formulation — one global-order window pair —
-    kept here as the differential oracle for the distributed form."""
-    t = F.col("t").cast("int")
-    s = F.col("s").cast("double")
-    base = df.filter(
-        t.isNotNull() & s.isNotNull() & F.col("y").isNotNull()
-    ).select(
-        t.alias("_t"),
-        s.alias("_s"),
-        F.col("y").cast("double").alias("_y"),
-        F.col("id").alias("_id"),
-    )
-    w = Window.orderBy("_s", "_t", "_id")
-    ctrl = F.when(F.col("_t") == 0, F.struct("_s", "_y"))
-    back = F.last(ctrl, ignorenulls=True).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wrev = Window.orderBy(
-        F.col("_s").desc(), F.col("_t").desc(), F.col("_id").desc()
-    )
-    fwd = F.last(ctrl, ignorenulls=True).over(
-        wrev.rowsBetween(Window.unboundedPreceding, 0)
-    )
-    flagged = base.select(
-        "_t", "_s", "_y", back.alias("_b"), fwd.alias("_f")
-    )
-    bd = F.abs(F.col("_s") - F.col("_b._s"))
-    fd = F.abs(F.col("_f._s") - F.col("_s"))
-    use_fwd = F.col("_f").isNotNull() & (
-        F.col("_b").isNull() | (fd < bd)
-    )
-    matched = flagged.filter(F.col("_t") == 1).select(
-        "_y",
-        F.when(use_fwd, F.col("_f._y"))
-        .otherwise(F.col("_b._y"))
-        .alias("_my"),
-        F.when(use_fwd, fd).otherwise(bd).alias("_d"),
-    )
-    if caliper is not None:
-        matched = matched.select(
-            "_y",
-            F.when(F.col("_d") <= caliper, F.col("_my")).alias("_my"),
-            "_d",
-        )
-    totals = base.agg(
-        F.sum(F.col("_t")).alias("_nt"),
-        F.sum(1 - F.col("_t")).alias("_nc"),
-    )
-    return (
-        matched.agg(
-            F.count(F.lit(1)).alias("_ntt"),
-            F.count("_my").alias("n_matched"),
-            F.avg(F.col("_y") - F.col("_my")).alias("_att"),
-            F.avg(
-                F.when(F.col("_my").isNotNull(), F.col("_y"))
-            ).alias("_mt"),
-            F.avg("_my").alias("_mc"),
-        )
-        .crossJoin(F.broadcast(totals))
-        .select(
-            F.col("_nt").cast("long").alias("n_treated"),
-            F.col("_nc").cast("long").alias("n_control"),
-            F.col("n_matched").cast("long").alias("n_matched"),
-            F.round("_att", round_dp).alias("att"),
-            F.round("_mt", 2).alias("mean_treated"),
-            F.round("_mc", 2).alias("mean_matched_control"),
-        )
-    )
-
-
-def test_psm_att_no_single_partition_unit_window(spark):
-    """No window over the unit table may lead with the score column —
-    every fact-side windowspec must be keyed by the _pid range tag;
-    the cross-partition total order is a rangepartitioning exchange;
-    the boundary carry is a broadcast join."""
-    from gbif_filter_python_spark.operators.analytics import psm_att
-
-    with session_conf(spark, 8, True):
-        plan = explain_str(
-            psm_att(_units(spark), "t", "s", "y", "id"), "simple"
-        )
-        leads = [keys[0].split()[0] for keys in node_args(plan, "Window") if keys]
-        assert "_s" not in leads, plan
-        assert "rangepartitioning" in plan, plan
-        assert "BroadcastHashJoin" in plan, plan
-        assert "CartesianProduct" not in plan, plan
-        # fact-side windows are keyed by the range-partition tag
-        assert "_pid" in leads, plan
-
-
-def test_psm_att_distributed_matches_single_window(spark):
-    """Exact differential: the distributed prefix-carry form returns
-    the SAME summary row as the retired global-window form — ties,
-    boundary controls, and all — across several partition counts."""
-    from gbif_filter_python_spark.operators.analytics import psm_att
-
-    with session_conf(spark, 8, True):
-        df = _units(spark)
-        expected = _psm_att_single_window(df).collect()[0].asDict()
-        for sp in (3, 8, 17):
-            with session_conf(spark, sp):
-                got = psm_att(df, "t", "s", "y", "id").collect()[0].asDict()
-            assert got == expected, (sp, got, expected)
-
-
-def test_psm_att_distributed_matches_single_window_caliper(spark):
-    from gbif_filter_python_spark.operators.analytics import psm_att
-
-    with session_conf(spark, 8, True):
-        df = _units(spark, n=301, tie_every=5)
-        for cal in (0.0, 1.0, 5.0):
-            expected = _psm_att_single_window(df, caliper=cal).collect()[
-                0
-            ].asDict()
-            got = psm_att(
-                df, "t", "s", "y", "id", caliper=cal
-            ).collect()[0].asDict()
-            assert got == expected, (cal, got, expected)
-
-
-def test_psm_att_all_controls_in_one_boundary_partition(spark):
-    """Carry correctness when whole partitions hold no control: all
-    controls sit at the extreme low end of the score order, so every
-    treated unit in later range partitions matches ONLY via the
-    broadcast carry."""
-    from gbif_filter_python_spark.operators.analytics import psm_att
-
-    with session_conf(spark, 8, True):
-        rows = [(0, float(i) / 100.0, float(i), i) for i in range(10)] + [
-            (1, 50.0 + i, 100.0 + i, 1000 + i) for i in range(90)
-        ]
-        df = spark.createDataFrame(rows, "t int, s double, y double, id long")
-        expected = _psm_att_single_window(df).collect()[0].asDict()
-        got = psm_att(df, "t", "s", "y", "id").collect()[0].asDict()
-        assert got == expected
-        assert got["n_matched"] == 90
-        # nearest (only reachable) control is the max-score control: s=0.09
-        # → y=9.0 for every treated unit
-        assert got["mean_matched_control"] == 9.0
-
-
-def test_psm_att_no_controls_at_all(spark):
-    from gbif_filter_python_spark.operators.analytics import psm_att
-
-    with session_conf(spark, 8, True):
-        rows = [(1, float(i), float(i), i) for i in range(20)]
-        df = spark.createDataFrame(rows, "t int, s double, y double, id long")
-        (r,) = psm_att(df, "t", "s", "y", "id").collect()
-        assert r.n_treated == 20
-        assert r.n_control == 0
-        assert r.n_matched == 0
-        assert r.att is None
-
-
-# ---------------------------------------------------------------------------
-# kruskal_wallis
-# ---------------------------------------------------------------------------
-
-
-def _kw_frame(spark, n=500, continuous=True):
-    """Deterministic k=4 group frame; continuous=True makes every
-    value distinct (the 100 TB worst case for the rank window),
-    False gives heavy ties (the discrete-metric case)."""
-    rows = []
-    for i in range(n):
-        g = "abcd"[(i * 2654435761 % 97) % 4]
-        v = float(i) + 0.25 if continuous else float((i * 37) % 23)
-        rows.append((g, v))
-    return spark.createDataFrame(rows, "g string, v double")
-
-
-def _kruskal_single_window(df, group_col, value_col, round_dp=6):
-    """The retired r13 form: bare Window.orderBy over the distinct
-    value table — kept here as the exact differential oracle."""
-    base = df.select(
-        F.col(group_col).alias("grp"),
-        F.col(value_col).cast("double").alias("v"),
-    ).filter(F.col("grp").isNotNull() & F.col("v").isNotNull())
-    gv = base.groupBy("grp", "v").agg(F.count(F.lit(1)).alias("c"))
-    vals = gv.groupBy("v").agg(F.sum("c").alias("t"))
-    cum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = vals.select(
-        "v",
-        F.col("t").cast("double").alias("t"),
-        (
-            F.coalesce(F.sum("t").over(cum), F.lit(0)).cast("double")
-            + (F.col("t") + 1) / 2.0
-        ).alias("avg_rank"),
-    )
-    per = (
-        gv.join(F.broadcast(ranked), "v")
-        .groupBy("grp")
-        .agg(
-            F.sum("c").alias("n_g"),
-            F.sum(F.col("c") * F.col("avg_rank")).alias("r_g"),
-            F.sum(F.col("c") * (F.col("t") * F.col("t") - 1)).alias(
-                "tie_g"
-            ),
-        )
-    )
-    stats = per.agg(
-        F.sum("n_g").alias("n"),
-        F.count(F.lit(1)).alias("k"),
-        F.sum(F.col("r_g") * F.col("r_g") / F.col("n_g")).alias("s"),
-        F.sum("tie_g").alias("tt"),
-    )
-    n = F.col("n").cast("double")
-    k = F.col("k").cast("double")
-    h = F.lit(12.0) / (n * (n + 1.0)) * F.col("s") - 3.0 * (n + 1.0)
-    corr = F.lit(1.0) - F.col("tt") / (n * n * n - n)
-    h_adj = F.when(corr > 0, h / corr).otherwise(
-        F.lit(None).cast("double")
-    )
-    eps = F.when(n > k, (h - k + 1.0) / (n - k)).otherwise(
-        F.lit(None).cast("double")
-    )
-    return stats.select(
-        F.col("n").cast("long").alias("n"),
-        F.col("k").cast("long").alias("k_groups"),
-        (F.col("k") - 1).cast("long").alias("dof"),
-        F.round(h, round_dp).alias("h_stat"),
-        F.round(h_adj, round_dp).alias("h_corrected"),
-        F.round(eps, round_dp).alias("epsilon_sq"),
-    )
-
-
-def test_kruskal_no_single_partition_value_window(spark):
-    """No windowspec may LEAD with the value column (that is the
-    unpartitioned sort-the-world shape); every value-table window is
-    keyed by the _pid range tag, the total order is a
-    rangepartitioning exchange, offsets come back as a broadcast."""
-    from gbif_filter_python_spark.operators.analytics import (
-        kruskal_wallis,
-    )
-
-    with session_conf(spark, 8, True):
-        plan = explain_str(
-            kruskal_wallis(_kw_frame(spark), "g", "v"), "simple"
-        )
-        leads = [keys[0] for keys in node_args(plan, "Window") if keys]
-        assert not {"v ASC", "_v ASC"} & set(leads), plan
-        assert "rangepartitioning" in plan, plan
-        assert "CartesianProduct" not in plan, plan
-        assert "_pid" in {lead.split()[0] for lead in leads}, plan
-
-
-@pytest.mark.parametrize("continuous", [True, False])
-def test_kruskal_distributed_matches_single_window(spark, continuous):
-    """Exact differential vs the retired global-window form — the
-    half-integer average ranks are exact in doubles, so every output
-    cell must be EQUAL (not approx) at any partition count."""
-    from gbif_filter_python_spark.operators.analytics import (
-        kruskal_wallis,
-    )
-
-    with session_conf(spark, 8, True):
-        df = _kw_frame(spark, continuous=continuous)
-        expected = _kruskal_single_window(df, "g", "v").collect()[0].asDict()
-        for sp in (3, 8, 17):
-            with session_conf(spark, sp):
-                got = kruskal_wallis(df, "g", "v").collect()[0].asDict()
-            assert got == expected, (sp, got, expected)
-
-
-def test_kruskal_all_one_value(spark):
-    """Degenerate tie case: correction factor 0 → h_corrected NULL."""
-    from gbif_filter_python_spark.operators.analytics import (
-        kruskal_wallis,
-    )
-
-    with session_conf(spark, 8, True):
-        df = spark.createDataFrame(
-            [("a", 1.0)] * 5 + [("b", 1.0)] * 5, "g string, v double"
-        )
-        (r,) = kruskal_wallis(df, "g", "v").collect()
-        assert r.n == 10 and r.k_groups == 2
-        assert r.h_corrected is None
-        assert r.h_stat == 0.0
-
-
-# ---------------------------------------------------------------------------
-# skyline_2d
-# ---------------------------------------------------------------------------
-
-
-def _sky_frame(spark, n=400, continuous=True):
-    rows = []
-    for i in range(n):
-        x = float(i) + 0.5 if continuous else float((i * 37) % 29)
-        y = float((i * 2654435761 % 997))
-        rows.append((i, x, y))
-    return spark.createDataFrame(rows, "id long, x double, y double")
-
-
-def _skyline_2d_single_window(df, x_col, y_col, x_pref="min", y_pref="max"):
-    """The retired r13 form: bare Window.orderBy(_sx) prefix max."""
-    sx = 1 if x_pref == "min" else -1
-    sy = 1 if y_pref == "max" else -1
-    keep = df.na.drop(subset=[x_col, y_col])
-    work = keep.select(
-        "*",
-        (F.col(x_col) * sx).cast("double").alias("_sx"),
-        (F.col(y_col) * sy).cast("double").alias("_sy"),
-    )
-    agg = work.groupBy("_sx").agg(F.max("_sy").alias("_ymax"))
-    w = Window.orderBy(F.col("_sx").asc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    stats = agg.withColumn("_prev", F.max("_ymax").over(w))
-    joined = work.join(stats, "_sx")
-    survives = (
-        (F.col("_prev").isNull() | (F.col("_prev") < F.col("_sy")))
-        & (F.col("_sy") == F.col("_ymax"))
-    )
-    return joined.filter(survives).select(*[F.col(c) for c in keep.columns])
-
-
-def test_skyline_2d_no_single_partition_x_window(spark):
-    from gbif_filter_python_spark.operators.analytics import skyline_2d
-
-    with session_conf(spark, 8, True):
-        plan = explain_str(
-            skyline_2d(_sky_frame(spark), "x", "y"), "simple"
-        )
-        leads = [keys[0] for keys in node_args(plan, "Window") if keys]
-        assert "_sx ASC" not in leads, plan
-        assert "rangepartitioning" in plan, plan
-        assert "BroadcastHashJoin" in plan, plan
-        assert "CartesianProduct" not in plan, plan
-        assert "_pid" in {lead.split()[0] for lead in leads}, plan
-
-
-@pytest.mark.parametrize("continuous", [True, False])
-@pytest.mark.parametrize(
-    "prefs", [("min", "max"), ("max", "min"), ("min", "min")]
-)
-def test_skyline_2d_distributed_matches_single_window(
-    spark, continuous, prefs
-):
-    from gbif_filter_python_spark.operators.analytics import skyline_2d
-
-    with session_conf(spark, 8, True):
-        df = _sky_frame(spark, continuous=continuous)
-        expected = sorted(
-            r["id"]
-            for r in _skyline_2d_single_window(
-                df, "x", "y", prefs[0], prefs[1]
-            ).collect()
-        )
-        for sp in (3, 8, 17):
-            with session_conf(spark, sp):
-                got = sorted(
-                    r["id"]
-                    for r in skyline_2d(df, "x", "y", prefs[0], prefs[1]).collect()
-                )
-            assert got == expected, (sp, len(got), len(expected))
-
-
-def test_skyline_2d_all_survivors_in_one_boundary_partition(spark):
-    """Carry correctness when the global max y sits in the FIRST
-    range partition: every later x is dominated only via the
-    broadcast carry, never the local window."""
-    from gbif_filter_python_spark.operators.analytics import skyline_2d
-
-    with session_conf(spark, 8, True):
-        rows = [(0, 0.0, 1000.0)] + [
-            (i, float(i), float(i)) for i in range(1, 200)
-        ]
-        df = spark.createDataFrame(rows, "id long, x double, y double")
-        got = sorted(r["id"] for r in skyline_2d(df, "x", "y").collect())
-        assert got == [0]
-
-
-def test_skyline_2d_ties_all_survive(spark):
-    from gbif_filter_python_spark.operators.analytics import skyline_2d
-
-    with session_conf(spark, 8, True):
-        rows = [(1, 1.0, 5.0), (2, 1.0, 5.0), (3, 2.0, 5.0), (4, 0.5, 4.0)]
-        df = spark.createDataFrame(rows, "id long, x double, y double")
-        got = sorted(r["id"] for r in skyline_2d(df, "x", "y").collect())
-        # x=1.0,y=5.0 twice (both survive); x=2.0 dominated (smaller x hit
-        # same y — strict < fails); x=0.5,y=4.0 survives (no smaller x).
-        assert got == [1, 2, 4]
-
-
-# ---------------------------------------------------------------------------
-# conformal_intervals
-# ---------------------------------------------------------------------------
-
-
-def _py_conformal(rows, alpha=0.1):
-    """Exact replay: even-id calibration, 2dp-rounded group mean,
-    k = ceil((n+1)(1-alpha)) capped at n, kth smallest |v - pred|."""
-    from collections import defaultdict
-    from fractions import Fraction
-
-    frac = 1 - Fraction(str(alpha))
-    cal, test = defaultdict(list), defaultdict(list)
-    for g, v, i in rows:
-        (cal if i % 2 == 0 else test)[g].append(v)
-    out = {}
-    for g, vs in cal.items():
-        if g not in test:
-            continue
-        pred = round(sum(vs) / len(vs), 2)
-        scores = sorted(abs(v - pred) for v in vs)
-        k = min(
-            -((-(len(vs) + 1) * frac.numerator) // frac.denominator),
-            len(vs),
-        )
-        qhat = scores[k - 1]
-        cov = sum(abs(v - pred) <= qhat for v in test[g]) / len(test[g])
-        out[g] = (pred, round(qhat, 2), len(vs), len(test[g]), round(cov, 4))
-    return out
-
-
-def test_conformal_matches_python_replay(spark):
-    rows = [
-        ("g%d" % (i % 3), float((i * 37) % 100) + 0.25, i)
-        for i in range(120)
-    ]
-    df = spark.createDataFrame(rows, ["g", "v", "id"])
-    got = {
-        r["grp"]: (
-            r["pred"], r["qhat"], r["n_cal"], r["n_test"], r["coverage"]
-        )
-        for r in conformal_intervals(df, "g", "v", "id", alpha=0.1).collect()
-    }
-    assert got == _py_conformal(rows, alpha=0.1)
-
-
-def test_conformal_coverage_tracks_alpha(spark):
-    # larger sample: empirical coverage should be near 1 - alpha
-    rows = [("a", float((i * 9973) % 1000), i) for i in range(4000)]
-    df = spark.createDataFrame(rows, ["g", "v", "id"])
-    r = conformal_intervals(df, "g", "v", "id", alpha=0.2).collect()[0]
-    assert 0.7 <= r["coverage"] <= 0.9
-    assert r["n_cal"] == 2000 and r["n_test"] == 2000
-
-
-def test_conformal_k_caps_at_n_cal(spark):
-    # alpha < 1/(n_cal+1): k would exceed n_cal, must cap (widest band)
-    rows = [("a", float(v), i) for i, v in enumerate([1, 9, 2, 8, 3, 7])]
-    df = spark.createDataFrame(rows, ["g", "v", "id"])
-    r = conformal_intervals(df, "g", "v", "id", alpha=0.001).collect()[0]
-    py = _py_conformal(rows, alpha=0.001)["a"]
-    assert (r["pred"], r["qhat"], r["n_cal"], r["n_test"], r["coverage"]) == py
-
-
-def test_conformal_null_group_is_a_group(spark):
-    # a NULL group keeps its rows through every join on the group key
-    rows = [
-        (g, float((i * 37) % 100) + 0.25, i)
-        for g in ("a", None) for i in range(10)
-    ]
-    df = spark.createDataFrame(rows, "g string, v double, id long")
-    got = {
-        r["grp"]: (
-            r["pred"], r["qhat"], r["n_cal"], r["n_test"], r["coverage"]
-        )
-        for r in conformal_intervals(df, "g", "v", "id", alpha=0.1).collect()
-    }
-    assert set(got) == {"a", None}
-    assert got == _py_conformal(rows, alpha=0.1)
-
-
-def test_conformal_rejects_bad_alpha(spark):
-    df = spark.createDataFrame([("a", 1.0, 1)], ["g", "v", "id"])
-    with pytest.raises(ValueError, match="alpha"):
-        conformal_intervals(df, "g", "v", "id", alpha=1.5)
-
-
-# ---------------------------------------------------------------------------
-# ipf_raking
-# ---------------------------------------------------------------------------
-
-
-def _py_rake(sample_cells, pop_rows, pop_cols, n_pop, iters=3):
-    n_sample = sum(sample_cells.values())
-    w = {cell: 1.0 for cell in sample_cells}
-    rt = {r: v * n_sample / n_pop for r, v in pop_rows.items()}
-    ct = {c: v * n_sample / n_pop for c, v in pop_cols.items()}
-    for _ in range(iters):
-        for dim, targets, idx in (("r", rt, 0), ("c", ct, 1)):
-            margins = {}
-            for cell, n in sample_cells.items():
-                margins[cell[idx]] = margins.get(cell[idx], 0.0) + n * w[cell]
-            for cell in w:
-                m = margins[cell[idx]]
-                if m > 0:
-                    w[cell] *= targets[cell[idx]] / m
-    return {cell: round(v, 6) for cell, v in w.items()}
-
-
-def test_ipf_raking_matches_python_replay_and_margins(spark):
-    pop = [("r%d" % (i % 3), "c%d" % (i % 4)) for i in range(600)]
-    # biased sample: drop most of r0
-    samp = [rc for i, rc in enumerate(pop) if i % 5 != 0 or rc[0] != "r0"]
-    samp = samp[::2]
-    pop_df = spark.createDataFrame(pop, ["r", "c"])
-    samp_df = spark.createDataFrame(samp, ["r", "c"])
-    out = {
-        (x["row_val"], x["col_val"]): (x["n"], x["weight"])
-        for x in ipf_raking(samp_df, pop_df, "r", "c").collect()
-    }
-    from collections import Counter
-
-    cells = Counter(samp)
-    pr, pc = Counter(r for r, _ in pop), Counter(c for _, c in pop)
-    expect = _py_rake(
-        {k: float(v) for k, v in cells.items()}, pr, pc, len(pop)
-    )
-    assert set(out) == set(expect)
-    for cell, (n, wgt) in out.items():
-        assert n == cells[cell]
-        assert wgt == pytest.approx(expect[cell], abs=2e-6)
-    # raked row margins match the scaled population row margins
-    n_samp = len(samp)
-    for r in pr:
-        raked = sum(
-            cells[cell] * out[cell][1] for cell in cells if cell[0] == r
-        )
-        assert raked == pytest.approx(pr[r] * n_samp / len(pop), rel=1e-3)
-
-
-def test_ipf_raking_rejects_bad_iterations(spark):
-    df = spark.createDataFrame([("a", "b")], ["r", "c"])
-    with pytest.raises(ValueError, match="iterations"):
-        ipf_raking(df, df, "r", "c", iterations=0)
-
-
-# ---------------------------------------------------------------------------
-# simpsons_slopes
-# ---------------------------------------------------------------------------
-
-
-def test_simpsons_flip_detected(spark):
-    # classic construction: within each stratum y DECREASES with x,
-    # but strata with larger x sit higher -> pooled slope positive
-    rows = []
-    for g, (x0, y0) in {"a": (0.0, 0.0), "b": (10.0, 30.0)}.items():
-        for i in range(10):
-            rows.append((g, x0 + i, y0 - i))
-    df = spark.createDataFrame(rows, ["g", "x", "y"])
-    out = {r["g"]: r for r in simpsons_slopes(df, "g", "x", "y").collect()}
-    assert out["a"]["slope"] == -1.0 and out["b"]["slope"] == -1.0
-    assert out["a"]["pooled_slope"] > 0
-    assert out["a"]["flipped"] is True and out["b"]["flipped"] is True
-
-
-def test_simpsons_zero_variance_stratum_is_null(spark):
-    rows = [("a", 1.0, float(i)) for i in range(5)] + [
-        ("b", float(i), float(2 * i)) for i in range(5)
-    ]
-    df = spark.createDataFrame(rows, ["g", "x", "y"])
-    out = {r["g"]: r for r in simpsons_slopes(df, "g", "x", "y").collect()}
-    assert out["a"]["slope"] is None and out["a"]["flipped"] is None
-    assert out["b"]["slope"] == 2.0

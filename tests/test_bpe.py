@@ -137,80 +137,3 @@ class TestBpeTokenCounts:
         docs = spark.createDataFrame([(1, "abc de")], "doc_id long, text string")
         row = bpe_token_counts(docs, []).collect()[0]
         assert row["n_words"] == 2 and row["n_bpe_tokens"] == 5
-
-
-def _batched_ref_learn_bpe(texts, n_merges, batch=2, min_count=2):
-    """The proposed batched trainer: recompute pair counts once per
-    batch, apply the snapshot's top-``batch`` non-stale merges."""
-    import collections
-
-    from gbif_filter_python_spark.operators.bpe import ref_words
-
-    counts = collections.Counter(
-        w for t in texts for w in ref_words(t)
-    )
-    segs = {w: list(w) for w in counts}
-    merges = []
-
-    def apply(a, b):
-        for w, syms in segs.items():
-            out, prev = [], None
-            for x in syms:
-                if prev == a and x == b:
-                    out.append(a + b)
-                    prev = None
-                else:
-                    if prev is not None:
-                        out.append(prev)
-                    prev = x
-            if prev is not None:
-                out.append(prev)
-            segs[w] = out
-
-    while len(merges) < n_merges:
-        pair_counts = collections.Counter()
-        for w, syms in segs.items():
-            for i in range(len(syms) - 1):
-                pair_counts[(syms[i], syms[i + 1])] += counts[w]
-        if not pair_counts:
-            break
-        ranked = sorted(
-            pair_counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        took = 0
-        for (a, b), n in ranked:
-            if took >= batch or len(merges) >= n_merges:
-                break
-            if n < min_count:
-                return merges
-            merges.append((a, b, n))
-            apply(a, b)
-            took += 1
-        if took == 0:
-            break
-    return merges
-
-
-def test_bpe_batched_merges_diverge_from_sequential():
-    """VERDICT r14 item 3 counterexample. Corpus: 'x a b y' ×10 and
-    'c d' ×9. Snapshot counts: (a,b)=10, (x,a)=10, (b,y)=10, (c,d)=9;
-    tie-break picks (a,b) first. Sequential merge 2 is then (ab,y)=10
-    — a pair that did NOT exist in the snapshot. A batch of 2 from
-    the snapshot instead applies (b,y) (stale: zero occurrences left
-    after (a,b) consumed every b). Identical-output batching is
-    therefore impossible without per-merge count recomputation, which
-    IS the sequential algorithm — the one-aggregation-job-per-merge
-    floor stands."""
-    texts = ["x a b y"] * 10 + ["c d"] * 9
-    # ref_words normalizes per WORD; craft words whose characters are
-    # the symbols: use 'xaby' and 'cd' as single words instead
-    texts = ["xaby"] * 10 + ["cd"] * 9
-    seq = _ref_learn(texts, n_merges=2)
-    bat = _batched_ref_learn_bpe(texts, n_merges=2, batch=2)
-    assert seq[0] == ("a", "b", 10)
-    assert seq[1] == ("ab", "y", 10)  # born from merge 1
-    assert bat[0] == ("a", "b", 10)
-    assert bat[1] != seq[1], (seq, bat)
-    # the batch's second merge was stale at apply time: the snapshot
-    # said 10, but after merge 1 its true count is 0
-    assert bat[1][0] == "b" and bat[1][1] == "y"

@@ -25,8 +25,6 @@ from gbif_filter_python_spark.operators.classify import (
     nb_score,
     nb_train,
 )
-from gbif_filter_python_spark.plans.inspect import final_plan, node_count
-from tests.conftest import session_conf
 
 B = 64  # hash buckets used throughout
 
@@ -685,25 +683,3 @@ class TestDegenerateLabels:
         assert len(out) == 4
         assert all(r["lift"] is None and r["cum_capture"] is None for r in out)
         assert all(r["response_rate"] == 0.0 for r in out)
-
-
-def test_lm_train_bigram_one_corpus_scan_per_branch(spark, sf001_dir):
-    """r15: the totals/context re-aggregation branches relied on
-    runtime exchange reuse that does NOT fire across broadcast-stage
-    boundaries (the corpus was tokenized twice per branch). Both
-    totals now ride bounded-table windows over the count tables, so
-    one corpus scan per branch holds by plan CONSTRUCTION — pinned on
-    the executed plan, no ReusedExchange needed."""
-    from gbif_filter_python_spark.operators.classify import (
-        lm_train_bigram,
-    )
-
-    with session_conf(spark, 8, True):
-        docs = spark.read.parquet(f"{sf001_dir}/documents.parquet")
-        unigram, bigram = lm_train_bigram(docs, num_buckets=16)
-        assert len(unigram.collect()) == 16
-        final_u = final_plan(unigram)
-        assert node_count(final_u, "FileScan parquet") == 1, final_u
-        assert len(bigram.collect()) > 0
-        final_b = final_plan(bigram)
-        assert node_count(final_b, "FileScan parquet") == 1, final_b

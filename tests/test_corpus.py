@@ -15,25 +15,13 @@ from pyspark.sql import functions as F
 from gbif_filter_python_spark.functions.text import pii_count, scrub_pii
 from gbif_filter_python_spark.functions.vectors import quantize_int8
 from gbif_filter_python_spark.operators.corpus import (
-    budget_waterfill,
-    burstiness,
     contamination_report,
     deterministic_split,
-    domain_kl,
-    domain_overlap_matrix,
-    entropy_rate,
-    filter_funnel,
-    kfold_balance,
-    kn_bigram_lm,
-    neyman_allocation,
     pack_sequences,
-    packing_efficiency,
-    seqlen_histogram,
-    shard_balance,
     tfidf_top_terms,
     word_ngrams,
 )
-from gbif_filter_python_spark.plans.inspect import explain_str, node_count
+from gbif_filter_python_spark.plans.inspect import node_count
 from tests.conftest import session_conf
 
 
@@ -2308,894 +2296,9 @@ class TestTemperatureMixture:
             temperature_mixture(df, "lang", alpha=-0.1)
 
 
-def _docs(spark, texts):
-    return spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
-    )
-
-
-# ---------------------------------------------------------------------------
-# seqlen_histogram
-# ---------------------------------------------------------------------------
-
-
-def test_seqlen_histogram_buckets_powers_of_two_exactly(spark):
-    # 8 tokens MUST land in bucket 3 (2^3..15) — floor(log2(8)) in
-    # floats gives 2.999..., the exact hazard the bit-length bucket
-    # avoids; empty text lands in bucket -1
-    texts = ["", "w", "a b c", "t " * 8, "x " * 15, "y " * 16]
-    rows = {
-        r["bucket"]: r for r in seqlen_histogram(_docs(spark, texts)).collect()
-    }
-    assert set(rows) == {-1, 0, 1, 3, 4}
-    assert (rows[-1]["lo_tokens"], rows[-1]["hi_tokens"]) == (0, 0)
-    assert rows[3]["n_docs"] == 2  # 8 and 15 tokens share bucket 3
-    assert (rows[3]["lo_tokens"], rows[3]["hi_tokens"]) == (8, 15)
-    assert rows[4]["n_docs"] == 1  # 16 tokens promotes to bucket 4
-    assert rows[4]["sum_tokens"] == 16
-    assert rows[0]["pct_docs"] == round(1 / 6, 6)
-    # cumulative share ends at 1
-    assert max(r["cum_pct_docs"] for r in rows.values()) == 1.0
-
-
-# ---------------------------------------------------------------------------
-# packing_efficiency
-# ---------------------------------------------------------------------------
-
-
-def test_packing_efficiency_handcrafted_stream(spark):
-    # token counts 5,3,4,10 -> stream offsets 0,5,8,12, total 22
-    texts = ["w " * 5, "w " * 3, "w " * 4, "w " * 10]
-    row = {
-        r["capacity"]: r
-        for r in packing_efficiency(
-            _docs(spark, texts), capacities=(8,)
-        ).collect()
-    }[8]
-    assert row["n_bins"] == 3  # ceil(22/8)
-    assert row["fill_ratio"] == round(22 / 24, 6)
-    # only doc 3 ([12,22)) straddles a boundary (token 16)
-    assert row["boundary_crossings"] == 1
-    assert row["crossing_docs"] == 1
-    assert row["oversize_docs"] == 1  # 10 > 8
-
-
-def test_packing_efficiency_matches_python_cumsum(spark):
-    # enough rows for several range partitions — the distributed
-    # prefix sum must equal the single-stream Python replay
-    toks = [(i, 1 + (i * 7) % 13) for i in range(200)]
-    texts = [(i, "w " * n) for i, n in toks]
-    df = spark.createDataFrame(texts, ["doc_id", "text"]).repartition(8)
-    got = {
-        r["capacity"]: r
-        for r in packing_efficiency(df, capacities=(16, 64)).collect()
-    }
-    for cap in (16, 64):
-        start, crossings, xdocs, oversize = 0, 0, 0, 0
-        for _, n in toks:
-            last = (start + n - 1) // cap
-            first = start // cap
-            crossings += last - first
-            xdocs += 1 if last > first else 0
-            oversize += 1 if n > cap else 0
-            start += n
-        total = start
-        assert got[cap]["n_bins"] == math.ceil(total / cap)
-        assert got[cap]["boundary_crossings"] == crossings
-        assert got[cap]["crossing_docs"] == xdocs
-        assert got[cap]["oversize_docs"] == oversize
-        assert got[cap]["fill_ratio"] == round(
-            total / (math.ceil(total / cap) * cap), 6
-        )
-
-
-# ---------------------------------------------------------------------------
-# filter_funnel
-# ---------------------------------------------------------------------------
-
-
-def test_filter_funnel_each_stage_drops_its_doc(spark):
-    passing = (
-        "the quick brown fox jumps over lazy dogs and then runs "
-        "through green fields of corn looking for more interesting "
-        "things to chase before evening falls over quiet valley"
-    )  # 30 words, mean len ~4.5, no symbols, alpha, stopwords
-    texts = [
-        "",  # fails nonempty
-        "only five words right here",  # fails word_count (< 25)
-        "a b c d e " * 6,  # 30 words, mean len 1 -> fails mean_word_len
-        passing.replace("fox", "# # fox # #"),  # symbol ratio > 0.1
-        # digit words (long enough to keep mean_word_len in range)
-        # for most words -> alpha ratio < 0.8 (stopwords kept)
-        "the and of " + "12345 67890 54321 98765 " * 7,
-        # alpha words but NO stopword markers -> fails last stage
-        "zebra quokka wombat numbat dingo koala bilby " * 5,
-        passing,
-    ]
-    rows = filter_funnel(_docs(spark, texts), min_words=25).collect()
-    assert [r["stage"] for r in rows] == [
-        "nonempty",
-        "word_count",
-        "mean_word_len",
-        "symbol_ratio",
-        "alpha_word_ratio",
-        "stopword_hits",
-    ]
-    assert [r["n_pass"] for r in rows] == [6, 5, 4, 3, 2, 1]
-    assert rows[0]["pct_of_input"] == round(6 / 7, 6)
-    assert rows[5]["pct_of_prev"] == 0.5
-    assert rows[5]["pct_of_input"] == round(1 / 7, 6)
-
-
-# ---------------------------------------------------------------------------
-# shard_balance
-# ---------------------------------------------------------------------------
-
-
-def test_shard_balance_matches_md5_replay(spark):
-    toks = [(i, 1 + i % 9) for i in range(60)]
-    df = spark.createDataFrame(
-        [(i, "w " * n) for i, n in toks], ["doc_id", "text"]
-    )
-    row = {
-        r["n_shards"]: r for r in shard_balance(df, shard_counts=(4,)).collect()
-    }[4]
-    loads: dict[int, int] = {}
-    for i, n in toks:
-        s = int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) % 4
-        loads[s] = loads.get(s, 0) + n
-    total = sum(loads.values())
-    mean = total / 4
-    var = sum(v * v for v in loads.values()) / 4 - mean * mean
-    assert row["n_shards_used"] == len(loads)
-    assert row["total_tokens"] == total
-    assert row["max_shard_tokens"] == max(loads.values())
-    assert row["balance_ratio"] == round(max(loads.values()) / mean, 6)
-    assert row["cv_tokens"] == round(math.sqrt(var) / mean, 6)
-
-
-# ---------------------------------------------------------------------------
-# tokenizer_fertility / ngram_coverage
-# ---------------------------------------------------------------------------
-
-
-def test_tokenizer_fertility_handcrafted(spark):
-    from gbif_filter_python_spark.operators.corpus import tokenizer_fertility
-
-    df = spark.createDataFrame(
-        [
-            (0, "en", "hello, world!"),  # ws 2; sw: hello , world ! = 4
-            (1, "en", "a b"),  # ws 2; sw 2
-            (2, "de", ""),  # ws 0; sw 0
-        ],
-        ["doc_id", "lang", "text"],
-    )
-    rows = {
-        r["group"]: r
-        for r in tokenizer_fertility(df, group_col="lang").collect()
-    }
-    en = rows["en"]
-    assert (en["ws_tokens"], en["subword_tokens"]) == (4, 6)
-    assert en["fertility"] == 1.5
-    # nonspace chars: "hello,world!" (12) + "ab" (2) = 14 over 6 units
-    assert en["chars_per_subword"] == round(14 / 6, 6)
-    de = rows["de"]
-    assert (de["ws_tokens"], de["subword_tokens"]) == (0, 0)
-    assert de["fertility"] is None and de["chars_per_subword"] is None
-
-
-def test_ngram_coverage_matches_python_replay(spark):
-    import hashlib
-    import re
-
-    from gbif_filter_python_spark.operators.corpus import ngram_coverage
-
-    texts = {
-        i: f"alpha beta gamma doc{i} shares alpha beta with others"
-        for i in range(40)
-    }
-    texts[40] = "zz yy xx"  # words likely unique to wherever it lands
-    df = spark.createDataFrame(
-        [(i, t) for i, t in texts.items()], ["doc_id", "text"]
-    )
-    got = {r["n"]: r for r in ngram_coverage(df, ns=(1, 2)).collect()}
-
-    def bucket(i):
-        return int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) % 100
-
-    def words(t):
-        return [w for w in re.sub(r"[^a-z0-9]+", " ", t.lower()).split() if w]
-
-    grams = {1: {"tr": set(), "te": set()}, 2: {"tr": set(), "te": set()}}
-    for i, t in texts.items():
-        side = "te" if bucket(i) < 10 else "tr"
-        ws = words(t)
-        grams[1][side].update(ws)
-        grams[2][side].update(
-            f"{a} {b}" for a, b in zip(ws, ws[1:])
-        )
-    for n in (1, 2):
-        tr, te = grams[n]["tr"], grams[n]["te"]
-        assert got[n]["train_ngrams"] == len(tr)
-        assert got[n]["test_ngrams"] == len(te)
-        assert got[n]["covered"] == len(tr & te)
-        assert got[n]["coverage"] == round(len(tr & te) / len(te), 6)
-
-
-def test_ngram_coverage_trigrams_and_short_docs(spark):
-    from gbif_filter_python_spark.operators.corpus import ngram_coverage
-
-    # 2-word docs contribute no trigrams; empty docs contribute nothing
-    df = spark.createDataFrame(
-        [(i, "one two") for i in range(30)] + [(30, ""), (31, "x y z")],
-        ["doc_id", "text"],
-    )
-    got = {r["n"]: r for r in ngram_coverage(df, ns=(3,)).collect()}
-    # only doc 31 has a trigram ("x y z"); whichever side it fell on
-    assert got[3]["train_ngrams"] + got[3]["test_ngrams"] == 1
-    assert got[3]["covered"] == 0
-
-
-# ---------------------------------------------------------------------------
-# plan-shape assertions backing the scale docstrings
-# ---------------------------------------------------------------------------
-
-
-def test_r10_single_scan_ops_have_join_free_plans(spark):
-    """filter_funnel / seqlen_histogram / ngram_coverage claim
-    'one scan, hash aggregates, no join' — assert the physical plan
-    agrees (the _bigram_pairs lesson: the claim must be checked, a
-    post-explode self-join silently becomes a corpus-sized
-    broadcast)."""
-    from gbif_filter_python_spark.operators.corpus import (
-        filter_funnel,
-        ngram_coverage,
-        seqlen_histogram,
-    )
-    from gbif_filter_python_spark.plans.inspect import explain_str
-
-    df = _docs(spark, ["the quick brown fox jumps over it " * 5] * 20)
-    for op in (
-        lambda d: filter_funnel(d, min_words=5),
-        seqlen_histogram,
-        lambda d: ngram_coverage(d, ns=(1, 2, 3)),
-    ):
-        plan = explain_str(op(df), "simple")
-        assert "Join" not in plan, plan
-
-
-def test_packing_efficiency_only_join_is_offset_broadcast(spark):
-    """packing_efficiency's single join must be the tiny
-    per-partition offset broadcast (assign_global_index shape) — a
-    SortMergeJoin here would mean the data-sized side is being
-    shuffled for the offsets."""
-    from gbif_filter_python_spark.operators.corpus import packing_efficiency
-    from gbif_filter_python_spark.plans.inspect import explain_str
-
-    df = _docs(spark, ["w " * 9] * 50)
-    plan = explain_str(packing_efficiency(df, capacities=(8,)), "simple")
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 # ---------------------------------------------------------------------------
 # cross-operator consistency (catalog coherence on real test data)
 # ---------------------------------------------------------------------------
 
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_seqlen_histogram_consistent_with_token_stats(spark):
-    """The histogram's totals must equal the per-doc token_stats view
-    of the same table — two independently-written operators, one
-    truth."""
-    from gbif_filter_python_spark.operators.corpus import seqlen_histogram
-    from gbif_filter_python_spark.sources.io import read_table
-
-    docs = read_table(spark, SF_DIR, "documents")
-    hist = seqlen_histogram(docs).collect()
-    n_docs = docs.count()
-    from pyspark.sql import functions as F
-
-    from gbif_filter_python_spark.functions.text import token_count
-
-    tot_tokens = docs.agg(
-        F.sum(token_count(F.col("text")).cast("long"))
-    ).collect()[0][0]
-    assert sum(r["n_docs"] for r in hist) == n_docs
-    assert sum(r["sum_tokens"] for r in hist) == tot_tokens
-    # every doc is in exactly one bucket and bounds hold
-    for r in hist:
-        if r["bucket"] >= 0:
-            assert r["lo_tokens"] == 2 ** r["bucket"]
-            assert r["hi_tokens"] == 2 ** (r["bucket"] + 1) - 1
-
-
-def test_filter_funnel_final_stage_equals_gopher_passes(spark):
-    """funnel's last-stage survivors == gopher_signals combined
-    passes count at the same thresholds (the funnel is the staged
-    decomposition of that flag)."""
-    from pyspark.sql import functions as F
-
-    from gbif_filter_python_spark.functions.text import gopher_signals
-    from gbif_filter_python_spark.operators.corpus import filter_funnel
-    from gbif_filter_python_spark.sources.io import read_table
-
-    docs = read_table(spark, SF_DIR, "documents")
-    rows = filter_funnel(docs, min_words=25).collect()
-    last = [r for r in rows if r["stage"] == "stopword_hits"][0]
-    sig = gopher_signals(F.col("text"), min_words=25)
-    n_pass = docs.select(sig["passes"].alias("p")).filter("p").count()
-    assert last["n_pass"] == n_pass
-    # survivors are monotone non-increasing through the stages
-    seq = [r["n_pass"] for r in sorted(rows, key=lambda r: r["stage_idx"])]
-    assert all(a >= b for a, b in zip(seq, seq[1:]))
-
-
-def test_packing_efficiency_consistent_with_pack_sequences(spark):
-    """packing_efficiency's bin count equals the number of distinct
-    packs pack_sequences(shards=None) assigns at the same budget —
-    both walk the identical doc_id-ordered token stream."""
-    from pyspark.sql import functions as F
-
-    from gbif_filter_python_spark.operators.corpus import (
-        pack_sequences,
-        packing_efficiency,
-    )
-    from gbif_filter_python_spark.sources.io import read_table
-
-    docs = read_table(spark, SF_DIR, "documents")
-    cap = 256
-    eff = {
-        r["capacity"]: r
-        for r in packing_efficiency(docs, capacities=(cap,)).collect()
-    }[cap]
-    packs = (
-        pack_sequences(docs, budget=cap, shards=None)
-        .agg(F.countDistinct("pack_id").alias("n"))
-        .collect()[0]["n"]
-    )
-    # pack_id is assigned from each doc's START offset, so every bin
-    # that any doc starts in is a pack; bins entirely covered by the
-    # interior of one long doc have no starter. n_bins >= packs and
-    # the deficit is bounded by the boundary crossings.
-    assert packs <= eff["n_bins"] <= packs + eff["boundary_crossings"]
-
-
-def test_seqlen_histogram_null_text_lands_in_bucket_minus_one(spark):
-    from gbif_filter_python_spark.operators.corpus import seqlen_histogram
-
-    df = spark.createDataFrame(
-        [(0, None), (1, "a b c"), (2, "")], ["doc_id", "text"]
-    )
-    rows = {r["bucket"]: r for r in seqlen_histogram(df).collect()}
-    # NULL text must fold into bucket -1 (a NULL bucket would sort
-    # NULLS FIRST in Spark's cum window but NULLS LAST in DuckDB's)
-    assert rows[-1]["n_docs"] == 2
-    assert rows[-1]["sum_tokens"] == 0
-    assert rows[1]["cum_pct_docs"] == 1.0
-
-
-# ---------------------------------------------------------------------------
-# budget_waterfill
-# ---------------------------------------------------------------------------
-
-
-def _wf(spark, rows):
-    return spark.createDataFrame(rows, ["source", "n_chars"])
-
-
-def test_budget_waterfill_uncapped_regime_exact_lambda(spark):
-    # equal saturation ratios → λ = B/W uncapped everywhere;
-    # per-domain rows also prove the token sum aggregates first
-    rows = [("A", 60), ("A", 40), ("B", 100), ("C", 800)]
-    out = {
-        r["domain"]: r
-        for r in budget_waterfill(
-            _wf(spark, rows),
-            budget_epochs=1.5,
-            max_epochs=2.0,
-            temperature=1.0,
-        ).collect()
-    }
-    assert out["A"]["tokens"] == 100
-    for d, alloc in [("A", 150.0), ("B", 150.0), ("C", 1200.0)]:
-        assert out[d]["alloc_tokens"] == alloc
-        assert out[d]["epochs"] == 1.5
-
-
-def test_budget_waterfill_mixed_regime_caps_then_fills(spark):
-    # temperature 0 → equal weights; caps 200,200,1600; B = 1200:
-    # A and B saturate at λ=200, C takes the remaining 800
-    rows = [("A", 100), ("B", 100), ("C", 800)]
-    out = {
-        r["domain"]: r
-        for r in budget_waterfill(
-            _wf(spark, rows),
-            budget_epochs=1.2,
-            max_epochs=2.0,
-            temperature=0.0,
-        ).collect()
-    }
-    assert out["A"]["alloc_tokens"] == 200.0
-    assert out["B"]["alloc_tokens"] == 200.0
-    assert out["C"]["alloc_tokens"] == 800.0
-    assert out["A"]["epochs"] == 2.0
-    assert out["C"]["epochs"] == 1.0
-    total = sum(r["alloc_tokens"] for r in out.values())
-    assert total == pytest.approx(1200.0, abs=1e-6)
-
-
-def test_budget_waterfill_budget_exceeds_caps_all_capped(spark):
-    rows = [("A", 100), ("B", 300)]
-    out = {
-        r["domain"]: r
-        for r in budget_waterfill(
-            _wf(spark, rows),
-            budget_epochs=5.0,
-            max_epochs=2.0,
-            temperature=1.0,
-        ).collect()
-    }
-    for d in ("A", "B"):
-        assert out[d]["epochs"] == 2.0
-        assert out[d]["alloc_tokens"] == out[d]["cap_tokens"]
-
-
-def test_budget_waterfill_invariants_on_real_shape(spark):
-    rows = [(f"s{i}", 100 + 37 * i) for i in range(8) for _ in range(3)]
-    res = budget_waterfill(
-        _wf(spark, rows), budget_epochs=3.0, max_epochs=4.0
-    ).collect()
-    total_t = sum(r["tokens"] for r in res)
-    total_alloc = sum(r["alloc_tokens"] for r in res)
-    assert total_alloc == pytest.approx(3.0 * total_t, rel=1e-6)
-    for r in res:
-        assert 0.0 < r["epochs"] <= 4.0 + 1e-9
-        assert r["alloc_tokens"] <= r["cap_tokens"] + 1e-9
-    assert sum(r["weight"] for r in res) == pytest.approx(1.0, abs=1e-5)
-
-
-def test_budget_waterfill_rejects_bad_params(spark):
-    df = _wf(spark, [("A", 10)])
-    with pytest.raises(ValueError):
-        budget_waterfill(df, budget_epochs=0.0)
-    with pytest.raises(ValueError):
-        budget_waterfill(df, max_epochs=-1.0)
-
-
-# ---------------------------------------------------------------------------
-# kn_bigram_lm
-# ---------------------------------------------------------------------------
-
-
-def test_kn_bigram_lm_hand_computed(spark):
-    docs = spark.createDataFrame(
-        [(0, "a b a b c"), (1, "b c")], ["doc_id", "text"]
-    )
-    rows = kn_bigram_lm(docs, top_n=10).collect()
-    by_pair = {(r["w1"], r["w2"]): r for r in rows}
-    # counts: (a,b)=2, (b,c)=2, (b,a)=1; ranks tie-broken w1 asc
-    assert [r["rank"] for r in rows] == [1, 2, 3]
-    assert (rows[0]["w1"], rows[0]["w2"]) == ("a", "b")
-    assert (rows[1]["w1"], rows[1]["w2"]) == ("b", "c")
-    # c1(a)=2 ft(a)=1; c1(b)=3 ft(b)=2; pcont = prec_types/3
-    assert by_pair[("a", "b")]["p_kn"] == pytest.approx(
-        (2 - 0.75) / 2 + (0.75 * 1 / 2) * (1 / 3), abs=1e-6
-    )
-    assert by_pair[("b", "c")]["p_kn"] == pytest.approx(
-        (2 - 0.75) / 3 + (0.75 * 2 / 3) * (1 / 3), abs=1e-6
-    )
-    assert by_pair[("b", "a")]["p_kn"] == pytest.approx(
-        (1 - 0.75) / 3 + (0.75 * 2 / 3) * (1 / 3), abs=1e-6
-    )
-    assert by_pair[("a", "b")]["p_mle"] == 1.0
-    assert by_pair[("b", "a")]["backoff_mass"] == pytest.approx(
-        0.75 * 2 / 3, abs=1e-6
-    )
-
-
-def test_kn_bigram_lm_context_mass_sums_to_one(spark):
-    # Σ_w2∈vocab p_kn(w2|w1) = 1: observed continuations + the backoff
-    # mass spread over unseen vocab words (Chen & Goodman eq. 4.26)
-    docs = spark.createDataFrame(
-        [(0, "a b a b c"), (1, "b c a")], ["doc_id", "text"]
-    )
-    rows = kn_bigram_lm(docs, top_n=100).collect()
-    vocab_pcont = {}
-    n_types = len(rows)
-    for r in rows:
-        vocab_pcont.setdefault(r["w2"], set()).add(r["w1"])
-    pcont = {w: len(s) / n_types for w, s in vocab_pcont.items()}
-    vocab = set(pcont) | {r["w1"] for r in rows}
-    for w1 in {r["w1"] for r in rows}:
-        seen = [r for r in rows if r["w1"] == w1]
-        backoff = seen[0]["backoff_mass"]
-        mass = sum(r["p_kn"] for r in seen)
-        unseen = vocab - {r["w2"] for r in seen}
-        mass += sum(backoff * pcont.get(w, 0.0) for w in unseen)
-        assert mass == pytest.approx(1.0, abs=1e-4)
-
-
-def test_kn_bigram_lm_validates_discount_and_empty(spark):
-    docs = spark.createDataFrame([(0, "only")], ["doc_id", "text"])
-    with pytest.raises(ValueError):
-        kn_bigram_lm(docs, discount=1.5)
-    # single-word docs yield no bigrams — empty result, no error
-    assert kn_bigram_lm(docs).count() == 0
-
-
-# ---------------------------------------------------------------------------
-# burstiness
-# ---------------------------------------------------------------------------
-
-
-def test_burstiness_bursty_beats_uniform(spark):
-    # "spam" appears 8x in ONE doc of 8; "the" once in EVERY doc.
-    # mean is 1 for both; E[x2]: spam 64/8=8, the 1 -> VMR 7 vs 0.
-    texts = ["spam " * 8] + ["the x"] * 7
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
-    )
-    rows = burstiness(docs, min_docs=1, top_n=10).collect()
-    by_term = {r["term"]: r for r in rows}
-    n = 8.0
-    spam_vmr = (64 / n - (8 / n) ** 2) / (8 / n)
-    the_vmr = (7 / n - (7 / n) ** 2) / (7 / n)
-    assert by_term["spam"]["vmr"] == pytest.approx(spam_vmr, abs=1e-6)
-    assert by_term["the"]["vmr"] == pytest.approx(the_vmr, abs=1e-6)
-    assert rows[0]["term"] == "spam"  # highest VMR ranks first
-    assert by_term["spam"]["df_docs"] == 1
-    assert by_term["spam"]["total_count"] == 8
-
-
-def test_burstiness_min_docs_filters_rare_terms(spark):
-    texts = ["rare rare rare", "common a", "common b", "common c"]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
-    )
-    terms = {
-        r["term"] for r in burstiness(docs, min_docs=3, top_n=10).collect()
-    }
-    assert "rare" not in terms
-    assert "common" in terms
-
-
-# ---------------------------------------------------------------------------
-# domain_kl
-# ---------------------------------------------------------------------------
-
-
-def _kl_hand(dom_counts, corpus_counts, alpha):
-    """Naive full-vocabulary KL — the O(domains x V) form the operator
-    avoids; must agree with the closed-form decomposition exactly."""
-    vocab = list(corpus_counts)
-    V = len(vocab)
-    T = sum(corpus_counts.values())
-    Td = sum(dom_counts.values())
-    kl = 0.0
-    for w in vocab:
-        p = (dom_counts.get(w, 0) + alpha) / (Td + alpha * V)
-        q = (corpus_counts[w] + alpha) / (T + alpha * V)
-        kl += p * math.log(p / q)
-    return kl
-
-
-def test_domain_kl_matches_naive_full_vocab_sum(spark):
-    docs = spark.createDataFrame(
-        [
-            (0, "a", "x x y z"),
-            (1, "a", "x y"),
-            (2, "b", "z z z w"),
-            (3, "b", "w w"),
-        ],
-        ["doc_id", "source", "text"],
-    )
-    rows = {r["domain"]: r for r in domain_kl(docs).collect()}
-    corpus = {"x": 3, "y": 2, "z": 4, "w": 3}
-    dom_a = {"x": 3, "y": 2, "z": 1}
-    dom_b = {"z": 3, "w": 3}
-    assert rows["a"]["kl_nats"] == pytest.approx(
-        _kl_hand(dom_a, corpus, 0.5), abs=1e-6
-    )
-    assert rows["b"]["kl_nats"] == pytest.approx(
-        _kl_hand(dom_b, corpus, 0.5), abs=1e-6
-    )
-    assert rows["a"]["terms_seen"] == 3
-    assert rows["a"]["coverage"] == 0.75
-    assert rows["b"]["tokens"] == 6
-
-
-def test_domain_kl_identical_domain_near_zero(spark):
-    docs = spark.createDataFrame(
-        [(0, "a", "p q r"), (1, "b", "p q r")],
-        ["doc_id", "source", "text"],
-    )
-    rows = {r["domain"]: r for r in domain_kl(docs).collect()}
-    # both domains ARE the corpus distribution -> KL ~ 0
-    for r in rows.values():
-        assert abs(r["kl_nats"]) < 1e-4
-        assert r["coverage"] == 1.0
-
-
-def test_domain_kl_rejects_bad_alpha(spark):
-    docs = spark.createDataFrame([(0, "a", "x")], ["doc_id", "source", "text"])
-    with pytest.raises(ValueError):
-        domain_kl(docs, alpha=0.0)
-
-
-# ---------------------------------------------------------------------------
-# domain_overlap_matrix
-# ---------------------------------------------------------------------------
-
-
-def _sourced_docs(spark, rows):
-    return spark.createDataFrame(rows, ["doc_id", "text", "source"])
-
-
-def test_overlap_matrix_hand_computed(spark):
-    # srcA: trigrams {a b c, b c d} ; srcB: {b c d, c d e} -> share 1
-    rows = [
-        (1, "a b c d", "srcA"),
-        (2, "b c d e", "srcB"),
-    ]
-    out = domain_overlap_matrix(_sourced_docs(spark, rows)).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r["dom_a"], r["dom_b"]) == ("srcA", "srcB")
-    assert (r["grams_a"], r["grams_b"], r["shared_grams"]) == (2, 2, 1)
-    assert r["jaccard"] == pytest.approx(1 / 3, abs=1e-6)
-    assert r["containment"] == pytest.approx(0.5, abs=1e-6)
-
-
-def test_overlap_matrix_densifies_zero_overlap_pairs(spark):
-    rows = [
-        (1, "aa bb cc", "s1"),
-        (2, "dd ee ff", "s2"),
-        (3, "aa bb cc", "s3"),
-    ]
-    out = {
-        (r["dom_a"], r["dom_b"]): r
-        for r in domain_overlap_matrix(_sourced_docs(spark, rows)).collect()
-    }
-    # all 3 pairs present even though (s1,s2) and (s2,s3) share nothing
-    assert set(out) == {("s1", "s2"), ("s1", "s3"), ("s2", "s3")}
-    assert out[("s1", "s2")]["shared_grams"] == 0
-    assert out[("s1", "s2")]["jaccard"] == 0.0
-    assert out[("s1", "s3")]["shared_grams"] == 1
-    assert out[("s1", "s3")]["jaccard"] == 1.0
-    assert out[("s1", "s3")]["containment"] == 1.0
-
-
-def test_overlap_matrix_distinct_grams_within_domain(spark):
-    # repeated trigram inside one domain counts ONCE (distinct grams)
-    rows = [
-        (1, "x y z", "s1"),
-        (2, "x y z", "s1"),
-        (3, "x y z", "s2"),
-    ]
-    r = domain_overlap_matrix(_sourced_docs(spark, rows)).collect()[0]
-    assert (r["grams_a"], r["grams_b"], r["shared_grams"]) == (1, 1, 1)
-
-
-def test_overlap_matrix_short_and_null_docs_drop_out(spark):
-    # < n words yields no grams; NULL source rows are excluded
-    rows = [
-        (1, "one two", "s1"),  # too short for trigrams
-        (2, "p q r s", "s1"),
-        (3, "p q r", None),  # null domain ignored
-        (4, "p q r", "s2"),
-    ]
-    out = domain_overlap_matrix(_sourced_docs(spark, rows)).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r["dom_a"], r["dom_b"]) == ("s1", "s2")
-    assert (r["grams_a"], r["grams_b"], r["shared_grams"]) == (2, 1, 1)
-
-
-def test_entropy_rate_single_scan_two_reaggs(spark, sf001_dir):
-    from gbif_filter_python_spark.operators.corpus import entropy_rate
-
-    docs = spark.read.parquet(f"{sf001_dir}/documents.parquet")
-    plan = explain_str(entropy_rate(docs), "simple")
-    # the ONE corpus scan ran inside the eager localCheckpoint of the
-    # alphabet²-bounded bigram table; every consumer in the final
-    # plan reads that RDD — zero parquet re-scans
-    assert node_count(plan, "FileScan parquet") == 0, plan
-    assert "Scan ExistingRDD" in plan, plan
-
-
-def test_kfold_balance_fact_scanned_once(spark, sf001_dir):
-    from gbif_filter_python_spark.operators.corpus import kfold_balance
-
-    docs = spark.read.parquet(f"{sf001_dir}/documents.parquet")
-    plan = explain_str(kfold_balance(docs, "doc_id", "source", k=5), "simple")
-    # four consumers of the cell table, zero parquet re-scans: the
-    # one fact scan ran inside the eager localCheckpoint
-    assert node_count(plan, "FileScan parquet") == 0, plan
-    assert "Scan ExistingRDD" in plan, plan
-
-
-def test_entropy_rate_deterministic_sequence_is_zero(spark):
-    # next char fully determined by current char
-    r = entropy_rate(_docs(spark, ["ababababab"])).collect()[0]
-    assert r["n_pairs"] == 9
-    assert r["entropy_rate_bits"] == pytest.approx(0.0, abs=1e-6)
-
-
-def test_entropy_rate_hand_computed(spark):
-    # "aabb": pairs aa, ab, bb (each once). H(pair)=log2(3);
-    # prefixes a:2, b:1 -> H(prefix)=log2(3)-(2/3)
-    r = entropy_rate(_docs(spark, ["aabb"])).collect()[0]
-    h_big = math.log2(3)
-    h_pre = math.log2(3) - 2 / 3.0
-    assert r["n_distinct_bigrams"] == 3
-    assert r["h_bigram_bits"] == pytest.approx(h_big, abs=1e-6)
-    assert r["h_prefix_bits"] == pytest.approx(h_pre, abs=1e-6)
-    assert r["entropy_rate_bits"] == pytest.approx(
-        h_big - h_pre, abs=1e-6
-    )
-
-
-def test_entropy_rate_short_docs_contribute_nothing(spark):
-    r = entropy_rate(_docs(spark, ["x", "", "ab"])).collect()[0]
-    assert r["n_pairs"] == 1  # only "ab"
-
-
-# ---------------------------------------------------------------------------
-# kfold_balance
-# ---------------------------------------------------------------------------
-
-
-def test_kfold_counts_and_expectations(spark):
-    df = spark.createDataFrame(
-        [(i, "s%d" % (i % 2)) for i in range(200)], ["doc_id", "src"]
-    )
-    out = kfold_balance(df, "doc_id", "src", k=4).collect()
-    total = sum(r["n_obs"] for r in out)
-    assert total == 200
-    # densified: every (fold-with-data, stratum-with-data) cell present
-    folds = {r["fold"] for r in out}
-    strata = {r["stratum"] for r in out}
-    assert len(out) == len(folds) * len(strata)
-    for r in out:
-        if r["n_expected"] and r["n_expected"] > 0:
-            assert r["ratio"] == pytest.approx(
-                r["n_obs"] / r["n_expected"], abs=1e-4
-            )
-
-
-def test_kfold_chi2_cell_formula(spark):
-    df = spark.createDataFrame(
-        [(i, "a") for i in range(50)], ["doc_id", "src"]
-    )
-    out = kfold_balance(df, "doc_id", "src", k=3).collect()
-    for r in out:
-        e = r["n_expected"]
-        assert r["chi2_cell"] == pytest.approx(
-            (r["n_obs"] - e) ** 2 / e, abs=1e-4
-        )
-
-
-def test_kfold_rejects_bad_k(spark):
-    df = spark.createDataFrame([(1, "a")], ["doc_id", "src"])
-    with pytest.raises(ValueError):
-        kfold_balance(df, "doc_id", "src", k=1)
-
-
-def test_repetition_signals_is_map_only(spark):
-    """r14 optimization contract: the top-bigram count rides a per-row
-    sorted-run fold, so the operator plans with ZERO exchanges (the
-    former explode + double hash-agg shuffled every distinct
-    (doc, bigram) pair twice)."""
-    from gbif_filter_python_spark.operators.corpus import (
-        repetition_signals,
-    )
-
-    with session_conf(spark, 8, True):
-        docs = spark.createDataFrame(
-            [(1, "a b a b a b"), (2, "x y z"), (3, "solo")],
-            "doc_id long, text string",
-        )
-        out = repetition_signals(docs)
-        plan = explain_str(out)
-        assert "Exchange" not in plan, plan
-        rows = {r.doc_id: r for r in out.collect()}
-        assert 3 not in rows  # < 2 words stays excluded
-        assert rows[1].top_bigram_frac == pytest.approx(3 / 5, abs=1e-6)
-        assert rows[2].top_bigram_frac == pytest.approx(1 / 2, abs=1e-6)
-
-
-def _values_frame(spark):
-    """Deterministic grouped frame with ties, NULL values, NULL keys,
-    an all-NULL group and a single-value group — every percentile
-    edge the retired forms handled."""
-    rows = (
-        [("a", float(v)) for v in range(1, 101)]
-        + [("b", float((v * v) % 37)) for v in range(1, 60)]
-        + [("b", 17.0), ("b", 17.0)]  # ties
-        + [("a", None), (None, 5.0), ("allnull", None), ("one", 42.0)]
-    )
-    return spark.createDataFrame(rows, "g string, v double")
-
-
-def _assert_no_percentile(df) -> str:
-    plan = explain_str(df)
-    assert "percentile" not in plan.lower(), plan
-    assert "rangepartitioning" in plan, plan
-    return plan
-
-
-# ---------------------------------------------------------------------------
-# trim_by_percentile / event_latency
-# ---------------------------------------------------------------------------
-
-
-def test_trim_by_percentile_matches_retired_form(spark):
-    from gbif_filter_python_spark.operators.corpus import (
-        trim_by_percentile,
-    )
-
-    with session_conf(spark, 8, True):
-        df = _values_frame(spark).filter(F.col("v").isNotNull())
-        out = trim_by_percentile(df, "v", 0.05, 0.95)
-        _assert_no_percentile(out)
-        got = sorted((tuple(r) for r in out.collect()), key=repr)
-        bounds = df.agg(
-            F.round(F.expr("percentile(v, 0.05)"), 6).alias("_lo"),
-            F.round(F.expr("percentile(v, 0.95)"), 6).alias("_hi"),
-        )
-        old = (
-            df.crossJoin(bounds)
-            .filter(F.col("v").between(F.col("_lo"), F.col("_hi")))
-            .drop("_lo", "_hi")
-        )
-        want = sorted((tuple(r) for r in old.collect()), key=repr)
-        assert got == want
-
-
-# ---------------------------------------------------------------------------
-# neyman_allocation
-# ---------------------------------------------------------------------------
-
-
-def test_neyman_allocations_sum_to_budget_and_match_replay(spark):
-    import statistics
-
-    rows = []
-    data = {
-        "s1": [float(x) for x in (1, 2, 3, 4, 100)],
-        "s2": [float(x) for x in (5, 5, 5, 5)],  # zero variance
-        "s3": [float(x) for x in (10, 20, 30)],
-    }
-    for s, vs in data.items():
-        rows += [(s, v) for v in vs]
-    df = spark.createDataFrame(rows, ["s", "v"])
-    out = {r["stratum"]: r for r in neyman_allocation(df, "s", "v", 97).collect()}
-    w = {
-        s: len(vs) * (statistics.stdev(vs) if len(vs) > 1 else 0.0)
-        for s, vs in data.items()
-    }
-    tw = sum(w.values())
-    reals = {s: 97 * x / tw for s, x in w.items()}
-    floors = {s: math.floor(r) for s, r in reals.items()}
-    leftover = 97 - sum(floors.values())
-    order = sorted(
-        reals, key=lambda s: (-(reals[s] - floors[s]), s)
-    )
-    expect = {
-        s: floors[s] + (1 if w[s] > 0 and order.index(s) < leftover else 0)
-        for s in reals
-    }
-    assert {s: out[s]["alloc"] for s in data} == expect
-    assert sum(r["alloc"] for r in out.values()) == 97
-    assert out["s2"]["alloc"] == 0  # zero-variance stratum needs none
-
-
-def test_neyman_all_zero_weight_allocates_nothing(spark):
-    rows = [("a", 1.0), ("b", 2.0)]  # both single-row -> stddev 0
-    out = neyman_allocation(
-        spark.createDataFrame(rows, ["s", "v"]), "s", "v", 10
-    ).collect()
-    assert all(r["alloc"] == 0 for r in out)

@@ -4,14 +4,10 @@ taxonomy fuzzy-candidate helper."""
 
 from __future__ import annotations
 
-import math
-from collections import Counter
-
 import pytest
 from pyspark.sql import functions as F
 
 from gbif_filter_python_spark.operators.fuzzy import (
-    cluster_agreement,
     fuzzy_join,
     fuzzy_resolve_candidates,
 )
@@ -372,132 +368,3 @@ class TestPairEval:
         assert r["n_pred"] == 0
         assert r["precision"] is None and r["f1"] is None
         assert r["recall"] == 0.0
-
-
-# ---------------------------------------------------------------------------
-# blocking_quality
-# ---------------------------------------------------------------------------
-
-
-def test_blocking_quality_hand_counts(spark):
-    from gbif_filter_python_spark.operators.fuzzy import blocking_quality
-
-    cand = spark.createDataFrame(
-        # one reversed duplicate + one self-pair: canonicalization
-        # must collapse them to 3 distinct pairs
-        [(1, 2), (2, 1), (3, 4), (5, 6), (7, 7)], ["id_a", "id_b"]
-    )
-    truth = spark.createDataFrame([(1, 2), (3, 4), (8, 9)], ["id_a", "id_b"])
-    r = blocking_quality(cand, truth, n_records=10).collect()[0]
-    assert r["n_candidates"] == 3 and r["n_truth"] == 3
-    assert r["true_in_candidates"] == 2
-    assert r["pairs_completeness"] == round(2 / 3, 6)
-    assert r["reduction_ratio"] == round(1 - 3 / 45, 6)
-    with pytest.raises(ValueError, match="n_records"):
-        blocking_quality(cand, truth, n_records=1)
-
-
-# ---------------------------------------------------------------------------
-# bcubed_eval
-# ---------------------------------------------------------------------------
-
-
-def test_bcubed_hand_example(spark):
-    from gbif_filter_python_spark.operators.fuzzy import bcubed_eval
-
-    # truth: {1,2,3} and {4,5}; pred: {1,2} {3,4} {5}
-    rows = [
-        (1, "p1", "t1"), (2, "p1", "t1"), (3, "p2", "t1"),
-        (4, "p2", "t2"), (5, "p3", "t2"),
-    ]
-    df = spark.createDataFrame(rows, ["item", "pred_cluster", "true_cluster"])
-    r = bcubed_eval(df).collect()[0]
-    # precision per item: 1:2/2 2:2/2 3:1/2 4:1/2 5:1/1 -> avg 0.8
-    # recall per item:    1:2/3 2:2/3 3:1/3 4:1/2 5:1/2 -> avg 0.5333..
-    import pytest as _pt
-
-    assert r["n_items"] == 5
-    assert r["bcubed_precision"] == 0.8
-    assert r["bcubed_recall"] == round((2/3 + 2/3 + 1/3 + 0.5 + 0.5) / 5, 6)
-    p, rr = 0.8, (2/3 + 2/3 + 1/3 + 0.5 + 0.5) / 5
-    assert r["bcubed_f1"] == _pt.approx(2 * p * rr / (p + rr), abs=1e-6)
-
-
-def test_bcubed_perfect_clustering_is_one(spark):
-    from gbif_filter_python_spark.operators.fuzzy import bcubed_eval
-
-    rows = [(i, "c%d" % (i % 4), "c%d" % (i % 4)) for i in range(40)]
-    df = spark.createDataFrame(rows, ["item", "pred_cluster", "true_cluster"])
-    r = bcubed_eval(df).collect()[0]
-    assert (r["bcubed_precision"], r["bcubed_recall"], r["bcubed_f1"]) == (
-        1.0, 1.0, 1.0,
-    )
-
-
-# ---------------------------------------------------------------------------
-# cluster_agreement
-# ---------------------------------------------------------------------------
-
-
-def _py_ari_nmi(asg):
-    """Exact replay of Hubert-Arabie ARI and arithmetic NMI."""
-    cells = Counter((p, t) for _, p, t in asg)
-    pa = Counter()
-    pb = Counter()
-    for (p, t), c in cells.items():
-        pa[p] += c
-        pb[t] += c
-    n = sum(cells.values())
-
-    def c2(x):
-        return x * (x - 1) / 2
-
-    sc = sum(c2(c) for c in cells.values())
-    sa = sum(c2(a) for a in pa.values())
-    sb = sum(c2(b) for b in pb.values())
-    exp = sa * sb / c2(n)
-    den = (sa + sb) / 2 - exp
-    ari = 1.0 if abs(den) < 1e-12 else (sc - exp) / den
-    mi = sum(
-        (c / n) * math.log(c * n / (pa[p] * pb[t]))
-        for (p, t), c in cells.items()
-    )
-    hp = -sum((a / n) * math.log(a / n) for a in pa.values())
-    ht = -sum((b / n) * math.log(b / n) for b in pb.values())
-    hm = (hp + ht) / 2
-    nmi = mi / hm if hm > 0 else 1.0
-    return round(ari, 6), round(nmi, 6)
-
-
-def test_cluster_agreement_matches_python_replay(spark):
-    asg = [
-        (i, "p%d" % (i % 4), "t%d" % ((i * 7) % 3)) for i in range(60)
-    ] + [(100 + i, "px", "t0") for i in range(5)]
-    df = spark.createDataFrame(
-        asg, ["item", "pred_cluster", "true_cluster"]
-    )
-    row = cluster_agreement(df).collect()[0]
-    ari, nmi = _py_ari_nmi(asg)
-    assert row["n_items"] == len(asg)
-    assert row["ari"] == ari
-    assert row["nmi"] == nmi
-
-
-def test_cluster_agreement_identical_partitions_score_one(spark):
-    asg = [(i, "c%d" % (i % 3), "k%d" % (i % 3)) for i in range(30)]
-    row = cluster_agreement(
-        spark.createDataFrame(asg, ["item", "pred_cluster", "true_cluster"])
-    ).collect()[0]
-    assert row["ari"] == 1.0
-    assert row["nmi"] == 1.0
-
-
-def test_cluster_agreement_degenerate_single_cluster_both(spark):
-    # one cluster on both sides: all-pair sets identical -> ARI 1.0 by
-    # convention (denominator 0); entropies 0 -> NMI 1.0
-    asg = [(i, "a", "b") for i in range(10)]
-    row = cluster_agreement(
-        spark.createDataFrame(asg, ["item", "pred_cluster", "true_cluster"])
-    ).collect()[0]
-    assert row["ari"] == 1.0
-    assert row["nmi"] == 1.0

@@ -9,10 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from gbif_filter_python_spark.operators.linalg import (
-    covariance_matrix,
-    participation_ratio,
-)
+from gbif_filter_python_spark.operators.linalg import covariance_matrix
 from gbif_filter_python_spark.operators.profile import hill_tail_index
 
 
@@ -312,39 +309,3 @@ class TestPcaComponents:
             pca_components(df, k=0)
         with _pytest.raises(ValueError):
             pca_components(df, k=3, dim=2)
-
-
-# ---------------------------------------------------------------------------
-# participation_ratio
-# ---------------------------------------------------------------------------
-
-
-def _emb(spark, vecs):
-    return spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        ["vec_id", "embedding"],
-    )
-
-
-def test_pr_rank_one_is_one(spark):
-    r = participation_ratio(
-        _emb(spark, [[1, 0], [2, 0], [3, 0]]), dim=2
-    ).collect()[0]
-    assert r["d"] == 2
-    assert r["participation_ratio"] == pytest.approx(1.0, abs=1e-4)
-    assert r["pr_fraction"] == pytest.approx(0.5, abs=1e-4)
-
-
-def test_pr_isotropic_is_d(spark):
-    r = participation_ratio(
-        _emb(spark, [[1, 0], [0, 1], [-1, 0], [0, -1]]), dim=2
-    ).collect()[0]
-    assert r["participation_ratio"] == pytest.approx(2.0, abs=1e-4)
-    assert r["pr_fraction"] == pytest.approx(1.0, abs=1e-4)
-
-
-def test_pr_constant_embeddings_null(spark):
-    r = participation_ratio(
-        _emb(spark, [[1, 1], [1, 1]]), dim=2
-    ).collect()[0]
-    assert r["participation_ratio"] is None

@@ -11,7 +11,6 @@ import json
 import os
 
 import pytest
-from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -541,76 +540,7 @@ class TestScriptedFetch:
         assert df.count() == 0
 
 
-def test_split_ring_dedupes_by_occurrence_key_not_projection(
-    pushdown, tmp_path
-):
-    """Two DISTINCT records sharing every projected field except
-    occurrence_key must BOTH survive the split-ring dedupe; the same
-    record (same key) returned by both rings appears once."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    ring_w = "POLYGON((-180 10,0 10,0 90,-180 90,-180 10))"
-    ring_e = "POLYGON((0 10,180 10,180 90,0 90,0 10))"
-    base = {
-        "taxon_key": 100,
-        "scientific_name": "Aus aus",
-        "country": "FR",
-        "decimal_latitude": 48.0,
-        "decimal_longitude": 0.0,
-    }
-    data = {
-        f"100|FR|{ring_w}": [
-            dict(base, occurrence_key=1),
-            dict(base, occurrence_key=2),  # distinct record, same proj
-        ],
-        f"100|FR|{ring_e}": [dict(base, occurrence_key=1)],  # dup of 1
-    }
-    log = str(tmp_path / "key_dedupe.jsonl")
-    df = (
-        pushdown.read.format("gbif_occurrences")
-        .option(
-            "fetch_factory",
-            "gbif_filter_python_spark.sources."
-            "occurrence_source:scripted_occurrence_fetch",
-        )
-        .option("fetch_args", _json.dumps({"data": data, "call_log": log}))
-        .load()
-        .filter(F.col("taxon_key") == 100)
-        .filter(F.col("country") == "FR")
-        .filter(F.col("decimal_latitude") >= 10.0)
-    )
-    assert sorted(x["occurrence_key"] for x in df.collect()) == [1, 2]
-
-
 lat = st.floats(min_value=-90, max_value=90, allow_nan=False)
 
 
 lon = st.floats(min_value=-180, max_value=180, allow_nan=False)
-
-
-@settings(max_examples=200, deadline=None)
-@given(lat, lat, lon, lon)
-def test_split_rings_partition_any_wide_span(lat_a, lat_b, lon_a, lon_b):
-    """For ANY clamped bounds whose lon span exceeds 180°, the two
-    rings the reader would emit each span <= 180°, share exactly the
-    midpoint meridian, and jointly cover the original span."""
-    lat_lo, lat_hi = min(lat_a, lat_b), max(lat_a, lat_b)
-    lon_lo, lon_hi = min(lon_a, lon_b), max(lon_a, lon_b)
-    if lon_hi - lon_lo <= 180.0:
-        return
-    mid = (lon_lo + lon_hi) / 2.0
-    assert mid - lon_lo <= 180.0 and lon_hi - mid <= 180.0
-    assert lon_lo <= mid <= lon_hi
-    w1 = bbox_wkt(lat_lo, lat_hi, lon_lo, mid)
-    w2 = bbox_wkt(lat_lo, lat_hi, mid, lon_hi)
-    for w in (w1, w2):
-        assert w.startswith("POLYGON((") and w.endswith("))")
-        ring = [
-            tuple(float(t) for t in pt.split())
-            for pt in w[len("POLYGON((") : -2].split(",")
-        ]
-        assert len(ring) == 5 and ring[0] == ring[-1]
-        xs = [p[0] for p in ring]
-        assert max(xs) - min(xs) <= 180.0 + 1e-9

@@ -310,39 +310,3 @@ class TestNdcgAtK:
         # gain(rel=0) = 0; only doc 11 at rank 2 counts
         assert abs(r["dcg_at_k"] - 1 / math.log2(3)) < 1e-6
         assert abs(r["idcg_at_k"] - 1 / math.log2(2)) < 1e-6
-
-
-# ---------------------------------------------------------------------------
-# pr_curve
-# ---------------------------------------------------------------------------
-
-
-def test_pr_curve_hand_counts(spark):
-    from gbif_filter_python_spark.operators.ranking import pr_curve
-
-    rows = [
-        (0.9, True), (0.8, False), (0.7, True), (0.6, True),
-        (0.4, False), (0.2, True),
-    ]
-    df = spark.createDataFrame(rows, ["s", "y"])
-    out = {
-        r["threshold"]: r
-        for r in pr_curve(df, "s", "y", thresholds=(0.5, 0.85)).collect()
-    }
-    r5 = out[0.5]
-    # s >= 0.5: 0.9(T) 0.8(F) 0.7(T) 0.6(T) -> tp 3, fp 1; missed: 0.2(T)
-    assert (r5["tp"], r5["fp"], r5["fn"]) == (3, 1, 1)
-    assert r5["precision"] == 0.75 and r5["recall"] == 0.75
-    r85 = out[0.85]
-    assert (r85["tp"], r85["fp"], r85["fn"]) == (1, 0, 3)
-    assert r85["precision"] == 1.0 and r85["recall"] == 0.25
-    with pytest.raises(ValueError, match="thresholds"):
-        pr_curve(df, "s", "y", thresholds=())
-
-
-def test_pr_curve_empty_predictions_null_precision(spark):
-    from gbif_filter_python_spark.operators.ranking import pr_curve
-
-    df = spark.createDataFrame([(0.1, True)], ["s", "y"])
-    r = pr_curve(df, "s", "y", thresholds=(0.5,)).collect()[0]
-    assert r["tp"] == 0 and r["precision"] is None and r["recall"] == 0.0

@@ -553,6 +553,8 @@ def test_split_ring_dedupes_by_occurrence_key_not_projection(
 
 import pytest as _pytest
 
+from tests.conftest import session_conf
+
 
 @_pytest.fixture()
 def pushdown_occ(spark):
@@ -561,7 +563,6 @@ def pushdown_occ(spark):
     )
 
     spark.dataSource.register(GbifOccurrencesDataSource)
-    old = spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    yield spark
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", old)
+    with session_conf(spark, extra={
+            "spark.sql.python.filterPushdown.enabled": "true"}):
+        yield spark

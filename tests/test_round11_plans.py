@@ -6,12 +6,14 @@ keep the corpus out of every shuffle."""
 
 from __future__ import annotations
 
-import re
-
 import pytest
 from pyspark.sql import functions as F
 
-from gbif_filter_python_spark.plans.inspect import explain_str
+from gbif_filter_python_spark.plans.inspect import (
+    explain_str,
+    node_args,
+    node_count,
+)
 
 
 @pytest.fixture(scope="module")
@@ -26,21 +28,14 @@ def orders(spark, sf001_dir):
     return spark.read.parquet(f"{sf001_dir}/orders.parquet")
 
 
-def _scan_count(plan: str) -> int:
-    """Count physical parquet scan NODES. The formatted explain
-    renders each node twice (tree line + detail header), so count
-    the numbered detail headers only."""
-    return len(re.findall(r"\(\d+\) Scan parquet", plan))
-
-
 def test_cmh_single_fact_scan_with_partial_agg(events):
     from gbif_filter_python_spark.operators.analytics import cmh_test
 
     ev = events.withColumn("e", F.col("user_id") % 2 == 0).withColumn(
         "o", F.col("event_id") % 3 == 0
     )
-    plan = explain_str(cmh_test(ev, "event_type", "e", "o"))
-    assert _scan_count(plan) == 1, plan
+    plan = explain_str(cmh_test(ev, "event_type", "e", "o"), "simple")
+    assert node_count(plan, "FileScan parquet") == 1, plan
     assert "partial" in plan.lower(), plan
 
 
@@ -50,8 +45,9 @@ def test_tost_single_scan_single_row(events):
     )
 
     ev = events.withColumn("arm", (F.col("user_id") % 2).cast("int"))
-    plan = explain_str(tost_equivalence(ev, "arm", "value", 0, 1, 2.0))
-    assert _scan_count(plan) == 1, plan
+    plan = explain_str(
+        tost_equivalence(ev, "arm", "value", 0, 1, 2.0), "simple")
+    assert node_count(plan, "FileScan parquet") == 1, plan
 
 
 def test_tukey_pairs_on_aggregates_not_fact(orders):
@@ -69,11 +65,9 @@ def test_cramers_v_no_cartesian_on_data(orders):
     from gbif_filter_python_spark.operators.profile import cramers_v
     from gbif_filter_python_spark.plans.inspect import assert_no_cartesian
 
-    out = cramers_v(orders, "o_orderpriority", "o_orderstatus")
     # scalar-attach crossJoins are 1-row broadcasts (allowed); a
     # data-sized CartesianProduct is not
-    plan = explain_str(out)
-    assert "CartesianProduct" not in plan, plan
+    assert_no_cartesian(cramers_v(orders, "o_orderpriority", "o_orderstatus"))
 
 
 def test_gamma_cell_join_broadcasts(orders):
@@ -92,11 +86,11 @@ def test_entropy_rate_single_scan_two_reaggs(spark, sf001_dir):
     from gbif_filter_python_spark.operators.corpus import entropy_rate
 
     docs = spark.read.parquet(f"{sf001_dir}/documents.parquet")
-    plan = explain_str(entropy_rate(docs))
+    plan = explain_str(entropy_rate(docs), "simple")
     # the ONE corpus scan ran inside the eager localCheckpoint of the
     # alphabet²-bounded bigram table; every consumer in the final
     # plan reads that RDD — zero parquet re-scans
-    assert _scan_count(plan) == 0, plan
+    assert node_count(plan, "FileScan parquet") == 0, plan
     assert "Scan ExistingRDD" in plan, plan
 
 
@@ -104,10 +98,10 @@ def test_kfold_balance_fact_scanned_once(spark, sf001_dir):
     from gbif_filter_python_spark.operators.corpus import kfold_balance
 
     docs = spark.read.parquet(f"{sf001_dir}/documents.parquet")
-    plan = explain_str(kfold_balance(docs, "doc_id", "source", k=5))
+    plan = explain_str(kfold_balance(docs, "doc_id", "source", k=5), "simple")
     # four consumers of the cell table, zero parquet re-scans: the
     # one fact scan ran inside the eager localCheckpoint
-    assert _scan_count(plan) == 0, plan
+    assert node_count(plan, "FileScan parquet") == 0, plan
     assert "Scan ExistingRDD" in plan, plan
 
 
@@ -117,11 +111,11 @@ def test_uniformity_partials_not_corpus_shuffle(spark, sf001_dir):
     from gbif_filter_python_spark.operators.similarity import uniformity
 
     emb = spark.read.parquet(f"{sf001_dir}/embeddings.parquet")
-    plan = explain_str(uniformity(emb, sample_n=8))
+    plan = explain_str(uniformity(emb, sample_n=8), "simple")
     # the final scalar agg runs over mapInPandas partials; no keyed
     # repartitioning of the vector column may appear
-    assert "Exchange hashpartitioning(_cid" not in plan, plan
-    assert "Exchange hashpartitioning(_cv" not in plan, plan
+    for keys in node_args(plan, "Exchange hashpartitioning"):
+        assert not keys[0].startswith(("_cid", "_cv")), plan
 
 
 def test_davies_bouldin_centroid_shuffle_is_label_dim_sized(
@@ -132,9 +126,9 @@ def test_davies_bouldin_centroid_shuffle_is_label_dim_sized(
     )
 
     emb = spark.read.parquet(f"{sf001_dir}/embeddings.parquet")
-    plan = explain_str(davies_bouldin(emb))
+    plan = explain_str(davies_bouldin(emb), "simple")
     # every hashpartitioning exchange must be keyed by label/dim
     # columns, never by the vector or point id — the corpus itself
     # is never re-keyed
-    for ex in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan):
-        assert "_pv" not in ex and "_pid" not in ex, ex
+    for keys in node_args(plan, "Exchange hashpartitioning"):
+        assert not any("_pv" in k or "_pid" in k for k in keys), plan

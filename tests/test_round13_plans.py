@@ -21,26 +21,11 @@ differentials against the retired single-window forms.
 
 from __future__ import annotations
 
-import re
-
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from gbif_filter_python_spark.plans.inspect import explain_str
-
-
-@pytest.fixture()
-def wide(spark):
-    """conftest plans with shuffle_partitions=1 / AQE off for speed,
-    which hides the multi-partition shapes under test — widen."""
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    yield spark
-    spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+from gbif_filter_python_spark.plans.inspect import explain_str, node_args
+from tests.conftest import session_conf
 
 
 # ---------------------------------------------------------------------------
@@ -131,82 +116,88 @@ def _psm_att_single_window(df, caliper=None, round_dp=6):
     )
 
 
-def test_psm_att_no_single_partition_unit_window(wide):
+def test_psm_att_no_single_partition_unit_window(spark):
     """No window over the unit table may lead with the score column —
     every fact-side windowspec must be keyed by the _pid range tag;
     the cross-partition total order is a rangepartitioning exchange;
     the boundary carry is a broadcast join."""
     from gbif_filter_python_spark.operators.analytics import psm_att
 
-    plan = explain_str(
-        psm_att(_units(wide), "t", "s", "y", "id"), "simple"
-    )
-    assert not re.search(r"windowspecdefinition\(_s#", plan), plan
-    assert "rangepartitioning" in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    # fact-side windows are keyed by the range-partition tag
-    assert re.search(r"windowspecdefinition\(_pid#", plan), plan
+    with session_conf(spark, 8, True):
+        plan = explain_str(
+            psm_att(_units(spark), "t", "s", "y", "id"), "simple"
+        )
+        leads = [keys[0].split()[0] for keys in node_args(plan, "Window") if keys]
+        assert "_s" not in leads, plan
+        assert "rangepartitioning" in plan, plan
+        assert "BroadcastHashJoin" in plan, plan
+        assert "CartesianProduct" not in plan, plan
+        # fact-side windows are keyed by the range-partition tag
+        assert "_pid" in leads, plan
 
 
-def test_psm_att_distributed_matches_single_window(wide):
+def test_psm_att_distributed_matches_single_window(spark):
     """Exact differential: the distributed prefix-carry form returns
     the SAME summary row as the retired global-window form — ties,
     boundary controls, and all — across several partition counts."""
     from gbif_filter_python_spark.operators.analytics import psm_att
 
-    df = _units(wide)
-    expected = _psm_att_single_window(df).collect()[0].asDict()
-    for sp in ("3", "8", "17"):
-        wide.conf.set("spark.sql.shuffle.partitions", sp)
-        got = psm_att(df, "t", "s", "y", "id").collect()[0].asDict()
-        assert got == expected, (sp, got, expected)
+    with session_conf(spark, 8, True):
+        df = _units(spark)
+        expected = _psm_att_single_window(df).collect()[0].asDict()
+        for sp in (3, 8, 17):
+            with session_conf(spark, sp):
+                got = psm_att(df, "t", "s", "y", "id").collect()[0].asDict()
+            assert got == expected, (sp, got, expected)
 
 
-def test_psm_att_distributed_matches_single_window_caliper(wide):
+def test_psm_att_distributed_matches_single_window_caliper(spark):
     from gbif_filter_python_spark.operators.analytics import psm_att
 
-    df = _units(wide, n=301, tie_every=5)
-    for cal in (0.0, 1.0, 5.0):
-        expected = _psm_att_single_window(df, caliper=cal).collect()[
-            0
-        ].asDict()
-        got = psm_att(
-            df, "t", "s", "y", "id", caliper=cal
-        ).collect()[0].asDict()
-        assert got == expected, (cal, got, expected)
+    with session_conf(spark, 8, True):
+        df = _units(spark, n=301, tie_every=5)
+        for cal in (0.0, 1.0, 5.0):
+            expected = _psm_att_single_window(df, caliper=cal).collect()[
+                0
+            ].asDict()
+            got = psm_att(
+                df, "t", "s", "y", "id", caliper=cal
+            ).collect()[0].asDict()
+            assert got == expected, (cal, got, expected)
 
 
-def test_psm_att_all_controls_in_one_boundary_partition(wide):
+def test_psm_att_all_controls_in_one_boundary_partition(spark):
     """Carry correctness when whole partitions hold no control: all
     controls sit at the extreme low end of the score order, so every
     treated unit in later range partitions matches ONLY via the
     broadcast carry."""
     from gbif_filter_python_spark.operators.analytics import psm_att
 
-    rows = [(0, float(i) / 100.0, float(i), i) for i in range(10)] + [
-        (1, 50.0 + i, 100.0 + i, 1000 + i) for i in range(90)
-    ]
-    df = wide.createDataFrame(rows, "t int, s double, y double, id long")
-    expected = _psm_att_single_window(df).collect()[0].asDict()
-    got = psm_att(df, "t", "s", "y", "id").collect()[0].asDict()
-    assert got == expected
-    assert got["n_matched"] == 90
-    # nearest (only reachable) control is the max-score control: s=0.09
-    # → y=9.0 for every treated unit
-    assert got["mean_matched_control"] == 9.0
+    with session_conf(spark, 8, True):
+        rows = [(0, float(i) / 100.0, float(i), i) for i in range(10)] + [
+            (1, 50.0 + i, 100.0 + i, 1000 + i) for i in range(90)
+        ]
+        df = spark.createDataFrame(rows, "t int, s double, y double, id long")
+        expected = _psm_att_single_window(df).collect()[0].asDict()
+        got = psm_att(df, "t", "s", "y", "id").collect()[0].asDict()
+        assert got == expected
+        assert got["n_matched"] == 90
+        # nearest (only reachable) control is the max-score control: s=0.09
+        # → y=9.0 for every treated unit
+        assert got["mean_matched_control"] == 9.0
 
 
-def test_psm_att_no_controls_at_all(wide):
+def test_psm_att_no_controls_at_all(spark):
     from gbif_filter_python_spark.operators.analytics import psm_att
 
-    rows = [(1, float(i), float(i), i) for i in range(20)]
-    df = wide.createDataFrame(rows, "t int, s double, y double, id long")
-    (r,) = psm_att(df, "t", "s", "y", "id").collect()
-    assert r.n_treated == 20
-    assert r.n_control == 0
-    assert r.n_matched == 0
-    assert r.att is None
+    with session_conf(spark, 8, True):
+        rows = [(1, float(i), float(i), i) for i in range(20)]
+        df = spark.createDataFrame(rows, "t int, s double, y double, id long")
+        (r,) = psm_att(df, "t", "s", "y", "id").collect()
+        assert r.n_treated == 20
+        assert r.n_control == 0
+        assert r.n_matched == 0
+        assert r.att is None
 
 
 # ---------------------------------------------------------------------------
@@ -214,7 +205,7 @@ def test_psm_att_no_controls_at_all(wide):
 # ---------------------------------------------------------------------------
 
 
-def test_ppjoin_vocab_rank_is_distributed(wide):
+def test_ppjoin_vocab_rank_is_distributed(spark):
     """The token-df rank must NOT be a bare row_number over the vocab
     (windowspec leading with _df) — it rides assign_global_index:
     range shuffle + _pid-keyed locals + broadcast offsets."""
@@ -222,19 +213,21 @@ def test_ppjoin_vocab_rank_is_distributed(wide):
         prefix_filter_jaccard_pairs,
     )
 
-    docs = wide.createDataFrame(
-        [(i, f"tok{i % 11} tok{i % 7} tok{i % 5} shared") for i in range(60)],
-        "doc_id long, text string",
-    )
-    plan = explain_str(
-        prefix_filter_jaccard_pairs(docs, 0.5), "simple"
-    )
-    assert not re.search(r"windowspecdefinition\(_df#", plan), plan
-    assert "rangepartitioning" in plan, plan
-    assert "CartesianProduct" not in plan, plan
+    with session_conf(spark, 8, True):
+        docs = spark.createDataFrame(
+            [(i, f"tok{i % 11} tok{i % 7} tok{i % 5} shared") for i in range(60)],
+            "doc_id long, text string",
+        )
+        plan = explain_str(
+            prefix_filter_jaccard_pairs(docs, 0.5), "simple"
+        )
+        leads = [keys[0].split()[0] for keys in node_args(plan, "Window") if keys]
+        assert "_df" not in leads, plan
+        assert "rangepartitioning" in plan, plan
+        assert "CartesianProduct" not in plan, plan
 
 
-def test_ppjoin_rank_relabel_is_output_invariant(wide):
+def test_ppjoin_rank_relabel_is_output_invariant(spark):
     """The 0-based assign_global_index relabeling must produce the
     same pair set and jaccards as a literal row_number rank — verify
     against a brute-force exact Jaccard over all pairs."""
@@ -243,38 +236,39 @@ def test_ppjoin_rank_relabel_is_output_invariant(wide):
         words_array,
     )
 
-    texts = [
-        "a b c d e",
-        "a b c d e f",
-        "a b c x y",
-        "p q r s",
-        "p q r s t",
-        "completely different words here",
-        "a b c d e",  # exact dup of doc 0
-    ]
-    docs = wide.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    t = 0.6
-    got = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in prefix_filter_jaccard_pairs(docs, t).collect()
-    }
-    # brute force oracle
-    sets = {
-        r.doc_id: set(r.w)
-        for r in docs.select(
-            "doc_id", words_array(F.col("text")).alias("w")
-        ).collect()
-    }
-    expect = {}
-    ids = sorted(sets)
-    for i in ids:
-        for j in ids:
-            if i < j:
-                inter = len(sets[i] & sets[j])
-                union = len(sets[i] | sets[j])
-                jac = inter / union if union else 0.0
-                if jac >= t:
-                    expect[(i, j)] = round(jac, 6)
-    assert got == expect
+    with session_conf(spark, 8, True):
+        texts = [
+            "a b c d e",
+            "a b c d e f",
+            "a b c x y",
+            "p q r s",
+            "p q r s t",
+            "completely different words here",
+            "a b c d e",  # exact dup of doc 0
+        ]
+        docs = spark.createDataFrame(
+            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+        )
+        t = 0.6
+        got = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in prefix_filter_jaccard_pairs(docs, t).collect()
+        }
+        # brute force oracle
+        sets = {
+            r.doc_id: set(r.w)
+            for r in docs.select(
+                "doc_id", words_array(F.col("text")).alias("w")
+            ).collect()
+        }
+        expect = {}
+        ids = sorted(sets)
+        for i in ids:
+            for j in ids:
+                if i < j:
+                    inter = len(sets[i] & sets[j])
+                    union = len(sets[i] | sets[j])
+                    jac = inter / union if union else 0.0
+                    if jac >= t:
+                        expect[(i, j)] = round(jac, 6)
+        assert got == expect

@@ -1,5 +1,8 @@
-"""Tests of ``multimodal/archive_ops.py``: WARC, compression, ZIP, TAR
-and checkpoint triage, including the adversarial size bounds."""
+"""Round-14 crawl-ingest tests: WARC record walk + compressed-text
+payloads (multimodal/archive_ops.py) — roundtrips, the named-error
+contract on malformed input (the ADVICE r13 lesson: NEVER a raw
+IndexError/KeyError from a parser), sniff adversarial cases, and
+distributed-vs-direct parity."""
 
 from __future__ import annotations
 
@@ -8,8 +11,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from gbif_filter_python_spark.multimodal.archive_ops import (
-    compress_bytes,
     COMPRESSION_CODECS,
+    compress_bytes,
     decompress_bytes,
     decompress_text,
     detect_compression,

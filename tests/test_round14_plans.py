@@ -21,26 +21,16 @@ partition counts, continuous (all-distinct) and heavily-tied inputs.
 
 from __future__ import annotations
 
-import re
-
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from gbif_filter_python_spark.plans.inspect import explain_str
-
-
-@pytest.fixture()
-def wide(spark):
-    """conftest plans with shuffle_partitions=1 / AQE off for speed,
-    which hides the multi-partition shapes under test — widen."""
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    yield spark
-    spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+from gbif_filter_python_spark.plans.inspect import (
+    explain_str,
+    node_args,
+    node_count,
+)
+from tests.conftest import session_conf
 
 
 # ---------------------------------------------------------------------------
@@ -115,7 +105,7 @@ def _kruskal_single_window(df, group_col, value_col, round_dp=6):
     )
 
 
-def test_kruskal_no_single_partition_value_window(wide):
+def test_kruskal_no_single_partition_value_window(spark):
     """No windowspec may LEAD with the value column (that is the
     unpartitioned sort-the-world shape); every value-table window is
     keyed by the _pid range tag, the total order is a
@@ -124,17 +114,19 @@ def test_kruskal_no_single_partition_value_window(wide):
         kruskal_wallis,
     )
 
-    plan = explain_str(
-        kruskal_wallis(_kw_frame(wide), "g", "v"), "simple"
-    )
-    assert not re.search(r"windowspecdefinition\(_?v#\d+ ASC", plan), plan
-    assert "rangepartitioning" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert re.search(r"windowspecdefinition\(_pid#", plan), plan
+    with session_conf(spark, 8, True):
+        plan = explain_str(
+            kruskal_wallis(_kw_frame(spark), "g", "v"), "simple"
+        )
+        leads = [keys[0] for keys in node_args(plan, "Window") if keys]
+        assert not {"v ASC", "_v ASC"} & set(leads), plan
+        assert "rangepartitioning" in plan, plan
+        assert "CartesianProduct" not in plan, plan
+        assert "_pid" in {lead.split()[0] for lead in leads}, plan
 
 
 @pytest.mark.parametrize("continuous", [True, False])
-def test_kruskal_distributed_matches_single_window(wide, continuous):
+def test_kruskal_distributed_matches_single_window(spark, continuous):
     """Exact differential vs the retired global-window form — the
     half-integer average ranks are exact in doubles, so every output
     cell must be EQUAL (not approx) at any partition count."""
@@ -142,27 +134,29 @@ def test_kruskal_distributed_matches_single_window(wide, continuous):
         kruskal_wallis,
     )
 
-    df = _kw_frame(wide, continuous=continuous)
-    expected = _kruskal_single_window(df, "g", "v").collect()[0].asDict()
-    for sp in ("3", "8", "17"):
-        wide.conf.set("spark.sql.shuffle.partitions", sp)
-        got = kruskal_wallis(df, "g", "v").collect()[0].asDict()
-        assert got == expected, (sp, got, expected)
+    with session_conf(spark, 8, True):
+        df = _kw_frame(spark, continuous=continuous)
+        expected = _kruskal_single_window(df, "g", "v").collect()[0].asDict()
+        for sp in (3, 8, 17):
+            with session_conf(spark, sp):
+                got = kruskal_wallis(df, "g", "v").collect()[0].asDict()
+            assert got == expected, (sp, got, expected)
 
 
-def test_kruskal_all_one_value(wide):
+def test_kruskal_all_one_value(spark):
     """Degenerate tie case: correction factor 0 → h_corrected NULL."""
     from gbif_filter_python_spark.operators.analytics import (
         kruskal_wallis,
     )
 
-    df = wide.createDataFrame(
-        [("a", 1.0)] * 5 + [("b", 1.0)] * 5, "g string, v double"
-    )
-    (r,) = kruskal_wallis(df, "g", "v").collect()
-    assert r.n == 10 and r.k_groups == 2
-    assert r.h_corrected is None
-    assert r.h_stat == 0.0
+    with session_conf(spark, 8, True):
+        df = spark.createDataFrame(
+            [("a", 1.0)] * 5 + [("b", 1.0)] * 5, "g string, v double"
+        )
+        (r,) = kruskal_wallis(df, "g", "v").collect()
+        assert r.n == 10 and r.k_groups == 2
+        assert r.h_corrected is None
+        assert r.h_stat == 0.0
 
 
 # ---------------------------------------------------------------------------
@@ -202,17 +196,19 @@ def _skyline_2d_single_window(df, x_col, y_col, x_pref="min", y_pref="max"):
     return joined.filter(survives).select(*[F.col(c) for c in keep.columns])
 
 
-def test_skyline_2d_no_single_partition_x_window(wide):
+def test_skyline_2d_no_single_partition_x_window(spark):
     from gbif_filter_python_spark.operators.analytics import skyline_2d
 
-    plan = explain_str(
-        skyline_2d(_sky_frame(wide), "x", "y"), "simple"
-    )
-    assert not re.search(r"windowspecdefinition\(_sx#\d+ ASC", plan), plan
-    assert "rangepartitioning" in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert re.search(r"windowspecdefinition\(_pid#", plan), plan
+    with session_conf(spark, 8, True):
+        plan = explain_str(
+            skyline_2d(_sky_frame(spark), "x", "y"), "simple"
+        )
+        leads = [keys[0] for keys in node_args(plan, "Window") if keys]
+        assert "_sx ASC" not in leads, plan
+        assert "rangepartitioning" in plan, plan
+        assert "BroadcastHashJoin" in plan, plan
+        assert "CartesianProduct" not in plan, plan
+        assert "_pid" in {lead.split()[0] for lead in leads}, plan
 
 
 @pytest.mark.parametrize("continuous", [True, False])
@@ -220,52 +216,55 @@ def test_skyline_2d_no_single_partition_x_window(wide):
     "prefs", [("min", "max"), ("max", "min"), ("min", "min")]
 )
 def test_skyline_2d_distributed_matches_single_window(
-    wide, continuous, prefs
+    spark, continuous, prefs
 ):
     from gbif_filter_python_spark.operators.analytics import skyline_2d
 
-    df = _sky_frame(wide, continuous=continuous)
-    expected = sorted(
-        r["id"]
-        for r in _skyline_2d_single_window(
-            df, "x", "y", prefs[0], prefs[1]
-        ).collect()
-    )
-    for sp in ("3", "8", "17"):
-        wide.conf.set("spark.sql.shuffle.partitions", sp)
-        got = sorted(
+    with session_conf(spark, 8, True):
+        df = _sky_frame(spark, continuous=continuous)
+        expected = sorted(
             r["id"]
-            for r in skyline_2d(df, "x", "y", prefs[0], prefs[1]).collect()
+            for r in _skyline_2d_single_window(
+                df, "x", "y", prefs[0], prefs[1]
+            ).collect()
         )
-        assert got == expected, (sp, len(got), len(expected))
+        for sp in (3, 8, 17):
+            with session_conf(spark, sp):
+                got = sorted(
+                    r["id"]
+                    for r in skyline_2d(df, "x", "y", prefs[0], prefs[1]).collect()
+                )
+            assert got == expected, (sp, len(got), len(expected))
 
 
-def test_skyline_2d_all_survivors_in_one_boundary_partition(wide):
+def test_skyline_2d_all_survivors_in_one_boundary_partition(spark):
     """Carry correctness when the global max y sits in the FIRST
     range partition: every later x is dominated only via the
     broadcast carry, never the local window."""
     from gbif_filter_python_spark.operators.analytics import skyline_2d
 
-    rows = [(0, 0.0, 1000.0)] + [
-        (i, float(i), float(i)) for i in range(1, 200)
-    ]
-    df = wide.createDataFrame(rows, "id long, x double, y double")
-    got = sorted(r["id"] for r in skyline_2d(df, "x", "y").collect())
-    assert got == [0]
+    with session_conf(spark, 8, True):
+        rows = [(0, 0.0, 1000.0)] + [
+            (i, float(i), float(i)) for i in range(1, 200)
+        ]
+        df = spark.createDataFrame(rows, "id long, x double, y double")
+        got = sorted(r["id"] for r in skyline_2d(df, "x", "y").collect())
+        assert got == [0]
 
 
-def test_skyline_2d_ties_all_survive(wide):
+def test_skyline_2d_ties_all_survive(spark):
     from gbif_filter_python_spark.operators.analytics import skyline_2d
 
-    rows = [(1, 1.0, 5.0), (2, 1.0, 5.0), (3, 2.0, 5.0), (4, 0.5, 4.0)]
-    df = wide.createDataFrame(rows, "id long, x double, y double")
-    got = sorted(r["id"] for r in skyline_2d(df, "x", "y").collect())
-    # x=1.0,y=5.0 twice (both survive); x=2.0 dominated (smaller x hit
-    # same y — strict < fails); x=0.5,y=4.0 survives (no smaller x).
-    assert got == [1, 2, 4]
+    with session_conf(spark, 8, True):
+        rows = [(1, 1.0, 5.0), (2, 1.0, 5.0), (3, 2.0, 5.0), (4, 0.5, 4.0)]
+        df = spark.createDataFrame(rows, "id long, x double, y double")
+        got = sorted(r["id"] for r in skyline_2d(df, "x", "y").collect())
+        # x=1.0,y=5.0 twice (both survive); x=2.0 dominated (smaller x hit
+        # same y — strict < fails); x=0.5,y=4.0 survives (no smaller x).
+        assert got == [1, 2, 4]
 
 
-def test_repetition_signals_is_map_only(wide):
+def test_repetition_signals_is_map_only(spark):
     """r14 optimization contract: the top-bigram count rides a per-row
     sorted-run fold, so the operator plans with ZERO exchanges (the
     former explode + double hash-agg shuffled every distinct
@@ -274,50 +273,48 @@ def test_repetition_signals_is_map_only(wide):
         repetition_signals,
     )
 
-    docs = wide.createDataFrame(
-        [(1, "a b a b a b"), (2, "x y z"), (3, "solo")],
-        "doc_id long, text string",
-    )
-    out = repetition_signals(docs)
-    plan = explain_str(out)
-    assert "Exchange" not in plan, plan
-    rows = {r.doc_id: r for r in out.collect()}
-    assert 3 not in rows  # < 2 words stays excluded
-    assert rows[1].top_bigram_frac == pytest.approx(3 / 5, abs=1e-6)
-    assert rows[2].top_bigram_frac == pytest.approx(1 / 2, abs=1e-6)
+    with session_conf(spark, 8, True):
+        docs = spark.createDataFrame(
+            [(1, "a b a b a b"), (2, "x y z"), (3, "solo")],
+            "doc_id long, text string",
+        )
+        out = repetition_signals(docs)
+        plan = explain_str(out)
+        assert "Exchange" not in plan, plan
+        rows = {r.doc_id: r for r in out.collect()}
+        assert 3 not in rows  # < 2 words stays excluded
+        assert rows[1].top_bigram_frac == pytest.approx(3 / 5, abs=1e-6)
+        assert rows[2].top_bigram_frac == pytest.approx(1 / 2, abs=1e-6)
 
 
-def test_profile_table_exact_distinct_expand_hash_aggregates(wide):
+def test_profile_table_exact_distinct_expand_hash_aggregates(spark):
     """r14 optimization contract: the exact-distinct path keeps
     min/max(string) OUT of the Expand'd multi-distinct aggregate, so
     the expanded row stream hash-aggregates (long count buffers)
     instead of sort-aggregating 6x rows."""
     from gbif_filter_python_spark.operators.profile import profile_table
 
-    df = wide.createDataFrame(
-        [(1, "a", 1.5), (2, "b", 2.5), (2, None, 2.5)],
-        "k long, s string, v double",
-    )
-    out = profile_table(df, exact_distinct=True)
-    plan = explain_str(out)
-    # The Expand (distinct rewrite) must feed HashAggregate, never
-    # SortAggregate: the tree line directly above "Expand" is its
-    # consumer.
-    tree = [
-        ln
-        for ln in plan.split("\n\n")[0].splitlines()
-        if re.search(r"[+:]- \w+|^\w+SparkPlan", ln)
-    ]
-    idx = [i for i, ln in enumerate(tree) if "- Expand (" in ln]
-    assert idx, plan
-    assert "HashAggregate" in tree[idx[0] - 1], plan
-    rows = {r.column: r for r in out.collect()}
-    assert rows["k"].n_distinct == 2 and rows["s"].n_distinct == 2
-    assert rows["s"].n_nonnull == 2 and rows["k"].n_rows == 3
-    assert rows["v"].min_value == "1.5" and rows["v"].max_value == "2.5"
+    with session_conf(spark, 8, True):
+        df = spark.createDataFrame(
+            [(1, "a", 1.5), (2, "b", 2.5), (2, None, 2.5)],
+            "k long, s string, v double",
+        )
+        out = profile_table(df, exact_distinct=True)
+        plan = explain_str(out, "simple")
+        # The Expand (distinct rewrite) must feed HashAggregate, never
+        # SortAggregate: the plan line directly above "Expand" is its
+        # consumer.
+        tree = plan.splitlines()
+        idx = [i for i, ln in enumerate(tree) if node_count(ln, "Expand")]
+        assert idx, plan
+        assert "HashAggregate" in tree[idx[0] - 1], plan
+        rows = {r.column: r for r in out.collect()}
+        assert rows["k"].n_distinct == 2 and rows["s"].n_distinct == 2
+        assert rows["s"].n_nonnull == 2 and rows["k"].n_rows == 3
+        assert rows["v"].min_value == "1.5" and rows["v"].max_value == "2.5"
 
 
-def test_winsorized_stats_distributed_thresholds_one_fact_pass(wide):
+def test_winsorized_stats_distributed_thresholds_one_fact_pass(spark):
     """r14 optimization contract: winsorized_stats' interior
     percentiles ride the keyed _distributed_cdf (range partitioning,
     no per-group percentile() buffer — the single-task mega-group
@@ -328,45 +325,46 @@ def test_winsorized_stats_distributed_thresholds_one_fact_pass(wide):
         winsorized_stats,
     )
 
-    rows = [
-        ("a", float(v)) for v in range(1, 101)
-    ] + [("b", float(v * v % 37)) for v in range(1, 60)] + [
-        ("a", None),
-        ("b", 17.0),  # ties
-        ("b", 17.0),
-    ]
-    df = wide.createDataFrame(rows, "g string, v double")
-    out = winsorized_stats(df, ["g"], "v", p=0.05)
-    plan = explain_str(out)
-    # no exact-percentile aggregate anywhere (the one-buffer-per-group
-    # shape), and the distributed total order is present
-    assert "percentile" not in plan.lower(), plan
-    assert "rangepartitioning" in plan, plan
-    # differential vs the retired one-agg percentile() form
-    keep = df.filter(F.col("v").isNotNull())
-    th = keep.groupBy("g").agg(
-        F.round(F.expr("percentile(v, 0.05D)"), 6).alias("lo"),
-        F.round(F.expr("percentile(v, 0.95D)"), 6).alias("hi"),
-    )
-    v = F.col("v").cast("double")
-    clamped = F.least(F.greatest(v, F.col("lo")), F.col("hi"))
-    old = (
-        keep.join(F.broadcast(th), ["g"])
-        .groupBy("g")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max("lo").alias("lo"),
-            F.max("hi").alias("hi"),
-            F.round(F.avg(v), 6).alias("mean_raw"),
-            F.round(F.avg(clamped), 6).alias("mean_winsorized"),
-            F.round(
-                F.avg(
-                    F.when((v >= F.col("lo")) & (v <= F.col("hi")), v)
-                ),
-                6,
-            ).alias("mean_trimmed"),
+    with session_conf(spark, 8, True):
+        rows = [
+            ("a", float(v)) for v in range(1, 101)
+        ] + [("b", float(v * v % 37)) for v in range(1, 60)] + [
+            ("a", None),
+            ("b", 17.0),  # ties
+            ("b", 17.0),
+        ]
+        df = spark.createDataFrame(rows, "g string, v double")
+        out = winsorized_stats(df, ["g"], "v", p=0.05)
+        plan = explain_str(out)
+        # no exact-percentile aggregate anywhere (the one-buffer-per-group
+        # shape), and the distributed total order is present
+        assert "percentile" not in plan.lower(), plan
+        assert "rangepartitioning" in plan, plan
+        # differential vs the retired one-agg percentile() form
+        keep = df.filter(F.col("v").isNotNull())
+        th = keep.groupBy("g").agg(
+            F.round(F.expr("percentile(v, 0.05D)"), 6).alias("lo"),
+            F.round(F.expr("percentile(v, 0.95D)"), 6).alias("hi"),
         )
-    )
-    got = {r["g"]: r.asDict() for r in out.collect()}
-    want = {r["g"]: r.asDict() for r in old.collect()}
-    assert got == want
+        v = F.col("v").cast("double")
+        clamped = F.least(F.greatest(v, F.col("lo")), F.col("hi"))
+        old = (
+            keep.join(F.broadcast(th), ["g"])
+            .groupBy("g")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.max("lo").alias("lo"),
+                F.max("hi").alias("hi"),
+                F.round(F.avg(v), 6).alias("mean_raw"),
+                F.round(F.avg(clamped), 6).alias("mean_winsorized"),
+                F.round(
+                    F.avg(
+                        F.when((v >= F.col("lo")) & (v <= F.col("hi")), v)
+                    ),
+                    6,
+                ).alias("mean_trimmed"),
+            )
+        )
+        got = {r["g"]: r.asDict() for r in out.collect()}
+        want = {r["g"]: r.asDict() for r in old.collect()}
+        assert got == want

@@ -386,24 +386,3 @@ def test_heavy_recurrence_gap_bounded_over_long_horizon():
         f"heavy names witnessed fewer than twice in {horizon - start} "
         f"simulated rounds: {never_twice}"
     )
-
-
-def test_heavy_picks_are_least_recently_witnessed(monkeypatch):
-    import __spark_entry__ as entry_mod
-
-    pool = entry_mod.HEAVY_QUERIES
-    reg = [n for n in entry_mod._registry() if n not in entry_mod.CANARY]
-    # craft a witness map: everything seen recently EXCEPT two heavy
-    # names starved long ago — they must be picked first, regardless
-    # of any rotation offset
-    starved = [pool[7], pool[23]]
-    latest = {n: 9 for n in reg}
-    for n in starved:
-        latest[n] = 2
-    monkeypatch.setattr(entry_mod, "_witness_rounds", lambda r: dict(latest))
-    monkeypatch.setattr(entry_mod, "_WINDOW_CACHE", {})
-    window = entry_mod.planned_window(entry_mod._HEAVY_ANCHOR + 3)
-    k = len(entry_mod.CANARY)
-    picks = window[k : k + entry_mod.HEAVY_QUOTA]
-    assert set(starved) <= set(picks)
-    assert set(picks) <= set(pool)

@@ -5,11 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from gbif_filter_python_spark.operators.skew import (
-    join_cardinality,
-    salted_join,
-    two_phase_agg,
-)
+from gbif_filter_python_spark.operators.skew import salted_join, two_phase_agg
 from gbif_filter_python_spark.plans.inspect import final_plan, node_args
 from tests.conftest import session_conf
 
@@ -268,33 +264,3 @@ class TestSkewedFactFlagship:
         assert agree / len(tags["plain"]) > 0.9
         for df in (tax, plain, skewed, taxa):
             df.unpersist()
-
-
-# ---------------------------------------------------------------------------
-# join_cardinality
-# ---------------------------------------------------------------------------
-
-
-def test_join_cardinality_exact_counts_and_shares(spark):
-    left = spark.createDataFrame(
-        [("k1",)] * 3 + [("k2",)] * 2 + [("k3",)], ["k"]
-    )
-    right = spark.createDataFrame(
-        [("k1",)] * 4 + [("k2",)] * 5 + [("k9",)], ["k"]
-    )
-    rows = join_cardinality(left, right, "k", "k", top_n=10).collect()
-    got = [(r["key"], r["n_left"], r["n_right"], r["pairs"], r["share"])
-           for r in rows]
-    # total = 3*4 + 2*5 = 22; k1 first (12 > 10); k3/k9 excluded
-    assert got == [
-        ("k1", 3, 4, 12, round(12 / 22, 6)),
-        ("k2", 2, 5, 10, round(10 / 22, 6)),
-    ]
-    # the probe's total equals the real join's cardinality
-    assert left.join(right, "k").count() == 22
-
-
-def test_join_cardinality_disjoint_keys_empty(spark):
-    left = spark.createDataFrame([("a",)], ["k"])
-    right = spark.createDataFrame([("b",)], ["k"])
-    assert join_cardinality(left, right, "k", "k").count() == 0

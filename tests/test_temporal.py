@@ -11,8 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from gbif_filter_python_spark.operators.temporal import asof_join, range_join
-from gbif_filter_python_spark.plans.inspect import explain_str, final_plan
-from tests.conftest import session_conf
 
 
 def _ts(minute: int) -> datetime.datetime:
@@ -613,60 +611,3 @@ def test_cogroup_asof_matches_jvm_asof_on_events_corpus(spark, sf001_dir):
     }
     assert len(jvm) > 0
     assert py == jvm
-
-
-def _assert_no_percentile(df) -> str:
-    plan = explain_str(df)
-    assert "percentile" not in plan.lower(), plan
-    assert "rangepartitioning" in plan, plan
-    return plan
-
-
-def test_event_latency_matches_retired_form_and_reuses(spark):
-    from gbif_filter_python_spark.operators.temporal import (
-        event_latency,
-    )
-
-    with session_conf(spark, 8, True):
-        def ts(i):
-            return F.timestamp_seconds(F.lit(1_700_000_000 + i))
-
-        clicks = spark.range(200).select(
-            (F.col("id") % 40).alias("user_id"),
-            ts(F.col("id") * 7).alias("ts"),
-        )
-        buys = spark.range(60).select(
-            (F.col("id") % 40).alias("user_id"),
-            ts(F.col("id") * 23 + 11).alias("ts"),
-        )
-        out = event_latency(clicks, buys, on="user_id")
-        _assert_no_percentile(out)
-        row = out.collect()[0].asDict()
-        final = final_plan(out)
-        # the totals and percentile branches must read the SAME
-        # per-distinct-latency aggregate — one asof-join execution
-        assert "ReusedExchange" in final, final
-        assert row["n_from"] == 200
-        assert row["n_converted"] > 0
-        assert row["conversion_rate"] == round(
-            row["n_converted"] / row["n_from"], 6
-        )
-        # differential for the percentiles against percentile() over the
-        # same matched latencies is covered by the oracle (event_latency
-        # query, 3 SFs); here pin the exact-interpolation arithmetic on a
-        # known tiny case: 4 latencies -> p50 interpolates halfway
-        lat4 = spark.createDataFrame(
-            [(1.0,), (2.0,), (4.0,), (8.0,)], "x double"
-        )
-        from gbif_filter_python_spark.operators.profile import (
-            _cdf_percentiles,
-        )
-
-        got = _cdf_percentiles(lat4, "x", [0.5, 0.9], ["p50", "p90"]).collect()[
-            0
-        ]
-        want = lat4.agg(
-            F.percentile("x", F.lit(0.5)).alias("p50"),
-            F.percentile("x", F.lit(0.9)).alias("p90"),
-        ).collect()[0]
-        assert (got["p50"], got["p90"]) == (want["p50"], want["p90"])
