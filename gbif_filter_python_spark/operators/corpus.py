@@ -113,9 +113,13 @@ def prepare_training_corpus(
     )
     # Pack WITHIN each (split, shard): a test doc must never share a
     # pack with a train doc, and the running-offset cumsum must never
-    # serialize into |splits| tasks — the sf10-measured knee (43.7×
-    # wall at 100× data with split-only windows). Same shard-local
-    # rule and pack-id encoding as pack_sequences(shards=...).
+    # serialize into |splits| tasks, which a split-only window does at
+    # any cluster size. Same shard-local rule and pack-id encoding as
+    # pack_sequences(shards=...). The sf10 ladder's corpus_prep ratio
+    # (42.0× and 36.2× at 100× data with these 256-shard windows) is
+    # not this window's: the regex projection above takes 99% of the
+    # sf10 executor time (scrub_pii's EMAIL_RE and quality_score over
+    # the longer words that tools/scale_data.py writes).
     pw = (
         Window.partitionBy("split", "_shard")
         .orderBy(doc_id_col)
@@ -574,10 +578,11 @@ def pack_sequences(
     tokenizers split it; the assignment stays a pure function of the
     ordering.
 
-    **Sharded by default (the measured sf10 knee).** A single global
-    running-offset window is ONE task regardless of cluster size —
-    q_corpus_prep measured 43.7× wall at 100× data from exactly this
-    (3 split-level windows serializing ~500 k rows each). With
+    **Sharded by default.** A single global running-offset window is
+    ONE task regardless of cluster size, and split-level windows are
+    one task per split. (q_corpus_prep's 42.0× and 36.2× at 100× data
+    on the r15 sf10 ladder, taken with 256-shard windows, come from
+    its regex projection, not from its pack window.) With
     ``shards=k`` the cumsum partitions by ``doc_id % k`` and
     ``pack_id = shard * PACK_SHARD_STRIDE + local_pack`` — packs
     never cross shards (standard shard-local packing; each shard
