@@ -3457,11 +3457,16 @@ def q_bpe_learn(spark: SparkSession, sf: str) -> DataFrame:
     texts = [r["text"] for r in sampled.select("text").collect()]
     want = ref_learn_bpe(texts, n_merges=n_merges)
     ok_len = len(got) == len(want) == n_merges
+    # a pandas frame goes through Arrow; a list of tuples would run a
+    # Python-worker job when the result is read
     return spark.createDataFrame(
-        [
-            (i, bool(ok_len and got[i] == want[i]))
-            for i in range(n_merges)
-        ],
+        pd.DataFrame({
+            "step": pd.Series(range(n_merges), dtype="int32"),
+            "match": pd.Series(
+                [ok_len and got[i] == want[i] for i in range(n_merges)],
+                dtype=bool,
+            ),
+        }),
         "step int, match boolean",
     )
 

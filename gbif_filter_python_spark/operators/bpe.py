@@ -13,13 +13,21 @@ the way BPE actually scales on a cluster:
   executor-trivial frame.
 * **The trainer's per-merge work is one small aggregation** over
   that table (pair counts, weighted by word count, and the argmax
-  ``collect`` — two Spark jobs under adaptive execution: the
-  pair-count shuffle and the result) plus a map-only re-segmentation
-  fold, which runs no job of its own. Lineage is truncated with
-  ``localCheckpoint`` (the graph.py pattern) once every
-  ``checkpoint_every`` merges, one job each, and only when another
-  merge will read it — so the plan does not grow with merges. Before
-  the loop: the distinct-word checkpoint, plus the corpus count when
+  ``collect``) plus a map-only re-segmentation fold, which runs no
+  job of its own. The table's row count rides the distinct-word
+  checkpoint's job (``observed_checkpoint``), and every checkpoint is
+  read back as ``coalesce(ceil(rows / _ROWS_PER_TASK))`` partitions.
+  A table that fits one task is then one ``SinglePartition``, the
+  pair count needs no exchange, and a merge is ONE Spark job; above
+  the bound the same line leaves several partitions and the
+  pair-count shuffle (two jobs per merge). Both the pair explode and
+  the fold are SQL expressions (``selectExpr``): building the fold
+  from Column-API lambdas cost more driver time than running it.
+  Lineage is truncated with ``localCheckpoint`` (the graph.py
+  pattern) once every ``checkpoint_every`` merges, one job each, and
+  only when another merge will read it — so the plan does not grow
+  with merges. Before the loop: the distinct-word checkpoint (its
+  shuffle and its own job), plus the corpus count when
   ``sample_target_docs`` is set.
 * **The merge list is driver-side model state** (like k-means
   centroids): n_merges × a few bytes, the only materialization.
@@ -37,12 +45,15 @@ queries are rows-only (the iterative trainer has no SQL twin).
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
 from gbif_filter_python_spark.operators.corpus import _words
+from gbif_filter_python_spark.operators.iterate import observed_checkpoint
 
 
 def _distinct_words(docs: DataFrame, text_col: str) -> DataFrame:
@@ -54,43 +65,46 @@ def _distinct_words(docs: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def _merge_pair_in_syms(syms: Column, a: str, b: str) -> Column:
-    """Replace every left-to-right non-overlapping adjacent (a, b) in a
-    symbol array with the merged symbol — one pure-Column fold, no
-    Python. 'aaa' under merge (a,a) → ['aa','a'], matching the
-    reference BPE semantics."""
-    merged = a + b
-    init = F.struct(
-        F.array().cast("array<string>").alias("out"),
-        F.lit(None).cast("string").alias("prev"),
+#: Distinct words one task pair-counts and re-segments per merge: the
+#: merge loop reads its table as ``ceil(rows / _ROWS_PER_TASK)``
+#: partitions. Set from a measured crossover, see
+#: :func:`learn_bpe_merges`.
+_ROWS_PER_TASK = 100_000
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal: backslash and quote
+    escaped, as the default parser (``escapedStringLiterals`` off)
+    reads them."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+#: Each word's adjacent symbol pairs, one ``_p`` struct (a, b) per row.
+_PAIRS_SQL = (
+    "explode(zip_with(slice(_syms, 1, size(_syms) - 1), "
+    "slice(_syms, 2, size(_syms) - 1), (x, y) -> struct(x AS a, y AS b)))"
+    " AS _p"
+)
+
+_FLUSH_SQL = (
+    "CASE WHEN acc.prev IS NULL THEN acc.out "
+    "ELSE concat(acc.out, array(acc.prev)) END"
+)
+
+
+def _merge_sql(a: str, b: str) -> str:
+    """One merge step as a SQL expression over ``_syms``: every
+    left-to-right non-overlapping adjacent (a, b) becomes the merged
+    symbol, so 'aaa' under merge (a,a) gives ['aa','a'], as
+    :func:`ref_merge_pair` does."""
+    null = "CAST(NULL AS string)"
+    return (
+        "aggregate(_syms, named_struct('out', CAST(array() AS array<string>),"
+        f" 'prev', {null}), (acc, x) -> CASE WHEN acc.prev = {_sql_str(a)}"
+        f" AND x = {_sql_str(b)} THEN named_struct('out', concat(acc.out,"
+        f" array({_sql_str(a + b)})), 'prev', {null}) ELSE named_struct("
+        f"'out', {_FLUSH_SQL}, 'prev', x) END, acc -> {_FLUSH_SQL}) AS _syms"
     )
-
-    def step(acc, x):
-        take = (acc["prev"] == a) & (x == F.lit(b))
-        return F.when(
-            take,
-            F.struct(
-                F.concat(acc["out"], F.array(F.lit(merged))).alias("out"),
-                F.lit(None).cast("string").alias("prev"),
-            ),
-        ).otherwise(
-            F.struct(
-                F.when(
-                    acc["prev"].isNotNull(),
-                    F.concat(acc["out"], F.array(acc["prev"])),
-                )
-                .otherwise(acc["out"])
-                .alias("out"),
-                x.alias("prev"),
-            )
-        )
-
-    def finish(acc):
-        return F.when(
-            acc["prev"].isNotNull(), F.concat(acc["out"], F.array(acc["prev"]))
-        ).otherwise(acc["out"])
-
-    return F.aggregate(syms, init, step, finish)
 
 
 def bpe_training_sample(
@@ -159,21 +173,26 @@ def ref_learn_bpe(
         if n < min_count:
             break
         merges.append((a, b, n))
-        for w, syms in segs.items():
-            out: list[str] = []
+        segs = {w: ref_merge_pair(syms, a, b) for w, syms in segs.items()}
+    return merges
+
+
+def ref_merge_pair(syms: list[str], a: str, b: str) -> list[str]:
+    """``syms`` with every left-to-right non-overlapping adjacent
+    (a, b) merged: the reference trainer's re-segmentation step."""
+    out: list[str] = []
+    prev = None
+    for x in syms:
+        if prev == a and x == b:
+            out.append(a + b)
             prev = None
-            for x in syms:
-                if prev == a and x == b:
-                    out.append(a + b)
-                    prev = None
-                else:
-                    if prev is not None:
-                        out.append(prev)
-                    prev = x
+        else:
             if prev is not None:
                 out.append(prev)
-            segs[w] = out
-    return merges
+            prev = x
+    if prev is not None:
+        out.append(prev)
+    return out
 
 
 def learn_bpe_merges(
@@ -189,11 +208,26 @@ def learn_bpe_merges(
     ordered merge list [(left, right, pair_count), ...] — driver-side
     model state.
 
-    Per iteration: ONE aggregation job over the distinct-word table
+    Per iteration: ONE aggregation over the distinct-word table
     (adjacent pairs exploded from each word's current segmentation,
     weighted by word count; deterministic argmax with (count desc,
     left asc, right asc) tie-break) and one map-only re-segmentation.
     Stops early when the best pair's count falls below ``min_count``.
+
+    **One job per merge on a one-task table.** The distinct-word
+    checkpoint observes its row count on its own job, and every
+    checkpoint is read back as ``ceil(rows / _ROWS_PER_TASK)``
+    partitions. At one partition the pair-count ``groupBy`` needs no
+    exchange, so the aggregation and the argmax are one job, and
+    ``k`` merges launch ``2 + k + (k - 1) // checkpoint_every`` jobs
+    (the distinct-word shuffle and checkpoint, one job per merge, the
+    re-checkpoints). At sf0.1 the table has a few dozen rows and each
+    merge used to pay a second job for a shuffle of those rows. The
+    bound: at local[4], one merge step in one task took 0.16 / 0.23 /
+    1.3-1.55 s at 10³ / 10⁴ / 10⁵ distinct words against 0.25 / 0.32 /
+    1.55-1.82 s for the checkpoint's own partitioning (one partition
+    plus an exchange), and 2.7 s against 1.5 s at 2·10⁵ words, where
+    the checkpoint has two partitions; so a task takes 10⁵ words.
 
     **Scale path — ``sample_target_docs`` (VERDICT r3 item 2).** The
     trainer is a driver-serial loop by construction: one aggregation
@@ -224,29 +258,24 @@ def learn_bpe_merges(
     which returns diminish while expression nesting deepens.
     """
     docs = bpe_training_sample(docs, sample_target_docs, sample_key_col)
-    segs = _distinct_words(docs, text_col).select(
+    words = _distinct_words(docs, text_col).select(
         "_n", F.array_remove(F.split(F.col("word"), ""), "").alias("_syms")
     )
-    segs = segs.localCheckpoint(eager=True)
+    segs, probe = observed_checkpoint(words, F.count(F.lit(1)).alias("rows"))
+    # at one partition the plan is SinglePartition: the pair count
+    # needs no exchange and a merge is one job
+    parts = max(1, math.ceil(probe["rows"] / _ROWS_PER_TASK))
+    segs = segs.coalesce(parts)
     merges: list[tuple[str, str, int]] = []
     since_ckpt = 0
     for _ in range(n_merges):
         # checkpoint only when a merge is about to read the folds: a
         # checkpoint after the last merge would be read by nothing
         if since_ckpt >= checkpoint_every:
-            segs = segs.localCheckpoint(eager=True)
+            segs = segs.localCheckpoint(eager=True).coalesce(parts)
             since_ckpt = 0
         top = (
-            segs.select(
-                "_n",
-                F.explode(
-                    F.zip_with(
-                        F.slice(F.col("_syms"), 1, F.size("_syms") - 1),
-                        F.slice(F.col("_syms"), 2, F.size("_syms") - 1),
-                        lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-                    )
-                ).alias("_p"),
-            )
+            segs.selectExpr("_n", _PAIRS_SQL)
             .groupBy("_p")
             .agg(F.sum("_n").alias("n"))
             .orderBy(F.desc("n"), F.asc("_p.a"), F.asc("_p.b"))
@@ -257,9 +286,7 @@ def learn_bpe_merges(
             break
         a, b, n = top[0]["_p"]["a"], top[0]["_p"]["b"], int(top[0]["n"])
         merges.append((a, b, n))
-        segs = segs.select(
-            "_n", _merge_pair_in_syms(F.col("_syms"), a, b).alias("_syms")
-        )
+        segs = segs.selectExpr("_n", _merge_sql(a, b))
         since_ckpt += 1
     return merges
 

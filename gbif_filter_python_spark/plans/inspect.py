@@ -26,13 +26,28 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     )
 
 
+def _bracket_items(text: str) -> list[str]:
+    """The top-level comma-separated items of ``text``, up to the
+    bracket that closes the one just before it."""
+    items, depth = [""], 0
+    for ch in text:
+        depth += (ch in "([") - (ch in ")]")
+        if depth < 0:
+            break
+        if depth == 0 and ch == ",":
+            items.append("")
+        else:
+            items[-1] += ch
+    return items
+
+
 def pushed_filters(df: DataFrame) -> list[str]:
-    """All PushedFilters entries across the plan's file scans."""
+    """All PushedFilters entries across the plan's file scans, one
+    per filter (``LessThan(doc_id,120)``, ``In(k, [1,2])``)."""
     text = explain_str(df, "formatted")
     out: list[str] = []
-    for m in re.finditer(r"PushedFilters: \[([^\]]*)\]", text):
-        if m.group(1).strip():
-            out.extend(s.strip() for s in m.group(1).split(","))
+    for m in re.finditer(r"PushedFilters: \[", text):
+        out.extend(s.strip() for s in _bracket_items(text[m.end():]) if s.strip())
     return out
 
 
@@ -54,7 +69,9 @@ def broadcast_hint_count(df: DataFrame) -> int:
 
 
 def codegen_stage_count(df: DataFrame) -> int:
-    return len(re.findall(r"WholeStageCodegen", explain_str(df, "simple")))
+    """Number of whole-stage-codegen stages: the distinct ``*(n)``
+    stage markers of the final 'simple' plan."""
+    return len(set(re.findall(r"\*\((\d+)\) ", final_plan(df))))
 
 
 def assert_no_cartesian(df: DataFrame) -> None:
@@ -107,15 +124,7 @@ def node_args(plan: str, operator: str) -> list[list[str]]:
             continue
         spec = node.partition("windowspecdefinition")[2] or node
         at = re.search(r"[(\[]", spec.split(", ")[0])
-        keys, depth = [""], 0
-        for ch in spec[at.end():] if at else "":
-            depth += (ch in "([") - (ch in ")]")
-            if depth < 0:
-                break
-            if depth == 0 and ch == ",":
-                keys.append("")
-            else:
-                keys[-1] += ch
+        keys = _bracket_items(spec[at.end():]) if at else []
         keys = [re.sub(r"#\d+L?| NULLS (FIRST|LAST)", "", k).strip() for k in keys]
         out.append([k for k in keys if k and not k.isdigit()
                     and not k.startswith("specifiedwindowframe")])

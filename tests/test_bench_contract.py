@@ -251,6 +251,21 @@ def test_bench_out_default_is_cpu_suffixed(spark, monkeypatch):
     assert bench._bench_cpus(spark) == 4  # the suite's local[4]
 
 
+def test_scale_artifact_records_the_session_parallelism(spark, monkeypatch):
+    """The scale ladder's ``cpus`` is the session's default
+    parallelism, as in bench.py, not an environment variable read
+    with 32 as a guess."""
+    from tools.bench_scale import scale_payload
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    payload = scale_payload(
+        spark, {"sf0.1": {"q": 2.0}, "sf10": {"q": 30.0}},
+        {"sf0.1": {"q": 5}, "sf10": {"q": 50}},
+    )
+    assert payload["cpus"] == 4  # the suite's local[4]
+    assert payload["ratios"] == {"sf10/sf0.1": {"q": 15.0}}
+
+
 def test_movers_skip_a_prev_artifact_without_cpus(tmp_path, monkeypatch):
     """A previous artifact that does not record its core count is not
     compared against, and the skip says why."""

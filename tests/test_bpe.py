@@ -9,13 +9,17 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from gbif_filter_python_spark.operators import bpe
 from gbif_filter_python_spark.operators.bpe import (
     _encode_word_py,
     bpe_token_counts,
     learn_bpe_merges,
     ref_learn_bpe as _ref_learn,
+    ref_merge_pair,
     ref_words as _ref_words,
 )
+from gbif_filter_python_spark.plans.inspect import jobs_run
+from tests.conftest import session_conf
 
 
 TEXTS = [
@@ -62,8 +66,6 @@ class TestLearnBpeMerges:
         the 4th merge would be read by nothing: the run launches as
         many jobs as one whose cadence never comes round, and learns
         the same merges."""
-        from gbif_filter_python_spark.plans.inspect import jobs_run
-
         def run(every):
             got = []
             jobs = jobs_run(spark, lambda: got.extend(learn_bpe_merges(
@@ -73,6 +75,47 @@ class TestLearnBpeMerges:
         merges, jobs = run(4)
         assert len(merges) == 4
         assert (merges, jobs) == run(5)
+
+    def test_one_job_per_merge_on_a_one_task_table(self, spark, docs):
+        """A distinct-word table that fits one task is read back as one
+        partition, so the pair count needs no exchange: k merges launch
+        the distinct-word shuffle and checkpoint, one job per merge and
+        the re-checkpoints the merges read."""
+        with session_conf(spark, 4, True):
+            for k, every in ((1, 4), (6, 4), (9, 2)):
+                got = []
+                jobs = jobs_run(spark, lambda: got.extend(learn_bpe_merges(
+                    docs, n_merges=k, checkpoint_every=every)))
+                assert got == _ref_learn(TEXTS, n_merges=k)
+                assert jobs == 2 + k + (k - 1) // every, (k, every, jobs)
+
+    def test_multi_partition_path_learns_the_same_merges(
+        self, spark, docs, monkeypatch
+    ):
+        """Above the per-task bound the table keeps its partitions and
+        each merge pays the pair-count exchange: a second job per
+        merge, the same merges."""
+        monkeypatch.setattr(bpe, "_ROWS_PER_TASK", 1)
+        no_coalesce = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+        with session_conf(spark, 4, True, no_coalesce):
+            got = []
+            jobs = jobs_run(spark, lambda: got.extend(learn_bpe_merges(
+                docs, n_merges=6)))
+        assert got == _ref_learn(TEXTS, n_merges=6)
+        assert jobs == 2 + 2 * 6 + (6 - 1) // 4
+
+    @pytest.mark.parametrize("a, b", [
+        ("a'", "\\"), ("\\", "\\"), ("\\", "'"), ("'", "'"), ("b", "a'"),
+    ])
+    def test_merge_step_binds_quotes_and_backslashes(self, spark, a, b):
+        """The SQL merge step quotes its pair: symbols with ``'`` and
+        ``\\`` merge exactly as the reference fold does."""
+        syms = ["a'", "\\", "b", "a'", "\\", "\\", "\\", "'", "'", "'"]
+        row = spark.createDataFrame(
+            [(1, syms)], "_n long, _syms array<string>"
+        ).selectExpr("_n", bpe._merge_sql(a, b)).collect()[0]
+        assert row["_syms"] == ref_merge_pair(syms, a, b)
+        assert row["_syms"] != syms
 
     def test_deterministic_across_partitionings(self, spark, docs):
         a = learn_bpe_merges(docs, n_merges=8)
@@ -115,6 +158,18 @@ class TestLearnBpeMerges:
             TEXTS[r["doc_id"]] for r in explicit.select("doc_id").collect()
         ]
         assert got == _ref_learn(kept_texts, n_merges=8)
+
+
+def test_q_bpe_learn_result_dtypes(spark, sf001_dir):
+    """The registry row keeps its schema and its pandas dtypes when
+    built through Arrow: 16 (step int32, match bool) rows, all
+    matching the reference trainer."""
+    import __spark_entry__ as entrymod
+
+    got = entrymod.q_bpe_learn(spark, sf001_dir).toPandas()
+    assert got.dtypes.astype(str).to_dict() == {"step": "int32", "match": "bool"}
+    assert got["step"].tolist() == list(range(16))
+    assert got["match"].all()
 
 
 class TestBpeTokenCounts:

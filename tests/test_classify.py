@@ -227,6 +227,24 @@ class TestBigramLM:
         # sanity: the probe does see real actions
         assert jobs_run(spark, built[0].count) > 0
 
+    def test_unigram_branch_builds_the_bucket_array_once(
+        self, spark, sf001_dir
+    ):
+        """No filter inferred from the token explode reaches below the
+        bucket-array projection, where it would build the array again
+        per conjunct: the plan's one Filter is the null filter over
+        the generator's output."""
+        from gbif_filter_python_spark.plans.inspect import (
+            explain_str,
+            node_count,
+        )
+
+        docs = spark.read.parquet(f"{sf001_dir}/documents.parquet")
+        uni, _ = lm_train_bigram(docs, num_buckets=B)
+        plan = explain_str(uni, "simple")
+        assert node_count(plan, "Filter") == 1, plan
+        assert node_count(plan, "Filter isnotnull(bucket") == 1, plan
+
 
 class TestMd5Bucket:
     def test_matches_duckdb(self, spark):

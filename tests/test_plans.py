@@ -38,6 +38,15 @@ def test_filter_pushdown_reaches_scan(lineitem):
     assert any("l_quantity" in p for p in pushed), pushed
 
 
+def test_pushed_filters_keep_multi_argument_filters_whole(lineitem):
+    df = lineitem.filter(
+        F.col("l_linenumber").isin(1, 2) & (F.col("l_orderkey") < 120)
+    )
+    pushed = pushed_filters(df)
+    assert "LessThan(l_orderkey,120)" in pushed, pushed
+    assert "In(l_linenumber, [1,2])" in pushed, pushed
+
+
 def test_column_pruning_reaches_scan(lineitem):
     df = lineitem.select("l_orderkey", "l_quantity")
     text = explain_str(df, "formatted")
@@ -176,9 +185,7 @@ def test_agg_has_map_side_combine(lineitem):
 def test_codegen_present_after_execution(lineitem):
     df = lineitem.groupBy("l_returnflag").agg(F.sum("l_quantity"))
     df.count()  # materialize so AQE finalizes the plan
-    assert codegen_stage_count(df) >= 1 or "HashAggregate" in explain_str(
-        df, "simple"
-    )
+    assert codegen_stage_count(df) >= 1, explain_str(df, "simple")
 
 
 def test_partitioned_snapshot_prunes_country(spark, occurrence, tmp_path):

@@ -217,7 +217,7 @@ def test_jpeg_features_doc_cap_reaches_parquet_scan(spark, sf001_dir):
 
     with session_conf(spark, 8, True):
         df = entrymod.q_jpeg_features(spark, sf001_dir)
-        assert "LessThan(doc_id,120)" in ",".join(pushed_filters(df))
+        assert "LessThan(doc_id,120)" in pushed_filters(df)
 
 
 def test_jpeg_dedup_pipeline_pixels_never_reach_a_shuffle(

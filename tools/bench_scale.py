@@ -40,6 +40,26 @@ HEAVY = [
 ]
 
 
+def scale_payload(spark, results: dict, rows: dict) -> dict:
+    """The artifact: per-rung timings and rows, each later rung's
+    ratios to the first, and the session's default parallelism."""
+    ratios = {}
+    base, *rest = list(results)
+    for lab in rest:
+        ratios[f"{lab}/{base}"] = {
+            q: round(results[lab][q] / max(results[base][q], 1e-9), 2)
+            for q in results[base]
+        }
+    return {
+        "metric": "scale_bench",
+        "unit": "sec",
+        "timings": results,
+        "rows": rows,
+        "ratios": ratios,
+        "cpus": spark.sparkContext.defaultParallelism,
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default="BENCH_sf3_r05.json")
@@ -84,23 +104,7 @@ def main() -> None:
             print(f"{label:8s} {name:24s} {dt:9.3f}s  {n} rows",
                   file=sys.stderr, flush=True)
 
-    labels = list(results)
-    ratios = {}
-    if len(labels) >= 2:
-        base, *rest = labels
-        for lab in rest:
-            ratios[f"{lab}/{base}"] = {
-                q: round(results[lab][q] / max(results[base][q], 1e-9), 2)
-                for q in args.queries
-            }
-    payload = {
-        "metric": "scale_bench",
-        "unit": "sec",
-        "timings": results,
-        "rows": rows,
-        "ratios": ratios,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-    }
+    payload = scale_payload(spark, results, rows)
     with open(args.out, "w") as fh:
         json.dump(payload, fh, indent=1)
     print(json.dumps({"wrote": args.out}))
