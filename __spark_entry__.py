@@ -3501,8 +3501,10 @@ def q_bpe_token_counts(spark: SparkSession, sf: str) -> DataFrame:
         words = ref_words(r["text"])
         n_tokens = sum(len(_encode_word_py(w, ranks)) for w in words)
         ref_rows.append((r["doc_id"], len(words), n_tokens))
+    # through Arrow, as in q_bpe_learn: no Python-worker job
     ref_df = spark.createDataFrame(
-        ref_rows, "doc_id long, ref_words long, ref_tokens long"
+        pd.DataFrame(ref_rows, columns=["doc_id", "ref_words", "ref_tokens"]),
+        "doc_id long, ref_words long, ref_tokens long",
     )
     return spark_counts.join(F.broadcast(ref_df), "doc_id").select(
         "doc_id",

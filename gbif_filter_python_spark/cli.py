@@ -15,7 +15,7 @@ import argparse
 import logging
 import sys
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 
 from gbif_filter_python_spark.config import ConfigError, FilterConfig
 from gbif_filter_python_spark.engine import OccurrenceEngine
@@ -113,12 +113,14 @@ def main(argv: list[str] | None = None) -> int:
     provider = ParquetSnapshotProvider(
         spark, extra["taxonomy_path"], extra["occurrence_path"]
     )
-    engine = OccurrenceEngine(provider.taxonomy(), provider.occurrences())
+    # Tag counts ride on the output's own job: no extra pass.
+    outcome = Observation("gbif_filter_outcome")
 
     role_cols = [
         c for c in (cfg.name_column, cfg.taxid_column, cfg.rank_column) if c
     ]
     try:
+        engine = OccurrenceEngine(provider.taxonomy(), provider.occurrences())
         if args.pandas_parity_output:
             # Golden-diff mode: (a) pandas is case-sensitive about
             # duplicate headers (the reference input carries both `X`
@@ -144,7 +146,9 @@ def main(argv: list[str] | None = None) -> int:
                 taxa = taxa.withColumn(
                     "__row_order", F.monotonically_increasing_id()
                 )
-                out = engine.run_filter(taxa, cfg, tag_mode=args.tag)
+                out = engine.run_filter(
+                    taxa, cfg, tag_mode=args.tag, observation=outcome
+                )
                 out = out.orderBy("__row_order").drop("__row_order")
                 write_csv_pandas_parity(
                     out, args.output, sep=cfg.sep, na_rep=args.na_rep
@@ -155,12 +159,19 @@ def main(argv: list[str] | None = None) -> int:
             taxa = read_taxa_csv(
                 spark, args.input, sep=cfg.sep, role_columns=role_cols
             )
-            out = engine.run_filter(taxa, cfg, tag_mode=args.tag)
+            out = engine.run_filter(
+                taxa, cfg, tag_mode=args.tag, observation=outcome
+            )
             write_csv(out, args.output, sep=cfg.sep)
     except Exception as e:  # surface a one-line error, not a Spark trace
         logger.error("pipeline failed: %s", str(e).splitlines()[0])
         return 1
-    logger.info("wrote %s", args.output)
+    counts = outcome.get
+    logger.info(
+        "wrote %s: %d input rows, tag true %d, false %d, null %d",
+        args.output, counts["rows"], counts["tagged_true"],
+        counts["tagged_false"], counts["tagged_null"],
+    )
     return 0
 
 

@@ -14,10 +14,17 @@ one scalar taxid (SURVEY.md §1.4).
     existence tag (broadcast zone keys) → conditional expansion
     (left-join chain + semi-join + collect) → tag/filter mode → sink
 
-The tag probe and the expansion's child semi-join broadcast the same
-``occurrence_keys`` plan, so at runtime AQE builds that exchange once
-(the second use reads it as ``ReusedExchange``) and the fact is
-scanned once per request.
+The taxa rows stream through every join and never shuffle whole: the
+distinct (name, rank) aggregation is their only exchange, plus the
+distinct parents of an expansion. The resolution lookup and the
+expansion arrays join back as broadcasts when the taxa (plus the
+taxonomy, for the arrays) fit ``spark.sql.autoBroadcastJoinThreshold``
+(``plans.inspect.fits_broadcast``); past it they stay unhinted and AQE
+decides. The tag probe and the expansion's child semi-join broadcast
+the same ``occurrence_keys`` plan, so at runtime AQE builds that
+exchange once (the second use reads it as ``ReusedExchange``) and the
+fact is scanned once per request; the expansion's hops likewise share
+one taxonomy-level broadcast.
 """
 
 from __future__ import annotations
@@ -42,6 +49,7 @@ from gbif_filter_python_spark.operators.tagging import (
     quoted,
     tag_existence,
 )
+from gbif_filter_python_spark.plans.inspect import fits_broadcast
 
 
 class OccurrenceEngine:
@@ -174,10 +182,15 @@ class OccurrenceEngine:
                 zone_occurrence_keys=occurrence_keys(occ_zone),
                 habitat=cfg.habitat,
             )
-            # No broadcast hint on the arrays join: |arrays| grows with
-            # distinct parents × children (family-level inputs over the
-            # full backbone could exceed the broadcast cap). AQE picks
-            # broadcast at runtime when the side is actually small.
+            # arrays has one row per distinct parent (a taxa row) and
+            # its children are taxonomy rows, so taxa plus taxonomy
+            # bound it. Spark sizes it as a product of joins and would
+            # shuffle the taxa for a sort-merge join that AQE then
+            # demotes; hint it when the bound fits the broadcast
+            # threshold. Family-level inputs over a full backbone do
+            # not fit and stay unhinted; AQE decides at runtime.
+            if fits_broadcast(taxa, self.taxonomy):
+                arrays = F.broadcast(arrays)
             tagged = tagged.join(
                 arrays,
                 tagged[KEY_COL].eqNullSafe(arrays["parent"]) & eligible,

@@ -58,8 +58,11 @@ def descend_to_rank(
     ck); a path extends only from a node whose rank is not the target,
     so it ends at its first target-rank node and holds at most one hit.
     Every level joins the same taxonomy projection, so the levels share
-    one broadcast of it at runtime instead of each hop re-deriving the
-    joins before it. For unbounded hierarchies
+    one broadcast of it at runtime (one BroadcastExchange and
+    ``max_hops - 1`` ReusedExchange nodes) instead of each hop
+    re-deriving the joins before it; the result's filter reads the last
+    hop's ``_next`` so the optimizer cannot narrow that hop's
+    projection out of the shared one. For unbounded hierarchies
     this would need checkpointing or Spark 4 recursive CTEs (SURVEY.md
     §7.4) — the reference only ever needs ≤ 2 hops (§2-D).
     """
@@ -111,9 +114,14 @@ def descend_to_rank(
         paths = paths.join(level, F.col(tip) == F.col(f"_up{k}"), "left")
         tip = f"_next{k}"
     hit = F.coalesce(*[F.col(f"_hit{k}") for k in range(max_hops)])
+    # A hit node is at the target rank, so its _next is NULL and the
+    # second conjunct keeps every hit row. It reads the last hop's
+    # _next, which the optimizer would otherwise prune, leaving that
+    # hop a narrower projection that cannot reuse the shared level
+    # broadcast.
     return (
-        paths.select(F.col("_root").alias("parent"), hit.alias("_hit"))
-        .filter(F.col("_hit").isNotNull())
+        paths.filter(hit.isNotNull() & F.col(tip).isNull())
+        .select(F.col("_root").alias("parent"), hit.alias("_hit"))
         .select("parent", "_hit.child_key", "_hit.child_name")
     )
 

@@ -17,6 +17,7 @@ documented cost of exactness.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -2987,9 +2988,12 @@ def weighted_quantiles(
         F.col("v").isNotNull() & F.col("w").isNotNull() & (F.col("w") > 0)
     )
     cum = prefix_sums(base, ["v"], ["w"])
-    spark = df.sparkSession
+    # A pandas frame goes through Arrow to a local relation; a list of
+    # tuples would run a Python-worker job when the join reads it.
     qf = F.broadcast(
-        spark.createDataFrame([(float(q),) for q in qs], "q double")
+        df.sparkSession.createDataFrame(
+            pd.DataFrame({"q": [float(q) for q in qs]}), "q double"
+        )
     )
     return (
         cum.join(qf, F.col("_cumw") >= F.col("q") * F.col("_totw"))
@@ -3131,10 +3135,13 @@ def grouped_quantiles(
     ).filter(F.col("v").isNotNull())
     ranked = prefix_sums(base, ["v"], ["_one"], ["grp"])
 
-    spark = df.sparkSession
     fracs = [(float(q), *Fraction(str(q)).as_integer_ratio()) for q in qs]
+    # Through Arrow, as in weighted_quantiles: no Python worker.
     qf = F.broadcast(
-        spark.createDataFrame(fracs, "q double, _p long, _d long")
+        df.sparkSession.createDataFrame(
+            pd.DataFrame(fracs, columns=["q", "_p", "_d"]),
+            "q double, _p long, _d long",
+        )
     )
     # k = ceil(n * p / d) = floor((n*p + d - 1) / d), capped at n >= 1
     k = F.greatest(

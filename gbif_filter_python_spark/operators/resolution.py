@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gbif_filter_python_spark.config import FilterConfig
+from gbif_filter_python_spark.plans.inspect import fits_broadcast
 
 #: Names of the derived columns this operator appends.
 KEY_COL = "gbif_key"
@@ -90,8 +91,10 @@ def resolve_names(
     Plan shape: distinct (name, rank) pairs of the rows that need a
     lookup → left join taxonomy → ambiguity collapse (grouped on the
     distinct's own partitioning, so no second shuffle) → join back on
-    the pair. Trusted-taxid and null-role rows never reach the lookup:
-    their key and rank are per-row expressions.
+    the pair, broadcast when the taxa input fits the broadcast
+    threshold, so the distinct is the only exchange over the taxa.
+    Trusted-taxid and null-role rows never reach the lookup: their key
+    and rank are per-row expressions.
     """
     taxa_r = _role_columns(taxa, cfg)
 
@@ -155,10 +158,14 @@ def resolve_names(
     )
 
     # Join resolution back to every by-name row (null-safe on rank).
-    # No broadcast hint: the lookup is |distinct names| — tiny for
-    # typical inputs (AQE broadcasts it at runtime), but it scales with
-    # the input's name cardinality, so forcing a broadcast would cap
-    # the engine at ~8 GB of distinct names.
+    # The lookup has at most one row per input row, so the taxa input
+    # bounds it. Spark sizes it as the product of the join under it and
+    # plans a sort-merge join that shuffles every taxa row before AQE
+    # turns it into a broadcast, so hint it whenever that bound fits
+    # the broadcast threshold. Past the threshold (names scale with the
+    # input) the join stays unhinted and AQE decides at runtime.
+    if fits_broadcast(taxa):
+        lookup = F.broadcast(lookup)
     out = taxa_r.join(
         lookup,
         on=[

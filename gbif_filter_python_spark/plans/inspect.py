@@ -7,7 +7,8 @@ inside WholeStageCodegen, and nothing should go cartesian. These
 helpers expose those properties so tests/benchmarks can enforce them
 instead of eyeballing ``df.explain()``. :func:`jobs_run` does the same
 for the number of Spark jobs a piece of driver code launches — at
-small scale the cost of a query.
+small scale the cost of a query. :func:`fits_broadcast` is the one
+plan-time size guard the engine puts on a broadcast hint.
 """
 
 from __future__ import annotations
@@ -66,6 +67,24 @@ def broadcast_hint_count(df: DataFrame) -> int:
     """
     plan = df._jdf.queryExecution().analyzed().toString()  # type: ignore[attr-defined]
     return plan.count("ResolvedHint")
+
+
+def fits_broadcast(*bounds: DataFrame) -> bool:
+    """Whether the summed ``stats().sizeInBytes`` of the ``bounds``'
+    optimized plans is within the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (never when it is -1).
+
+    The caller passes plans whose size provably bounds the side it
+    means to hint, so a hint stays under the same cap Spark's own
+    broadcast planning uses. Only the optimizer runs; no Spark job.
+    """
+    jspark = bounds[0].sparkSession._jsparkSession  # type: ignore[attr-defined]
+    limit = jspark.sessionState().conf().autoBroadcastJoinThreshold()
+    size = sum(
+        int(b._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())  # type: ignore[attr-defined]
+        for b in bounds
+    )
+    return 0 <= size <= limit
 
 
 def codegen_stage_count(df: DataFrame) -> int:

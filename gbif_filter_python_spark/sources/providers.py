@@ -31,6 +31,7 @@ from typing import Protocol
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from gbif_filter_python_spark.config import Country, Polygon, Zone
 from gbif_filter_python_spark.schemas import (
@@ -76,12 +77,69 @@ class InteractionSource(Protocol):
     def interaction_names(self) -> DataFrame: ...
 
 
+class SnapshotSchemaError(ValueError):
+    """A parquet snapshot lacks a column of its canonical schema, or
+    holds no data file to check."""
+
+
+def _read_canonical_parquet(
+    spark: SparkSession, path: str, schema: StructType
+) -> DataFrame:
+    """``path`` read with the canonical ``schema``, checked against one
+    data file's footer.
+
+    A given schema saves the schema-inference job a plain
+    ``spark.read.parquet`` runs, but Spark would read a column the
+    files lack as NULLs. So the first data file's parquet footer is
+    read on the driver (no Spark job), and a canonical column that is
+    neither in it nor the name of a ``name=value`` directory on that
+    file's path (a partition column) raises
+    :class:`SnapshotSchemaError`. Names compare the way the session's
+    ``spark.sql.caseSensitive`` makes Spark match them.
+    """
+    df = spark.read.schema(schema).parquet(path)
+    files = df._jdf.inputFiles()  # the reader's listing; no job
+    if len(files) == 0:
+        raise SnapshotSchemaError(f"{path}: no parquet data file")
+    jvm = spark._jvm
+    first = jvm.org.apache.hadoop.fs.Path(files[0])
+    # One py4j round trip for the whole schema: its text form has one
+    # "  <repetition> <type> <name>..." line per top-level column.
+    message = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        spark._jsparkSession.sessionState().newHadoopConf(), first
+    ).getFileMetaData().getSchema().toString()
+    present = {
+        line.split()[2].rstrip(";")
+        for line in message.splitlines()
+        if line.startswith("  ") and not line.startswith("   ")
+    }
+    dirs = first.toUri().getPath().split("/")[:-1]
+    present |= {d.split("=", 1)[0] for d in dirs if "=" in d}
+    sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+    fold = str if sensitive else str.lower
+    present = {fold(n) for n in present}
+    missing = [f.name for f in schema if fold(f.name) not in present]
+    if missing:
+        raise SnapshotSchemaError(
+            f"{path}: snapshot lacks canonical column(s) {missing} "
+            f"(checked {files[0]})"
+        )
+    return df
+
+
 class ParquetSnapshotProvider:
     """Both sources from parquet snapshots — the scale path.
 
     At cluster scale the occurrence snapshot should be partitioned by
     ``country`` and bucketed by ``taxon_key`` so zone predicates
     partition-prune and existence probes co-locate (SURVEY.md §4.3).
+
+    ``taxonomy()`` and ``occurrences()`` read with the canonical
+    schemas (schemas.TAXONOMY_SCHEMA / OCCURRENCE_SCHEMA) through
+    :func:`_read_canonical_parquet`: no schema-inference job, and a
+    snapshot missing a canonical column raises
+    :class:`SnapshotSchemaError` when it is read instead of reading
+    that column as NULLs. The interaction tables keep inference.
     """
 
     def __init__(
@@ -101,12 +159,16 @@ class ParquetSnapshotProvider:
     def taxonomy(self) -> DataFrame:
         if not self.taxonomy_path:
             raise ValueError("taxonomy_path not configured")
-        return self.spark.read.parquet(self.taxonomy_path)
+        return _read_canonical_parquet(
+            self.spark, self.taxonomy_path, TAXONOMY_SCHEMA
+        )
 
     def occurrences(self) -> DataFrame:
         if not self.occurrence_path:
             raise ValueError("occurrence_path not configured")
-        return self.spark.read.parquet(self.occurrence_path)
+        return _read_canonical_parquet(
+            self.spark, self.occurrence_path, OCCURRENCE_SCHEMA
+        )
 
     def interactions(self) -> DataFrame:
         if not self.interaction_path:

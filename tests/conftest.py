@@ -149,6 +149,36 @@ def occurrence(spark):
     return spark.createDataFrame(OCCURRENCE_ROWS, OCCURRENCE_SCHEMA).cache()
 
 
+@pytest.fixture()
+def snapshot_engine(spark, taxonomy, occurrence, tmp_path):
+    """The CLI's inputs on disk: a taxonomy parquet file, a
+    country-partitioned occurrence snapshot and a taxa CSV. File-backed
+    plans carry real size statistics, which the broadcast guard reads.
+    Returns ``(engine, taxa)``."""
+    from gbif_filter_python_spark import OccurrenceEngine
+    from gbif_filter_python_spark.sources.io import (
+        read_taxa_csv,
+        write_occurrence_snapshot,
+    )
+    from gbif_filter_python_spark.sources.providers import (
+        ParquetSnapshotProvider,
+    )
+
+    taxonomy.write.parquet(str(tmp_path / "taxonomy"))
+    write_occurrence_snapshot(occurrence, str(tmp_path / "occurrence"))
+    (tmp_path / "taxa.csv").write_text(
+        "id,name,rank\n1,Lumbricus,GENUS\n2,Lumbricidae,FAMILY\n"
+        "3,Eisenia fetida,NA\n4,Lumbricus terrestris,SPECIES\n"
+        "5,Eisenia nullius,SPECIES\n6,Nonexistent name,SPECIES\n"
+    )
+    provider = ParquetSnapshotProvider(
+        spark, str(tmp_path / "taxonomy"), str(tmp_path / "occurrence"))
+    engine = OccurrenceEngine(provider.taxonomy(), provider.occurrences())
+    taxa = read_taxa_csv(spark, str(tmp_path / "taxa.csv"),
+                         role_columns=["name", "rank"])
+    return engine, taxa
+
+
 #: WKT covering south Norway in the fixture grid.
 NORWAY_ISH_WKT = "POLYGON((5 58, 12 58, 12 62, 5 62, 5 58))"
 

@@ -74,11 +74,15 @@ def input_csv(tmp_path) -> str:
 
 
 class TestCli:
-    def test_tag_mode_end_to_end(self, snapshots, tmp_path, input_csv):
+    def test_tag_mode_end_to_end(self, snapshots, tmp_path, input_csv,
+                                 caplog):
         tax, occ = snapshots
         cfg = _write_config(tmp_path, tax, occ)
         out = str(tmp_path / "out_tag")
-        assert cli_main(["--tag", cfg, input_csv, out]) == 0
+        with caplog.at_level("INFO", logger="gbif_filter_python_spark"):
+            assert cli_main(["--tag", cfg, input_csv, out]) == 0
+        # the run's outcome, observed on the write's own job
+        assert "4 input rows, tag true 1, false 1, null 2" in caplog.text
         rows = _read_csv_rows(out)
         assert len(rows) == 4
         by_id = {r["id"]: r for r in rows}
@@ -718,6 +722,73 @@ class TestInteractionSource:
             ParquetSnapshotProvider(spark).interactions()
         with pytest.raises(ValueError, match="interaction_name_path"):
             ParquetSnapshotProvider(spark).interaction_names()
+
+
+class TestParquetSnapshotProvider:
+    """taxonomy() and occurrences() read with the canonical schemas:
+    no schema-inference job, and a snapshot missing a canonical column
+    raises a named error instead of reading it as NULLs."""
+
+    @staticmethod
+    def _types(schema):
+        return {f.name: f.dataType for f in schema}
+
+    def test_reads_run_no_job_and_keep_the_canonical_schema(
+        self, spark, taxonomy, occurrence, tmp_path
+    ):
+        from gbif_filter_python_spark.plans.inspect import jobs_run
+        from gbif_filter_python_spark.schemas import (
+            OCCURRENCE_SCHEMA,
+            TAXONOMY_SCHEMA,
+        )
+        from gbif_filter_python_spark.sources.io import (
+            write_occurrence_snapshot,
+        )
+        from gbif_filter_python_spark.sources.providers import (
+            ParquetSnapshotProvider,
+        )
+
+        taxonomy.write.parquet(str(tmp_path / "taxonomy"))
+        occurrence.write.parquet(str(tmp_path / "flat"))
+        write_occurrence_snapshot(occurrence, str(tmp_path / "by_country"))
+        prov = ParquetSnapshotProvider(
+            spark, str(tmp_path / "taxonomy"), str(tmp_path / "by_country"))
+        flat = ParquetSnapshotProvider(
+            spark, occurrence_path=str(tmp_path / "flat"))
+        assert jobs_run(spark, prov.taxonomy) == 0
+        assert jobs_run(spark, prov.occurrences) == 0
+        assert jobs_run(spark, flat.occurrences) == 0
+        tax = prov.taxonomy()
+        assert tax.columns == taxonomy.columns
+        assert self._types(tax.schema) == self._types(TAXONOMY_SCHEMA)
+        assert sorted(tax.collect()) == sorted(taxonomy.collect())
+        # The partition column comes last, as partition discovery put it.
+        for occ in (prov.occurrences(), flat.occurrences()):
+            assert self._types(occ.schema) == self._types(OCCURRENCE_SCHEMA)
+            cols = occurrence.columns
+            assert sorted(occ.select(*cols).collect()) == sorted(
+                occurrence.collect())
+
+    def test_missing_canonical_column_raises_named_error(
+        self, spark, taxonomy, tmp_path
+    ):
+        """Without the footer check, the given schema would read the
+        missing habitat as NULL and an expansion with a habitat filter
+        would silently find no child (inference failed the run with
+        UNRESOLVED_COLUMN instead)."""
+        from gbif_filter_python_spark.sources.providers import (
+            ParquetSnapshotProvider,
+            SnapshotSchemaError,
+        )
+
+        path = str(tmp_path / "taxonomy")
+        taxonomy.drop("habitat").write.parquet(path)
+        with pytest.raises(SnapshotSchemaError, match="habitat"):
+            ParquetSnapshotProvider(spark, path).taxonomy()
+        empty = tmp_path / "empty"
+        empty.mkdir()
+        with pytest.raises(SnapshotSchemaError, match="no parquet data file"):
+            ParquetSnapshotProvider(spark, str(empty)).taxonomy()
 
 
 class TestOrcIo:

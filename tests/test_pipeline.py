@@ -13,7 +13,12 @@ from pyspark.sql import Row
 
 from gbif_filter_python_spark import Country, FilterConfig, OccurrenceEngine, Polygon
 from gbif_filter_python_spark.config import ConfigError, resolve_zone
-from tests.conftest import NORWAY_ISH_WKT, REFERENCE_TEST_DIR, requires_reference
+from tests.conftest import (
+    NORWAY_ISH_WKT,
+    REFERENCE_TEST_DIR,
+    requires_reference,
+    session_conf,
+)
 
 
 def _taxa(spark, rows):
@@ -322,6 +327,35 @@ class TestObservation:
         got = obs.get
         assert got == {"rows": 5, "tagged_true": 1, "tagged_false": 2,
                        "tagged_null": 2}
+
+    def test_expansion_metrics_match_output_at_no_extra_job(
+        self, spark, snapshot_engine, tmp_path
+    ):
+        """The CLI's path with resolve_to_rank: the observed tagged
+        frame feeds both the output and the expansion's parents branch,
+        yet the counts equal the output's tags and the write launches
+        no more jobs than the same write without the observation."""
+        from pyspark.sql import Observation
+
+        from gbif_filter_python_spark.plans.inspect import jobs_run
+        from gbif_filter_python_spark.sources.io import write_csv
+
+        engine, taxa = snapshot_engine
+        cfg = FilterConfig(name_column="name", rank_column="rank",
+                           taxa_kingdom="Animalia", zone=Country("NO"),
+                           resolve_to_rank="SPECIES")
+        obs = Observation("gbif_filter_expansion")
+        with session_conf(spark, 4, True):
+            plain = jobs_run(spark, lambda: write_csv(
+                engine.run_filter(taxa, cfg), str(tmp_path / "plain")))
+            out = engine.run_filter(taxa, cfg, observation=obs)
+            observed = jobs_run(spark, lambda: write_csv(
+                out, str(tmp_path / "observed")))
+            tags = _tags(out)
+        assert observed <= plain
+        assert tags == [True, True, True, True, False, None]
+        assert obs.get == {"rows": 6, "tagged_true": 4, "tagged_false": 1,
+                           "tagged_null": 1}
 
 
 class TestLineage:
