@@ -6275,7 +6275,7 @@ def q_retrieval_eval(spark: SparkSession, sf: str) -> DataFrame:
     with the query doc" — per-query precision/recall/MRR@10. The
     join is k-bounded per query; reciprocals of small integers pin
     cross-engine at 6dp."""
-    from gbif_filter_python_spark.functions.text import normalized_text
+    from gbif_filter_python_spark.functions.text import words
     from gbif_filter_python_spark.operators.ranking import (
         bm25_top_docs,
         retrieval_metrics,
@@ -6293,11 +6293,8 @@ def q_retrieval_eval(spark: SparkSession, sf: str) -> DataFrame:
         F.col("rank") <= 10
     )
     raw_words = docs.select(
-        "doc_id",
-        F.explode(
-            F.split(normalized_text(F.col("text")), " ")
-        ).alias("term"),
-    ).filter(F.col("term") != "")
+        "doc_id", F.explode(words(F.col("text"))).alias("term")
+    )
     qw = raw_words.filter(F.col("doc_id") < 3).select(
         F.col("doc_id").alias("query_id"), "term"
     ).distinct()
@@ -6307,11 +6304,11 @@ def q_retrieval_eval(spark: SparkSession, sf: str) -> DataFrame:
     # the dedup shuffle carries query-vocabulary pairs instead of the
     # whole corpus (optimization r14, guide §3.2; the query-term set
     # is bounded by 3 documents, broadcastable by construction).
-    words = raw_words.join(
+    doc_terms = raw_words.join(
         F.broadcast(qw.select("term").distinct()), "term", "left_semi"
     ).distinct()
     qrels = (
-        qw.join(words, "term")
+        qw.join(doc_terms, "term")
         .filter(F.col("doc_id") != F.col("query_id"))
         .groupBy("query_id", "doc_id")
         .agg(F.count(F.lit(1)).alias("_shared"))
@@ -7327,21 +7324,18 @@ def q_ndcg_eval(spark: SparkSession, sf: str) -> DataFrame:
     at 3): order sensitivity that retrieval_eval's binary P/R/MRR
     can't see. All joins term- or (query,doc)-keyed; the per-query
     ideal sort runs on qrels, never the corpus."""
-    from gbif_filter_python_spark.functions.text import normalized_text
+    from gbif_filter_python_spark.functions.text import words
     from gbif_filter_python_spark.operators.ranking import ndcg_at_k
 
     docs = _t(spark, sf, "documents")
-    words = docs.select(
-        "doc_id",
-        F.explode(
-            F.split(normalized_text(F.col("text")), " ")
-        ).alias("term"),
-    ).filter(F.col("term") != "").distinct()
-    qw = words.filter(F.col("doc_id") < 3).select(
+    terms = docs.select(
+        "doc_id", F.explode(words(F.col("text"))).alias("term")
+    ).distinct()
+    qw = terms.filter(F.col("doc_id") < 3).select(
         F.col("doc_id").alias("query_id"), "term"
     )
     shared = (
-        qw.join(words, "term")
+        qw.join(terms, "term")
         .filter(F.col("doc_id") != F.col("query_id"))
         .groupBy("query_id", "doc_id")
         .agg(F.count(F.lit(1)).alias("_shared"))
@@ -9286,7 +9280,7 @@ _NORM = (
     " '\\s+', ' ', 'g'))"
 )
 
-#: SQL twin of ``corpus.split_bucket`` (md5 → first 8 hex chars → int
+#: SQL twin of ``functions.text.md5_bucket`` (md5 → first 8 hex chars → int
 #: bucket in [0, 100)); md5 hex is identical across Spark and DuckDB.
 _BUCKET_SQL = (
     "(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100)"

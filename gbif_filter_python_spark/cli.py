@@ -15,6 +15,7 @@ import argparse
 import logging
 import sys
 
+import yaml
 from pyspark.sql import Observation, SparkSession
 
 from gbif_filter_python_spark.config import ConfigError, FilterConfig
@@ -94,13 +95,15 @@ def setup_logging(
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     setup_logging(args.log_config)
+    with open(args.config) as f:
+        raw = yaml.safe_load(f)
     try:
-        cfg = FilterConfig.from_yaml(args.config)
+        cfg = FilterConfig.from_dict(raw)
     except ConfigError as e:
         logger.error("invalid config: %s", e)
         return 2
-    extra = cfg_extra_paths(args.config)
-    if not extra.get("taxonomy_path") or not extra.get("occurrence_path"):
+    # The snapshot paths are engine keys the dataclass does not model.
+    if not raw.get("taxonomy_path") or not raw.get("occurrence_path"):
         logger.error(
             "config must set taxonomy_path and occurrence_path "
             "(parquet snapshots; the engine is offline-first)"
@@ -111,7 +114,7 @@ def main(argv: list[str] | None = None) -> int:
     # would re-apply the engine defaults to it.
     spark = SparkSession.getActiveSession() or get_spark("gbif-filter-cli")
     provider = ParquetSnapshotProvider(
-        spark, extra["taxonomy_path"], extra["occurrence_path"]
+        spark, raw["taxonomy_path"], raw["occurrence_path"]
     )
     # Tag counts ride on the output's own job: no extra pass.
     outcome = Observation("gbif_filter_outcome")
@@ -173,17 +176,6 @@ def main(argv: list[str] | None = None) -> int:
         counts["tagged_false"], counts["tagged_null"],
     )
     return 0
-
-
-def cfg_extra_paths(path: str) -> dict:
-    """Engine-specific config keys the dataclass doesn't model."""
-    import yaml
-
-    with open(path) as f:
-        raw = yaml.safe_load(f) or {}
-    return {
-        k: raw.get(k) for k in ("taxonomy_path", "occurrence_path")
-    }
 
 
 if __name__ == "__main__":

@@ -41,6 +41,40 @@ def normalized_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"[^a-z0-9]+", " "))
 
 
+def words(col: Column) -> Column:
+    """Word array of a text column: the :func:`normalized_text` form
+    split on its single spaces. A blank text gives ``[]``; NULL stays
+    NULL. Every word-level operator tokenizes through this one
+    function (``operators.bpe.ref_words`` is its pure-Python twin).
+
+    ``array_remove(split(...), '')`` instead of a ``CASE WHEN t = ''``
+    guard: the guard form evaluates the normalization TWICE per row
+    (once for the emptiness test, once for the split), and Catalyst
+    does not common-subexpression-eliminate them. The normalized text
+    is trimmed and single-spaced, so the only empty token a split can
+    yield is the ``['']`` of an empty string, which array_remove
+    drops: the same result at half the regex cost.
+    """
+    return F.array_remove(F.split(normalized_text(col), " "), "")
+
+
+def md5_bucket(key: Column, buckets: int) -> Column:
+    """Stable ``[0, buckets)`` bucket: the first 8 hex chars of the md5
+    of the key (cast to string) as an integer, mod ``buckets``.
+
+    md5 (not xxhash64) so the assignment is reproducible across
+    engines and releases: the DuckDB oracles replay it as
+    ``('0x' || substring(md5(k), 1, 8))::BIGINT % buckets``, and the
+    split of a given doc_id never changes between pipeline runs.
+    Uniform for any key distribution.
+    """
+    return (
+        F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10)
+        .cast("long")
+        % buckets
+    ).cast("int")
+
+
 def token_count(col: Column) -> Column:
     """Whitespace token count; 0 for empty/null-ish text."""
     t = F.trim(col)
@@ -194,12 +228,12 @@ def gopher_signals(
     Thresholds are parameters (defaults = the published Gopher bounds)
     because real pipelines tune them per-source.
     """
-    words = F.array_remove(F.split(F.trim(col), r"\s+"), "")
-    n_words = F.size(words)
+    ws = F.array_remove(F.split(F.trim(col), r"\s+"), "")
+    n_words = F.size(ws)
     safe_n = F.when(n_words > 0, n_words.cast("double")).otherwise(F.lit(1.0))
     nonspace = F.length(F.regexp_replace(col, r"\s", "")).cast("double")
     mean_word_len = F.round(nonspace / safe_n, 6)
-    alpha_words = F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]")))
+    alpha_words = F.size(F.filter(ws, lambda w: w.rlike("[A-Za-z]")))
     alpha_word_ratio = F.round(alpha_words.cast("double") / safe_n, 6)
     padded = F.concat(F.lit(" "), F.lower(col), F.lit(" "))
     symbol_hits = _occurrences(col, "#") + _occurrences(col, "...")

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from gbif_filter_python_spark.functions.text import md5_bucket, words
+
 
 def dot_product(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -62,7 +64,7 @@ def quantize_int8(a: Column) -> Column:
 def hashed_embedding(text: Column, dim: int = 64) -> Column:
     """Feature-hashing text embedding: normalized words hash into
     ``dim`` buckets (md5-based — reproducible across engines and
-    releases, like corpus.split_bucket), counts L2-normalize into a
+    releases, :func:`~.text.md5_bucket`), counts L2-normalize into a
     unit ``array<double>`` — a model-free featurizer that makes every
     ANN/dedup operator in similarity.py/dedup.py applicable to raw
     text columns.
@@ -71,21 +73,7 @@ def hashed_embedding(text: Column, dim: int = 64) -> Column:
     Values round to 6dp so downstream hashes are fp-stable
     cross-engine; empty/whitespace text yields the zero vector.
     """
-    # one regex pass per row: "[^a-z0-9]+" already collapses every
-    # whitespace run (whitespace is non-alphanumeric), so a second
-    # "\s+" pass is dead work — same one-pass contract as
-    # functions.text.normalized_text (r14 item 17; byte-identical by
-    # the same property test argument)
-    norm_text = F.trim(
-        F.regexp_replace(F.lower(text), "[^a-z0-9]+", " ")
-    )
-    words = F.when(norm_text == "", F.array().cast("array<string>")).otherwise(
-        F.split(norm_text, " ")
-    )
-    bucket = lambda w: (  # noqa: E731
-        F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long") % dim
-    ).cast("int")
-    buckets = F.transform(words, bucket)
+    buckets = F.transform(words(text), lambda w: md5_bucket(w, dim))
     counts = F.aggregate(
         buckets,
         F.array_repeat(F.lit(0.0), dim),
@@ -133,7 +121,7 @@ def projection_signs(
 
     ``sign[i][j] = +1`` iff the first 8 hex chars of
     ``md5("rp:{seed}:{i}:{j}")`` are even — the same md5-arithmetic
-    idiom as ``corpus.split_bucket``, so ANY engine (the DuckDB
+    idiom as :func:`~.text.md5_bucket`, so ANY engine (the DuckDB
     oracle included) reproduces the matrix bit-for-bit. Computed once
     driver-side with hashlib (identical to SQL md5) — this is MODEL
     STATE, like a k-means centroid table: out_dim × in_dim floats

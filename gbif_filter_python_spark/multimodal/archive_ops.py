@@ -51,6 +51,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gbif_filter_python_spark.multimodal.binary_ops import sniff_payloads
+
 # --------------------------------------------------------------------------
 # WARC (ISO 28500)
 # --------------------------------------------------------------------------
@@ -351,36 +353,10 @@ def detect_compression(
     payload_col: str = "payload",
     id_col: str = "media_id",
 ) -> DataFrame:
-    """Distributed compression sniff: map-only mapInPandas of
-    :func:`detect_compression_bytes` — emits ``(id, codec,
-    n_bytes)`` for partition-by-codec routing. Payload bytes die in
-    the task."""
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("codec", StringType()),
-            StructField("n_bytes", LongType()),
-        ]
-    )
-
-    def _sniff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].astype("int64"),
-                    "codec": [
-                        detect_compression_bytes(p)
-                        for p in pdf[payload_col]
-                    ],
-                    "n_bytes": [
-                        len(p or b"") for p in pdf[payload_col]
-                    ],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _sniff, schema=schema
-    )
+    """Distributed compression sniff: ``binary_ops.sniff_payloads`` of
+    :func:`detect_compression_bytes` — emits ``(id, codec, n_bytes)``
+    for partition-by-codec routing. Payload bytes die in the task."""
+    return sniff_payloads(df, payload_col, id_col, detect_compression_bytes)
 
 
 def decompress_text(

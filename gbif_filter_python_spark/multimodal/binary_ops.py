@@ -3965,18 +3965,12 @@ def detect_codec_bytes(payload: bytes) -> str:
     return "unknown"
 
 
-def detect_codec(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
+def sniff_payloads(
+    df: DataFrame, payload_col: str, id_col: str, sniff
 ) -> DataFrame:
-    """Distributed container sniff: one map-only Arrow-batched
-    mapInPandas of :func:`detect_codec_bytes` per payload — emits
-    ``(id, codec, n_bytes)``. Payload bytes die inside the task; the
-    natural consumer is a ``groupBy("codec")`` partition count or a
-    partitioned write (``.write.partitionBy("codec")``) that turns a
-    mixed corpus into per-container buckets for the explicit
-    decoders."""
+    """Distributed byte sniff: one map-only Arrow-batched mapInPandas
+    of ``sniff(payload) -> str`` per payload, emitting ``(id, codec,
+    n_bytes)``. Payload bytes die inside the task."""
     out_schema = StructType(
         [
             StructField(id_col, LongType()),
@@ -3990,18 +3984,28 @@ def detect_codec(
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].astype("int64"),
-                    "codec": [
-                        detect_codec_bytes(p) for p in pdf[payload_col]
-                    ],
-                    "n_bytes": [
-                        len(p or b"") for p in pdf[payload_col]
-                    ],
+                    "codec": [sniff(p) for p in pdf[payload_col]],
+                    "n_bytes": [len(p or b"") for p in pdf[payload_col]],
                 }
             )
 
     return df.select(id_col, payload_col).mapInPandas(
         _sniff, schema=out_schema
     )
+
+
+def detect_codec(
+    df: DataFrame,
+    payload_col: str = "payload",
+    id_col: str = "media_id",
+) -> DataFrame:
+    """Distributed container sniff: :func:`sniff_payloads` of
+    :func:`detect_codec_bytes` — emits ``(id, codec, n_bytes)``. The
+    natural consumer is a ``groupBy("codec")`` partition count or a
+    partitioned write (``.write.partitionBy("codec")``) that turns a
+    mixed corpus into per-container buckets for the explicit
+    decoders."""
+    return sniff_payloads(df, payload_col, id_col, detect_codec_bytes)
 
 
 def audio_features(
@@ -4665,19 +4669,22 @@ def decode_avi_frames(payload: bytes) -> list[np.ndarray]:
     return frames
 
 
-def sample_frames_avi(
+def _sample_frames(
     df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    n_frames: int = 4,
+    payload_col: str,
+    id_col: str,
+    n_frames: int,
+    decode_frames,
+    encode_frame,
 ) -> DataFrame:
-    """REAL frame sampling over uncompressed AVI payloads: parse the
-    RIFF container, pick ``n_frames`` evenly-spaced frames (the same
-    ffmpeg fps-thinning arithmetic as :func:`sample_frames_mbmp`),
-    and re-emit each sampled frame as a genuine standalone BMP so the
-    rows pipe straight into :func:`decode_images` with ``codec="bmp"``
-    and from there into resize / features / dHash near-dup. Only the
-    selected frames' bytes leave the task."""
+    """Evenly spaced frame sampling over one container: decode each
+    payload's frames with ``decode_frames``, pick source frame
+    ``floor(i * n_src / take)`` for i in [0, take) with ``take =
+    min(n_frames, n_src)`` (ffmpeg's ``fps=`` thinning; clips shorter
+    than n_frames emit one row per real frame), and emit each sampled
+    frame as ``encode_frame(frame)``. Emits ``(id, frame_idx, src_idx,
+    frame_payload)``; only the sampled frames are encoded, and only
+    their bytes leave the task — the container body never shuffles."""
     out_schema = StructType(
         [
             StructField(id_col, LongType()),
@@ -4691,7 +4698,7 @@ def sample_frames_avi(
         for pdf in batches:
             ids, idxs, srcs, frames = [], [], [], []
             for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                fs = decode_avi_frames(bytes(p))
+                fs = decode_frames(bytes(p))
                 n_src = len(fs)
                 take = min(n_frames, n_src)
                 for i in range(take):
@@ -4699,7 +4706,7 @@ def sample_frames_avi(
                     ids.append(mid)
                     idxs.append(i)
                     srcs.append(src)
-                    frames.append(encode_bmp(fs[src]))
+                    frames.append(encode_frame(fs[src]))
             yield pd.DataFrame(
                 {
                     id_col: pd.Series(ids, dtype="int64"),
@@ -4711,6 +4718,24 @@ def sample_frames_avi(
 
     return df.select(id_col, payload_col).mapInPandas(
         _sample, schema=out_schema
+    )
+
+
+def sample_frames_avi(
+    df: DataFrame,
+    payload_col: str = "payload",
+    id_col: str = "media_id",
+    n_frames: int = 4,
+) -> DataFrame:
+    """REAL frame sampling over uncompressed AVI payloads: parse the
+    RIFF container, pick ``n_frames`` evenly-spaced frames
+    (:func:`_sample_frames`), and re-emit each sampled frame as a
+    genuine standalone BMP so the rows pipe straight into
+    :func:`decode_images` with ``codec="bmp"`` and from there into
+    resize / features / dHash near-dup. Only the selected frames are
+    re-encoded."""
+    return _sample_frames(
+        df, payload_col, id_col, n_frames, decode_avi_frames, encode_bmp
     )
 
 
@@ -4721,50 +4746,14 @@ def sample_frames_mbmp(
     n_frames: int = 4,
 ) -> DataFrame:
     """REAL frame sampling over MBMP video payloads: parse the
-    container, pick ``n_frames`` evenly-spaced frames (ffmpeg's
-    ``fps=`` thinning pattern), emit ``(id, frame_idx, frame_payload
-    binary)`` — each frame is a genuine BMP, so the rows pipe straight
-    into :func:`decode_images` with ``codec="bmp"`` and from there
-    into resize / features / dHash near-dup.
-
-    Evenly-spaced selection: source frame ``floor(i * n_src /
-    n_frames)`` for i in [0, n_frames) (clips shorter than n_frames
-    emit one row per real frame). Only the SELECTED frames' bytes
-    leave the task — the container body never shuffles.
-    """
-    out_schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("frame_idx", IntegerType()),
-            StructField("src_idx", IntegerType()),
-            StructField("frame_payload", BinaryType()),
-        ]
-    )
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, srcs, frames = [], [], [], []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                fs = decode_mbmp_bytes(bytes(p))
-                n_src = len(fs)
-                take = min(n_frames, n_src)
-                for i in range(take):
-                    src = i * n_src // max(take, 1)
-                    ids.append(mid)
-                    idxs.append(i)
-                    srcs.append(src)
-                    frames.append(fs[src])
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "src_idx": pd.Series(srcs, dtype="int32"),
-                    "frame_payload": frames,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _sample, schema=out_schema
+    container, pick ``n_frames`` evenly-spaced frames
+    (:func:`_sample_frames`), emit ``(id, frame_idx, src_idx,
+    frame_payload binary)`` — each frame is already a genuine BMP, so
+    the rows pipe straight into :func:`decode_images` with
+    ``codec="bmp"`` and from there into resize / features / dHash
+    near-dup."""
+    return _sample_frames(
+        df, payload_col, id_col, n_frames, decode_mbmp_bytes, lambda f: f
     )
 
 

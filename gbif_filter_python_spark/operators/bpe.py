@@ -52,14 +52,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
-from gbif_filter_python_spark.operators.corpus import _words
+from gbif_filter_python_spark.functions.text import words
 from gbif_filter_python_spark.operators.iterate import observed_checkpoint
 
 
 def _distinct_words(docs: DataFrame, text_col: str) -> DataFrame:
     """(word, _n) — the Zipf-shrunk trainer input."""
     return (
-        docs.select(F.explode(_words(F.col(text_col))).alias("word"))
+        docs.select(F.explode(words(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("_n"))
     )
@@ -133,7 +133,7 @@ def bpe_training_sample(
 
 
 def ref_words(text: str) -> list[str]:
-    """Pure-Python twin of ``corpus._words`` normalization (lowercase,
+    """Pure-Python twin of ``functions.text.words`` normalization (lowercase,
     non-alnum → space, collapse) — the tokenizer the reference trainer
     shares with the engine so merge parity is over identical words."""
     import re
@@ -331,7 +331,7 @@ def bpe_token_counts(
         )
 
     doc_words = docs.select(
-        F.col(id_col), F.explode(_words(F.col(text_col))).alias("word")
+        F.col(id_col), F.explode(words(F.col(text_col))).alias("word")
     )
     lengths = (
         doc_words.select("word")

@@ -23,8 +23,9 @@ pipeline runs after the heuristic filters in functions/text.py:
   per-document perplexity, filter by band.
 
 All three are pure Column/DataFrame pipelines — no Python UDF
-anywhere. Hashing uses the md5-bucket idiom shared with
-``functions.vectors.hashed_embedding`` so every step is reproducible
+anywhere. Words and hash buckets come from ``functions.text.words``
+and ``functions.text.md5_bucket``, as in
+``functions.vectors.hashed_embedding``, so every step is reproducible
 in the DuckDB oracles (`__spark_entry__.oracle_sql`).
 
 Determinism contract (cross-engine hash-matching): every score in an
@@ -54,35 +55,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-# --------------------------------------------------------------------------
-# Shared tokenization + hashing (the vectors.hashed_embedding idiom)
-# --------------------------------------------------------------------------
-
-
-def md5_bucket(col: Column, num_buckets: int) -> Column:
-    """Engine-portable stable hash bucket: first 8 hex chars of md5,
-    mod ``num_buckets``. Identical in Spark (`conv`) and DuckDB
-    (``('0x' || substring(md5(w), 1, 8))::BIGINT``)."""
-    return (
-        F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-        % num_buckets
-    ).cast("int")
-
-
-def _norm_words(text_col: Column) -> Column:
-    """Lowercase, strip non-alphanumerics, split — the same
-    normalization as vectors.hashed_embedding / corpus._words."""
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(text_col), "[^a-z0-9]+", " "),
-            "\\s+",
-            " ",
-        )
-    )
-    return F.when(norm == "", F.array().cast("array<string>")).otherwise(
-        F.split(norm, " ")
-    )
+from gbif_filter_python_spark.functions.text import md5_bucket, words
 
 
 def _tokens(
@@ -91,7 +64,7 @@ def _tokens(
     """(id_cols..., bucket) one row per token occurrence (map-side)."""
     return df.select(
         *id_cols,
-        F.explode(_norm_words(F.col(text_col))).alias("_w"),
+        F.explode(words(F.col(text_col))).alias("_w"),
     ).select(*id_cols, md5_bucket(F.col("_w"), num_buckets).alias("bucket"))
 
 
@@ -360,9 +333,7 @@ def _bucket_array(text_col: Column, num_buckets: int) -> Column:
     normalized word array — ONE md5 per token, map-side. Materialize
     this in its own projection before consuming it more than once
     (the Catalyst no-CSE-in-HOF-lambdas rule)."""
-    return F.transform(
-        _norm_words(text_col), lambda w: md5_bucket(w, num_buckets)
-    )
+    return F.transform(words(text_col), lambda w: md5_bucket(w, num_buckets))
 
 
 def _bigram_pairs(bs: Column) -> Column:

@@ -23,7 +23,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from gbif_filter_python_spark.functions.text import normalized_text, token_count
+from gbif_filter_python_spark.functions.text import (
+    md5_bucket,
+    normalized_text,
+    token_count,
+    words,
+)
 from gbif_filter_python_spark.operators.prefix import prefix_sums
 
 __all__ = [
@@ -139,21 +144,6 @@ def prepare_training_corpus(
     )
 
 
-def split_bucket(key: Column, buckets: int = 100) -> Column:
-    """Stable [0, buckets) bucket from the md5 of a key column.
-
-    md5 (not xxhash64) so the assignment is reproducible across
-    engines and releases — the split of a given doc_id must never
-    change between pipeline runs. Uses the first 8 hex chars as an
-    integer; uniform for any key distribution.
-    """
-    return (
-        F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % buckets
-    ).cast("int")
-
-
 def deterministic_split(
     df: DataFrame,
     key_col: str,
@@ -167,7 +157,7 @@ def deterministic_split(
     costs one codegen'd projection even at 100 TB. Percentages are
     integer percent points of the 100-bucket hash space.
     """
-    b = split_bucket(F.col(key_col))
+    b = md5_bucket(F.col(key_col), 100)
     return df.withColumn(
         split_col,
         F.when(b < test_pct, F.lit("test"))
@@ -195,7 +185,7 @@ def sample_by_hash(
     """
     threshold = int(fraction * SAMPLE_BUCKETS)
     key = F.concat(F.col(key_col).cast("string"), F.lit(seed_salt))
-    return df.filter(split_bucket(key, SAMPLE_BUCKETS) < threshold)
+    return df.filter(md5_bucket(key, SAMPLE_BUCKETS) < threshold)
 
 
 def stratified_sample(
@@ -208,7 +198,7 @@ def stratified_sample(
     with integer thresholds, so results are exactly reproducible and
     oracle-checkable. Map-only — the strata table never shuffles.
     """
-    b = split_bucket(F.col(key_col), SAMPLE_BUCKETS)
+    b = md5_bucket(F.col(key_col), SAMPLE_BUCKETS)
     threshold: Column = F.lit(SAMPLE_BUCKETS)
     for value, rate in rates.items():
         threshold = F.when(
@@ -240,7 +230,7 @@ def flatten_domains(
     )
     joined = df.join(rates, df[domain_col] == rates["_dom"], "left")
     return joined.filter(
-        split_bucket(F.col(key_col), SAMPLE_BUCKETS) < F.col("_thresh")
+        md5_bucket(F.col(key_col), SAMPLE_BUCKETS) < F.col("_thresh")
     ).drop("_dom", "_thresh")
 
 
@@ -306,7 +296,7 @@ def mixture_sample(
     for d in doms:
         th = F.when(F.col(domain_col) == d, F.lit(thresholds[d])).otherwise(th)
     key = F.concat(F.col(key_col).cast("string"), F.lit(salt))
-    return df.filter(split_bucket(key, SAMPLE_BUCKETS) < th)
+    return df.filter(md5_bucket(key, SAMPLE_BUCKETS) < th)
 
 
 def trim_by_percentile(
@@ -338,21 +328,6 @@ def trim_by_percentile(
     )
 
 
-def _words(text_col: Column) -> Column:
-    """Normalized word array of a text column (empty array for blank).
-
-    ``array_remove(split(...), '')`` instead of a ``CASE WHEN t = ''``
-    guard: the guard form evaluates the normalization expression TWICE
-    per row (once for the emptiness test, once for the split) — and
-    Catalyst does not common-subexpression-eliminate them. Splitting
-    an empty normalized string yields [''], which array_remove drops,
-    so the semantics are identical at half the regex cost (the
-    normalization is the dominant map-side cost of every corpus
-    operator built on this).
-    """
-    return F.array_remove(F.split(normalized_text(text_col), " "), "")
-
-
 def tfidf_top_terms(
     docs: DataFrame,
     k: int = 3,
@@ -367,11 +342,11 @@ def tfidf_top_terms(
     The shuffles carry (doc_id, term, count) rows — never the text.
     ``score = tf * ln(N / df)`` rounded to 6dp for fp-stable hashing.
     """
-    words = docs.select(
+    terms = docs.select(
         F.col(doc_id_col).alias("doc_id"),
-        F.explode(_words(F.col(text_col))).alias("term"),
+        F.explode(words(F.col(text_col))).alias("term"),
     )
-    tf = words.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df_counts = tf.groupBy("term").agg(
         F.countDistinct("doc_id").alias("df")
     )
@@ -425,7 +400,7 @@ def word_ngrams(text_col: Column, n: int = 3) -> Column:
     Fine for one-shot projections; hot paths must stage the word array
     first (see ``ngrams_from_words``).
     """
-    return ngrams_from_words(_words(text_col), n)
+    return ngrams_from_words(words(text_col), n)
 
 
 def ngram_novelty(
@@ -458,7 +433,7 @@ def ngram_novelty(
 
     staged = docs.select(
         F.col(doc_id_col).alias("doc_id"),
-        _words(F.col(text_col)).alias("_w"),
+        words(F.col(text_col)).alias("_w"),
     )
     pairs = (
         staged.select(
@@ -503,7 +478,7 @@ def _staged_ngrams(
     with_words = docs.select(
         F.col(doc_id_col).alias("doc_id"),
         *(extra_cols or []),
-        _words(F.col(text_col)).alias("_w"),
+        words(F.col(text_col)).alias("_w"),
     )
     keep = [c for c in with_words.columns if c != "_w"]
     return with_words.select(
@@ -647,7 +622,7 @@ def repetition_signals(
     fractions rounded to 6dp for fp-stable comparison.
     """
     with_words = docs.select(
-        F.col(doc_id_col).alias("doc_id"), _words(F.col(text_col)).alias("_w")
+        F.col(doc_id_col).alias("doc_id"), words(F.col(text_col)).alias("_w")
     )
     # The most-frequent-bigram count is the longest run of equal
     # values in the SORTED per-row bigram array — a per-row sort +
@@ -720,7 +695,7 @@ def chunk_documents(
         raise ValueError("overlap must be < chunk_size")
     stride = chunk_size - overlap
     with_words = docs.select(
-        F.col(doc_id_col).alias("doc_id"), _words(F.col(text_col)).alias("_w")
+        F.col(doc_id_col).alias("doc_id"), words(F.col(text_col)).alias("_w")
     )
     starts = F.when(
         F.size("_w") >= 1,
@@ -1001,12 +976,12 @@ def bpe_pair_stats(
     char array as a materialized ATTRIBUTE (own projection) since
     slice/size would otherwise re-split per reference.
     """
-    words = (
-        docs.select(F.explode(_words(F.col(text_col))).alias("word"))
+    vocab = (
+        docs.select(F.explode(words(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("_n"))
     )
-    chars = words.select(
+    chars = vocab.select(
         "_n", F.array_remove(F.split(F.col("word"), ""), "").alias("_cs")
     )
     pairs = chars.select(
@@ -1178,8 +1153,6 @@ def weighted_sample(
     partial top-k, single reduced exchange) — the corpus never
     globally sorts.
     """
-    from gbif_filter_python_spark.operators.classify import md5_bucket
-
     u = (
         md5_bucket(
             F.concat(F.col(id_col).cast("string"), F.lit(salt)),
@@ -1395,7 +1368,7 @@ def upsample_mixture(
         t_col = F.when(
             F.col(domain_col) == d, F.lit(thresholds[d])
         ).otherwise(t_col)
-    bucket = split_bucket(
+    bucket = md5_bucket(
         F.concat(F.col(key_col).cast("string"), F.lit(salt)),
         SAMPLE_BUCKETS,
     )
@@ -1453,12 +1426,12 @@ def mlm_mask(
     if not 0.0 < mask_prob < 1.0:
         raise ValueError(f"mask_prob must be in (0, 1), got {mask_prob}")
     threshold = int(mask_prob * SAMPLE_BUCKETS)
-    words = _words(F.col(text_col))
+    ws = words(F.col(text_col))
 
     def bucket(pos0):
         # pos0 is the 0-based word position (Spark transform's index
         # lambda is 0-based already)
-        return split_bucket(
+        return md5_bucket(
             F.concat(
                 F.col(id_col).cast("string"),
                 F.lit(":"),
@@ -1472,7 +1445,7 @@ def mlm_mask(
     decided = df.select(
         F.col(id_col),
         F.transform(
-            words,
+            ws,
             lambda w, i: F.struct(
                 i.cast("int").alias("pos"),
                 w.alias("word"),
@@ -1535,7 +1508,7 @@ def zipf_fit(
 
     if top_k < 3:
         raise ValueError(f"top_k must be >= 3 to fit a line, got {top_k}")
-    terms = docs.select(F.explode(_words(F.col(text_col))).alias("term"))
+    terms = docs.select(F.explode(words(F.col(text_col))).alias("term"))
     vocab = terms.groupBy("term").agg(F.count(F.lit(1)).alias("freq"))
     head = vocab.orderBy(F.desc("freq"), F.asc("term")).limit(top_k)
     rank_w = Window.orderBy(F.desc("freq"), F.asc("term"))
@@ -1590,7 +1563,7 @@ def heaps_fit(
     first = (
         docs.select(
             F.col(doc_id_col).alias("_d"),
-            F.explode(_words(F.col(text_col))).alias("term"),
+            F.explode(words(F.col(text_col))).alias("term"),
         )
         .groupBy("term")
         .agg(F.min("_d").alias("_first"))
@@ -1636,7 +1609,7 @@ def oov_rate(
     aggregated groupBy(doc). Docs with zero tokens are absent (no
     token rows), matching the SQL twin.
     """
-    w = docs.select(id_col, F.explode(_words(F.col(text_col))).alias("term"))
+    w = docs.select(id_col, F.explode(words(F.col(text_col))).alias("term"))
     vocab = (
         w.groupBy("term")
         .agg(F.count("*").alias("tf"))
@@ -1758,7 +1731,7 @@ def vocab_overlap(
     st = (
         docs.select(
             F.col(group_col).alias("src"),
-            F.explode(_words(F.col(text_col))).alias("term"),
+            F.explode(words(F.col(text_col))).alias("term"),
         )
         .distinct()
     )
@@ -2180,8 +2153,8 @@ def shard_balance(
 ) -> DataFrame:
     """Token-load balance of hash-sharded corpus writes: for each
     candidate shard count ``k``, the skew of per-shard token loads
-    under the deterministic md5 assignment (:func:`split_bucket` with
-    ``buckets=k`` — the same cross-engine hash every split/sample op
+    under the deterministic md5 assignment (:func:`~.functions.text.md5_bucket`
+    with ``buckets=k`` — the same cross-engine hash every split/sample op
     uses). The write path of a 100 TB corpus is as slow as its
     heaviest shard; ``balance_ratio`` (max shard load over the ideal
     total/k) is the straggler forecast, ``cv_tokens`` the overall
@@ -2210,7 +2183,7 @@ def shard_balance(
                 *[
                     F.struct(
                         F.lit(k).alias("_k"),
-                        split_bucket(F.col("_key"), buckets=k).alias(
+                        md5_bucket(F.col("_key"), buckets=k).alias(
                             "_shard"
                         ),
                     )
@@ -2315,7 +2288,7 @@ def ngram_coverage(
     split-representativeness curve (a low unigram coverage means the
     test set probes vocabulary the model never saw; trigram coverage
     bounds verbatim memorization credit). Splits are the repo's
-    deterministic md5 buckets (``split_bucket(key) < test_buckets`` →
+    deterministic md5 buckets (``md5_bucket(key, 100) < test_buckets`` →
     test, rest train — :func:`deterministic_split`'s convention), so
     the measurement is reproducible across engines and runs.
 
@@ -2328,23 +2301,18 @@ def ngram_coverage(
     Catalyst auto-broadcasts on a post-explode size underestimate and
     dies at sf10), tagged with their n, and exploded ONCE. Grams are
     fingerprinted to 60-bit md5 integers BEFORE the shuffle (15 hex
-    chars — the split_bucket trick widened; collisions ~2⁻⁶⁰ per pair
+    chars — the md5_bucket trick widened; collisions ~2⁻⁶⁰ per pair
     shift coverage immaterially and identically in both engines), so
     the single (n, fingerprint) hash aggregate shuffles longs, never
     strings. Side membership folds in the same agg (max of per-side
     flags) — no train↔test join anywhere.
     """
-    from gbif_filter_python_spark.functions.text import normalized_text
-
     ns_ = sorted({int(n) for n in ns})
     if not ns_ or ns_[0] < 1:
         raise ValueError(f"ns must be positive ints: {ns}")
-    words = F.array_remove(
-        F.split(normalized_text(F.col(text_col)), " "), ""
-    )
     base = docs.select(
-        (split_bucket(F.col(key_col)) < int(test_buckets)).alias("_is_test"),
-        words.alias("_w"),
+        (md5_bucket(F.col(key_col), 100) < int(test_buckets)).alias("_is_test"),
+        words(F.col(text_col)).alias("_w"),
     )
 
     def grams(n: int) -> Column:
@@ -2958,7 +2926,7 @@ def kfold_balance(
     round_dp: int = 6,
 ) -> DataFrame:
     """Deterministic k-fold assignment + stratification audit: folds
-    come from :func:`split_bucket` (md5 — the same cross-engine,
+    come from :func:`~.functions.text.md5_bucket` (md5 — the same cross-engine,
     cross-run-stable hash as :func:`deterministic_split`, so fold
     membership never changes under repartitioning or re-runs), and
     the output is the DENSIFIED (fold × stratum) balance table each
@@ -2980,7 +2948,7 @@ def kfold_balance(
     if not 2 <= int(k) <= 1000:
         raise ValueError(f"k={k} outside [2, 1000]")
     base = df.filter(F.col(strata_col).isNotNull()).select(
-        split_bucket(F.col(key_col), buckets=int(k)).alias("fold"),
+        md5_bucket(F.col(key_col), buckets=int(k)).alias("fold"),
         F.col(strata_col).alias("stratum"),
     )
     # the cell table feeds FOUR consumers (fold margins, stratum

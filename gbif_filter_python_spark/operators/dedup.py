@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from gbif_filter_python_spark.functions.text import normalized_text
+from gbif_filter_python_spark.functions.text import fingerprint64, normalized_text
 
 
 # --------------------------------------------------------------------------
@@ -39,7 +39,7 @@ def exact_dedup(
     the document body. Hash collisions at 64 bits are ~0 for any
     realistic corpus; use md5 (128-bit) if that budget is too tight.
     """
-    h = F.xxhash64(normalized_text(F.col(text_col)))
+    h = fingerprint64(F.col(text_col))
     keep = (
         _ensure_parallelism(df).select(F.col(id_col), h.alias("_h"))
         .groupBy("_h")
@@ -863,7 +863,7 @@ def dedup_keep_best(
     WindowGroupLimit in Spark 3.5+ — the full rows ride the exchange
     once, no join back needed.
     """
-    key = F.xxhash64(normalized_text(F.col(text_col)))
+    key = fingerprint64(F.col(text_col))
     w = Window.partitionBy("_dk").orderBy(F.desc("_ds"), F.asc(id_col))
     return (
         df.withColumn("_dk", key)

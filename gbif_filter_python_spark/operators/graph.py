@@ -211,7 +211,7 @@ def leakage_safe_split(
     split itself is the map-only md5-threshold filter. Output: input
     rows + ``split_col``.
     """
-    from gbif_filter_python_spark.operators.corpus import split_bucket
+    from gbif_filter_python_spark.functions.text import md5_bucket
 
     comps = connected_components(pairs, src_col, dst_col).select(
         F.col("id").alias(id_col), F.col("comp").alias("_comp")
@@ -219,7 +219,7 @@ def leakage_safe_split(
     with_comp = df.join(F.broadcast(comps), id_col, "left").withColumn(
         "_comp", F.coalesce(F.col("_comp"), F.col(id_col))
     )
-    b = split_bucket(F.col("_comp"))
+    b = md5_bucket(F.col("_comp"), 100)
     return with_comp.withColumn(
         split_col,
         F.when(b < test_pct, F.lit("test"))

@@ -49,31 +49,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _words(text_col: Column) -> Column:
-    """Normalized word array — the corpus.py tokenizer contract.
-
-    Re-declared (two lines) rather than imported to keep this module
-    importable without the corpus module's pandas dependencies; the
-    expression is byte-identical to ``operators.corpus._words`` and
-    covered by the same cross-engine oracles.
-    """
-    return F.array_remove(
-        F.split(
-            F.trim(
-                F.regexp_replace(
-                    F.regexp_replace(F.lower(text_col), "[^a-z0-9]+", " "),
-                    "\\s+",
-                    " ",
-                )
-            ),
-            " ",
-        ),
-        "",
-    )
+from gbif_filter_python_spark.functions.text import words
 
 
 def bm25_scores(
@@ -105,11 +84,11 @@ def bm25_scores(
     The corpus text never shuffles; at 100 TB the only wide exchanges
     carry (doc, term, count) integers.
     """
-    words = docs.select(
+    terms = docs.select(
         F.col(doc_id_col).alias("doc_id"),
-        F.explode(_words(F.col(text_col))).alias("term"),
+        F.explode(words(F.col(text_col))).alias("term"),
     )
-    tf = words.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     # Document length from the tf table (sum of term counts) — reuses
     # the first shuffle's output instead of re-scanning the corpus.
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
@@ -121,7 +100,7 @@ def bm25_scores(
     qterms = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
-            F.explode(_words(F.col(query_text_col))).alias("term"),
+            F.explode(words(F.col(query_text_col))).alias("term"),
         )
         .distinct()
     )
@@ -386,18 +365,9 @@ def inverted_postings(
     ``max_df``, so the collected arrays are bounded model state, not
     data-proportional.
     """
-    from gbif_filter_python_spark.functions.text import normalized_text
-
-    terms = (
-        df.select(
-            F.col(id_col),
-            F.explode(
-                F.array_distinct(
-                    F.split(normalized_text(F.col(text_col)), " ")
-                )
-            ).alias("term"),
-        )
-        .filter(F.col("term") != "")
+    terms = df.select(
+        F.col(id_col),
+        F.explode(F.array_distinct(words(F.col(text_col)))).alias("term"),
     )
     tot = df.agg(F.count(F.lit(1)).alias("_n_docs"))
     return (

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gbif_filter_python_spark.config import FilterConfig
+from gbif_filter_python_spark.functions.taxid import is_valid_taxid, parse_taxid
 from gbif_filter_python_spark.plans.inspect import fits_broadcast
 
 #: Names of the derived columns this operator appends.
@@ -66,14 +67,14 @@ def _role_columns(taxa: DataFrame, cfg: FilterConfig) -> DataFrame:
 def _parse_taxid(col):
     """Trusted-ID parse: plain integer string or legacy ``GBIF:<id>``.
 
-    The legacy ``TaxId`` value type is ``DBPREFIX:ID``
-    (util/__pycache__/taxid.cpython-37.pyc); ``is_valid_taxid`` checks
-    the prefix is ``GBIF`` (util/__pycache__/gbif.cpython-37.pyc).
-    Non-numeric / wrong-prefix values yield null (op 31/32 validation).
+    A value with a colon must pass ``functions.taxid.is_valid_taxid``
+    (exactly ``DBPREFIX:ID``, prefix ``GBIF``, numeric id), and its key
+    is the id that ``parse_taxid`` splits off. Non-numeric,
+    wrong-prefix and malformed values (``GBIF:12:34``) yield null (op
+    31/32 validation).
     """
     stripped = F.when(
-        col.contains(":"),
-        F.when(F.split(col, ":")[0] == "GBIF", F.split(col, ":")[1]),
+        col.contains(":"), F.when(is_valid_taxid(col), parse_taxid(col)["value"])
     ).otherwise(col)
     # try_cast: ANSI mode (Spark 4 default) would throw on malformed ids;
     # the reference's contract is null-key → tag None (op 18).

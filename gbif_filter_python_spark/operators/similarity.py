@@ -421,30 +421,13 @@ def kmeans_fit(
     return centroids.tolist(), history
 
 
-def _nearest_centroid(vec, centroids: np.ndarray):
-    """argmax-cosine cluster id for each vector, one NumPy matmul per
-    Arrow batch (centroid matrix in the closure — O(1) plan size)."""
-    mat = np.asarray(centroids, dtype=np.float64)
-
-    @F.pandas_udf(IntegerType())
-    def _assign(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        x = np.array(v.tolist(), dtype=np.float64)
-        norms = np.linalg.norm(x, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        sims = (x / norms) @ mat.T  # centroids are unit-norm already
-        return pd.Series(np.argmax(sims, axis=1).astype("int32"))
-
-    return _assign(vec)
-
-
 def _nearest_centroid_sim(vec, centroids: np.ndarray):
     """``struct(c: int, sim: double)`` — argmax-cosine cluster id AND
     its cosine, one NumPy matmul per Arrow batch (centroid matrix in
     the closure — O(1) plan size). Returning both from one UDF is what
     lets kmeans_fit fold the inertia into the update aggregation
-    instead of re-scanning the corpus."""
+    instead of re-scanning the corpus; kmeans_assign reads only
+    ``c``."""
     mat = np.asarray(centroids, dtype=np.float64)
     out_t = StructType(
         [
@@ -482,7 +465,7 @@ def kmeans_assign(
 ) -> DataFrame:
     """Attach the trained k-means cluster id (map-only, vectorized)."""
     return corpus.withColumn(
-        out_col, _nearest_centroid(F.col(vec_col), np.asarray(centroids))
+        out_col, _nearest_centroid_sim(F.col(vec_col), centroids)["c"]
     )
 
 
@@ -1368,7 +1351,7 @@ def _md5_sample(
 ) -> list:
     """Deterministic fixed-COUNT sample: the first ``n`` rows in
     (md5(id) ASC, id ASC) order — the cross-engine-reproducible
-    shuffle used by corpus.split_bucket, but taking an ABSOLUTE count
+    shuffle used by functions.text.md5_bucket, but taking an ABSOLUTE count
     instead of a corpus fraction, so downstream pair work is O(n ·
     corpus), genuinely linear, not a disguised corpus² (VERDICT r9
     item 1: the 20%-bucket fraction made twonn/hubness quadratic).

@@ -198,7 +198,7 @@ def _cms_bucket(depth_col: Column, term: Column, width: int) -> Column:
     hex chars (48 bits, exact in a long) → mod width. md5, not
     xxhash64, so the layout is reproducible in any engine (the DuckDB
     oracle replays the identical bucket arithmetic — same reasoning as
-    corpus.split_bucket)."""
+    functions.text.md5_bucket)."""
     h = F.md5(F.concat_ws(":", depth_col.cast("string"), term))
     return F.conv(F.substring(h, 1, 12), 16, 10).cast("long") % width
 

@@ -53,7 +53,10 @@ def tag_existence(
 
     A left join against the distinct zone keys (not a semi-join)
     because ``False`` and ``None`` rows must survive with their tag —
-    the semi-join variant is :func:`filter_occurring`.
+    the semi-join variant is :func:`filter_occurring`. The key side is
+    broadcast: the keys that occur are backbone keys, so |taxonomy|
+    bounds them, whether they come from the zone-filtered fact or
+    from ``providers.tag_existence_online``'s probe.
     """
     # No rename below the broadcast: run_filter's expansion broadcasts
     # the identical occurrence_keys plan, and only identical subtrees

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from gbif_filter_python_spark.config import Country, Polygon, Zone
+from gbif_filter_python_spark.operators.tagging import tag_existence
 from gbif_filter_python_spark.schemas import (
     INTERACTION_NAME_SCHEMA,
     INTERACTION_SCHEMA,
@@ -560,22 +561,16 @@ def tag_existence_online(
 ) -> DataFrame:
     """Online twin of ``tagging.tag_existence`` for users without a
     parquet occurrence snapshot: distinct non-null keys are probed once
-    via the injected REST fetch, then joined back to all rows with the
-    reference's ternary semantics (§2-G — None for null keys, False
-    for probed-but-absent, True for occurs).
+    via the injected REST fetch, and the keys that occur stand in for
+    the zone's occurrence keys of :func:`tagging.tag_existence`, which
+    joins them back to all rows with the reference's ternary semantics
+    (§2-G — None for null keys, False for probed-but-absent, True for
+    occurs).
     """
     keys = (
         taxa.select(F.col(key_col).cast("long").alias("taxon_key"))
         .filter(F.col("taxon_key").isNotNull())
         .distinct()
     )
-    probed = (
-        provider.exists_online(keys, zone)
-        .filter(F.col("occurs"))
-        .select(F.col("taxon_key").alias("_occ_key"))
-    )
-    out = taxa.join(probed, taxa[key_col] == probed["_occ_key"], "left")
-    tag = F.when(F.col(key_col).isNull(), F.lit(None).cast("boolean")).otherwise(
-        F.col("_occ_key").isNotNull()
-    )
-    return out.withColumn(tag_col, tag).drop("_occ_key")
+    occurring = provider.exists_online(keys, zone).filter(F.col("occurs"))
+    return tag_existence(taxa, occurring, key_col, tag_col)

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 logger = logging.getLogger(__name__)
 
-from gbif_filter_python_spark.functions.text import normalized_text
+from gbif_filter_python_spark.functions.text import fingerprint64
 
 
 def streaming_exact_dedup(
@@ -54,9 +54,7 @@ def streaming_content_dedup(
     hash of the normalized text (8-byte state entries — the document
     body never enters the state store), mirroring the batch
     ``exact_dedup``."""
-    with_hash = df.withColumn(
-        "_h", F.xxhash64(normalized_text(F.col(text_col)))
-    )
+    with_hash = df.withColumn("_h", fingerprint64(F.col(text_col)))
     return streaming_exact_dedup(
         with_hash, ["_h"], ts_col=ts_col, watermark=watermark
     ).drop("_h")
@@ -92,7 +90,7 @@ def incremental_corpus_writer(
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         fresh = batch_df.withColumn(
-            "_h", F.xxhash64(normalized_text(F.col(text_col)))
+            "_h", fingerprint64(F.col(text_col))
         ).dropDuplicates(["_h"])
         try:
             seen = (

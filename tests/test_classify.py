@@ -15,12 +15,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from gbif_filter_python_spark.functions.text import md5_bucket
 from gbif_filter_python_spark.operators.classify import (
     dsir_resample,
     dsir_weights,
     lm_perplexity,
     lm_train_bigram,
-    md5_bucket,
     nb_predict,
     nb_score,
     nb_train,

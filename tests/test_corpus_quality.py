@@ -685,3 +685,19 @@ class TestNormalizedTextSinglePass:
         ).collect()
         for r in rows:
             assert r["new"] == r["old"]
+
+    def test_words_match_python_reference(self, spark):
+        # q_bpe_learn's differential trains the pure-Python reference
+        # on ref_words and the engine on words(): the two tokenizers
+        # must agree, and NULL text has no word array.
+        from gbif_filter_python_spark.functions.text import words
+        from gbif_filter_python_spark.operators.bpe import ref_words
+
+        df = spark.createDataFrame(
+            [(i, s) for i, s in enumerate(self.CASES + [None])],
+            "i long, t string",
+        )
+        got = dict(df.select("i", words(F.col("t")).alias("w")).collect())
+        for i, s in enumerate(self.CASES):
+            assert got[i] == ref_words(s), s
+        assert got[len(self.CASES)] is None

@@ -101,3 +101,16 @@ def test_no_new_round_named_test_file_and_one_conf_helper():
         if re.search(r"\.conf\.(set|unset)\(", p.read_text())
     ]
     assert setters == []
+
+
+def test_one_tokenizer():
+    """Only ``functions/text.py`` holds the word-normalization regex;
+    every other package module tokenizes through ``normalized_text`` /
+    ``words``. ``operators/bpe.py`` keeps its pure-Python reference
+    (``ref_words``), the other side of the BPE differential."""
+    pkg = ROOT / "gbif_filter_python_spark"
+    holders = sorted(
+        str(p.relative_to(pkg)) for p in pkg.rglob("*.py")
+        if "[^a-z0-9]+" in p.read_text()
+    )
+    assert holders == ["functions/text.py", "operators/bpe.py"]

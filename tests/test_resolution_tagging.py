@@ -41,9 +41,12 @@ def test_malformed_and_foreign_taxids_are_null(spark, taxonomy):
         (2, None, "NCBI:4000", "SPECIES"),
         (3, None, "GBIF:4000", "SPECIES"),
         (4, "Lumbricus terrestris", "GBIF:x", None),
+        # three tokens: not DBPREFIX:ID, so no key (not 4000)
+        (5, None, "GBIF:4000:1", "SPECIES"),
     ]
     got = _resolve(spark, taxonomy, rows)
-    assert got == [(None, "SPECIES"), (None, "SPECIES"), (4000, "SPECIES"), (None, None)]
+    assert got == [(None, "SPECIES"), (None, "SPECIES"), (4000, "SPECIES"),
+                   (None, None), (None, "SPECIES")]
 
 
 def test_validated_unknown_taxid_is_null(spark, taxonomy):
