@@ -3435,16 +3435,19 @@ def q_mixture_sample(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_bpe_learn(spark: SparkSession, sf: str) -> DataFrame:
     """Full iterative BPE trainer (16 merges) as a FULL ORACLE ROW
-    (VERDICT r4 item 1): the distributed trainer (per iteration one
-    aggregation over the DISTINCT-word table + a pure-Column
-    re-segmentation fold, lineage checkpointed; hash-sample capped at
-    5 000 docs — SentencePiece practice, constant per-merge cost at
-    any corpus scale) runs against the INDEPENDENT pure-Python
-    Sennrich trainer (operators/bpe.py::ref_learn_bpe) over exactly
-    the same sampled texts, and each of the 16 merge steps is
-    compared (left, right, pair_count all equal). The oracle states
-    the SQL-knowable frame: 16 (step, true) rows. The same
-    differential also runs in tests/test_bpe.py at unit scale."""
+    (VERDICT r4 item 1): the trainer (the DISTINCT-word table built
+    and checkpointed in Spark over a hash-sample capped at 5 000 docs —
+    SentencePiece practice, constant per-merge cost at any corpus
+    scale — then, since the sample's few dozen distinct words fit the
+    driver bound, the merges on the driver with an incremental pair
+    index: 8 jobs in all, where the per-merge Spark loop ran 26) runs
+    against the INDEPENDENT naive pure-Python Sennrich trainer
+    (operators/bpe.py::ref_learn_bpe) over exactly the same sampled
+    texts, and each of the 16 merge steps is compared (left, right,
+    pair_count all equal). The oracle states the SQL-knowable frame:
+    16 (step, true) rows. The same differential runs on both the
+    driver and the distributed merge loop in tests/test_bpe.py at
+    unit scale."""
     from gbif_filter_python_spark.operators.bpe import (
         bpe_training_sample,
         learn_bpe_merges,

@@ -43,7 +43,7 @@ Design for scale:
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -4577,23 +4577,11 @@ def encode_avi_mjpeg(
     )
 
 
-def decode_avi_frames(payload: bytes) -> list[np.ndarray]:
-    """RIFF-AVI bytes → list of (h, w) grayscale float32 frames in
-    [0, 1]. Chunk-walking parse in the :func:`decode_wav_bytes`
-    style: reads BITMAPINFOHEADER from ``strf``, walks the ``movi``
-    LIST (descending into ``rec `` groups), and decodes each frame
-    chunk per the stream's biCompression:
-
-    * BI_RGB (0), 8/24/32-bit — each ``00db`` DIB body converts
-      exactly like the BMP row parser (bottom-up, padded rows,
-      Rec.601 luma);
-    * 'MJPG' fourcc — each ``00dc`` chunk is a complete baseline
-      JFIF JPEG, handed to :func:`decode_jpeg_bytes` (round 13:
-      own JPEG decoder × own RIFF walker = compressed video with no
-      codec library).
-
-    Any other compression raises a named error — never a silent
-    stub."""
+def _avi_chunks(payload: bytes) -> tuple[bytes, list[bytes]]:
+    """The RIFF walk of an AVI payload: its ``strf`` body
+    (BITMAPINFOHEADER) and its frame chunk bodies in stream order,
+    descending into the ``hdrl``, ``strl``, ``movi`` and ``rec ``
+    LISTs. Nothing is decoded."""
     import struct
 
     if (
@@ -4625,11 +4613,30 @@ def decode_avi_frames(payload: bytes) -> list[np.ndarray]:
     walk(payload, 12, len(payload))
     if strf is None or len(strf) < 40:
         raise ValueError("AVI missing strf (BITMAPINFOHEADER)")
+    return strf, frame_chunks
+
+
+def _avi_chunk_decoder(strf: bytes) -> Callable[[bytes], np.ndarray]:
+    """The decoder of one frame chunk of the stream ``strf`` describes,
+    chosen by its biCompression:
+
+    * BI_RGB (0), 8/24/32-bit — each ``00db`` DIB body converts
+      exactly like the BMP row parser (bottom-up, padded rows,
+      Rec.601 luma);
+    * 'MJPG' fourcc — each ``00dc`` chunk is a complete baseline
+      JFIF JPEG, handed to :func:`decode_jpeg_bytes` (round 13:
+      own JPEG decoder × own RIFF walker = compressed video with no
+      codec library).
+
+    Any other compression raises a named error — never a silent
+    stub."""
+    import struct
+
     w, h_signed = struct.unpack_from("<ii", strf, 4)
     (bpp,) = struct.unpack_from("<H", strf, 14)
     (compression,) = struct.unpack_from("<I", strf, 16)
     if compression == _MJPG_FOURCC:
-        return [decode_jpeg_bytes(body) for body in frame_chunks]
+        return decode_jpeg_bytes
     if compression != 0:
         raise ValueError(
             f"compressed AVI stream (biCompression {compression}) needs "
@@ -4644,8 +4651,8 @@ def decode_avi_frames(payload: bytes) -> list[np.ndarray]:
         raise ValueError(f"bad AVI dimensions {w}x{h_signed}")
     step = bpp // 8
     row_size = (step * w + 3) // 4 * 4
-    frames: list[np.ndarray] = []
-    for body in frame_chunks:
+
+    def decode_dib(body: bytes) -> np.ndarray:
         if len(body) < row_size * h:
             raise ValueError(
                 f"truncated AVI frame: {len(body)} < {row_size * h} bytes"
@@ -4665,8 +4672,62 @@ def decode_avi_frames(payload: bytes) -> list[np.ndarray]:
                 + bgr[:, :, 1] * 0.587
                 + bgr[:, :, 0] * 0.114
             ) / 255.0
-        frames.append(g.astype(np.float32))
-    return frames
+        return g.astype(np.float32)
+
+    return decode_dib
+
+
+def decode_avi_frames(payload: bytes) -> list[np.ndarray]:
+    """RIFF-AVI bytes → list of (h, w) grayscale float32 frames in
+    [0, 1]. Chunk-walking parse in the :func:`decode_wav_bytes`
+    style: :func:`_avi_chunks` reads BITMAPINFOHEADER from ``strf``
+    and walks the ``movi`` LIST, and each frame chunk is decoded per
+    the stream's biCompression (:func:`_avi_chunk_decoder`: BI_RGB
+    8/24/32-bit DIBs or Motion-JPEG; any other compression raises a
+    named error)."""
+    strf, chunks = _avi_chunks(payload)
+    decode = _avi_chunk_decoder(strf)
+    return [decode(body) for body in chunks]
+
+
+#: A container format's split of one payload: its frame chunks, and the
+#: chunk → frame payload function (:func:`_sampled_frames`).
+_FrameSplit = Callable[[bytes], tuple[list[bytes], Callable[[bytes], bytes]]]
+
+
+def _avi_sampler(
+    payload: bytes,
+) -> tuple[list[bytes], Callable[[bytes], bytes]]:
+    """:func:`sample_frames_avi`'s split of a payload: its frame
+    chunks, and a chunk → standalone BMP re-encoder that decodes only
+    the chunk it is given."""
+    strf, chunks = _avi_chunks(payload)
+    decode = _avi_chunk_decoder(strf)
+    return chunks, lambda body: encode_bmp(decode(body))
+
+
+def _mbmp_sampler(
+    payload: bytes,
+) -> tuple[list[bytes], Callable[[bytes], bytes]]:
+    """:func:`sample_frames_mbmp`'s split of a payload: each frame is
+    already a BMP, emitted as it is."""
+    return decode_mbmp_bytes(payload), lambda body: body
+
+
+def _sampled_frames(
+    payload: bytes, n_frames: int, split: _FrameSplit
+) -> list[tuple[int, int, bytes]]:
+    """``(frame_idx, src_idx, frame_payload)`` for one container:
+    ``split(payload)`` gives its ``n_src`` frame chunks and the
+    chunk → frame payload function, source frame ``floor(i * n_src /
+    take)`` is picked for i in [0, take) with ``take = min(n_frames,
+    n_src)`` (ffmpeg's ``fps=`` thinning; clips shorter than n_frames
+    give one row per real frame), and only the picked chunks are
+    decoded and re-encoded."""
+    chunks, emit = split(payload)
+    take = min(n_frames, len(chunks))
+    picks = [i * len(chunks) // take for i in range(take)]
+    return [(i, src, emit(chunks[src])) for i, src in enumerate(picks)]
 
 
 def _sample_frames(
@@ -4674,17 +4735,14 @@ def _sample_frames(
     payload_col: str,
     id_col: str,
     n_frames: int,
-    decode_frames,
-    encode_frame,
+    split: _FrameSplit,
 ) -> DataFrame:
-    """Evenly spaced frame sampling over one container: decode each
-    payload's frames with ``decode_frames``, pick source frame
-    ``floor(i * n_src / take)`` for i in [0, take) with ``take =
-    min(n_frames, n_src)`` (ffmpeg's ``fps=`` thinning; clips shorter
-    than n_frames emit one row per real frame), and emit each sampled
-    frame as ``encode_frame(frame)``. Emits ``(id, frame_idx, src_idx,
-    frame_payload)``; only the sampled frames are encoded, and only
-    their bytes leave the task — the container body never shuffles."""
+    """Evenly spaced frame sampling over one container format
+    (:func:`_sampled_frames` per payload, ``split`` giving the
+    format's frame chunks and re-encoder). Emits ``(id, frame_idx,
+    src_idx, frame_payload)``; only the sampled frames are decoded
+    and encoded, and only their bytes leave the task — the container
+    body never shuffles."""
     out_schema = StructType(
         [
             StructField(id_col, LongType()),
@@ -4698,15 +4756,12 @@ def _sample_frames(
         for pdf in batches:
             ids, idxs, srcs, frames = [], [], [], []
             for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                fs = decode_frames(bytes(p))
-                n_src = len(fs)
-                take = min(n_frames, n_src)
-                for i in range(take):
-                    src = i * n_src // max(take, 1)
+                sampled = _sampled_frames(bytes(p), n_frames, split)
+                for i, src, frame in sampled:
                     ids.append(mid)
                     idxs.append(i)
                     srcs.append(src)
-                    frames.append(encode_frame(fs[src]))
+                    frames.append(frame)
             yield pd.DataFrame(
                 {
                     id_col: pd.Series(ids, dtype="int64"),
@@ -4733,10 +4788,9 @@ def sample_frames_avi(
     genuine standalone BMP so the rows pipe straight into
     :func:`decode_images` with ``codec="bmp"`` and from there into
     resize / features / dHash near-dup. Only the selected frames are
-    re-encoded."""
-    return _sample_frames(
-        df, payload_col, id_col, n_frames, decode_avi_frames, encode_bmp
-    )
+    decoded and re-encoded, so a damaged frame that is not selected
+    raises nothing."""
+    return _sample_frames(df, payload_col, id_col, n_frames, _avi_sampler)
 
 
 def sample_frames_mbmp(
@@ -4752,9 +4806,7 @@ def sample_frames_mbmp(
     the rows pipe straight into :func:`decode_images` with
     ``codec="bmp"`` and from there into resize / features / dHash
     near-dup."""
-    return _sample_frames(
-        df, payload_col, id_col, n_frames, decode_mbmp_bytes, lambda f: f
-    )
+    return _sample_frames(df, payload_col, id_col, n_frames, _mbmp_sampler)
 
 
 def scene_cuts(

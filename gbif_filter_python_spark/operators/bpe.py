@@ -11,26 +11,33 @@ the way BPE actually scales on a cluster:
   than the token stream, and it is the ONLY thing the iterations touch.
   At 100 TB of text the distinct-word table is ~10⁷-10⁸ rows — an
   executor-trivial frame.
-* **The trainer's per-merge work is one small aggregation** over
-  that table (pair counts, weighted by word count, and the argmax
-  ``collect``) plus a map-only re-segmentation fold, which runs no
-  job of its own. The table's row count rides the distinct-word
-  checkpoint's job (``observed_checkpoint``), and every checkpoint is
-  read back as ``coalesce(ceil(rows / _ROWS_PER_TASK))`` partitions.
-  A table that fits one task is then one ``SinglePartition``, the
-  pair count needs no exchange, and a merge is ONE Spark job; above
-  the bound the same line leaves several partitions and the
-  pair-count shuffle (two jobs per merge). Both the pair explode and
-  the fold are SQL expressions (``selectExpr``): building the fold
-  from Column-API lambdas cost more driver time than running it.
-  Lineage is truncated with ``localCheckpoint`` (the graph.py
+* **A table that fits the driver is trained on the driver.** The
+  table's row count rides the distinct-word checkpoint's job
+  (``observed_checkpoint``). At or under ``_DRIVER_ROWS`` (10⁵) rows
+  the checkpoint is read once through Arrow and every merge runs in
+  :func:`_driver_merges`, an incremental pair index that re-counts
+  only the words holding the merged pair: three Spark jobs for any
+  number of merges. At sf0.1 the 5 000-document sample has a few
+  dozen distinct words, and the 16 merges used to cost 16 single-task
+  jobs and 3 re-checkpoints; at 10⁵ synthetic words a driver merge
+  took about 0.4 s against 2.9-3.5 s for the Spark loop (measurements
+  in :func:`learn_bpe_merges`).
+* **Above the bound, the per-merge work is one small aggregation**
+  over the table, checkpointed at ``defaultParallelism`` partitions
+  (pair counts, weighted by word count, and the argmax ``collect``:
+  two jobs, the pair-count shuffle and the argmax) plus a map-only
+  re-segmentation fold, which runs no job of its own. Both the pair
+  explode and the fold are SQL expressions (``selectExpr``): building
+  the fold from Column-API lambdas cost more driver time than running
+  it. Lineage is truncated with ``localCheckpoint`` (the graph.py
   pattern) once every ``checkpoint_every`` merges, one job each, and
   only when another merge will read it — so the plan does not grow
-  with merges. Before the loop: the distinct-word checkpoint (its
+  with merges. Before either loop: the distinct-word checkpoint (its
   shuffle and its own job), plus the corpus count when
   ``sample_target_docs`` is set.
 * **The merge list is driver-side model state** (like k-means
-  centroids): n_merges × a few bytes, the only materialization.
+  centroids): n_merges × a few bytes, and on the distributed path the
+  only materialization.
 * **Encoding memoizes by distinct word** — encode each distinct word
   once with a vectorized pandas UDF (the per-word merge loop is
   genuinely iterative — the one justified Python step), then join the
@@ -38,14 +45,13 @@ the way BPE actually scales on a cluster:
   as resolution's distinct-then-join (reference `gbif_helper.py:11-32`
   re-expressed set-at-a-time).
 
-Proof: pytest differential test against an independent pure-Python
-BPE reference (exact merge-sequence and encoding parity); driver
-queries are rows-only (the iterative trainer has no SQL twin).
+Proof: pytest differential tests of both merge loops against an
+independent naive pure-Python BPE reference (exact merge-sequence and
+encoding parity); driver queries are rows-only (the iterative trainer
+has no SQL twin).
 """
 
 from __future__ import annotations
-
-import math
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -65,11 +71,10 @@ def _distinct_words(docs: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-#: Distinct words one task pair-counts and re-segments per merge: the
-#: merge loop reads its table as ``ceil(rows / _ROWS_PER_TASK)``
-#: partitions. Set from a measured crossover, see
-#: :func:`learn_bpe_merges`.
-_ROWS_PER_TASK = 100_000
+#: Distinct words the driver trains on (:func:`_driver_merges`); a
+#: larger table runs the distributed merge loop. See
+#: :func:`learn_bpe_merges` for the measurements.
+_DRIVER_ROWS = 100_000
 
 
 def _sql_str(s: str) -> str:
@@ -195,6 +200,49 @@ def ref_merge_pair(syms: list[str], a: str, b: str) -> list[str]:
     return out
 
 
+def _driver_merges(
+    counts: list[int], segs: list[list[str]], n_merges: int, min_count: int
+) -> list[tuple[str, str, int]]:
+    """The merge loop over an in-memory distinct-word table: word ``w``
+    occurs ``counts[w]`` times and is segmented as ``segs[w]`` (updated
+    in place). It keeps an incremental pair index, ``pair_n`` (each
+    adjacent pair's count weighted by word count) and ``holders`` (the
+    words holding it), and a merge re-counts only the words that hold
+    the merged pair. Same (count desc, left asc, right asc) tie-break
+    and ``min_count`` stop as the distributed loop."""
+    pair_n: dict[tuple[str, str], int] = {}
+    holders: dict[tuple[str, str], set[int]] = {}
+
+    def count(w: int, sign: int) -> None:
+        syms = segs[w]
+        for p in zip(syms, syms[1:]):
+            n = pair_n.get(p, 0) + sign * counts[w]
+            if sign > 0:
+                holders.setdefault(p, set()).add(w)
+            else:
+                holders[p].discard(w)
+            if n:
+                pair_n[p] = n
+            else:
+                del pair_n[p], holders[p]
+
+    for w in range(len(segs)):
+        count(w, 1)
+    merges: list[tuple[str, str, int]] = []
+    for _ in range(n_merges):
+        if not pair_n:
+            break
+        (a, b), n = min(pair_n.items(), key=lambda kv: (-kv[1], kv[0]))
+        if n < min_count:
+            break
+        merges.append((a, b, n))
+        for w in list(holders[(a, b)]):
+            count(w, -1)
+            segs[w] = ref_merge_pair(segs[w], a, b)
+            count(w, 1)
+    return merges
+
+
 def learn_bpe_merges(
     docs: DataFrame,
     n_merges: int = 32,
@@ -208,31 +256,36 @@ def learn_bpe_merges(
     ordered merge list [(left, right, pair_count), ...] — driver-side
     model state.
 
-    Per iteration: ONE aggregation over the distinct-word table
-    (adjacent pairs exploded from each word's current segmentation,
-    weighted by word count; deterministic argmax with (count desc,
-    left asc, right asc) tie-break) and one map-only re-segmentation.
-    Stops early when the best pair's count falls below ``min_count``.
+    Per iteration: the adjacent-pair counts of every word's current
+    segmentation, weighted by word count; a deterministic argmax with
+    (count desc, left asc, right asc) tie-break; and a re-segmentation
+    of the words holding the pair. Stops early when the best pair's
+    count falls below ``min_count``.
 
-    **One job per merge on a one-task table.** The distinct-word
-    checkpoint observes its row count on its own job, and every
-    checkpoint is read back as ``ceil(rows / _ROWS_PER_TASK)``
-    partitions. At one partition the pair-count ``groupBy`` needs no
-    exchange, so the aggregation and the argmax are one job, and
-    ``k`` merges launch ``2 + k + (k - 1) // checkpoint_every`` jobs
-    (the distinct-word shuffle and checkpoint, one job per merge, the
-    re-checkpoints). At sf0.1 the table has a few dozen rows and each
-    merge used to pay a second job for a shuffle of those rows. The
-    bound: at local[4], one merge step in one task took 0.16 / 0.23 /
-    1.3-1.55 s at 10³ / 10⁴ / 10⁵ distinct words against 0.25 / 0.32 /
-    1.55-1.82 s for the checkpoint's own partitioning (one partition
-    plus an exchange), and 2.7 s against 1.5 s at 2·10⁵ words, where
-    the checkpoint has two partitions; so a task takes 10⁵ words.
+    **Two merge loops, chosen by the table's size.** The distinct-word
+    checkpoint observes its row count on its own job, before anything
+    is collected. At or under ``_DRIVER_ROWS`` rows the checkpoint is
+    read once through Arrow and :func:`_driver_merges` trains on the
+    driver: ``k`` merges launch 3 jobs for any ``k`` (the
+    distinct-word shuffle, the checkpoint, the collect). At sf0.1 the
+    table has a few dozen rows, and bpe_learn went from 26 jobs to 8.
+    Above the bound the table is checkpointed again at the session's
+    ``defaultParallelism`` partitions, and each merge is one
+    aggregation (the pair-count shuffle and the argmax ``collect``,
+    two jobs) plus a map-only SQL fold. The bound, at local[4] on
+    synthetic md5 words (32 hex characters): at 10⁵ words the driver
+    took 1.0 s to collect the table and about 0.4 s per merge, against
+    2.9-3.5 s per merge (with a checkpoint each) for the Spark loop on
+    four partitions. Above it, re-partitioning pays where the
+    checkpoint has fewer partitions than cores: at 2·10⁵ 8-character
+    words, 1.47 s per merge against 2.44 s on the checkpoint's own two
+    partitions. Where the checkpoint already has four (2·10⁵ 32-character
+    words, 4·10⁵ words) the times are within noise of each other.
 
     **Scale path — ``sample_target_docs`` (VERDICT r3 item 2).** The
-    trainer is a driver-serial loop by construction: one aggregation
-    job per merge, vocab-size-many jobs. What must NOT also grow is
-    the per-job cost. Real tokenizers are universally trained on a
+    trainer is a serial loop by construction: one merge after another,
+    vocab-size-many merges. What must NOT also grow is the per-merge
+    cost. Real tokenizers are universally trained on a
     corpus sample (GPT-2's BPE, SentencePiece's
     ``input_sentence_size`` both subsample), so the scale contract
     here is the same: pass ``sample_target_docs`` and the trainer
@@ -249,30 +302,36 @@ def learn_bpe_merges(
     ``min_count`` then applies to sample counts: at 10%% sampling an
     effective full-corpus floor of 20 means ``min_count=2``.
 
-    ``checkpoint_every`` trades checkpoint-job overhead against plan
-    depth: between checkpoints, re-segmentation folds stack as nested
-    HOF projections (fine for a few; Catalyst optimization time grows
+    ``checkpoint_every`` applies to the distributed loop only. It
+    trades checkpoint-job overhead against plan depth: between
+    checkpoints, re-segmentation folds stack as nested HOF
+    projections (fine for a few; Catalyst optimization time grows
     with depth). 2 halves the materialization jobs for ~the same
-    per-iteration aggregation cost; measured at sf0.1 (16 merges):
-    5.1 s / 4.0 s / 3.7 s at every=1/2/4 — 4 is the default, past
-    which returns diminish while expression nesting deepens.
+    per-iteration aggregation cost; measured on the sf0.1 table (16
+    merges) when it still ran that loop: 5.1 s / 4.0 s / 3.7 s at
+    every=1/2/4 — 4 is the default, past which returns diminish
+    while expression nesting deepens.
     """
     docs = bpe_training_sample(docs, sample_target_docs, sample_key_col)
     words = _distinct_words(docs, text_col).select(
         "_n", F.array_remove(F.split(F.col("word"), ""), "").alias("_syms")
     )
     segs, probe = observed_checkpoint(words, F.count(F.lit(1)).alias("rows"))
-    # at one partition the plan is SinglePartition: the pair count
-    # needs no exchange and a merge is one job
-    parts = max(1, math.ceil(probe["rows"] / _ROWS_PER_TASK))
-    segs = segs.coalesce(parts)
+    if probe["rows"] <= _DRIVER_ROWS:
+        pdf = segs.toPandas()
+        return _driver_merges(
+            pdf["_n"].tolist(), [list(s) for s in pdf["_syms"]],
+            n_merges, min_count,
+        )
+    parallelism = docs.sparkSession.sparkContext.defaultParallelism
+    segs = segs.repartition(parallelism).localCheckpoint(eager=True)
     merges: list[tuple[str, str, int]] = []
     since_ckpt = 0
     for _ in range(n_merges):
         # checkpoint only when a merge is about to read the folds: a
         # checkpoint after the last merge would be read by nothing
         if since_ckpt >= checkpoint_every:
-            segs = segs.localCheckpoint(eager=True).coalesce(parts)
+            segs = segs.localCheckpoint(eager=True)
             since_ckpt = 0
         top = (
             segs.selectExpr("_n", _PAIRS_SQL)

@@ -32,7 +32,12 @@ TEXTS = [
 ]
 
 
-class TestLearnBpeMerges:
+class _BothPaths:
+    """Differential cases every merge loop passes: collected by
+    :class:`TestLearnBpeMerges` on the driver path (the tables here
+    are a few dozen words) and by
+    :class:`TestLearnBpeMergesDistributed` on the distributed one."""
+
     @pytest.fixture(scope="class")
     def docs(self, spark):
         return spark.createDataFrame(
@@ -61,61 +66,26 @@ class TestLearnBpeMerges:
         assert got[0][:2] == ("a", "a")
         assert got[1][:2] == ("aa", "a")
 
-    def test_no_checkpoint_after_the_last_merge(self, spark, docs):
-        """With 4 merges and a checkpoint every 4, a checkpoint after
-        the 4th merge would be read by nothing: the run launches as
-        many jobs as one whose cadence never comes round, and learns
-        the same merges."""
-        def run(every):
-            got = []
-            jobs = jobs_run(spark, lambda: got.extend(learn_bpe_merges(
-                docs, n_merges=4, checkpoint_every=every)))
-            return got, jobs
+    def test_ties_break_by_left_then_right(self, spark):
+        """Equal weighted counts go to the smaller left symbol, then
+        the smaller right one; digits sort before letters, and merged
+        multi-character symbols tie with single characters."""
+        text = "b1 b1 a2 a2 a1 a1 12 12 12b 12b zz zz zz"
+        docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
+        got = learn_bpe_merges(docs, n_merges=8)
+        assert got == [
+            ("1", "2", 4), ("z", "z", 3), ("12", "b", 2), ("a", "1", 2),
+            ("a", "2", 2), ("b", "1", 2),
+        ]
+        assert got == _ref_learn([text], n_merges=8)
 
-        merges, jobs = run(4)
-        assert len(merges) == 4
-        assert (merges, jobs) == run(5)
-
-    def test_one_job_per_merge_on_a_one_task_table(self, spark, docs):
-        """A distinct-word table that fits one task is read back as one
-        partition, so the pair count needs no exchange: k merges launch
-        the distinct-word shuffle and checkpoint, one job per merge and
-        the re-checkpoints the merges read."""
-        with session_conf(spark, 4, True):
-            for k, every in ((1, 4), (6, 4), (9, 2)):
-                got = []
-                jobs = jobs_run(spark, lambda: got.extend(learn_bpe_merges(
-                    docs, n_merges=k, checkpoint_every=every)))
-                assert got == _ref_learn(TEXTS, n_merges=k)
-                assert jobs == 2 + k + (k - 1) // every, (k, every, jobs)
-
-    def test_multi_partition_path_learns_the_same_merges(
-        self, spark, docs, monkeypatch
-    ):
-        """Above the per-task bound the table keeps its partitions and
-        each merge pays the pair-count exchange: a second job per
-        merge, the same merges."""
-        monkeypatch.setattr(bpe, "_ROWS_PER_TASK", 1)
-        no_coalesce = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
-        with session_conf(spark, 4, True, no_coalesce):
-            got = []
-            jobs = jobs_run(spark, lambda: got.extend(learn_bpe_merges(
-                docs, n_merges=6)))
-        assert got == _ref_learn(TEXTS, n_merges=6)
-        assert jobs == 2 + 2 * 6 + (6 - 1) // 4
-
-    @pytest.mark.parametrize("a, b", [
-        ("a'", "\\"), ("\\", "\\"), ("\\", "'"), ("'", "'"), ("b", "a'"),
-    ])
-    def test_merge_step_binds_quotes_and_backslashes(self, spark, a, b):
-        """The SQL merge step quotes its pair: symbols with ``'`` and
-        ``\\`` merge exactly as the reference fold does."""
-        syms = ["a'", "\\", "b", "a'", "\\", "\\", "\\", "'", "'", "'"]
-        row = spark.createDataFrame(
-            [(1, syms)], "_n long, _syms array<string>"
-        ).selectExpr("_n", bpe._merge_sql(a, b)).collect()[0]
-        assert row["_syms"] == ref_merge_pair(syms, a, b)
-        assert row["_syms"] != syms
+    def test_nothing_to_merge_gives_no_merges(self, spark):
+        """An empty corpus and a corpus of one-character words have no
+        pair to count."""
+        schema = "doc_id long, text string"
+        for rows in ([], [(1, "a b c a b !!")], [(1, "")]):
+            docs = spark.createDataFrame(rows, schema)
+            assert learn_bpe_merges(docs, n_merges=4) == [], rows
 
     def test_deterministic_across_partitionings(self, spark, docs):
         a = learn_bpe_merges(docs, n_merges=8)
@@ -158,6 +128,76 @@ class TestLearnBpeMerges:
             TEXTS[r["doc_id"]] for r in explicit.select("doc_id").collect()
         ]
         assert got == _ref_learn(kept_texts, n_merges=8)
+
+
+def _jobs_and_merges(spark, docs, **kw):
+    got: list = []
+    jobs = jobs_run(spark, lambda: got.extend(learn_bpe_merges(docs, **kw)))
+    return got, jobs
+
+
+class TestLearnBpeMerges(_BothPaths):
+    """The driver path, and the job pins of both paths."""
+
+    def test_no_checkpoint_after_the_last_merge(
+        self, spark, docs, monkeypatch
+    ):
+        """Distributed path: with 4 merges and a checkpoint every 4, a
+        checkpoint after the 4th merge would be read by nothing: the
+        run launches as many jobs as one whose cadence never comes
+        round, and learns the same merges."""
+        monkeypatch.setattr(bpe, "_DRIVER_ROWS", -1)
+        merges, jobs = _jobs_and_merges(
+            spark, docs, n_merges=4, checkpoint_every=4)
+        assert len(merges) == 4
+        assert (merges, jobs) == _jobs_and_merges(
+            spark, docs, n_merges=4, checkpoint_every=5)
+
+    def test_driver_path_jobs_do_not_grow_with_merges(self, spark, docs):
+        """A distinct-word table within the bound is collected once and
+        trained on the driver: the distinct-word shuffle, its
+        checkpoint and the collect, for any number of merges."""
+        with session_conf(spark, 4, True):
+            for k, every in ((1, 4), (6, 4), (9, 2)):
+                got, jobs = _jobs_and_merges(
+                    spark, docs, n_merges=k, checkpoint_every=every)
+                assert got == _ref_learn(TEXTS, n_merges=k)
+                assert jobs == 3, (k, every, jobs)
+
+    def test_multi_partition_path_learns_the_same_merges(
+        self, spark, docs, monkeypatch
+    ):
+        """Above the bound the table is checkpointed again at the
+        session's parallelism and each merge pays the pair-count
+        exchange: two jobs per merge, the same merges."""
+        monkeypatch.setattr(bpe, "_DRIVER_ROWS", -1)
+        no_coalesce = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+        with session_conf(spark, 4, True, no_coalesce):
+            got, jobs = _jobs_and_merges(spark, docs, n_merges=6)
+        assert got == _ref_learn(TEXTS, n_merges=6)
+        assert jobs == 4 + 2 * 6 + (6 - 1) // 4
+
+    @pytest.mark.parametrize("a, b", [
+        ("a'", "\\"), ("\\", "\\"), ("\\", "'"), ("'", "'"), ("b", "a'"),
+    ])
+    def test_merge_step_binds_quotes_and_backslashes(self, spark, a, b):
+        """The SQL merge step quotes its pair: symbols with ``'`` and
+        ``\\`` merge exactly as the reference fold does."""
+        syms = ["a'", "\\", "b", "a'", "\\", "\\", "\\", "'", "'", "'"]
+        row = spark.createDataFrame(
+            [(1, syms)], "_n long, _syms array<string>"
+        ).selectExpr("_n", bpe._merge_sql(a, b)).collect()[0]
+        assert row["_syms"] == ref_merge_pair(syms, a, b)
+        assert row["_syms"] != syms
+
+
+class TestLearnBpeMergesDistributed(_BothPaths):
+    """The differential cases on the distributed merge loop: a bound
+    of -1 sends every table there, the empty one included."""
+
+    @pytest.fixture(autouse=True)
+    def _distributed(self, monkeypatch):
+        monkeypatch.setattr(bpe, "_DRIVER_ROWS", -1)
 
 
 def test_q_bpe_learn_result_dtypes(spark, sf001_dir):
